@@ -1,7 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line with per-query wall seconds.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftColumnBridge
+/** Benchmark main: runs the registered queries at SPARK_GRAFT_SF_DIR and
+  * prints ONE JSON line (the last line on stdout) with per-query wall
+  * seconds, per-tier subtotals and per-query errors.
+  *
+  * With no arguments it runs every registered query. With query names
+  * it runs only those, under the same per-query discipline, and also
+  * prints each query's timed runs and the Spark jobs/stages/tasks of its
+  * measured run; `--explain` first prints each query's formatted
+  * physical plan.
+  *
+  * Usage: runMain graft.Bench [--explain] [queryName...]
   *
   * Each query is executed with a `noop`-format write — unlike `count()`,
   * which lets Catalyst prune every unused projection (a map-only query
@@ -10,25 +20,25 @@ import org.apache.spark.sql.SparkSession
   * per-query (value -1, message in `errors`) instead of being swallowed.
   */
 object Bench {
+  /** Spark jobs, completed stages and their tasks since attach. The
+    * listener bus delivers on one thread, so plain counters suffice. */
+  private class JobCounts extends SparkListener {
+    @volatile var jobs, stages, tasks = 0L
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      stages += 1; tasks += e.stageInfo.numTasks
+    }
+    def snapshot: (Long, Long, Long) = (jobs, stages, tasks)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // let AQE right-size shuffles that feed a persist(): iterative
-      // operators (connectedComponents) otherwise pay full-width
-      // scheduling per round on tiny cached frames
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // the graft rules (SQL row-level writes, vectorized-read upgrade)
-      // ride the BUILDER hook so they run inside the optimizer's own
-      // fixed point - filters push below the MOR anti-join etc.; the
-      // in-query register() calls stay as the live-session fallback
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val explain = args.contains("--explain")
+    val names = args.filterNot(_ == "--explain")
+    val selected =
+      if (names.isEmpty) SparkEntry.queries.toSeq
+      else names.toSeq.map(n => n -> SparkEntry.queries(n))
+    val spark = GraftSession(GraftSession.envCores(32))
     // Warm the JVM (scheduler, codegen, shuffle, noop sink) on a
     // throwaway job so the first measured query isn't charged ~10 s of
     // one-time init that belongs to no query.
@@ -38,74 +48,20 @@ object Bench {
     // from events.parquet, disk-memoized) — charge its one-time build to
     // warm-up, not to whichever lake query happens to run first.
     graft.queries.LakeQueries.fixtureLake(spark, sfDir)
+    val counts = new JobCounts
+    spark.sparkContext.addSparkListener(counts)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // THROTTLE CONTROLS, measured BEFORE the suite: three pinned,
-    // plan-stable queries (scan+agg / join / expression tiers) timed
-    // warm-min-of-3 while the host is as idle as this run gets. Their
-    // values calibrate the whole record — a round whose suite total
-    // drifts while its controls drift the same way is a HOST state,
-    // not a plan regression (r11's q142 and r12's +8.2% both burned a
-    // verdict cycle on exactly this adjudication).
-    // q32 joined in round 14: the dedup tier had no control, and its
-    // fattest expression tree (banded minhash) is exactly the shape
-    // suite-order JIT/codegen evictions hit — r13's +4.6 s dedup
-    // "drift" was a 7.49 s in-suite read vs a 1.36 s warm floor.
-    val controlNames = Seq("q01_overview_stats", "q22_join3", "q38_lang_id",
-      "q32_minhash_lsh")
-    val controls0 = controlNames.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          spark.catalog.clearCache()
-          (System.nanoTime() - t0) / 1e9
-        }
-        try { once() /* warm */ ; name -> (1 to 3).map(_ => once()).min }
-        catch { case _: Throwable => name -> -1.0 }
+    val results = selected.map { case (name, fn) =>
+      if (explain) {
+        println(s"==== $name plan ====")
+        println(fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
       }
-    }
-    // LAKE-TIER control (r15 ask): a fixed 20-commit append loop on a
-    // throwaway versioned table — the tier most sensitive to
-    // commit-path drift (#bytes rail, anchor resolve, conformToPinned)
-    // gets a warm per-round reference the per-query numbers can be
-    // adjudicated against. Warm-min-of-2 of the WHOLE loop.
-    val controls = controls0 :+ ("ctl_commit_path20" -> {
-      try {
-        val wd = new java.io.File(sys.props("user.dir"),
-          "target/bench_ctl_lake").getAbsolutePath
-        val fsp = new org.apache.hadoop.fs.Path(wd)
-        val fs = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def loop(tag: String): Double = {
-          val lake = s"$wd/$tag"
-          spark.range(100)
-            .selectExpr("id AS event_id", "CAST(id % 4 AS STRING) AS site",
-              "CAST(id AS DOUBLE) AS v")
-            .coalesce(1).write.partitionBy("site").parquet(lake)
-          graft.lake.Versioned.init(spark, lake)
-          val row = spark.range(1)
-            .selectExpr("9000000 AS event_id", "'a' AS site", "0.5 AS v")
-          val t0 = System.nanoTime()
-          (1 to 20).foreach { i =>
-            graft.lake.Versioned.append(spark, lake,
-              row.withColumn("event_id", org.apache.spark.sql.functions
-                .lit(9000000L + i)), Seq("site"))
-          }
-          (System.nanoTime() - t0) / 1e9
-        }
-        fs.delete(fsp, true)
-        loop("warm") // JVM + codepath warm-up, unmeasured
-        val v = math.min(loop("m1"), loop("m2"))
-        fs.delete(fsp, true)
-        v
-      } catch { case _: Throwable => -1.0 }
-    })
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      // Each query gets one UNMEASURED warm-up run before the timed run:
+      // Each query gets one UNMEASURED warm-up run before the timed runs:
       // suite-order JIT/GC/codegen hiccups otherwise charge multi-second
-      // phantom "regressions" to whichever unchanged query trips them
-      // (rounds 4–5 both burned adjudication time refuting these). The
-      // warm-up also absorbs one-time memoized fixture writes (q56/q90)
-      // so the timed number reflects the query's steady-state plan.
+      // phantom "regressions" to whichever unchanged query trips them.
+      // The warm-up also absorbs one-time memoized fixture writes
+      // (q56/q90) so the timed number reflects the steady-state plan.
       def runOnce(): Unit =
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       try {
@@ -115,13 +71,12 @@ object Bench {
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
       // Report the MIN of two measured runs: one warm-up absorbs fixture
-      // writes but evidently not first-compile codegen/JIT of the fattest
-      // expression trees (r7 charged q27 10.59 s vs a 1.40 s warm floor,
-      // q09 4.86 vs 1.05). min-of-2 makes the suite number match the
-      // steady-state floor a user actually sees; queries that persist()
-      // intermediates get clearCache() between runs so each measurement
-      // is standalone, not a cache replay of the previous one.
-      def timedOnce(): Double = {
+      // writes but not first-compile codegen/JIT of the fattest
+      // expression trees. Queries that persist() intermediates get
+      // clearCache() between runs (outside the timed window) so each
+      // measurement is standalone, not a cache replay of the previous one.
+      def timedOnce(): (Double, (Long, Long, Long)) = {
+        val before = counts.snapshot
         val t0 = System.nanoTime()
         if (!errors.contains(name))
           try runOnce()
@@ -129,79 +84,18 @@ object Bench {
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           }
         val t = (System.nanoTime() - t0) / 1e9
+        GraftColumnBridge.drainListeners(spark.sparkContext)
+        val after = counts.snapshot
         spark.catalog.clearCache()
-        t
+        (t, (after._1 - before._1, after._2 - before._2, after._3 - before._3))
       }
-      val two = (1 to 2).map(_ => timedOnce())
-      // a >2x spread between the two measured runs means the min-of-2
-      // is NOT the steady-state floor (suite-order JIT/GC/codegen-cache
-      // eviction — r11 q142, r12 +8.2%, r13 q32 each burned an
-      // adjudication cycle on this): measure the floor NOW, min-of-5,
-      // and report it alongside so no one re-litigates the artifact
-      val floor =
-        if (!errors.contains(name) && two.max / math.max(two.min, 1e-9) > 2.0)
-          Some((two ++ (1 to 3).map(_ => timedOnce())).min)
-        else None
-      name -> (if (errors.contains(name)) (-1.0, None)
-               else (two.min, floor.filter(f => two.min / f > 2.0)))
-    }
-    // ---- ROUND-OVER-ROUND adjudication (r15 verdict ask #2) --------
-    // `floors` above only fires on IN-SUITE spread (>2x between a
-    // query's two runs) — a uniform fleet-wide slowdown shows a clean
-    // min-of-2 everywhere and an empty floors map, leaving the judge
-    // to guess environment vs regression (exactly r15). So the record
-    // now diffs each carried query against the PREVIOUS round's
-    // committed per-query map (BENCH_r{N-1}.json -> parsed.queries)
-    // and re-measures a min-of-5 steady floor for every >1.5x mover
-    // (>0.3s absolute, top 8 by absolute growth): `prevdiff` says
-    // per-query whether the drift is real (floor tracks cur) or a
-    // measurement artifact (floor tracks prev).
-    val repoDir = new java.io.File(sys.props("user.dir"))
-    val prevN = Option(repoDir.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => "^BENCH_r(\\d+)\\.json$".r
-        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      .foldLeft(-1)(math.max)
-    // prefer the tracked BENCH_QUERIES_r{N-1}.json this round writes
-    // for exactly this purpose — the driver's BENCH_r{N-1}.json embeds
-    // the per-query map only when its log capture wasn't truncated
-    // (r15's was: parsed=null, 2 KB of tail)
-    val prevMap: Map[String, Double] =
-      if (prevN < 0) Map.empty
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        def mapOf(file: String, path: Seq[String]): Option[Map[String, Double]] =
-          try {
-            val qs = path.foldLeft(
-              om.readTree(new java.io.File(repoDir, file))
-                : com.fasterxml.jackson.databind.JsonNode)(_.path(_))
-            if (!qs.isObject) None
-            else {
-              val b = Map.newBuilder[String, Double]
-              val it = qs.fieldNames()
-              while (it.hasNext) {
-                val k = it.next(); b += k -> qs.get(k).asDouble(-1.0) }
-              Some(b.result())
-            }
-          } catch { case _: Throwable => None }
-        mapOf(f"BENCH_QUERIES_r$prevN%02d.json", Seq("queries"))
-          .orElse(mapOf(f"BENCH_r$prevN%02d.json", Seq("parsed", "queries")))
-          .getOrElse(Map.empty)
-      }
-    val movers = results.toSeq.collect {
-      case (k, (v, _)) if v >= 0 && prevMap.get(k).exists(p =>
-        p > 0 && v > p * 1.5 && v - p > 0.3) => (k, v, prevMap(k))
-    }.sortBy { case (_, v, p) => p - v }.take(8)
-    val prevdiff = movers.map { case (k, v, p) =>
-      val fn = SparkEntry.queries(k)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val floor = try (1 to 5).map(_ => once()).min
-        catch { case _: Throwable => -1.0 }
-      k -> (p, v, floor)
+      val runs = (1 to 2).map(_ => timedOnce())
+      val (best, (jobs, stages, tasks)) = runs.minBy(_._1)
+      if (names.nonEmpty)
+        println(f"$name%-28s runs ${runs.map(r => f"${r._1}%6.2f").mkString(" ")}" +
+          s"  jobs=$jobs stages=$stages tasks=$tasks" +
+          errors.get(name).fold("")(e => s"  error: $e"))
+      name -> (if (errors.contains(name)) -1.0 else best)
     }
 
     def jstr(s: String): String =
@@ -213,40 +107,20 @@ object Bench {
     // limits (a full-precision double per query tripled the line size
     // and got the driver's copy truncated mid-JSON in round 9)
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, (v, _)) => s"${jstr(k)}:${r3(v)}" }
+    val qs = results.map { case (k, v) => s"${jstr(k)}:${r3(v)}" }
       .mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val total = r3(results.values.map(_._1).filter(_ >= 0).sum)
+    val total = r3(results.map(_._2).filter(_ >= 0).sum)
     // per-tier subtotals (source-file domains): tier-level drift is
-    // visible at a glance instead of eyeballing 160+ per-query numbers
+    // visible at a glance instead of eyeballing 200+ per-query numbers
     val tierOf = graft.queries.Registry.tierOf
-    val tiers = results.toSeq.filter(_._2._1 >= 0)
+    val tiers = results.filter(_._2 >= 0)
       .groupBy { case (k, _) => tierOf.getOrElse(k, "other") }
       .toSeq.sortBy(_._1)
-      .map { case (t, vs) => s"${jstr(t)}:${r3(vs.map(_._2._1).sum)}" }
+      .map { case (t, vs) => s"${jstr(t)}:${r3(vs.map(_._2).sum)}" }
       .mkString("{", ",", "}")
-    val controlsJson = controls
-      .map { case (k, v) => s"${jstr(k)}:${r3(v)}" }.mkString("{", ",", "}")
-    // measured steady-state floors for queries whose min-of-2 was >2x
-    // above them — the pre-adjudicated "this number is a measurement
-    // artifact, not a plan regression" record
-    val floorsJson = results.toSeq
-      .collect { case (k, (_, Some(f))) => s"${jstr(k)}:${r3(f)}" }
-      .mkString("{", ",", "}")
-    val prevdiffJson = prevdiff.map { case (k, (p, v, f)) =>
-      s"${jstr(k)}:{\"prev\":${r3(p)},\"cur\":${r3(v)},\"floor\":${r3(f)}}"
-    }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"tiers":$tiers,"controls":$controlsJson,"floors":$floorsJson,"prevdiff":$prevdiffJson,"prev_round":$prevN,"errors":$errJson,"sf":"$sfDir"}"""
-    // the per-query map ALSO persists as a tracked per-round file
-    // (BENCH_QUERIES_r{N}.json, N = prev driver round + 1) so the next
-    // round's diff has a committed baseline even if the driver's
-    // BENCH_r{N}.json copy is truncated
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(repoDir.getPath,
-        f"BENCH_QUERIES_r${prevN + 1}%02d.json"),
-      line + "\n")
-    catch { case _: Throwable => }
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"tiers":$tiers,"errors":$errJson,"sf":"$sfDir"}"""
     // One clean line on stdout (build.sbt routes forked output straight
     // through, un-prefixed) + a file copy in case a log wrapper eats it.
     // The copy goes to an explicit, env-overridable absolute path so a

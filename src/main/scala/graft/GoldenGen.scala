@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
@@ -25,13 +24,7 @@ object GoldenGen {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val sfDirs = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(8)
 
     val golden = sfDirs.map { dir =>
       val docs = Tables(spark, dir, "documents")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions
 
 import graft.functions.{CosineSimilarity, StatsAggregator, WinnowFingerprints}
@@ -14,7 +16,7 @@ import graft.functions.{CosineSimilarity, StatsAggregator, WinnowFingerprints}
   *
   *  - cluster-wide / notebook-at-startup:
   *    `--conf spark.sql.extensions=graft.GraftExtensions`
-  *    (or `SparkSession.builder().withExtensions(new GraftExtensions)`);
+  *    (what `GraftSession` sets for every main and test);
   *  - an already-running session: `GraftExtensions.register(spark)`.
   *
   * After either, `spark.sql("SELECT cosine_similarity(a, b) ...")` uses
@@ -26,19 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.expressions.foreach(ext.injectFunction)
     GraftExtensions.tableFunctions.foreach(ext.injectTableFunction)
-    // logical rewrites (opt-in by conf): BETWEEN theta-join → banded
-    // equi-join (graft.plans.RangeJoinRewrite)
-    ext.injectOptimizerRule(graft.plans.RangeJoinRewrite(_))
-    // materialized-aggregate rewrite (opt-in by registry: a no-op until
-    // MaterializedViews.register is called)
-    ext.injectOptimizerRule(graft.plans.MvRewrite(_))
-    // SQL row-level writes over graft relations: MERGE INTO / UPDATE /
-    // DELETE / INSERT lowered onto the manifest mutation core
-    ext.injectOptimizerRule(graft.sources.GraftRowLevelSql(_))
-    // vectorized-read upgrade (catalog scans, MOR windows) — must run
-    // AFTER the mutation lowering (a mutation target keeps its native
-    // relation shape); injection order preserves rule order
-    ext.injectOptimizerRule(graft.sources.GraftVectorizedReads(_))
+    GraftExtensions.optimizerRules.foreach(ext.injectOptimizerRule)
     // SQL maintenance verbs (OPTIMIZE/VACUUM/RESTORE/SHALLOW CLONE/
     // REORG PURGE) — a parser can only ride the session-build hook;
     // live register() sessions call the Versioned methods directly
@@ -48,6 +38,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** The optimizer rules, in the order they must run. */
+  val optimizerRules: Seq[SparkSession => Rule[LogicalPlan]] = Seq(
+    // logical rewrites (opt-in by conf): BETWEEN theta-join → banded
+    // equi-join (graft.plans.RangeJoinRewrite)
+    graft.plans.RangeJoinRewrite(_),
+    // materialized-aggregate rewrite (opt-in by registry: a no-op until
+    // MaterializedViews.register is called)
+    graft.plans.MvRewrite(_),
+    // SQL row-level writes over graft relations: MERGE INTO / UPDATE /
+    // DELETE / INSERT lowered onto the manifest mutation core
+    graft.sources.GraftRowLevelSql(_),
+    // vectorized-read upgrade (catalog scans, MOR windows) — must run
+    // AFTER the mutation lowering (a mutation target keeps its native
+    // relation shape)
+    graft.sources.GraftVectorizedReads(_))
+
+  /** True when the session was built with these extensions: the graft
+    * parser can only ride the session-build hook, so it marks one. */
+  def injected(spark: SparkSession): Boolean =
+    spark.sessionState.sqlParser.isInstanceOf[graft.sources.GraftSqlParser]
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[CosineSimilarity].getName, null, name, usage, "")
@@ -238,40 +249,26 @@ object GraftExtensions {
 
   /** Register everything into a LIVE session (the extensions hook only
     * applies at session build time). Idempotent: re-registering simply
-    * replaces the entry. Aggregators can't go through `injectFunction`
-    * (they are Aggregator objects, not Expression trees), so the udaf
-    * path registers them here and `withExtensions` users call this too
-    * for the full surface. */
+    * replaces a function entry and skips rules already present.
+    * Aggregators can't go through `injectFunction` (they are Aggregator
+    * objects, not Expression trees), so `stats_bundle` is registered
+    * here even on an extension-built session; everything else such a
+    * session already carries inside its own optimizer fixed point, and
+    * adding the rules again would plan every query through a second
+    * copy of each. */
   def register(spark: SparkSession): Unit = {
-    expressions.foreach { case (id, fnInfo, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, fnInfo, builder)
-    }
-    tableFunctions.foreach { case (id, fnInfo, builder) =>
-      spark.sessionState.tableFunctionRegistry
-        .registerFunction(id, fnInfo, builder)
-    }
     spark.udf.register("stats_bundle", functions.udaf(StatsAggregator))
-    // the optimizer-rule surface for live sessions (extension injection
-    // only applies at session build); idempotent like the functions
-    val already = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.RangeJoinRewrite])
-    if (!already)
+    if (!injected(spark)) {
+      expressions.foreach { case (id, fnInfo, builder) =>
+        spark.sessionState.functionRegistry.registerFunction(id, fnInfo, builder)
+      }
+      tableFunctions.foreach { case (id, fnInfo, builder) =>
+        spark.sessionState.tableFunctionRegistry
+          .registerFunction(id, fnInfo, builder)
+      }
+      val present = spark.experimental.extraOptimizations.map(_.getClass).toSet
       spark.experimental.extraOptimizations ++=
-        Seq(graft.plans.RangeJoinRewrite(spark))
-    val mvAlready = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.MvRewrite])
-    if (!mvAlready)
-      spark.experimental.extraOptimizations ++=
-        Seq(graft.plans.MvRewrite(spark))
-    val sqlWAlready = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.sources.GraftRowLevelSql])
-    if (!sqlWAlready)
-      spark.experimental.extraOptimizations ++=
-        Seq(graft.sources.GraftRowLevelSql(spark))
-    val vecAlready = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.sources.GraftVectorizedReads])
-    if (!vecAlready) // after GraftRowLevelSql — ordering contract
-      spark.experimental.extraOptimizations ++=
-        Seq(graft.sources.GraftVectorizedReads(spark))
+        optimizerRules.map(_(spark)).filterNot(r => present(r.getClass))
+    }
   }
 }

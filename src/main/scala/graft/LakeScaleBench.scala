@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.lake.Versioned
@@ -28,18 +27,7 @@ object LakeScaleBench {
     val work = new java.io.File(args.lift(1).getOrElse(
       "target/lakescale_" + dir.replaceAll("[^a-zA-Z0-9]", "_")))
       .getAbsolutePath
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // production shape: the graft rules inside the optimizer's own
-      // fixed point (column pruning composes with the read upgrade);
-      // the row-based ledger legs exclude the upgrade rule per query
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores(32))
 
     val lake = work + "/lake"
     val fs = new org.apache.hadoop.fs.Path(work)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.MergeData
@@ -17,13 +16,7 @@ import graft.ops.MergeData
 object MergeBench {
   def main(args: Array[String]): Unit = {
     val perPart = if (args.nonEmpty) args(0).toLong else 50000L
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(16)
 
     def lake(nParts: Int): String = {
       val dir = java.nio.file.Files.createTempDirectory(s"graft_mb_$nParts").toFile

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.plans.MaterializedViews
@@ -22,14 +21,7 @@ object MvBench {
     val sfDir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
     val mult = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores(32))
 
     val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = new java.io.File("target", s"graft_mvbench_base_$tag").getAbsolutePath
@@ -43,7 +35,6 @@ object MvBench {
     val d = MvDef("bench", base, mv, Seq("user_id", "event_type"),
       sums = Seq("vt"), counts = Seq("vt"))
     MaterializedViews.materialize(spark, d)
-    graft.GraftExtensions.register(spark)
 
     def q() = spark.read.parquet(base)
       .filter(col("event_type").isin("click", "view", "purchase"))

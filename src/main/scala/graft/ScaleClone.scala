@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** One-shot dev tool (not part of the driver contract): build an
@@ -56,13 +56,7 @@ object ScaleClone {
     val zipf = args.contains("--zipf")
     val pos = args.filterNot(_ == "--zipf")
     val (src, out, copies) = (pos(0), pos(1), pos(2).toInt)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(16)
     // raw read keeps events.ts as int64 nanos (no TIMESTAMP(NANOS)
     // type to preserve on the rewrite; Tables.events handles both)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev measurement main (not part of the driver contract): prove the
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   salted: graft.ops.Skew.saltedJoin nSalts=8 (the plan-level one) —
   * plus the registered q74 (count-min heavy hitters) and q82 (bigram
   * LM head/tail split) on the same dir. Warm min-of-runs, like
-  * BenchOne.
+  * Bench.
   *
   * Usage: runMain graft.SkewBench <dir> [nRuns]
   */
@@ -21,15 +21,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val n = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores(32))
 
     def time(label: String)(mk: => DataFrame): Unit = {
       val times = (1 to n).map { _ =>

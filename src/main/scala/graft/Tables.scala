@@ -42,8 +42,8 @@ object Tables {
 
   def events(spark: SparkSession, dir: String): DataFrame = {
     // The TIMESTAMP->NTZ cast below goes through the session timezone;
-    // oracle parity requires UTC. The pinned runners (Bench/Verify/
-    // BenchOne/build.sbt) already set it; for ad-hoc sessions, switch
+    // oracle parity requires UTC. GraftSession (every main and the
+    // tests) and build.sbt already set it; for ad-hoc sessions, switch
     // with a WARNING rather than silently — the caller's other
     // timezone-sensitive queries change meaning mid-session (ADVICE r3).
     if (spark.conf.get("spark.sql.session.timeZone") != "UTC") {

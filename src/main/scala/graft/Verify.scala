@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,24 +13,8 @@ object Verify {
     // Correctness gate, not a perf surface: it runs at tiny SFs where
     // 32-way tiny-task scheduling costs more than it parallelizes
     // (measured 1.6x slower end-to-end than 4 threads at sf0.001).
-    // Bench keeps the brief's local[32].
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // let AQE right-size shuffles that feed a persist(): iterative
-      // operators (connectedComponents) otherwise pay full-width
-      // scheduling per round on tiny cached frames
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // the graft rules (SQL row-level writes, vectorized-read upgrade)
-      // ride the BUILDER hook so they run inside the optimizer's own
-      // fixed point - filters push below the MOR anti-join etc.; the
-      // in-query register() calls stay as the live-session fallback
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench defaults to the brief's local[32].
+    val spark = GraftSession(GraftSession.envCores(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -54,11 +54,6 @@ object CatalogOps {
   def listAllMeasurements(inv: DataFrame): DataFrame =
     data(inv).select("measurement").distinct().orderBy("measurement")
 
-  /** `get_measurements_for_user` (`main.py:184-210`). */
-  def measurementsForUser(inv: DataFrame, user: String): DataFrame =
-    data(inv).filter(col("user_id") === user)
-      .select("measurement").distinct().orderBy("measurement")
-
   /** `get_users_for_measurement` (`main.py:212-236`) — semi-join J2. */
   def usersForMeasurement(inv: DataFrame, measurement: String): DataFrame =
     data(inv).filter(col("measurement") === measurement)
@@ -76,14 +71,6 @@ object CatalogOps {
         max("date").as("last_date"),
         count_distinct(col("date")).as("distinct_dates"))
       .orderBy("user_id", "measurement")
-
-  /** A10: per-(date,time) file counts within a measurement
-    * (`main.py:53-59`). */
-  def fileCounts(inv: DataFrame, user: String, measurement: String): DataFrame =
-    data(inv)
-      .filter(col("user_id") === user && col("measurement") === measurement)
-      .groupBy("date", "time").agg(count(lit(1)).as("n"))
-      .orderBy("date", "time")
 
   /** Parquet-cached catalog: `update_summary_file`/`check_summary_file`
     * (`main.py:259-277`) — replaces the pickle cache. */

@@ -338,10 +338,4 @@ object SummaryOps {
         "data_summary", "feature_statistics", "questionnaire_responses")
       .orderBy("participant_id", "time_key")
   }
-
-  /** JSON sink: one document per (participant_id, time_key), mirroring the
-    * reference's `<participant>_<time_key>.json` files via a partitioned
-    * write (`extract_patient_summary.py:430-435`). */
-  def writeSummaries(doc: DataFrame, outDir: String): Unit =
-    doc.write.mode("overwrite").partitionBy("participant_id").json(outDir)
 }

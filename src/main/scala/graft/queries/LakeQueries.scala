@@ -51,13 +51,13 @@ object LakeQueries {
   private val ExcludedSite = "site_2"
 
   /** Run a MAINTENANCE VERB statement: through the session's own parser
-    * when the graft parser extension is installed (the Verify/Bench
-    * sessions — the production path), else through the parser's
-    * direct lowering (plan-audit sessions built without extensions
-    * cannot swap their parser). Same command plan either way. */
+    * when the graft parser extension is installed (every `GraftSession`,
+    * mains and tests alike — the production path), else through the
+    * parser's direct lowering (a live session built without extensions
+    * cannot swap its parser). Same command plan either way. */
   private def sqlMaint(s: SparkSession, text: String)
       : org.apache.spark.sql.DataFrame =
-    if (s.sessionState.sqlParser.isInstanceOf[graft.sources.GraftSqlParser])
+    if (graft.GraftExtensions.injected(s))
       s.sql(text)
     else org.apache.spark.sql.GraftColumnBridge.ofRows(s,
       graft.sources.GraftSqlParser.parseMaintenance(s, text).get)

@@ -2,10 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, MergeIntoTable, Project, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeleteFromTable, Filter, LogicalPlan, MergeIntoTable, Project, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 
 import graft.lake.Versioned
 
@@ -48,14 +48,38 @@ case class GraftVectorizedReads(spark: SparkSession)
     // unplannable — a one-off validation scan keeps the stock plan
     case _: org.apache.spark.sql.catalyst.plans.logical.AddCheckConstraint =>
       plan
-    case _ => plan.transform {
-      case s: DataSourceV2ScanRelation
-          if s.relation.table.isInstanceOf[GraftVersionedTable] =>
-        val t = s.relation.table.asInstanceOf[GraftVersionedTable]
-        upgraded(t.dir, t.pinnedVersion, s.output).getOrElse(s)
-      case l @ LogicalRelation(r: GraftSnapshotRelation, _, _, _, _) =>
-        upgraded(r.dir, r.version, l.output).getOrElse(l)
-    }
+    case _ =>
+      // an aggregate straight over a catalog scan may be answered from
+      // the stats rail by the scan's aggregate push-down, which runs
+      // after the operator batch: those relations stay V2 for it
+      val aggregated = plan.collect { case a: Aggregate => scanBelow(a.child) }
+        .flatten
+      plan.transform {
+        // a catalog scan is still the bare relation inside the
+        // optimizer's own batch (extension-injected), and the
+        // pushed-down scan relation once scan push-down has run
+        // (register() on a live session appends the rule after it)
+        case r: DataSourceV2Relation
+            if r.table.isInstanceOf[GraftVersionedTable] &&
+              !aggregated.exists(_ eq r) =>
+          val t = r.table.asInstanceOf[GraftVersionedTable]
+          upgraded(t.dir, t.pinnedVersion, r.output).getOrElse(r)
+        case s: DataSourceV2ScanRelation
+            if s.relation.table.isInstanceOf[GraftVersionedTable] =>
+          val t = s.relation.table.asInstanceOf[GraftVersionedTable]
+          upgraded(t.dir, t.pinnedVersion, s.output).getOrElse(s)
+        case l @ LogicalRelation(r: GraftSnapshotRelation, _, _, _, _) =>
+          upgraded(r.dir, r.version, l.output).getOrElse(l)
+      }
+  }
+
+  /** The relation under a chain of projections and filters, the shape
+    * scan push-down can fold an aggregate into. */
+  private def scanBelow(p: LogicalPlan): Option[LogicalPlan] = p match {
+    case Project(_, c) => scanBelow(c)
+    case Filter(_, c) => scanBelow(c)
+    case r: DataSourceV2Relation => Some(r)
+    case _ => None
   }
 
   /** The fast-path plan for (dir, version), projected onto `wanted`'s

@@ -258,16 +258,4 @@ object StreamingTableFollow {
         while (followOnce(s, tableDir, checkpoint, process,
           maxVersionsPerTrigger).isDefined) ()
       })
-
-  /** Start the UNIFIED change stream ([[followChangesOnce]] per
-    * notification wakeup) — survives merge/delete/restore commits. */
-  def startChanges(spark: SparkSession, tableDir: String, checkpoint: String,
-      process: (DataFrame, Long, Long) => Unit,
-      trigger: Trigger = Trigger.AvailableNow(),
-      maxVersionsPerTrigger: Long = Long.MaxValue): StreamingQuery =
-    notificationQuery(spark, tableDir, checkpoint, trigger,
-      s => {
-        while (followChangesOnce(s, tableDir, checkpoint, process,
-          maxVersionsPerTrigger).nonEmpty) ()
-      })
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * that ship their own `Expression`s compile one forwarding object into
   * the `org.apache.spark.sql` package — the same pattern the public
   * Spark ecosystem uses (frameless, sedona, spark-nlp). Nothing here
-  * but the two forwarders; all graft code lives in `graft.*`.
+  * but forwarders; all graft code lives in `graft.*`.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -42,4 +42,10 @@ object GraftColumnBridge {
       isStreaming: Boolean = false): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
+
+  /** Forwarder for the listener bus drain (`private[spark]`): block
+    * until every posted event has reached its listeners, so counts a
+    * listener keeps are complete once an action has returned. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -158,11 +158,22 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("register on an extension-built session adds no optimizer rule twice") {
+    // the shared session is built with spark.sql.extensions, so the
+    // rules already run inside the optimizer's own batch; register
+    // must not append a second copy to extraOptimizations
+    GraftExtensions.register(spark)
+    GraftExtensions.register(spark)
+    val graftRules = GraftExtensions.optimizerRules.map(_(spark).getClass).toSet
+    assert(!spark.experimental.extraOptimizations.exists(r => graftRules(r.getClass)))
+    assert(spark.sql("SELECT stats_bundle(CAST(id AS DOUBLE)).count AS n FROM range(3)")
+      .head().getLong(0) == 3L)
+  }
+
   test("extensions hook applies the same registration list") {
-    // The builder hook path (spark.sql.extensions) can't be exercised on
-    // the suite's shared session (extensions bind at session build);
-    // applying to a fresh SparkSessionExtensions at least pins that every
-    // entry injects cleanly.
+    // The shared session gets the hook at build (GraftSession); applying
+    // to a fresh SparkSessionExtensions also pins that every entry
+    // injects cleanly on its own.
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
   }

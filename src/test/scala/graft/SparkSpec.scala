@@ -4,19 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (JVM is forked per test
-  * run; tearing a session down between suites would dominate runtime). */
+  * run; tearing a session down between suites would dominate runtime),
+  * built through the same profile as every main. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.builder(4).appName("graft-tests").getOrCreate()
 }
 
 trait SparkSpec extends AnyFunSuite {

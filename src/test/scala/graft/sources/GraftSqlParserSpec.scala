@@ -11,13 +11,10 @@ import graft.ops.MergeData
   * BY], VACUUM [RETAIN], RESTORE TO VERSION/TIMESTAMP AS OF, CREATE
   * TABLE ... SHALLOW CLONE, REORG TABLE ... APPLY (PURGE) — parsed by
   * the injected parser and lowered onto the Versioned maintenance
-  * core, each returning its metrics as rows. The shared test session
-  * was built without the extensions hook (a parser cannot be swapped
-  * on a live session), so statements parse through a directly-
-  * instantiated parser and execute through the normal command path —
-  * the exact plan `spark.sql` would run under
-  * `spark.sql.extensions=graft.GraftExtensions` (q206 drives that end
-  * to end under Verify's extension-built session). */
+  * core, each returning its metrics as rows. Statements parse through
+  * the parser's direct lowering and execute through the normal command
+  * path — the exact plan `spark.sql` runs on the shared, extension-
+  * built test session (q206 drives that end to end). */
 class GraftSqlParserSpec extends SparkSpec {
 
   GraftExtensions.register(spark)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{BareSession, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{GraftExtensions, SparkSpec}
@@ -807,22 +807,15 @@ class GraftSqlWritesSpec extends SparkSpec {
 
   test("WITHOUT the rule: a view INSERT fails loudly (refresh poison) and the manifest never references the bare files") {
     val dir = freshLake()
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW sqlw_bare " +
+    // a session without the extensions: no GraftRowLevelSql anywhere
+    val bare = BareSession(spark)
+    bare.sql(s"CREATE OR REPLACE TEMPORARY VIEW sqlw_bare " +
       s"USING graft OPTIONS (path '$dir')")
-    val rule = spark.experimental.extraOptimizations
-      .find(_.isInstanceOf[GraftRowLevelSql]).get
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq rule)
-    try {
-      val e = intercept[Exception] {
-        spark.sql("INSERT INTO sqlw_bare VALUES (60, 60.0, 'g')")
-      }
-      assert(e.getMessage != null && e.getMessage.contains("manifest"),
-        s"expected the refresh poison, got: ${e.getMessage}")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
+    val e = intercept[Exception] {
+      bare.sql("INSERT INTO sqlw_bare VALUES (60, 60.0, 'g')")
     }
+    assert(e.getMessage != null && e.getMessage.contains("manifest"),
+      s"expected the refresh poison, got: ${e.getMessage}")
     assert(Versioned.currentVersion(spark, dir) == 0L,
       "the failed bare insert must not have committed anything")
     assert(state(Versioned.snapshot(spark, dir)) == Set(
