@@ -283,6 +283,19 @@ object LakeQueries {
     (lake, feedDir)
   }
 
+  /** Stream the graft lake `src` into the graft lake `sink` through
+    * `readStream.format("graft")` (q178, q181, q199): the current
+    * snapshot first, then every appended version; each micro-batch is
+    * one txn-marked sink commit. Drains what is available, then stops. */
+  private def followInto(s: SparkSession, src: String, sink: String,
+      ckpt: String): Unit =
+    s.readStream.format("graft").load(src)
+      .writeStream.format("graft")
+      .option("checkpointLocation", ckpt)
+      .option("partitionKeys", "event_type")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(sink).awaitTermination()
+
   /** Memoized lake under the change-feed TABLE PROPERTY (q183, q187):
     * a mixed merge/append/delete/restore history where NO writer
     * passes a feed argument — emission is the commit path's own
@@ -2569,10 +2582,11 @@ object LakeQueries {
     // (delta manifests of +file lines, no resolution, no rewrite);
     // appendsBetween(0, 2) reads exactly the appended rows from the
     // manifests alone == the two slices' recompute; a fresh-per-run
-    // FOLLOWER streams the table (initial snapshot + append ranges,
-    // manifest-gated visibility) into a txn-marked versioned sink that
-    // must equal the source. fastRowCount rides the appends (require:
-    // metadata count == oracle row total via the snapshot leg).
+    // readStream.format("graft") streams the table (initial snapshot
+    // + append ranges, manifest-gated visibility) into a txn-marked
+    // graft sink that must equal the source. fastRowCount rides the
+    // appends (require: metadata count == oracle row total via the
+    // snapshot leg).
     // ---------------------------------------------------------------
     Q("q178_append_follow",
       (s, dir) => {
@@ -2603,8 +2617,8 @@ object LakeQueries {
         // metadata-only count stays exact across append commits
         require(Versioned.fastRowCount(s, lake) ==
           Versioned.snapshot(s, lake).count())
-        // fresh-per-run follower: initial snapshot + both append
-        // ranges stream into a txn-marked versioned sink
+        // fresh-per-run stream: initial snapshot + both append
+        // ranges stream into a txn-marked graft sink
         val froot = new File(new File(sys.props("user.dir"), "target"),
           s"graft_appfix_follow_$tag")
         val sink = new File(froot, "sink").getAbsolutePath
@@ -2613,11 +2627,7 @@ object LakeQueries {
           val fs = new org.apache.hadoop.fs.Path(froot.getAbsolutePath)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(froot.getAbsolutePath), true)
-          graft.streaming.StreamingTableFollow.start(s, lake, ckpt,
-            (d: DataFrame, _: Long, toV: Long) => {
-              Versioned.append(s, sink, d, Seq("event_type"),
-                txn = Some(("follow", toV))); ()
-            }).awaitTermination()
+          followInto(s, lake, sink, ckpt)
         }
         def agg(d: DataFrame, src: String) =
           d.groupBy("event_type").agg(
@@ -2848,7 +2858,7 @@ object LakeQueries {
           .agg(min("value"), max("value")).collect()(0)
         require(loV == mm.getDouble(0) && hiV == mm.getDouble(1),
           "fastMinMax must equal the streamed table's true extrema")
-        // fresh-per-run follower over the governed table
+        // fresh-per-run stream over the governed table
         val froot = new File(new File(sys.props("user.dir"), "target"),
           s"graft_govfix_follow_$tag")
         val sink = new File(froot, "sink").getAbsolutePath
@@ -2857,11 +2867,7 @@ object LakeQueries {
           val fs = new org.apache.hadoop.fs.Path(froot.getAbsolutePath)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(froot.getAbsolutePath), true)
-          graft.streaming.StreamingTableFollow.start(s, lake, fckpt,
-            (d: DataFrame, _: Long, toV: Long) => {
-              Versioned.append(s, sink, d, Seq("event_type"),
-                txn = Some(("follow", toV))); ()
-            }).awaitTermination()
+          followInto(s, lake, sink, fckpt)
         }
         def agg(d: DataFrame, src: String) =
           d.groupBy("event_type").agg(
@@ -3634,14 +3640,14 @@ object LakeQueries {
 
     // ---------------------------------------------------------------
     // UNIFIED TABLE STREAM ACROSS REWRITE RANGES (Delta's streaming
-    // CDF read): a follower seeded at the enable version streams the
-    // WHOLE mixed history — append runs served from the appended
-    // files, merge/delete/restore commits from their #cdfinc
-    // increments — through followChangesOnce into a replica, which
-    // must equal the primary. The served range count is pinned as a
-    // constant leg: (1,2] merge, (2,3] append run, (3,4] delete,
-    // (4,5] restore = 4 ranges, proving the split actually ran
-    // (not one lump, not per-version fragments of the append run).
+    // CDF read): readStream.format("graft") with readChanges, seeded
+    // at the enable version, streams the WHOLE mixed history — every
+    // commit's #cdfinc increment — into a merge-applying replica,
+    // which must equal the primary. maxVersionsPerTrigger=1 keeps
+    // every batch to one commit, so no batch holds two actions for
+    // one key. The non-empty batch count is pinned as a constant leg:
+    // (1,2] merge, (2,3] append, (3,4] delete, (4,5] restore = 4,
+    // proving the cap bit from the first batch on (not one lump).
     // ---------------------------------------------------------------
     Q("q187_unified_table_stream",
       (s, dir) => {
@@ -3651,23 +3657,34 @@ object LakeQueries {
           s"graft_cdfprop_follow_$tag")
         val replica = new File(froot, "replica").getAbsolutePath
         val ckpt = new File(froot, "ckpt").getAbsolutePath
-        val nRanges = LakeQueries.synchronized {
+        val nBatches = LakeQueries.synchronized {
           val fs = new org.apache.hadoop.fs.Path(froot.getAbsolutePath)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(froot.getAbsolutePath), true)
           MergeData.writeMerged(s, Versioned.snapshot(s, lake, 1L),
             replica, keys = Seq("event_type"))
-          graft.streaming.StreamingTableFollow.seedCheckpoint(s, ckpt, 1L)
-          val served = graft.streaming.StreamingTableFollow
-            .followChangesOnce(s, lake, ckpt, (d, _, _) => {
+          var applied = 0
+          s.readStream.format("graft")
+            .option("readChanges", "true")
+            .option("startingVersion", "1")
+            .option("maxVersionsPerTrigger", "1")
+            .load(lake)
+            .writeStream
+            .option("checkpointLocation", ckpt)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .foreachBatch { (d: DataFrame, _: Long) =>
               val b = d.filter(col("_action") =!= "update_preimage")
                 .withColumn("__delete", col("_action") === "delete")
-                .drop("_action")
-              if (!b.isEmpty)
+                .drop("_action", "_commit_version")
+              if (!b.isEmpty) {
                 MergeData.mergeInto(s, replica, b,
                   Seq("event_type"), Seq("event_id"))
-            })
-          served.size
+                applied += 1
+              }
+              ()
+            }
+            .start().awaitTermination()
+          applied
         }
         def agg(d: DataFrame, tag: String) =
           d.groupBy("event_type").agg(
@@ -3678,7 +3695,7 @@ object LakeQueries {
         agg(Versioned.snapshot(s, lake), "primary")
           .unionByName(agg(s.read.parquet(replica), "followed"))
           .unionByName(s.range(1).select(
-            lit(s"n=$nRanges").as("event_type"),
+            lit(s"n=$nBatches").as("event_type"),
             lit(null).cast("long").as("row_count"),
             lit(null).cast("double").as("sum_value"),
             lit(null).cast("long").as("n_ids"),
@@ -3708,7 +3725,7 @@ object LakeQueries {
           UNION ALL
           SELECT 'ranges', 'n=4', NULL::BIGINT, NULL::DOUBLE, NULL::BIGINT)
         ORDER BY 1, 2"""),
-      "unified table stream: one follower across merge/append/delete/restore — append runs from files, rewrites from #cdfinc increments; replica == primary, range split pinned"),
+      "unified table stream: readStream.format(graft) with readChanges across merge/append/delete/restore, one commit per batch; replica == primary, batch count pinned"),
 
     // ---------------------------------------------------------------
     // COLUMN MAPPING (Delta name-mapping / Iceberg field IDs): RENAME
@@ -4197,8 +4214,8 @@ object LakeQueries {
       "SQL INSERT INTO (manifest append) + INSERT OVERWRITE (full replace) through the catalog; pre-overwrite state read via SQL VERSION AS OF"),
 
     // ---------------------------------------------------------------
-    // readStream.format("graft") — the streaming-read spelling of the
-    // table follower, batch-visible leg (q187's discipline): a source
+    // readStream.format("graft") — the table follower's
+    // batch-visible leg (q187's discipline): a source
     // lake streams into a txn-marked graft sink (AvailableNow), a
     // second wave appends and tails in on the next run, and the SINK's
     // final state must hash-match the plain batch recompute. Streaming
@@ -4218,13 +4235,7 @@ object LakeQueries {
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
           val base = Tables(s, dir, "events").select(MergeCols.map(col): _*)
-          def follow(): Unit =
-            s.readStream.format("graft").load(src)
-              .writeStream.format("graft")
-              .option("checkpointLocation", ckpt)
-              .option("partitionKeys", "event_type")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start(sink).awaitTermination()
+          def follow(): Unit = followInto(s, src, sink, ckpt)
           MergeData.writeMerged(s,
             base.filter(col("event_type") === "click"), src,
             keys = Seq("event_type"))

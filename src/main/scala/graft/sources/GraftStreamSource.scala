@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SQLContext}
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
 import org.apache.spark.sql.functions.{col, lit}
@@ -10,12 +11,10 @@ import org.apache.spark.sql.types.StructType
 import graft.lake.Versioned
 
 /** `spark.readStream.format("graft").load(dir)` — follow a versioned
-  * lake as a STREAM, the standard spelling of what
-  * [[graft.streaming.StreamingTableFollow]] exposes as a library loop
-  * (Delta's "stream from a table"). The manifest gates visibility, so
-  * a micro-batch can never see an in-flight writer's files — exactly
-  * the guarantee a plain file stream over the data directory cannot
-  * give.
+  * lake as a STREAM (Delta's "stream from a table"); the engine's one
+  * table-follow path. The manifest gates visibility, so a micro-batch
+  * can never see an in-flight writer's files — exactly the guarantee
+  * a plain file stream over the data directory cannot give.
   *
   * OFFSETS ARE VERSIONS: Spark's own offset log records the manifest
   * version each batch served through, so a restarted (or crashed)
@@ -25,8 +24,8 @@ import graft.lake.Versioned
   * [[Versioned.append]] with `txn`) deduplicates it by construction:
   * exactly-once end to end with NO source-side state beyond a
   * best-effort floor cache (`graft_hw` under the stream's metadata
-  * dir, used only to rate-limit `getOffset`; losing it costs one
-  * uncapped batch, never a wrong row).
+  * dir, used only to cap an offer the engine has no start offset
+  * for; losing it costs one uncapped batch, never a wrong row).
   *
   * Batch semantics:
   *  - first batch: the CURRENT SNAPSHOT (the reference's follower
@@ -36,11 +35,12 @@ import graft.lake.Versioned
   *  - every later batch: [[Versioned.appendsBetween]] — the rows of
   *    exactly the files the versions in range appended. A range
   *    containing a REWRITE commit (merge/optimize/delete) refuses
-  *    loudly and points at the change feed — same contract as the
-  *    library follower.
+  *    loudly and points at the change feed.
   *
   * `maxVersionsPerTrigger` (Delta's backpressure knob, in versions)
-  * bounds how many commits one micro-batch may cover.
+  * bounds how many commits one micro-batch may cover — the first
+  * batch of a seeded stream included; only snapshot mode's first
+  * batch is one uncapped snapshot.
   *
   * SCHEMA is pinned per checkpoint (persisted `graft_schema`, like
   * `graft_start`): restarts re-serve replayed offsets under the
@@ -57,7 +57,11 @@ import graft.lake.Versioned
   * deletes, restores and compactions ALL stream as row-level CDC —
   * the append-only refusal above does not apply. Needs
   * `enableChangeFeed` in force over the followed range (a pre-CDF
-  * commit in range refuses loudly, naming the repair). */
+  * commit in range refuses loudly, naming the repair). With a cap
+  * above 1 a batch spans several commits and can carry several
+  * actions for ONE key; a consumer that applies the batch as a merge
+  * sets `maxVersionsPerTrigger` to 1, or keeps the last action per
+  * key by `_commit_version`. */
 private[sources] class GraftStreamSource(sqlContext: SQLContext,
     dir: String, metadataPath: String,
     startingVersion: Option[Long], maxVersionsPerTrigger: Long,
@@ -179,25 +183,19 @@ private[sources] class GraftStreamSource(sqlContext: SQLContext,
     case other => other.json().trim.toLong
   }
 
-  override def getOffset: Option[Offset] = {
-    val cur = Versioned.currentVersion(spark, dir)
-    if (cur < 0) return None
-    readLong(hwPath) match {
-      case Some(hw) if cur <= hw => Some(LongOffset(hw))
-      case Some(hw) =>
-        // saturating add: the default cap is Long.MaxValue
-        val cap = hw + math.max(1L, maxVersionsPerTrigger)
-        Some(LongOffset(if (cap < hw) cur else math.min(cur, cap)))
-      case None => Some(LongOffset(cur)) // floor unknown: uncapped is safe
+  /** Only reached without admission control; the engine calls
+    * [[latestOffset]], which holds the one copy of the floor/cap rule. */
+  override def getOffset: Option[Offset] =
+    Option(latestOffset(null, ReadLimit.allAvailable())).collect {
+      case o: Offset => o
     }
-  }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val toV = ver(end)
     // CHANGES mode: every batch is the change-feed increments of its
     // version range — merges, deletes, restores and rewrites all
     // stream as row-level actions (the append-only refusal below does
-    // not apply; this is the CDC spelling of the follower)
+    // not apply)
     def serve(fromV: Long): DataFrame =
       if (readChanges) Versioned.changesBetween(spark, dir, fromV, toV)
       else Versioned.appendsBetween(spark, dir, fromV, toV)
@@ -243,10 +241,7 @@ private[sources] class GraftStreamSource(sqlContext: SQLContext,
   // to single-batch execution, which silently IGNORES the
   // backpressure bound (one giant batch) and cannot drain an
   // uncommitted tail. Implementing SupportsAdmissionControl also
-  // moves REGULAR triggers from getOffset onto latestOffset — the
-  // logic below reproduces getOffset's floor-cache rate limiting
-  // exactly, preferring the engine's own start offset (authoritative)
-  // over the best-effort hw cache.
+  // moves REGULAR triggers from getOffset onto latestOffset.
 
   /** The drain bound, captured ONCE when an AvailableNow run starts:
     * versions committed after this moment wait for the next run. */
@@ -255,21 +250,23 @@ private[sources] class GraftStreamSource(sqlContext: SQLContext,
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowBound = Some(Versioned.currentVersion(spark, dir))
 
-  override def getDefaultReadLimit
-      : org.apache.spark.sql.connector.read.streaming.ReadLimit =
-    org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def latestOffset(
       startOffset: org.apache.spark.sql.connector.read.streaming.Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
+      limit: ReadLimit)
       : org.apache.spark.sql.connector.read.streaming.Offset = {
     val cur0 = Versioned.currentVersion(spark, dir)
     val cur = availableNowBound.fold(cur0)(b => math.min(cur0, b))
     if (cur < 0) return null // no manifest yet: no data to offer
+    // the floor: the engine's own start offset (authoritative), else
+    // the best-effort hw cache, else the pinned seed — a fresh
+    // checkpoint's first batch obeys the cap too. Only snapshot mode
+    // (startV < 0) has no floor: its first batch is one whole snapshot
     val from = Option(startOffset).map {
       case o: Offset => ver(o)
       case o => o.json().trim.toLong
-    }.orElse(readLong(hwPath))
+    }.orElse(readLong(hwPath)).orElse(Some(startV).filter(_ >= 0))
     from match {
       case Some(hw) if cur <= hw =>
         // all known versions consumed per the floor. With a recorded
@@ -279,6 +276,7 @@ private[sources] class GraftStreamSource(sqlContext: SQLContext,
         // batch 0 yet (getOffset's exact rule)
         if (startOffset != null) startOffset else LongOffset(hw)
       case Some(hw) =>
+        // saturating add: the default cap is Long.MaxValue
         val cap = hw + math.max(1L, maxVersionsPerTrigger)
         LongOffset(if (cap < hw) cur else math.min(cur, cap))
       case None => LongOffset(cur) // floor unknown: uncapped is safe

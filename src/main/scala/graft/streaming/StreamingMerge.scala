@@ -111,7 +111,8 @@ object StreamingMerge {
     * replays. Commit-time stats ride along once the lake tracks them
     * (or pass `statsCols` to establish the discipline from the first
     * batch). Downstream consumers chain off the manifest:
-    * [[StreamingTableFollow]] streams exactly these committed appends.
+    * `spark.readStream.format("graft")` streams exactly these
+    * committed appends.
     */
   def startAppend(rows: DataFrame, baseDir: String,
       partitionKeys: Seq[String], checkpoint: String,

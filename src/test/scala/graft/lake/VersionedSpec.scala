@@ -723,6 +723,36 @@ class VersionedSpec extends SparkSpec {
       ("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0), ("a", 20L, 20.0)))
   }
 
+  test("append refuses key collisions with pending tombstones; appendsBetween refuses tombstone changes") {
+    val root = java.nio.file.Files.createTempDirectory("graft_follow2").toFile
+    root.deleteOnExit()
+    val lake = new java.io.File(root, "lake").getAbsolutePath
+    MergeData.writeMerged(spark,
+      df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0)), "site", "id", "v"),
+      lake, keys = Seq("site"))
+    Versioned.init(spark, lake)
+    Versioned.deleteWhere(spark, lake, col("id") === 1L, keyCols = Seq("id"))
+    // colliding key refused; disjoint append is fine
+    val e = intercept[IllegalArgumentException] {
+      Versioned.append(spark, lake,
+        df(Seq(("a", 1L, 5.0)), "site", "id", "v"), Seq("site"))
+    }
+    assert(e.getMessage.contains("mergeInto"))
+    Versioned.append(spark, lake,
+      df(Seq(("a", 3L, 3.0)), "site", "id", "v"), Seq("site"))
+    assert(state(Versioned.snapshot(spark, lake)) ==
+      Set(("a", 2L, 2.0), ("a", 3L, 3.0)))
+    // the deleteWhere commit changed visible rows without touching
+    // files — a follower range across it must refuse
+    val e2 = intercept[IllegalArgumentException] {
+      Versioned.appendsBetween(spark, lake, 0L, 2L)
+    }
+    assert(e2.getMessage.contains("change feed"))
+    // while the pure-append tail reads exactly the appended rows
+    assert(state(Versioned.appendsBetween(spark, lake, 1L, 2L)) ==
+      Set(("a", 3L, 3.0)))
+  }
+
   test("append retry re-validates the batch against a constraint the winning commit added") {
     val dir = freshLake()
     Versioned.init(spark, dir)

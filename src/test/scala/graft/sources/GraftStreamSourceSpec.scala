@@ -8,14 +8,16 @@ import graft.SparkSpec
 import graft.lake.Versioned
 import graft.ops.MergeData
 
-/** `readStream.format("graft")` — the streaming-read spelling of the
-  * table follower. Pins: snapshot-first batch semantics, append-only
-  * tailing across query RESTARTS with a txn-marked graft sink
-  * (exactly-once end to end: streamed state == batch snapshot, no
-  * duplicates on replay), `startingVersion` (no initial snapshot),
-  * `maxVersionsPerTrigger` backpressure (each run's batches stay
-  * within the cap, backlog drains across runs), and the loud refusal
-  * on a rewrite commit in range. */
+/** `readStream.format("graft")` — the engine's table follower. Pins:
+  * snapshot-first batch semantics (the CURRENT snapshot, even after
+  * optimize + vacuum), append-only tailing across query RESTARTS and
+  * a crash between sink commit and offset commit with a txn-marked
+  * sink (exactly-once end to end: streamed state == batch snapshot,
+  * no duplicates on replay), `startingVersion` (no initial snapshot),
+  * `maxVersionsPerTrigger` backpressure (a backlog of n versions at
+  * cap k drains in exactly ceil(n/k) batches, a seeded first batch
+  * included), `readChanges` into a merge-applying replica, and the
+  * loud refusal on a rewrite commit in range. */
 class GraftStreamSourceSpec extends SparkSpec {
 
   private def state(d: DataFrame): Set[(String, Long, Double)] =
@@ -227,29 +229,254 @@ class GraftStreamSourceSpec extends SparkSpec {
     // consume the (inherently one-batch) initial snapshot first; the
     // cap governs the TAIL, not the bootstrap
     follow(src, sink, ckpt, Map("maxVersionsPerTrigger" -> "2"))
-    (2 to 5).foreach { i =>
+    (2 to 6).foreach { i =>
       Versioned.append(spark, src,
         df(Seq(("a", i.toLong, i.toDouble)), "site", "id", "v"), Seq("site"))
-    } // src at v4: a 4-version backlog behind the follower
+    } // src at v5: a 5-version backlog behind the follower
     // the source implements SupportsTriggerAvailableNow: ONE run
-    // drains the WHOLE backlog captured at start, in multiple
-    // micro-batches each bounded by the cap — each micro-batch is one
-    // txn-marked sink commit, so the sink's version delta counts the
-    // batches and proves the cap bit
+    // drains the WHOLE backlog captured at start, in micro-batches
+    // each bounded by the cap — each micro-batch is one txn-marked
+    // sink commit, so the sink's version delta counts the batches:
+    // exactly ceil(5/2) = 3
     val sinkV0 = Versioned.currentVersion(spark, sink)
     follow(src, sink, ckpt, Map("maxVersionsPerTrigger" -> "2"))
     assert(state(Versioned.snapshot(spark, sink)) ==
       state(Versioned.snapshot(spark, src)),
       "one AvailableNow run must drain the whole backlog")
     val batches = Versioned.currentVersion(spark, sink) - sinkV0
-    assert(batches >= 2,
-      s"a cap of 2 versions must split a 4-version backlog into >= 2 " +
-        s"micro-batches (saw $batches sink commits)")
-    assert(Versioned.snapshot(spark, sink).count() == 5L, "exactly-once")
+    assert(batches == 3L,
+      s"a cap of 2 versions must drain a 5-version backlog in exactly " +
+        s"ceil(5/2) = 3 micro-batches (saw $batches sink commits)")
+    assert(Versioned.snapshot(spark, sink).count() == 6L, "exactly-once")
     // an idle re-run offers no progress and commits nothing
     follow(src, sink, ckpt, Map("maxVersionsPerTrigger" -> "2"))
     assert(Versioned.currentVersion(spark, sink) == sinkV0 + batches,
       "a caught-up AvailableNow run must commit nothing")
+  }
+
+  test("maxVersionsPerTrigger caps the FIRST batch of a seeded stream: startingVersion=0 + 3 appends at cap 1 drain as 3 sink commits") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ssrc_mx0").toFile
+    root.deleteOnExit()
+    val src = mkLake(root, Seq(("a", 1L, 1.0)))
+    (2 to 4).foreach { i =>
+      Versioned.append(spark, src,
+        df(Seq(("a", i.toLong, i.toDouble)), "site", "id", "v"), Seq("site"))
+    } // v1..v3 after the seed
+    val sink = new java.io.File(root, "sink").getAbsolutePath
+    val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
+    follow(src, sink, ckpt,
+      Map("startingVersion" -> "0", "maxVersionsPerTrigger" -> "1"))
+    // the sink's v0 is its empty init; every later version is one
+    // micro-batch — a fresh checkpoint has no engine offset and no
+    // floor cache, so the seed itself must be the first batch's floor
+    assert(Versioned.currentVersion(spark, sink) == 3L,
+      "a cap of 1 must split the seeded 3-version backlog into 3 " +
+        s"micro-batches (sink at v${Versioned.currentVersion(spark, sink)})")
+    assert(state(Versioned.snapshot(spark, sink)) ==
+      Set(("a", 2L, 2.0), ("a", 3L, 3.0), ("a", 4L, 4.0)))
+  }
+
+  test("maxVersionsPerTrigger: a 10-commit CDC backlog drains in ceil(10/3) bounded batches; a crash mid-drain replays its chunk identically; no dup/loss") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ssrc_chunk").toFile
+    root.deleteOnExit()
+    val src = mkLake(root, Seq(("a", 1L, 1.0), ("b", 10L, 10.0)))  // v0
+    Versioned.enableChangeFeed(spark, src, Seq("site", "id"))       // v1
+    val replica = new java.io.File(root, "replica").getAbsolutePath
+    MergeData.writeMerged(spark, Versioned.snapshot(spark, src, 1L),
+      replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
+    // a 10-commit backlog (1, 11]: 8 appends + 2 merges scattered in
+    (1 to 4).foreach { i =>
+      Versioned.append(spark, src,
+        df(Seq(("a", 100L + i, i.toDouble)), "site", "id", "v"), Seq("site"))
+    }                                                               // v2..v5
+    Versioned.mergeInto(spark, src,
+      df(Seq(("a", 1L, 111.0, false)), "site", "id", "v", "__delete"),
+      Seq("site"), Seq("site", "id"))                               // v6
+    (5 to 8).foreach { i =>
+      Versioned.append(spark, src,
+        df(Seq(("b", 100L + i, i.toDouble)), "site", "id", "v"), Seq("site"))
+    }                                                               // v7..v10
+    Versioned.mergeInto(spark, src,
+      df(Seq(("b", 10L, 0.0, true)), "site", "id", "v", "__delete"),
+      Seq("site"), Seq("site", "id"))                               // v11
+    assert(Versioned.currentVersion(spark, src) == 11L)
+    val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
+    // (batch id, commit versions the batch carried) per handed-over batch
+    val served = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+    def run(crashAt: Int): Unit =
+      spark.readStream.format("graft")
+        .option("readChanges", "true")
+        .option("startingVersion", "1")
+        .option("maxVersionsPerTrigger", "3")
+        .load(src)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (d: DataFrame, batchId: Long) =>
+          served += ((batchId, d.select("_commit_version").distinct()
+            .collect().map(_.getLong(0)).toSet))
+          val b = d.filter(col("_action") =!= "update_preimage")
+            .withColumn("__delete", col("_action") === "delete")
+            .drop("_action", "_commit_version")
+          if (!b.isEmpty)
+            Versioned.mergeInto(spark, replica, b, Seq("site"),
+              Seq("site", "id"), txn = Some(("chunk", batchId)))
+          if (served.size == crashAt)
+            throw new RuntimeException("crash mid-drain")
+          ()
+        }
+        .start().awaitTermination()
+    // crash after the SECOND batch's merge commits
+    intercept[Exception] { run(crashAt = 2) }
+    run(crashAt = -1)
+    // ceil(10/3) = 4 distinct batches, each spanning at most 3
+    // versions; batch 1 replays its logged range verbatim — not split,
+    // not widened — and its txn marker dedups the replayed merge
+    assert(served.toList == List(
+      (0L, Set(2L, 3L, 4L)), (1L, Set(5L, 6L, 7L)), (1L, Set(5L, 6L, 7L)),
+      (2L, Set(8L, 9L, 10L)), (3L, Set(11L))), s"got $served")
+    assert(state(Versioned.snapshot(spark, replica)) ==
+      state(Versioned.snapshot(spark, src)),
+      "no dup, no loss: the chunked, crashed-and-replayed replica converges")
+  }
+
+  test("a sink that commits and then crashes before the offset log commits: the restart re-serves the IDENTICAL range despite new appends; the txn marker dedups it") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ssrc_crash").toFile
+    root.deleteOnExit()
+    val src = mkLake(root, Seq(("a", 1L, 1.0)))
+    val sink = new java.io.File(root, "sink").getAbsolutePath
+    val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
+    // (batch id, ids the batch carried) for every batch handed over
+    val served = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+    def run(crashAfterCommit: Boolean): Unit =
+      spark.readStream.format("graft")
+        .option("maxVersionsPerTrigger", "2")
+        .load(src)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (d: DataFrame, batchId: Long) =>
+          served += ((batchId,
+            d.select("id").collect().map(_.getLong(0)).toSet))
+          Versioned.append(spark, sink, d, Seq("site"),
+            txn = Some(("follow", batchId)))
+          if (crashAfterCommit && batchId > 0)
+            throw new RuntimeException("crash after the sink commit")
+          ()
+        }
+        .start().awaitTermination()
+    run(crashAfterCommit = false) // batch 0: the snapshot
+    val sinkV0 = Versioned.currentVersion(spark, sink)
+    (2 to 3).foreach { i =>
+      Versioned.append(spark, src,
+        df(Seq(("a", i.toLong, i.toDouble)), "site", "id", "v"), Seq("site"))
+    }
+    intercept[Exception] { run(crashAfterCommit = true) }
+    assert(Versioned.currentVersion(spark, sink) == sinkV0 + 1,
+      "the crashed batch's sink commit landed")
+    // NEW appends land before the restart
+    (4 to 5).foreach { i =>
+      Versioned.append(spark, src,
+        df(Seq(("a", i.toLong, i.toDouble)), "site", "id", "v"), Seq("site"))
+    }
+    served.clear()
+    run(crashAfterCommit = false)
+    // batch 1 replays its logged (0, 2] range verbatim — not a wider
+    // one whose fresh batch would commit the prefix twice — then
+    // batch 2 serves the new appends
+    assert(served.toList == List((1L, Set(2L, 3L)), (2L, Set(4L, 5L))),
+      s"got $served")
+    assert(Versioned.currentVersion(spark, sink) == sinkV0 + 2,
+      "one sink commit per distinct range — none for the replay")
+    assert(state(Versioned.snapshot(spark, sink)) ==
+      state(Versioned.snapshot(spark, src)))
+  }
+
+  test("a fresh checkpoint serves the CURRENT snapshot — even after optimize rewrote every file and vacuum reaped v0") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ssrc_vac").toFile
+    root.deleteOnExit()
+    val src = mkLake(root, Seq(("a", 1L, 1.0)))
+    (2 to 4).foreach { i =>
+      Versioned.append(spark, src,
+        df(Seq(("a", i.toLong, i.toDouble)), "site", "id", "v"), Seq("site"))
+    }
+    Versioned.optimize(spark, src, Seq("site")) // rewrites every file
+    Versioned.vacuum(spark, src, keepVersions = 1) // v0 is GONE
+    val sink = new java.io.File(root, "sink").getAbsolutePath
+    follow(src, sink, new java.io.File(root, "ckpt").getAbsolutePath)
+    assert(state(Versioned.snapshot(spark, sink)) ==
+      state(Versioned.snapshot(spark, src)))
+    assert(Versioned.snapshot(spark, sink).count() == 4L)
+  }
+
+  test("readChanges at cap 1 follows an append -> merge -> append -> delete -> restore history into a merge-applying replica, exactly-once across a crash mid-drain") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ssrc_uni").toFile
+    root.deleteOnExit()
+    val src = mkLake(root, Seq(("a", 1L, 1.0), ("b", 10L, 10.0)))  // v0
+    Versioned.enableChangeFeed(spark, src, Seq("site", "id"))       // v1
+    // the replica starts as the v1 snapshot; the stream serves what
+    // came after it
+    val replica = new java.io.File(root, "replica").getAbsolutePath
+    MergeData.writeMerged(spark, Versioned.snapshot(spark, src, 1L),
+      replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
+    val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
+    var applied = 0
+    // cap 1: one commit per batch, so no batch holds two actions for
+    // one key; each merge is stamped txn = (id, batchId)
+    def run(crashAt: Int): Unit =
+      spark.readStream.format("graft")
+        .option("readChanges", "true")
+        .option("startingVersion", "1")
+        .option("maxVersionsPerTrigger", "1")
+        .load(src)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (d: DataFrame, batchId: Long) =>
+          val b = d.filter(col("_action") =!= "update_preimage")
+            .withColumn("__delete", col("_action") === "delete")
+            .drop("_action", "_commit_version")
+          if (!b.isEmpty)
+            Versioned.mergeInto(spark, replica, b, Seq("site"),
+              Seq("site", "id"), txn = Some(("cf", batchId)))
+          applied += 1
+          if (applied == crashAt)
+            throw new RuntimeException("crash mid-drain")
+          ()
+        }
+        .start().awaitTermination()
+    Versioned.append(spark, src,
+      df(Seq(("a", 2L, 2.0)), "site", "id", "v"), Seq("site"))   // v2
+    Versioned.mergeInto(spark, src,
+      df(Seq(("a", 1L, 100.0, false), ("b", 10L, 0.0, true)),
+        "site", "id", "v", "__delete"),
+      Seq("site"), Seq("site", "id"))                            // v3 rewrite
+    Versioned.append(spark, src,
+      df(Seq(("b", 11L, 11.0)), "site", "id", "v"), Seq("site")) // v4
+    Versioned.deleteWhere(spark, src, col("id") === 2L,
+      keyCols = Seq("site", "id"))                               // v5 MOR
+    Versioned.restore(spark, src, 2L)                            // v6
+    // crash after the SECOND batch's merge commits — mid-drain
+    intercept[Exception] { run(crashAt = 2) }
+    run(crashAt = -1)
+    // 5 batches for v2..v6, plus the crashed batch's replay
+    assert(applied == 6, s"one batch per version, one replay: $applied")
+    assert(state(Versioned.snapshot(spark, replica)) ==
+      state(Versioned.snapshot(spark, src)),
+      "replica must converge across merge/delete/restore commits")
+    assert(state(Versioned.snapshot(spark, replica)) ==
+      Set(("a", 1L, 1.0), ("b", 10L, 10.0), ("a", 2L, 2.0)),
+      "restored state: v2's rows")
+    // further waves stream incrementally
+    Versioned.append(spark, src,
+      df(Seq(("c", 20L, 20.0)), "site", "id", "v"), Seq("site"))
+    Versioned.deleteWhere(spark, src, col("id") === 1L,
+      keyCols = Seq("site", "id"))
+    run(crashAt = -1)
+    assert(state(Versioned.snapshot(spark, replica)) ==
+      state(Versioned.snapshot(spark, src)))
   }
 
   test("readChanges: merges and deletes stream as CDC rows == changesBetween; rewrites don't refuse; restarts don't duplicate") {
