@@ -75,25 +75,34 @@ object RecallSweep {
       row("trained PQ (q107)", s"m=$m ksub=16 +1 Lloyd $capTag", s"$m", r)
     }
 
+    // The IVF family: one index per codec over the 16 seed cells (one
+    // build each), searched at every nProbe.
+    val seed = Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)
+    def index(cents: DataFrame, codec: Similarity.IvfCodec) =
+      Similarity.ivfBuild(emb, "vec_id", "embedding", cents, codec)
+    val pq = Similarity.IvfCodec.Pq(8, 16)
+    val pqResidual = Similarity.IvfCodec.Pq(8, 16, residual = true)
+    val nProbes = Seq(1, 2, 4, 8)
+
     // IVF-Flat (q47 path): exact cosine within probed cells; recall
     // loss is pure cell miss, isolating the nProbe knob.
-    for (nProbe <- Seq(1, 2, 4, 8)) {
-      val r = recall(Similarity.ivfTopK(emb, "vec_id", "embedding", k,
-        16, nProbe, col("vec_id") < nProbesCount))
+    val flat = index(seed, Similarity.IvfCodec.Raw)
+    for (nProbe <- nProbes) {
+      val r = recall(Similarity.ivfSearch(flat, probes, k, nProbe))
       row("IVF-Flat (q47)", s"nCells=16 nProbe=$nProbe", "256 (raw)", r)
     }
 
     // IVF-PQ (q98) and residual IVF-PQ (q99): both losses compose;
     // residual coding should recover part of the quantization loss at
     // equal bytes.
-    for (nProbe <- Seq(1, 2, 4, 8)) {
-      val r = recall(Similarity.ivfPqTopK(emb, probes, "vec_id", "embedding",
-        16, nProbe, 8, 16, k))
+    val ivfPq = index(seed, pq)
+    for (nProbe <- nProbes) {
+      val r = recall(Similarity.ivfSearch(ivfPq, probes, k, nProbe))
       row("IVF-PQ (q98)", s"nCells=16 nProbe=$nProbe m=8", "8", r)
     }
-    for (nProbe <- Seq(1, 2, 4, 8)) {
-      val r = recall(Similarity.ivfPqResidualTopK(emb, probes, "vec_id",
-        "embedding", 16, nProbe, 8, 16, k))
+    val residual = index(seed, pqResidual)
+    for (nProbe <- nProbes) {
+      val r = recall(Similarity.ivfSearch(residual, probes, k, nProbe))
       row("residual IVF-PQ (q99)", s"nCells=16 nProbe=$nProbe m=8", "8", r)
     }
 
@@ -102,21 +111,20 @@ object RecallSweep {
     // IVF-Flat at the same nProbe (the probed-cell set is identical);
     // the gap to that ceiling measures shortlist misses from ADC
     // scoring, so it shrinks as the shortlist grows.
-    for (nProbe <- Seq(1, 2, 4, 8); shortlist <- Seq(30, 60)) {
-      val r = recall(Similarity.ivfPqRerankTopK(emb, probes, "vec_id",
-        "embedding", 16, nProbe, 8, 16, shortlist, k))
+    for (nProbe <- nProbes; shortlist <- Seq(30, 60)) {
+      val r = recall(Similarity.ivfSearch(ivfPq, probes, k, nProbe,
+        rerank = Some(Similarity.IvfRerank(shortlist, emb))))
       row("IVF-PQ + exact re-rank (q111)",
         s"nCells=16 nProbe=$nProbe m=8 shortlist=$shortlist", "8*", r)
     }
 
     // Residual over Lloyd-refined centroids (q106): cell means shrink
     // the residual norm below 1, restoring residual coding's premise.
-    val refined = Similarity.ivfRefine(
-      Similarity.ivfAssign(emb, "vec_id", "embedding",
-        Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)), "embedding")
-    for (nProbe <- Seq(1, 2, 4, 8)) {
-      val r = recall(Similarity.ivfPqResidualTopK(emb, probes, "vec_id",
-        "embedding", 16, nProbe, 8, 16, k, centroids = Some(refined)))
+    val refined = index(Similarity.ivfRefine(
+      Similarity.ivfAssign(emb, "vec_id", "embedding", seed), "embedding"),
+      pqResidual)
+    for (nProbe <- nProbes) {
+      val r = recall(Similarity.ivfSearch(refined, probes, k, nProbe))
       row("refined residual IVF-PQ (q106)", s"nCells=16 nProbe=$nProbe m=8", "8", r)
     }
 

@@ -1,8 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -303,9 +306,9 @@ object Similarity {
 
   /** Collect a BOUNDED frame into a local relation so its (possibly
     * corpus-wide) lineage executes exactly once — every consumer of a
-    * lazy bounded frame would otherwise re-run the derivation (the
-    * double-execution pitfall ivfTopK documents). Only call on frames
-    * bounded by construction: centroid tables (nCells rows), PQ
+    * lazy bounded frame would otherwise re-run the derivation (a
+    * centroid sample feeds both assignment and probe fan-out). Only
+    * call on frames bounded by construction: centroid tables (nCells rows), PQ
     * codebooks (m x ksub rows), per-source counts. The collect is
     * EAGER: the caller's API becomes snapshot-at-composition (document
     * it there). */
@@ -363,128 +366,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("probe_id", "neighbor_id", "score", "rank")
-  }
-
-  /** Candidate-scoring tail shared by every IVF-PQ probe (inline and
-    * persisted, direct and residual): cell equi-join onto the
-    * compressed lists — candidates = probed cells only — then the ADC
-    * score and per-probe row_number top-k. `score` differs by
-    * encoding: direct sums the LUT; residual adds the exact
-    * probe·centroid term. One definition so the inline and persisted
-    * paths cannot drift apart silently. */
-  private def adcRank(probed: DataFrame, lists: DataFrame,
-      score: Column, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    probed.join(lists, Seq("cell_id"))
-      .filter(col("probe_id") =!= col("neighbor_id"))
-      .withColumn("score", score)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "neighbor_id", "score", "rank")
-  }
-
-  /** IVF-PQ (no residual): the production 100 TB ANN layout — vectors
-    * live in IVF cell-partitioned inverted lists as `m`-byte PQ codes;
-    * a probe fans out to its `nProbe` nearest cells and ADC-scores ONLY
-    * those cells' codes (cell equi-join on the compressed lists; the
-    * corpus is never decoded and only candidate rows are touched).
-    * This variant encodes v directly (global codebooks, simplest
-    * composition); [[ivfPqResidualTopK]] is the classical residual
-    * encoding. Returns (probe_id, neighbor_id, score, rank). */
-  def ivfPqTopK(df: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, nCells: Int, nProbe: Int, m: Int, ksub: Int,
-      k: Int): DataFrame = {
-    // both bounded frames localized: cents' sample sort and cb's are
-    // corpus lineage that every pack/probe consumer would re-run
-    val cents = localize(ivfCentroids(df, idCol, vecCol, nCells))
-    val cb = pqCodebooks(df, idCol, vecCol, m, ksub) // localized inside
-    // ONE corpus pass builds the compressed lists: both the centroid
-    // pack and the codebook pack are single-row broadcasts, so cell_id
-    // and codes are sibling map-side expressions — an assign⋈encode
-    // join on id would scan the corpus twice and shuffle it once for
-    // nothing
-    val lists = df
-      .crossJoin(broadcast(packCentroids(cents)))
-      .crossJoin(broadcast(packCodebooks(cb)))
-      .select(col(idCol).as("neighbor_id"),
-        (-array_max(cellScores(col(vecCol))).getField("neg_id")).as("cell_id"),
-        pqCodesExpr(transform(col(vecCol), _.cast("double")), m, ksub)
-          .as("codes"))
-    val pv = transform(col(vecCol), _.cast("double"))
-    val probed = ivfProbeCells(probes, idCol, vecCol, cents, nProbe)
-      .crossJoin(broadcast(packCodebooks(cb)))
-      .select(col(idCol).as("probe_id"), col("cell_id"),
-        pqLut(pv, m, ksub).as("__lut"))
-    adcRank(probed, lists, round(pqAdc(m, ksub), 4), k)
-  }
-
-  /** (id, cell_id, __res = v − centroid(cell(v))) — the residual frame
-    * both the inline residual plan and the persisted-index build
-    * encode from. Assignment is the map-side centroid broadcast;
-    * the subtraction is a sibling zip_with — no extra corpus pass. */
-  private def residualFrame(df: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame): DataFrame =
-    ivfAssign(df, idCol, vecCol, cents)
-      .join(broadcast(cents), "cell_id")
-      .select(col(idCol), col("cell_id"),
-        zip_with(transform(col(vecCol), _.cast("double")), col("centroid"),
-          (x, y) => x - y).as("__res"))
-
-  /** Probe-side frame for residual ADC, shared by the inline and
-    * persisted residual probes: the nProbe cell fan-out carrying the
-    * exact probe·centroid term (`__cdot`) and the residual-codebook
-    * LUT. */
-  private def residualProbe(probes: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, cb: DataFrame, nProbe: Int,
-      m: Int, ksub: Int): DataFrame = {
-    val pv = transform(col(vecCol), _.cast("double"))
-    ivfProbeCells(probes, idCol, vecCol, cents, nProbe)
-      .join(broadcast(cents), "cell_id")
-      .crossJoin(broadcast(packCodebooks(cb)))
-      .select(col(idCol).as("probe_id"), col("cell_id"),
-        round(dot(pv, col("centroid")), 4).as("__cdot"),
-        pqLut(pv, m, ksub).as("__lut"))
-  }
-
-  /** Residual IVF-PQ — the classical FAISS encoding: each vector's PQ
-    * codes quantize the RESIDUAL `v − centroid(cell(v))` (residuals
-    * concentrate near the origin, so the same codebook budget buys a
-    * tighter quantization than coding raw vectors), with codebooks
-    * sampled from the residuals themselves. A probe's score against a
-    * candidate recovers dot(p, v) ≈ dot(p, c_cell) + dot(p, r̂):
-    * the centroid term is exact (one tiny lookup per probed cell), the
-    * residual term is the same ADC LUT as [[pqTopK]] built over the
-    * residual codebooks. Same plan shape as [[ivfPqTopK]]: everything
-    * map-side except the candidate cell equi-join.
-    *
-    * `centroids` defaults to the deterministic seed sample — but note
-    * that residual coding's premise (residuals concentrate near the
-    * origin) FAILS for sampled corpus-point centroids on normalized
-    * embeddings: mean residual norm is sqrt(2 − 2·cos(v, c)) ≈ 1.24 on
-    * the unit-norm test embeddings, i.e. residuals are LARGER than the
-    * vectors, and measured recall@10 drops to 0.024 vs direct IVF-PQ's
-    * 0.122 (RecallSweep, sf0.1). Pass [[ivfRefine]] output (cell
-    * means, mean residual norm ≈ 0.97) to restore the classical
-    * ordering — refined-residual measures 0.138, beating direct.
-    * SCALING.md carries the full sweep. */
-  def ivfPqResidualTopK(df: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, nCells: Int, nProbe: Int, m: Int, ksub: Int,
-      k: Int, centroids: Option[DataFrame] = None): DataFrame = {
-    val cents = localize(
-      centroids.getOrElse(ivfCentroids(df, idCol, vecCol, nCells)))
-    val resid = residualFrame(df, idCol, vecCol, cents)
-    val cb = pqCodebooks(resid, idCol, "__res", m, ksub)
-    // one pass over the residual frame: cell_id rides along, codes are
-    // a sibling expression over the packed codebooks (no id-shuffle
-    // join with a second derivation of the residuals)
-    val lists = resid
-      .crossJoin(broadcast(packCodebooks(cb)))
-      .select(col(idCol).as("neighbor_id"), col("cell_id"),
-        pqCodesExpr(col("__res"), m, ksub).as("codes"))
-    val probed = residualProbe(probes, idCol, vecCol, cents, cb,
-      nProbe, m, ksub)
-    adcRank(probed, lists, round(col("__cdot") + pqAdc(m, ksub), 4), k)
   }
 
   /** SemDeDup-style semantic dedup: IVF-assign every vector to its
@@ -620,9 +501,20 @@ object Similarity {
       struct(round(cosine(vec, c.getField("centroid")), 4).as("sim"),
         (-c.getField("cell_id")).as("neg_id")))
 
-  /** Centroids packed into a single broadcastable row `cents`. */
-  private def packCentroids(centroids: DataFrame): DataFrame =
-    centroids.agg(collect_list(struct(col("cell_id"), col("centroid"))).as("cents"))
+  /** Centroids packed into a single broadcastable row `cents`. A local
+    * (already collected) frame is packed from its rows in hand —
+    * collecting it runs no job, and the broadcast then ships them,
+    * where an aggregation would cost a shuffle stage and a job; a lazy
+    * frame is packed by aggregation inside the broadcast, so its
+    * derivation runs there once. */
+  private def packCentroids(centroids: DataFrame): DataFrame = {
+    val c = centroids.select(col("cell_id"), col("centroid"))
+    if (c.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      c.sparkSession.createDataFrame(
+        java.util.Collections.singletonList(Row(c.collect().toSeq)),
+        StructType(Seq(StructField("cents", ArrayType(c.schema, containsNull = false)))))
+    else c.agg(collect_list(struct(col("cell_id"), col("centroid"))).as("cents"))
+  }
 
   /** IVF assignment: each row → its nearest cell (argmax rounded
     * cosine). Map-side only: one tiny broadcast, the per-row cell loop
@@ -641,10 +533,6 @@ object Similarity {
 
   /** Probe fan-out: each probe row → its `nProbe` nearest cells (one
     * output row per (probe, cell)). Same map-side shape as assignment. */
-  def ivfProbeCells(probes: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, nProbe: Int): DataFrame =
-    probePacked(probes, idCol, vecCol, packCentroids(centroids), nProbe)
-
   private def probePacked(probes: DataFrame, idCol: String, vecCol: String,
       packed: DataFrame, nProbe: Int, extra: Seq[String] = Nil): DataFrame =
     probes.select(col(idCol) +: col(vecCol) +: extra.map(col): _*)
@@ -668,340 +556,285 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("i"), col("x")))),
         e => e.getField("x")).as("centroid"))
 
-  /** IVF-Flat ANN top-k: probe fan-out ⋈ inverted cell lists on
-    * cell_id, exact rounded cosine + windowed top-k on candidates only.
-    * `centroids` defaults to the deterministic seed sample; pass
-    * [[ivfRefine]] output for trained cells. */
-  def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      nCells: Int, nProbe: Int, probeFilter: Column,
-      centroids: Option[DataFrame] = None): DataFrame = {
-    val cents = centroids.getOrElse(ivfCentroids(df, idCol, vecCol, nCells))
-    // Materialize the packed centroids EAGERLY as a local relation: the
-    // selection is a corpus-wide TakeOrdered, and the two broadcast
-    // consumers (assign + probe) don't canonicalize to a reusable
-    // exchange — without this the full-corpus pass would execute twice.
-    // One row, nCells structs: driver-side by construction.
-    val packed = {
-      val p = packCentroids(cents)
-      p.sparkSession.createDataFrame(
-        java.util.Arrays.asList(p.collect(): _*), p.schema)
-    }
-    val inv = assignPacked(df, idCol, vecCol, packed)
-      .toDF("neighbor_id", "vec", "cell_id")
-    val probes = probePacked(df.filter(probeFilter), idCol, vecCol, packed, nProbe)
-      .toDF("probe_id", "probe_vec", "cell_id")
-    rankCandidates(probes, inv, k)
-  }
-
-  /** Shared IVF tail: probe fan-out ⋈ inverted lists on `keys`
-    * (cell_id, plus any filter columns pushed into the join), exact
-    * rounded cosine, windowed top-k on candidates only. */
-  private def rankCandidates(probes: DataFrame, inv: DataFrame, k: Int,
-      keys: Seq[String] = Seq("cell_id")): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    probes.join(inv, keys)
-      .filter(col("probe_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(cosine(col("probe_vec"), col("vec")), 4))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "neighbor_id", "sim", "rank")
-  }
-
-  /** Attribute-filtered IVF top-k: [[ivfTopK]] with the metadata
-    * constraint pushed INTO the candidate equi-join — candidates must
-    * match on (cell_id, filterCol), so non-matching rows are never
-    * cosine-scored and never leave their scan. At 100 TB this is the
-    * difference between "score the probed cells, then discard 90%"
-    * and "touch only the matching slice of each probed cell"; with
-    * the inverted lists additionally bucketed by the filter column
-    * the join stays exchange-free on the list side. Filtering shrinks
-    * each probe's candidate pool, not the cell fan-out — recall per
-    * nProbe matches unfiltered IVF over the matching subset. */
-  def filteredIvfTopK(df: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, filterCol: String, nCells: Int, nProbe: Int,
-      k: Int): DataFrame = {
-    val packed = localize(packCentroids(
-      localize(ivfCentroids(df, idCol, vecCol, nCells))))
-    val inv = assignPacked(df, idCol, vecCol, packed, Seq(filterCol))
-      .toDF("neighbor_id", "vec", "__f", "cell_id")
-    val fan = probePacked(probes, idCol, vecCol, packed, nProbe, Seq(filterCol))
-      .toDF("probe_id", "probe_vec", "__f", "cell_id")
-    rankCandidates(fan, inv, k, Seq("cell_id", "__f"))
-  }
-
-  /** Two-stage IVF-PQ search — the production recall recipe: a cheap
-    * ADC shortlist of `shortlist` candidates per probe from the
-    * compressed lists (exactly [[ivfPqTopK]]), then EXACT cosine
-    * re-ranking of only those rows, joined back to the raw corpus by
-    * id. The refine tier reads |probes|×shortlist raw vectors — the
-    * shortlist (with probe vectors attached) broadcasts, the corpus
-    * never shuffles — so the exact-distance work no longer scales
-    * with cell size, only with the shortlist. Recall approaches
-    * IVF-Flat at the same nProbe (the probed-cell ceiling) while the
-    * corpus-wide scan stays m bytes/vector; RecallSweep measures the
-    * curve. */
-  def ivfPqRerankTopK(df: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, nCells: Int, nProbe: Int, m: Int, ksub: Int,
-      shortlist: Int, k: Int): DataFrame = {
-    require(shortlist >= k,
-      s"shortlist must be >= k, got shortlist=$shortlist k=$k")
-    val short = ivfPqTopK(df, probes, idCol, vecCol, nCells, nProbe,
-        m, ksub, shortlist)
-      .select("probe_id", "neighbor_id")
-    val p = probes.select(col(idCol).as("probe_id"),
-      col(vecCol).as("probe_vec"))
-    val c = df.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(short.join(broadcast(p), Seq("probe_id"))),
-        Seq("neighbor_id"))
-      .withColumn("sim", round(cosine(col("probe_vec"), col("vec")), 4))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "neighbor_id", "sim", "rank")
-  }
-
   // ---------------------------------------------------------------
-  // Persisted IVF index: build once, probe many — the production ANN
-  // lifecycle. The index is two parquet tables under `dir`:
-  //   centroids/  one row per cell (cell_id, centroid)
-  //   cells/      the inverted lists, HIVE-PARTITIONED by cell_id
-  // Partitioning by cell is the point: a probe touches only its
-  // nProbe cell directories, so the steady-state probe path scans
-  // ~nProbe/nCells of the corpus instead of re-assigning all of it
-  // per query batch.
+  // The IVF index: cell-partitioned inverted lists whose codec decides
+  // what a list row stores —
+  //   raw              the vector; candidates score by exact cosine
+  //   pq(m, ksub)      m one-byte PQ codes of v; ADC against the
+  //                    probe's m×ksub LUT, the corpus never decoded
+  //   pq-residual      m codes of v − centroid(cell(v)), codebooks
+  //                    sampled from the residuals; score = exact
+  //                    probe·centroid + residual ADC (the FAISS encoding)
+  // An index is built inline ([[ivfBuild]], one corpus pass), persisted
+  // ([[ivfWrite]]), reopened ([[ivfLoad]]) and grown ([[ivfAppend]]);
+  // [[ivfSearch]] runs the SAME plan over an inline or a loaded index,
+  // so persisted == inline holds by construction (q72 == q47,
+  // q104 == q98, q108 == q106).
   // ---------------------------------------------------------------
 
-  /** Build and persist the index: deterministic seed centroids
-    * (optionally Lloyd-refined `refineSteps` times), one corpus assign
-    * pass, inverted lists clustered ONE file per cell (the small-files
-    * lesson — an unclustered partitionBy writes every shuffle
-    * partition into every cell directory). */
-  def writeIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCells: Int, refineSteps: Int = 0): Unit = {
-    // Localize each corpus-wide derivation the moment it is bounded
-    // (nCells rows): the build then runs exactly one corpus pass per
-    // refine step plus one for the assign.
-    var cents = localize(ivfCentroids(df, idCol, vecCol, nCells))
-    (0 until refineSteps).foreach { _ =>
-      cents = localize(ivfRefine(
-        assignPacked(df, idCol, vecCol, packCentroids(cents)), vecCol))
+  /** What an inverted-list row stores: the raw vector, or `m` PQ codes
+    * (ksub ≤ 256 entries per subspace) of the vector or — `residual` —
+    * of its offset from the cell centroid. */
+  sealed trait IvfCodec
+  object IvfCodec {
+    case object Raw extends IvfCodec
+    final case class Pq(m: Int, ksub: Int, residual: Boolean = false) extends IvfCodec
+  }
+
+  /** An IVF index. `centroids` (cell_id, centroid) and, for the PQ
+    * codecs, `codebooks` (subspace, code, centroid) are bounded frames
+    * (nCells and m×ksub rows); `cells` holds the inverted lists
+    * (neighbor_id, cell_id, vec | codes [, filter column]). Probes and
+    * appended rows carry the vector ids in `idCol` and the vectors in
+    * `vecCol`. */
+  final case class IvfIndex(idCol: String, vecCol: String, codec: IvfCodec,
+      centroids: DataFrame, codebooks: Option[DataFrame], cells: DataFrame)
+
+  /** Exact re-rank stage of [[ivfSearch]]: keep `shortlist` first-stage
+    * candidates per probe, re-score them by exact cosine against the raw
+    * vectors of `corpus` (joined by id). */
+  final case class IvfRerank(shortlist: Int, corpus: DataFrame)
+
+  /** Layout file of a persisted index, written last by [[ivfWrite]]: its
+    * presence marks a complete build. */
+  private[graft] val IvfMetaFile = "meta.properties"
+
+  /** Build an index over `df` against `centroids` — the [[ivfCentroids]]
+    * seed sample, or [[ivfRefine]] output for trained cells. Centroids
+    * and PQ codebooks are localized here (snapshot at build time, their
+    * corpus-wide derivations run once); the lists stay lazy until
+    * searched or written. PQ codebooks are sampled from the corpus
+    * ([[pqCodebooks]]) or, for `pq-residual`, from the residuals. Pass
+    * refined centroids there: sampled corpus-point centroids invert
+    * residual coding's premise on unit-norm embeddings (mean residual
+    * norm sqrt(2 − 2·cos(v, c)) ≈ 1.24 > 1; recall@10 0.024 vs 0.138
+    * refined, SCALING.md). `filterCol` rides along in every list row so
+    * [[ivfSearch]] can join on it. */
+  def ivfBuild(df: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, codec: IvfCodec,
+      filterCol: Option[String] = None): IvfIndex = {
+    val cents = localize(centroids)
+    val assigned = assignForCodec(df, idCol, vecCol, codec, cents, filterCol.toSeq)
+    val codebooks = codec match {
+      case IvfCodec.Raw => None
+      case IvfCodec.Pq(m, ksub, residual) => Some(
+        if (residual) pqCodebooks(assigned, idCol, "__enc", m, ksub)
+        else pqCodebooks(df, idCol, vecCol, m, ksub))
     }
-    val assigned = assignPacked(df, idCol, vecCol, packCentroids(cents))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"), col("cell_id"))
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    assigned.repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(s"$dir/cells")
+    IvfIndex(idCol, vecCol, codec, cents, codebooks,
+      encodeLists(assigned, idCol, vecCol, codec, codebooks, filterCol.toSeq))
   }
 
-  /** ANN top-k for `probes` against a persisted index — no corpus
-    * re-assignment: centroids load (tiny), probe fan-out is map-side,
-    * and the cells scan is pruned to the probed cell partitions. */
-  /** Append a new vector batch to a persisted index WITHOUT rebuilding:
-    * assign against the PERSISTED centroids and append into the cell
-    * partitions (existing cell files untouched; probes see old + new
-    * immediately). This is the standard IVF maintenance trade — cell
-    * balance and recall degrade as the data distribution drifts from
-    * the centroids' training set, so rebuild (or [[ivfRefine]]) when
-    * drift accumulates; appending never changes what EXISTING vectors
-    * a probe can reach. */
-  def appendToIvfIndex(spark: SparkSession, dir: String, newVecs: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-    assignPacked(newVecs, idCol, vecCol, packCentroids(cents))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"), col("cell_id"))
-      .repartition(col("cell_id"))
-      .write.mode("append").partitionBy("cell_id").parquet(s"$dir/cells")
+  /** `rows` assigned to cells in ONE map-side pass, with the doubles the
+    * PQ codecs encode: (id, vec, carry…, cell_id, __enc), __enc = v or,
+    * for `pq-residual`, v − centroid(cell(v)). */
+  private def assignForCodec(rows: DataFrame, idCol: String, vecCol: String,
+      codec: IvfCodec, cents: DataFrame, carry: Seq[String]): DataFrame = {
+    val assigned = assignPacked(rows, idCol, vecCol, packCentroids(cents), carry)
+    val v = transform(col(vecCol), _.cast("double"))
+    codec match {
+      case IvfCodec.Pq(_, _, true) =>
+        assigned.join(broadcast(cents), "cell_id")
+          .withColumn("__enc", zip_with(v, col("centroid"), (x, y) => x - y))
+      case _ => assigned.withColumn("__enc", v)
+    }
   }
 
-  def ivfTopKFromIndex(spark: SparkSession, dir: String, probes: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val fan = probePacked(probes, idCol, vecCol, packCentroids(cents), nProbe)
-      .toDF("probe_id", "probe_vec", "cell_id")
-    rankCandidates(fan, readIndexCells(spark, dir), k)
+  /** Inverted-list rows (neighbor_id, cell_id, vec | codes, carry…) of
+    * assigned rows. The codebook pack is a single-row broadcast, so codes
+    * are a sibling map-side expression of the assignment: build and
+    * append encode in the same pass that assigns. */
+  private def encodeLists(assigned: DataFrame, idCol: String, vecCol: String,
+      codec: IvfCodec, codebooks: Option[DataFrame],
+      carry: Seq[String]): DataFrame = {
+    def lists(d: DataFrame, payload: Column) =
+      d.select(Seq(col(idCol).as("neighbor_id"), col("cell_id"), payload) ++
+        carry.map(col): _*)
+    codec match {
+      case IvfCodec.Raw => lists(assigned, col(vecCol).as("vec"))
+      case IvfCodec.Pq(m, ksub, _) =>
+        lists(assigned.crossJoin(broadcast(packCodebooks(codebooks.get))),
+          pqCodesExpr(col("__enc"), m, ksub).as("codes"))
+    }
   }
 
-  /** All inverted-list rows of a persisted index: the base `cells`
-    * tree plus, when present, the `cells_inc` increments that
-    * [[graft.streaming.StreamingIvfIngest]] lands per micro-batch (a
-    * separate tree because its extra `batch_id` partition level would
-    * conflict with the base layout's partition discovery). */
-  def readIndexCells(spark: SparkSession, dir: String): DataFrame = {
-    // partition-column inference narrows cell_id to int when the ids
-    // fit — pin it back to the long the rest of the pipeline carries
-    def load(p: String) = spark.read.parquet(p)
-      .select(col("neighbor_id"), col("vec"),
-        col("cell_id").cast("long").as("cell_id"))
-    val base = load(s"$dir/cells")
-    // Hadoop FS, not java.nio: the index dir may be s3a://-style
-    val inc = new org.apache.hadoop.fs.Path(s"$dir/cells_inc")
-    val fs = inc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(inc)) base.unionByName(load(s"$dir/cells_inc"))
-    else base
+  /** Top-k per probe row against an index, inline or loaded. Probes fan
+    * out to their `nProbe` nearest cells (map-side, packed-centroid
+    * broadcast); candidates are the probed cells' list rows via ONE
+    * equi-join on cell_id — plus `filterCol`, when given: the metadata
+    * constraint is a join key, never a post-filter, so non-matching rows
+    * are never scored and k never under-fills (the index must carry the
+    * column, see [[ivfBuild]]). Scores, by codec: raw → exact rounded
+    * cosine `sim`; pq → rounded ADC `score`; pq-residual → rounded exact
+    * probe·centroid + residual ADC `score`. With `rerank`, the first
+    * stage keeps `shortlist` candidates per probe and only those are
+    * re-scored by exact cosine (`sim`) against the raw corpus: the
+    * shortlist broadcasts, the corpus never shuffles, and exact work
+    * scales with |probes|×shortlist, not with cell size. Ranking uses
+    * the rounded score with the neighbor id as tie-break. Returns
+    * (probe_id, neighbor_id, sim | score, rank). */
+  def ivfSearch(ix: IvfIndex, probes: DataFrame, k: Int, nProbe: Int,
+      filterCol: Option[String] = None,
+      rerank: Option[IvfRerank] = None): DataFrame = {
+    rerank.foreach(r => require(r.shortlist >= k,
+      s"shortlist must be >= k, got shortlist=${r.shortlist} k=$k"))
+    val carry = filterCol.toSeq
+    carry.foreach(f => require(ix.cells.columns.contains(f),
+      s"the index lists carry no column $f; build with filterCol = Some(\"$f\")"))
+    val fan = probePacked(probes, ix.idCol, ix.vecCol,
+      packCentroids(ix.centroids), nProbe, carry)
+    val pv = transform(col(ix.vecCol), _.cast("double"))
+    val key = col(ix.idCol).as("probe_id") +: col("cell_id") +: carry.map(col)
+    val (probed, scoreCol, score) = ix.codec match {
+      case IvfCodec.Raw =>
+        (fan.select(key :+ col(ix.vecCol).as("probe_vec"): _*), "sim",
+          cosine(col("probe_vec"), col("vec")))
+      case IvfCodec.Pq(m, ksub, residual) =>
+        // residual: the exact probe·centroid term per probed cell
+        val (withCents, cdot) =
+          if (residual) (fan.join(broadcast(ix.centroids), "cell_id"),
+            Seq(round(dot(pv, col("centroid")), 4).as("__cdot")))
+          else (fan, Nil)
+        val lut = withCents
+          .crossJoin(broadcast(packCodebooks(ix.codebooks.get)))
+          .select(key ++ cdot :+ pqLut(pv, m, ksub).as("__lut"): _*)
+        val adc = pqAdc(m, ksub)
+        (lut, "score", if (residual) col("__cdot") + adc else adc)
+    }
+    val first = rankTopK(probed.join(ix.cells, "cell_id" +: carry)
+        .filter(col("probe_id") =!= col("neighbor_id"))
+        .withColumn(scoreCol, round(score, 4)),
+      scoreCol, rerank.fold(k)(_.shortlist))
+    rerank.fold(first) { r =>
+      val p = probes.select(col(ix.idCol).as("probe_id"),
+        col(ix.vecCol).as("probe_vec"))
+      val short = first.select("probe_id", "neighbor_id")
+        .join(broadcast(p), Seq("probe_id"))
+      rankTopK(r.corpus
+          .select(col(ix.idCol).as("neighbor_id"), col(ix.vecCol).as("vec"))
+          .join(broadcast(short), Seq("neighbor_id"))
+          .withColumn("sim", round(cosine(col("probe_vec"), col("vec")), 4)),
+        "sim", k)
+    }
   }
 
-  /** Build and persist an IVF-PQ index — the steady-state layout a
-    * 100 TB vector corpus actually serves from: the inverted lists
-    * store `m`-byte PQ CODES, never raw vectors (that compression is
-    * IVF-PQ's point; the flat-vector [[writeIvfIndex]] layout is the
-    * exact-refine tier). Under `dir`:
-    *   centroids/  (cell_id, centroid)            — nCells rows
-    *   codebooks/  (subspace, code, centroid)     — m×ksub rows
-    *   meta/       (n_cells, m, ksub)             — one row, probe guard
-    *   cells_pq/   (neighbor_id, codes, cell_id)  — hive-partitioned by
-    *               cell, one file per cell (same clustered write as
-    *               [[writeIvfIndex]])
-    * The build fuses assignment and encoding into ONE corpus pass —
-    * both packs are single-row broadcasts, exactly [[ivfPqTopK]]'s
-    * inline list build. */
-  def writeIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCells: Int, m: Int, ksub: Int): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cents = localize(ivfCentroids(df, idCol, vecCol, nCells))
-    val cb = pqCodebooks(df, idCol, vecCol, m, ksub) // localized inside
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    cb.write.mode("overwrite").parquet(s"$dir/codebooks")
-    Seq((nCells, m, ksub, "direct")).toDF("n_cells", "m", "ksub", "encoding")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    df.crossJoin(broadcast(packCentroids(cents)))
-      .crossJoin(broadcast(packCodebooks(cb)))
-      .select(col(idCol).as("neighbor_id"),
-        (-array_max(cellScores(col(vecCol))).getField("neg_id")).as("cell_id"),
-        pqCodesExpr(transform(col(vecCol), _.cast("double")), m, ksub)
-          .as("codes"))
-      .repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(s"$dir/cells_pq")
+  /** Per-probe top-k by `score` descending, neighbor id as tie-break. */
+  private def rankTopK(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col(score).desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("probe_id", "neighbor_id", score, "rank")
   }
 
-  /** ADC top-k against a persisted IVF-PQ index: centroids and
-    * codebooks load (tiny), the probe fan-out and LUT build are
-    * map-side, and the candidate scan reads only the probed cells'
-    * CODE partitions — raw vectors are never touched (the index
-    * doesn't even store them). Matches [[ivfPqTopK]] inline results
-    * exactly over the same corpus (q104 == q98, the q72/q47
-    * persisted-vs-inline pattern). Fails loudly if (m, ksub) disagree
-    * with the build-time meta — a mismatch would otherwise mis-slice
-    * the packed codebook into silently-wrong LUTs. */
-  def ivfPqTopKFromIndex(spark: SparkSession, dir: String,
-      probes: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int, m: Int, ksub: Int): DataFrame = {
-    requireIndexShape(spark, dir, m, ksub, "direct")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val cb = spark.read.parquet(s"$dir/codebooks")
-    val pv = transform(col(vecCol), _.cast("double"))
-    val probed = ivfProbeCells(probes, idCol, vecCol, cents, nProbe)
-      .crossJoin(broadcast(packCodebooks(cb)))
-      .select(col(idCol).as("probe_id"), col("cell_id"),
-        pqLut(pv, m, ksub).as("__lut"))
-    adcRank(probed, pqCellLists(spark, dir), round(pqAdc(m, ksub), 4), k)
+  /** Persist an index under `dir` — build once, probe many:
+    *   centroids/       (cell_id, centroid)
+    *   codebooks/       (subspace, code, centroid), PQ codecs only
+    *   cells/           the lists, hive-partitioned by cell_id, ONE file
+    *                    per cell (an unclustered partitionBy writes every
+    *                    shuffle partition into every cell directory)
+    *   cells_inc/       batch_id=N increments, see [[ivfAppend]]
+    *   meta.properties  codec, (m, ksub), column names and each part's
+    *                    schema — removed first, written LAST, so its
+    *                    presence marks a complete build
+    * A probe batch then scans only its nProbe cell partitions instead of
+    * re-assigning the corpus. Rewriting a directory drops its
+    * increments. */
+  def ivfWrite(ix: IvfIndex, dir: String): Unit = {
+    val fs = new Path(dir).getFileSystem(
+      ix.cells.sparkSession.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(dir, IvfMetaFile), false)
+    fs.delete(new Path(dir, "cells_inc"), true)
+    val meta = new java.util.Properties
+    def part(name: String, d: DataFrame, partitionBy: String*): Unit = {
+      d.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(s"$dir/$name")
+      meta.setProperty(s"schema.$name", d.schema.json)
+    }
+    part("centroids", ix.centroids)
+    ix.codebooks.foreach(part("codebooks", _))
+    part("cells", ix.cells.repartition(col("cell_id")), "cell_id")
+    ix.codec match {
+      case IvfCodec.Raw => meta.setProperty("codec", "raw")
+      case IvfCodec.Pq(m, ksub, residual) =>
+        meta.setProperty("codec", if (residual) "pq-residual" else "pq")
+        meta.setProperty("m", m.toString)
+        meta.setProperty("ksub", ksub.toString)
+    }
+    meta.setProperty("id_col", ix.idCol)
+    meta.setProperty("vec_col", ix.vecCol)
+    val out = fs.create(new Path(dir, IvfMetaFile), true)
+    try meta.store(out, "IVF index") finally out.close()
   }
 
-  /** The compressed inverted lists of a persisted PQ index.
-    * Partition-column inference narrows cell_id to int when the ids
-    * fit — pin it back to the long the rest of the pipeline carries. */
-  private def pqCellLists(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/cells_pq")
-      .select(col("neighbor_id"), col("codes"),
-        col("cell_id").cast("long").as("cell_id"))
-
-  /** Meta guard shared by the persisted-index probes: (m, ksub) must
-    * match the build — a mismatch would mis-slice the packed codebook
-    * into silently-wrong LUTs — and the ENCODING must match the
-    * prober, because direct and residual codes are byte-compatible but
-    * semantically disjoint (a direct probe over residual codes scores
-    * dot(p, r̂) as if it were dot(p, v̂) — plausible numbers, wrong
-    * ranking). Indexes written before the encoding column existed are
-    * read as "direct". */
-  private def requireIndexShape(spark: SparkSession, dir: String,
-      m: Int, ksub: Int, encoding: String): Unit = {
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    // one head() — a second job on the one-row meta just to read a
-    // second column would double the per-probe driver round-trips
-    val meta = metaDf.head()
-    val (bm, bk) = (meta.getInt(meta.fieldIndex("m")),
-      meta.getInt(meta.fieldIndex("ksub")))
-    require(bm == m && bk == ksub,
-      s"index at $dir was built with m=$bm ksub=$bk; " +
-        s"probe asked for m=$m ksub=$ksub")
-    val enc = if (metaDf.columns.contains("encoding"))
-      meta.getString(meta.fieldIndex("encoding")) else "direct"
-    require(enc == encoding,
-      s"index at $dir holds $enc-encoded codes; this probe scores $encoding codes")
+  /** Reopen a persisted index: the [[ivfWrite]] layout plus any
+    * [[ivfAppend]] increments. Reads the meta file through the Hadoop
+    * FS API (no Spark job) and every part with its
+    * recorded schema (no schema-inference job; cell_id keeps its type).
+    * A directory without the meta file (an incomplete build, or a
+    * layout this reader does not know) or with an unknown codec fails
+    * loudly, naming the directory. */
+  def ivfLoad(spark: SparkSession, dir: String): IvfIndex = {
+    val metaPath = new Path(dir, IvfMetaFile)
+    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(metaPath),
+      s"no complete IVF index at $dir: $IvfMetaFile is missing")
+    val meta = new java.util.Properties
+    val in = fs.open(metaPath)
+    try meta.load(in) finally in.close()
+    def schema(name: String) =
+      DataType.fromJson(meta.getProperty(s"schema.$name")).asInstanceOf[StructType]
+    def part(name: String) = spark.read.schema(schema(name)).parquet(s"$dir/$name")
+    def pq(residual: Boolean) = IvfCodec.Pq(meta.getProperty("m").toInt,
+      meta.getProperty("ksub").toInt, residual)
+    val codec = meta.getProperty("codec") match {
+      case "raw" => IvfCodec.Raw
+      case "pq" => pq(residual = false)
+      case "pq-residual" => pq(residual = true)
+      case other => throw new IllegalArgumentException(
+        s"IVF index at $dir has unknown codec '$other'")
+    }
+    val cells = part("cells")
+    val inc = new Path(dir, "cells_inc")
+    IvfIndex(meta.getProperty("id_col"), meta.getProperty("vec_col"), codec,
+      part("centroids"),
+      if (codec == IvfCodec.Raw) None else Some(part("codebooks")),
+      if (!fs.exists(inc)) cells
+      else cells.unionByName(spark.read.schema(schema("cells"))
+        .parquet(inc.toString).drop("batch_id")))
   }
 
-  /** The [[writeIvfPqIndex]] lifecycle for RESIDUAL coding over
-    * caller-supplied (typically [[ivfRefine]]d) centroids — the
-    * classical FAISS production layout: cells_pq partitions hold
-    * m-byte codes of `v − centroid(cell(v))`, codebooks are sampled
-    * from the residuals, raw vectors are never stored. Pass refined
-    * centroids: sampled corpus-point centroids invert residual
-    * coding's premise (see [[ivfPqResidualTopK]]). */
-  def writeIvfPqResidualIndex(df: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCells: Int, m: Int, ksub: Int,
-      centroids: Option[DataFrame] = None): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cents = localize(
-      centroids.getOrElse(ivfCentroids(df, idCol, vecCol, nCells)))
-    val resid = residualFrame(df, idCol, vecCol, cents)
-    val rcb = pqCodebooks(resid, idCol, "__res", m, ksub)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    rcb.write.mode("overwrite").parquet(s"$dir/codebooks")
-    Seq((nCells, m, ksub, "residual")).toDF("n_cells", "m", "ksub", "encoding")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    resid.crossJoin(broadcast(packCodebooks(rcb)))
-      .select(col(idCol).as("neighbor_id"), col("cell_id"),
-        pqCodesExpr(col("__res"), m, ksub).as("codes"))
-      .repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(s"$dir/cells_pq")
-  }
-
-  /** Residual ADC top-k against a [[writeIvfPqResidualIndex]] index:
-    * same probe shape as [[ivfPqTopKFromIndex]] plus the exact
-    * probe·centroid term per probed cell ([[ivfPqResidualTopK]]'s
-    * decomposition). Matches the inline refined-residual plan exactly
-    * over the same corpus (q108 == q106, the q72/q104 pattern). */
-  def ivfPqResidualTopKFromIndex(spark: SparkSession, dir: String,
-      probes: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int, m: Int, ksub: Int): DataFrame = {
-    requireIndexShape(spark, dir, m, ksub, "residual")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val rcb = spark.read.parquet(s"$dir/codebooks")
-    val probed = residualProbe(probes, idCol, vecCol, cents, rcb,
-      nProbe, m, ksub)
-    adcRank(probed, pqCellLists(spark, dir),
-      round(col("__cdot") + pqAdc(m, ksub), 4), k)
-  }
-
-  /** [[graft.streaming.StreamingIvfIngest]]'s per-batch body: assign
-    * `newVecs` against the PERSISTED centroids and land them under
-    * `cells_inc/batch_id=N/cell_id=C` with dynamic partition overwrite —
-    * a REPLAYED micro-batch rewrites its own increment partitions
-    * instead of double-appending (the [[appendToIvfIndex]] `append`
-    * mode is correct for one-shot batch use but not retry-idempotent). */
-  def appendIndexIncrement(spark: SparkSession, dir: String,
-      newVecs: DataFrame, idCol: String, vecCol: String,
-      batchId: Long): Unit = {
+  /** Add `rows` (carrying the index's id and vector columns) to the
+    * persisted index at `dir` without rebuilding: assigned against the
+    * FROZEN centroids and encoded with the index's codec and frozen
+    * codebooks, they land under `cells_inc/batch_id=N/cell_id=C` with
+    * dynamic partition overwrite — re-running a batch id (a streaming
+    * micro-batch replayed after a crash, or a retried one-shot batch)
+    * rewrites its own increment instead of inserting twice. Probes see
+    * base + increments on the next [[ivfLoad]]. The standard IVF
+    * maintenance trade: appending never changes what existing vectors a
+    * probe reaches, but cell balance and recall degrade as the data
+    * drifts from the centroids' training set — rebuild (or
+    * [[ivfRefine]]) when drift accumulates. */
+  def ivfAppend(dir: String, rows: DataFrame, batchId: Long): Unit = {
+    val spark = rows.sparkSession
+    val ix = ivfLoad(spark, dir)
+    val carry = ix.cells.columns.toSeq
+      .filterNot(Set("neighbor_id", "cell_id", "vec", "codes"))
+    val lists = encodeLists(
+      assignForCodec(rows, ix.idCol, ix.vecCol, ix.codec, ix.centroids, carry),
+      ix.idCol, ix.vecCol, ix.codec, ix.codebooks, carry)
     // own the overwrite mode: under the default STATIC mode this write
     // would truncate every earlier batch's increment partitions instead
     // of replacing only batch_id=N (same set-and-restore discipline as
     // MergeData.writeMerged)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val cents = spark.read.parquet(s"$dir/centroids")
-      assignPacked(newVecs, idCol, vecCol, packCentroids(cents))
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-          col("cell_id"))
-        .withColumn("batch_id", lit(batchId))
-        .repartition(col("cell_id"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id", "cell_id")
-        .parquet(s"$dir/cells_inc")
-    } finally prev match {
+    try lists.withColumn("batch_id", lit(batchId))
+      .repartition(col("cell_id"))
+      .write.mode("overwrite")
+      .partitionBy("batch_id", "cell_id")
+      .parquet(s"$dir/cells_inc")
+    finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }

@@ -28,7 +28,8 @@ import org.apache.spark.sql.types.BinaryType
   * rides to executors with the task closure — the identical bytes
   * Spark's own runtime filter moves as a broadcast subquery result.
   * The one-row `head()` that fetches it is the documented, bounded
-  * driver hop (same tier as `Similarity.ivfTopK`'s centroid row).
+  * driver hop (same tier as the centroid rows `Similarity.ivfBuild`
+  * collects).
   */
 object BloomPrune {
 

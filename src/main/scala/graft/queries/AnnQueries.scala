@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -203,13 +204,12 @@ object AnnQueries {
     * sf dir + embeddings.parquet mtime: a regenerated source table
     * (new mtime) forces a rebuild instead of silently probing a stale
     * index, and the mtime disambiguates any dirs the sanitizer would
-    * collide. `terminalDir` is the layout subtree written LAST by the
-    * builder (its _SUCCESS marker proves a complete build, since meta/
-    * and centroids/ land first); `build` runs at most once per memo
-    * key, under the registry lock so concurrent query runs don't race
-    * the write. Returns the index path. */
-  private def memoizedIndex(dir: String, name: String, terminalDir: String)
-      (build: String => Unit): String = {
+    * collide. The index meta file, written LAST by
+    * [[Similarity.ivfWrite]], proves a complete build; `build` runs at
+    * most once per memo key, under the registry lock so concurrent
+    * query runs don't race the write. Returns the loaded index. */
+  private def memoizedIndex(s: SparkSession, dir: String, name: String)
+      (build: String => Unit): Similarity.IvfIndex = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val stamp = new java.io.File(dir, "embeddings.parquet").lastModified()
     require(stamp > 0, s"$dir/embeddings.parquet is missing — a 0 mtime " +
@@ -218,10 +218,29 @@ object AnnQueries {
       new java.io.File(sys.props("user.dir"), "target"),
       s"${name}_${tag}_$stamp").getAbsolutePath
     ExtensionQueries.synchronized {
-      if (!new java.io.File(s"$idx/$terminalDir/_SUCCESS").exists()) build(idx)
+      if (!new java.io.File(idx, Similarity.IvfMetaFile).exists()) build(idx)
     }
-    idx
+    Similarity.ivfLoad(s, idx)
   }
+
+  /** The IVF queries' shared shape: 16 cells over the embeddings —
+    * the deterministic seed sample, or one Lloyd step over it (q48) —
+    * probed by vec_id < 20 at nProbe = 2, k = 3; PQ at m = 8, ksub = 16. */
+  private def seed(emb: DataFrame) =
+    Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)
+  private def refined(emb: DataFrame) = Similarity.ivfRefine(
+    Similarity.ivfAssign(emb, "vec_id", "embedding", seed(emb)), "embedding")
+  private def build(emb: DataFrame, centroids: DataFrame,
+      codec: Similarity.IvfCodec, filterCol: Option[String] = None) =
+    Similarity.ivfBuild(emb, "vec_id", "embedding", centroids, codec, filterCol)
+  private def search(ix: Similarity.IvfIndex, emb: DataFrame,
+      filterCol: Option[String] = None,
+      rerank: Option[Similarity.IvfRerank] = None) =
+    Similarity.ivfSearch(ix, emb.filter(col("vec_id") < 20), k = 3,
+      nProbe = 2, filterCol, rerank).orderBy("probe_id", "rank")
+  private val (raw, pq, pqResidual) = (Similarity.IvfCodec.Raw,
+    Similarity.IvfCodec.Pq(m = 8, ksub = 16),
+    Similarity.IvfCodec.Pq(m = 8, ksub = 16, residual = true))
 
   val all: Seq[Q] = Seq(
     // ---------------------------------------------------------------
@@ -346,10 +365,10 @@ object AnnQueries {
     // pipeline; the IVF counterpart to q37's LSH scale path.
     // ---------------------------------------------------------------
     Q("q47_ivf_ann",
-      (s, dir) => Similarity.ivfTopK(Tables(s, dir, "embeddings"),
-          "vec_id", "embedding", k = 3, nCells = 16, nProbe = 2,
-          probeFilter = col("vec_id") < 20)
-        .orderBy("probe_id", "rank"),
+      (s, dir) => {
+        val emb = Tables(s, dir, "embeddings")
+        search(build(emb, seed(emb), raw), emb)
+      },
       Some(s"WITH $ivfCte, $ivfProbeSql"),
       "IVF-Flat ANN: broadcast-packed centroids, map-side assign, cell equi-join"),
 
@@ -384,14 +403,10 @@ object AnnQueries {
     // ---------------------------------------------------------------
     Q("q72_ivf_index_probe",
       (s, dir) => {
-        val idx = memoizedIndex(dir, "graft_ivf_idx", "cells") { p =>
-          Similarity.writeIvfIndex(Tables(s, dir, "embeddings"),
-            "vec_id", "embedding", p, nCells = 16)
-        }
-        Similarity.ivfTopKFromIndex(s, idx,
-            Tables(s, dir, "embeddings").filter(col("vec_id") < 20),
-            "vec_id", "embedding", k = 3, nProbe = 2)
-          .orderBy("probe_id", "rank")
+        val emb = Tables(s, dir, "embeddings")
+        search(memoizedIndex(s, dir, "graft_ivfix_raw") { p =>
+          Similarity.ivfWrite(build(emb, seed(emb), raw), p)
+        }, emb)
       },
       Some(s"WITH $ivfCte, $ivfProbeSql"),
       "persisted IVF index probe == inline IVF; cells partition-pruned at read"),
@@ -509,10 +524,7 @@ object AnnQueries {
     Q("q98_ivf_pq_topk",
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
-        Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 20),
-          "vec_id", "embedding", nCells = 16, nProbe = 2,
-          m = 8, ksub = 16, k = 3)
-          .orderBy("probe_id", "rank")
+        search(build(emb, seed(emb), pq), emb)
       },
       Some(ivfPqSql),
       "IVF-PQ: compressed inverted lists, probe touches nProbe cells only"),
@@ -526,14 +538,10 @@ object AnnQueries {
     // ---------------------------------------------------------------
     Q("q104_ivf_pq_index_probe",
       (s, dir) => {
-        val idx = memoizedIndex(dir, "graft_ivfpq_idx", "cells_pq") { p =>
-          Similarity.writeIvfPqIndex(Tables(s, dir, "embeddings"),
-            "vec_id", "embedding", p, nCells = 16, m = 8, ksub = 16)
-        }
-        Similarity.ivfPqTopKFromIndex(s, idx,
-            Tables(s, dir, "embeddings").filter(col("vec_id") < 20),
-            "vec_id", "embedding", k = 3, nProbe = 2, m = 8, ksub = 16)
-          .orderBy("probe_id", "rank")
+        val emb = Tables(s, dir, "embeddings")
+        search(memoizedIndex(s, dir, "graft_ivfix_pq") { p =>
+          Similarity.ivfWrite(build(emb, seed(emb), pq), p)
+        }, emb)
       },
       Some(ivfPqSql),
       "persisted IVF-PQ index probe == inline IVF-PQ; raw vectors never stored"),
@@ -548,10 +556,7 @@ object AnnQueries {
     Q("q99_ivf_pq_residual",
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
-        Similarity.ivfPqResidualTopK(emb, emb.filter(col("vec_id") < 20),
-          "vec_id", "embedding", nCells = 16, nProbe = 2,
-          m = 8, ksub = 16, k = 3)
-          .orderBy("probe_id", "rank")
+        search(build(emb, seed(emb), pqResidual), emb)
       },
       Some(s"""
         WITH $ivfCte,
@@ -622,13 +627,7 @@ object AnnQueries {
     Q("q106_ivf_pq_residual_refined",
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
-        val seed = Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)
-        val refined = Similarity.ivfRefine(
-          Similarity.ivfAssign(emb, "vec_id", "embedding", seed), "embedding")
-        Similarity.ivfPqResidualTopK(emb, emb.filter(col("vec_id") < 20),
-          "vec_id", "embedding", nCells = 16, nProbe = 2,
-          m = 8, ksub = 16, k = 3, centroids = Some(refined))
-          .orderBy("probe_id", "rank")
+        search(build(emb, refined(emb), pqResidual), emb)
       },
       Some(refinedResidualSql),
       "residual IVF-PQ over Lloyd-refined cells: residuals concentrate, recall recovers"),
@@ -705,27 +704,18 @@ object AnnQueries {
 
     // ---------------------------------------------------------------
     // Persisted RESIDUAL IVF-PQ index over refined centroids — the
-    // classical FAISS production layout persisted: cells_pq partitions
+    // classical FAISS production layout persisted: cell partitions
     // hold m-byte codes of v − centroid(cell(v)), centroids are Lloyd
-    // cell means, raw vectors never stored. The meta encoding guard
-    // keeps direct and residual probes from silently cross-reading
-    // each other's codes (plausible numbers, wrong ranking). Same
-    // byte-identical oracle as q106: persisted == inline.
+    // cell means, raw vectors never stored. The codec lives in the
+    // index meta, so a probe cannot score residual codes as direct
+    // ones. Same byte-identical oracle as q106: persisted == inline.
     // ---------------------------------------------------------------
     Q("q108_ivf_pq_residual_index_probe",
       (s, dir) => {
-        val idx = memoizedIndex(dir, "graft_ivfpqres_idx", "cells_pq") { p =>
-          val emb = Tables(s, dir, "embeddings")
-          val seed = Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)
-          val refined = Similarity.ivfRefine(
-            Similarity.ivfAssign(emb, "vec_id", "embedding", seed), "embedding")
-          Similarity.writeIvfPqResidualIndex(emb, "vec_id", "embedding",
-            p, nCells = 16, m = 8, ksub = 16, centroids = Some(refined))
-        }
-        Similarity.ivfPqResidualTopKFromIndex(s, idx,
-            Tables(s, dir, "embeddings").filter(col("vec_id") < 20),
-            "vec_id", "embedding", k = 3, nProbe = 2, m = 8, ksub = 16)
-          .orderBy("probe_id", "rank")
+        val emb = Tables(s, dir, "embeddings")
+        search(memoizedIndex(s, dir, "graft_ivfix_pqres") { p =>
+          Similarity.ivfWrite(build(emb, refined(emb), pqResidual), p)
+        }, emb)
       },
       Some(refinedResidualSql),
       "persisted residual IVF-PQ index probe == inline refined-residual (q106)"),
@@ -780,9 +770,8 @@ object AnnQueries {
     Q("q110_filtered_ivf_ann",
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
-        Similarity.filteredIvfTopK(emb, emb.filter(col("vec_id") < 20),
-            "vec_id", "embedding", "label", nCells = 16, nProbe = 2, k = 3)
-          .orderBy("probe_id", "rank")
+        search(build(emb, seed(emb), raw, Some("label")), emb,
+          filterCol = Some("label"))
       },
       Some(s"""
         WITH $ivfCte,
@@ -824,10 +813,8 @@ object AnnQueries {
     Q("q111_ivf_pq_rerank",
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
-        Similarity.ivfPqRerankTopK(emb, emb.filter(col("vec_id") < 20),
-            "vec_id", "embedding", nCells = 16, nProbe = 2, m = 8,
-            ksub = 16, shortlist = 10, k = 3)
-          .orderBy("probe_id", "rank")
+        search(build(emb, seed(emb), pq), emb,
+          rerank = Some(Similarity.IvfRerank(shortlist = 10, corpus = emb)))
       },
       Some(s"""$ivfPqScoreCtes,
         short AS (SELECT probe_id, neighbor_id FROM (

@@ -5,16 +5,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.Similarity
 
-/** Streaming IVF index maintenance: every micro-batch of new vectors is
-  * assigned against the PERSISTED centroids (frozen at build time —
-  * appending never changes what existing vectors a probe reaches) and
-  * lands under `cells_inc/batch_id=N/cell_id=C` with dynamic partition
-  * overwrite, so a batch replayed after a crash rewrites its own
-  * increment instead of double-inserting — the [[IncrementalPartials]]
-  * idempotence contract applied to index maintenance. Probes via
-  * [[Similarity.ivfTopKFromIndex]] see base + increments immediately;
-  * rebuild (or Lloyd-refine) when distribution drift accumulates, as
-  * with any IVF append path.
+/** Streaming IVF index maintenance: every micro-batch of new vectors
+  * goes through [[Similarity.ivfAppend]] — assigned against the
+  * PERSISTED centroids and encoded with the index's codec and codebooks
+  * (all frozen at build time, so appending never changes what existing
+  * vectors a probe reaches) — and lands under
+  * `cells_inc/batch_id=N/cell_id=C` with dynamic partition overwrite, so
+  * a batch replayed after a crash rewrites its own increment instead of
+  * double-inserting: the [[IncrementalPartials]] idempotence contract
+  * applied to index maintenance. A [[Similarity.ivfLoad]] after the
+  * batch sees base + increments; rebuild (or Lloyd-refine) when
+  * distribution drift accumulates, as with any IVF append path. Stream
+  * rows carry the index's id and vector columns.
   */
 object StreamingIvfIngest {
 
@@ -22,8 +24,7 @@ object StreamingIvfIngest {
     *   streaming commit records the batch — the crash window the
     *   batch_id overwrite exists for (same hook contract as
     *   [[IncrementalPartials.start]]; tests throw here). */
-  def start(stream: DataFrame, indexDir: String, idCol: String,
-      vecCol: String, checkpoint: String,
+  def start(stream: DataFrame, indexDir: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       afterBatch: Long => Unit = _ => ()): StreamingQuery =
     stream.writeStream
@@ -31,12 +32,9 @@ object StreamingIvfIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          // appendIndexIncrement owns the overwrite mode (set-and-restore
-          // on the session it is passed) — no outer set needed here
-          Similarity.appendIndexIncrement(batch.sparkSession, indexDir,
-            batch, idCol, vecCol, id)
-        }
+        // ivfAppend owns the overwrite mode (set-and-restore on the
+        // batch's session) — no outer set needed here
+        if (!batch.isEmpty) Similarity.ivfAppend(indexDir, batch, id)
         afterBatch(id)
       }
       .start()

@@ -184,11 +184,17 @@ class ExtSpec extends SparkSpec {
     assert(b === expected)
   }
 
+  /** Raw-codec IVF search over `vecs`, probes vec_id < 5. */
+  private def ivfTopK(k: Int, nCells: Int, nProbe: Int) = rowsOf(
+    Similarity.ivfSearch(Similarity.ivfBuild(vecs, "vec_id", "embedding",
+        Similarity.ivfCentroids(vecs, "vec_id", "embedding", nCells),
+        Similarity.IvfCodec.Raw),
+      vecs.filter(col("vec_id") < 5), k, nProbe))
+
   test("ivfTopK with one cell and one probe degrades to brute force") {
     // nCells=1 puts the whole corpus in a single inverted list, so the
     // candidate set is exhaustive and IVF must equal the exact baseline
-    val ivf = rowsOf(Similarity.ivfTopK(vecs, "vec_id", "embedding", k = 2,
-      nCells = 1, nProbe = 1, probeFilter = col("vec_id") < 5))
+    val ivf = ivfTopK(k = 2, nCells = 1, nProbe = 1)
     val brute = rowsOf(Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") < 5),
       "vec_id", "embedding", k = 2))
     assert(ivf.toSet === brute.toSet)
@@ -225,8 +231,7 @@ class ExtSpec extends SparkSpec {
   test("ivfTopK recovers brute-force top-1 on clustered data") {
     // 5 natural clusters; probe every cell's 2 nearest lists — the
     // same-cluster neighbor must be found even when cells split oddly
-    val ivf = rowsOf(Similarity.ivfTopK(vecs, "vec_id", "embedding", k = 1,
-      nCells = 5, nProbe = 3, probeFilter = col("vec_id") < 5))
+    val ivf = ivfTopK(k = 1, nCells = 5, nProbe = 3)
     val brute = rowsOf(Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") < 5),
       "vec_id", "embedding", k = 1))
     val bruteMap = brute.map(r => r(0) -> r(1)).toMap
@@ -234,26 +239,6 @@ class ExtSpec extends SparkSpec {
       assert(bruteMap(r(0)) === r(1), s"probe ${r(0)} missed its true neighbor")
     }
     assert(ivf.size === brute.size)
-  }
-
-  test("persisted IVF index: probe path == inline ivfTopK, one file per cell") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
-    Similarity.writeIvfIndex(vecs, "vec_id", "embedding", dir, nCells = 5)
-    val fromIndex = rowsOf(Similarity.ivfTopKFromIndex(spark, dir,
-        vecs.filter(col("vec_id") < 5), "vec_id", "embedding", k = 1, nProbe = 3)
-      .orderBy("probe_id"))
-    val inline = rowsOf(Similarity.ivfTopK(vecs, "vec_id", "embedding", k = 1,
-        nCells = 5, nProbe = 3, probeFilter = col("vec_id") < 5)
-      .orderBy("probe_id"))
-    assert(fromIndex === inline)
-    assert(fromIndex.nonEmpty)
-    // clustered write: exactly one data file per cell directory
-    val cellDirs = new java.io.File(s"$dir/cells").listFiles()
-      .filter(_.getName.startsWith("cell_id="))
-    assert(cellDirs.nonEmpty)
-    cellDirs.foreach { d =>
-      assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1, d.getName)
-    }
   }
 
   test("winnow gram hash is frozen (hand-derived polynomial value)") {

@@ -20,6 +20,11 @@ class FilteredAnnSpec extends SparkSpec {
   private def sorted(d: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     rowsOf(d.orderBy("probe_id", "rank"))
 
+  private def index(c: org.apache.spark.sql.DataFrame, nCells: Int,
+      codec: Similarity.IvfCodec, filterCol: Option[String] = None) =
+    Similarity.ivfBuild(c, "vec_id", "embedding",
+      Similarity.ivfCentroids(c, "vec_id", "embedding", nCells), codec, filterCol)
+
   test("filteredTopK: neighbors share the probe's label and match per-label brute force") {
     val c = df(corpus)
     val probes = c.filter(col("vec_id") < 6)
@@ -43,8 +48,9 @@ class FilteredAnnSpec extends SparkSpec {
   test("filteredIvfTopK probing every cell == exact filteredTopK") {
     val c = df(corpus)
     val probes = c.filter(col("vec_id") < 6)
-    val ivf = Similarity.filteredIvfTopK(c, probes,
-      "vec_id", "embedding", "label", nCells = 4, nProbe = 4, k = 3)
+    val ivf = Similarity.ivfSearch(
+      index(c, nCells = 4, Similarity.IvfCodec.Raw, Some("label")),
+      probes, k = 3, nProbe = 4, filterCol = Some("label"))
     val exact = Similarity.filteredTopK(c, probes,
       "vec_id", "embedding", "label", k = 3)
     assert(sorted(ivf) === sorted(exact))
@@ -57,15 +63,16 @@ class FilteredAnnSpec extends SparkSpec {
     // shortlist >= corpus: the ADC stage keeps every candidate in the
     // probed cells, so exact re-ranking must equal IVF-Flat's exact
     // cosine over the same (nCells, nProbe) candidate set
-    val rr = Similarity.ivfPqRerankTopK(c, probes, "vec_id", "embedding",
-      nCells = 8, nProbe = 2, m = 4, ksub = 8, shortlist = 60, k = 3)
-    val exact = Similarity.ivfTopK(c, "vec_id", "embedding", k = 3,
-      nCells = 8, nProbe = 2, probeFilter = col("vec_id") < 6)
+    val pq = index(c, nCells = 8, Similarity.IvfCodec.Pq(m = 4, ksub = 8))
+    val rr = Similarity.ivfSearch(pq, probes, k = 3, nProbe = 2,
+      rerank = Some(Similarity.IvfRerank(shortlist = 60, corpus = c)))
+    val exact = Similarity.ivfSearch(index(c, nCells = 8, Similarity.IvfCodec.Raw),
+      probes, k = 3, nProbe = 2)
     assert(sorted(rr) === sorted(exact))
     assert(sorted(rr).nonEmpty)
     val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfPqRerankTopK(c, probes, "vec_id", "embedding",
-        nCells = 8, nProbe = 2, m = 4, ksub = 8, shortlist = 2, k = 3)
+      Similarity.ivfSearch(pq, probes, k = 3, nProbe = 2,
+        rerank = Some(Similarity.IvfRerank(shortlist = 2, corpus = c)))
     }
     assert(ex.getMessage.contains("shortlist"))
   }

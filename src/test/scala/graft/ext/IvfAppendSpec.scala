@@ -16,83 +16,27 @@ class IvfAppendSpec extends SparkSpec {
 
   private val base = (0L until 60L).map(i => mk(i, i.toInt))
 
-  test("persisted IVF-PQ index probe == inline IVF-PQ; meta mismatch fails loudly") {
-    val dir = Files.createTempDirectory("graft-ivfpq").toString
-    val corpus = df(base)
-    val probes = corpus.filter(col("vec_id") < 5)
-    Similarity.writeIvfPqIndex(corpus, "vec_id", "embedding", dir,
-      nCells = 8, m = 4, ksub = 8)
-    // the index stores codes only — no raw vector column anywhere
-    val cellsSchema = spark.read.parquet(s"$dir/cells_pq").schema.fieldNames.toSet
-    assert(cellsSchema === Set("neighbor_id", "codes", "cell_id"))
-    val persisted = rowsOf(Similarity.ivfPqTopKFromIndex(spark, dir, probes,
-      "vec_id", "embedding", k = 3, nProbe = 2, m = 4, ksub = 8)
-      .orderBy("probe_id", "rank"))
-    val inline = rowsOf(Similarity.ivfPqTopK(corpus, probes,
-      "vec_id", "embedding", nCells = 8, nProbe = 2, m = 4, ksub = 8, k = 3)
-      .orderBy("probe_id", "rank"))
-    assert(persisted === inline)
-    assert(persisted.nonEmpty)
-    // probing with the wrong PQ shape must fail, not mis-score
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKFromIndex(spark, dir, probes,
-        "vec_id", "embedding", k = 3, nProbe = 2, m = 8, ksub = 16)
-    }
-    assert(ex.getMessage.contains("built with m=4"))
-  }
-
-  test("persisted residual index == inline refined-residual; encoding cross-probe fails loudly") {
-    val dir = Files.createTempDirectory("graft-ivfpqres").toString
-    val corpus = df(base)
-    val probes = corpus.filter(col("vec_id") < 5)
-    val refined = Similarity.ivfRefine(
-      Similarity.ivfAssign(corpus, "vec_id", "embedding",
-        Similarity.ivfCentroids(corpus, "vec_id", "embedding", 8)), "embedding")
-    Similarity.writeIvfPqResidualIndex(corpus, "vec_id", "embedding", dir,
-      nCells = 8, m = 4, ksub = 8, centroids = Some(refined))
-    // codes only — raw vectors are never stored
-    assert(spark.read.parquet(s"$dir/cells_pq").schema.fieldNames.toSet
-      === Set("neighbor_id", "codes", "cell_id"))
-    val persisted = rowsOf(Similarity.ivfPqResidualTopKFromIndex(spark, dir,
-      probes, "vec_id", "embedding", k = 3, nProbe = 2, m = 4, ksub = 8)
-      .orderBy("probe_id", "rank"))
-    val inline = rowsOf(Similarity.ivfPqResidualTopK(corpus, probes,
-      "vec_id", "embedding", nCells = 8, nProbe = 2, m = 4, ksub = 8, k = 3,
-      centroids = Some(refined))
-      .orderBy("probe_id", "rank"))
-    assert(persisted === inline)
-    assert(persisted.nonEmpty)
-    // a DIRECT probe over residual codes would score plausible-but-wrong
-    // dots — the encoding guard must reject it, and vice versa
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKFromIndex(spark, dir, probes,
-        "vec_id", "embedding", k = 3, nProbe = 2, m = 4, ksub = 8)
-    }
-    assert(ex.getMessage.contains("residual-encoded"))
-    val dirDirect = Files.createTempDirectory("graft-ivfpq-direct").toString
-    Similarity.writeIvfPqIndex(corpus, "vec_id", "embedding", dirDirect,
-      nCells = 8, m = 4, ksub = 8)
-    val ex2 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqResidualTopKFromIndex(spark, dirDirect, probes,
-        "vec_id", "embedding", k = 3, nProbe = 2, m = 4, ksub = 8)
-    }
-    assert(ex2.getMessage.contains("direct-encoded"))
-  }
-
   test("appended vectors are probe-reachable; base results are unchanged") {
     val dir = Files.createTempDirectory("graft-ivf-append").toString
-    Similarity.writeIvfIndex(df(base), "vec_id", "embedding", dir, nCells = 8)
+    val corpus = df(base)
+    Similarity.ivfWrite(Similarity.ivfBuild(corpus, "vec_id", "embedding",
+      Similarity.ivfCentroids(corpus, "vec_id", "embedding", 8),
+      Similarity.IvfCodec.Raw), dir)
 
     val probes = df(base.filter(_.vec_id < 5))
-    val before = rowsOf(Similarity.ivfTopKFromIndex(spark, dir, probes,
-      "vec_id", "embedding", k = 3, nProbe = 8).orderBy("probe_id", "rank"))
+    def search() = Similarity.ivfSearch(Similarity.ivfLoad(spark, dir),
+      probes, k = 3, nProbe = 8)
+    val before = rowsOf(search().orderBy("probe_id", "rank"))
 
     // append: an exact copy of vector 2 under a new id, plus two novel ones
     val appended = Seq(V(102L, base(2).embedding), mk(110L, 987), mk(111L, 988))
-    Similarity.appendToIvfIndex(spark, dir, df(appended), "vec_id", "embedding")
+    Similarity.ivfAppend(dir, df(appended), batchId = 0)
+    // one-shot batch use is the same idempotent call: a retried batch id
+    // rewrites its increment instead of inserting twice
+    Similarity.ivfAppend(dir, df(appended), batchId = 0)
+    assert(Similarity.ivfLoad(spark, dir).cells.count() === 63L)
 
-    val after = Similarity.ivfTopKFromIndex(spark, dir, probes,
-      "vec_id", "embedding", k = 3, nProbe = 8)
+    val after = search()
     // probing ALL cells: the planted exact copy of vec 2 must now be
     // vec 2's top neighbor at sim 1.0
     val v2top = after.filter(col("probe_id") === 2 && col("rank") === 1)

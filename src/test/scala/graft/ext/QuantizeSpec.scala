@@ -127,8 +127,10 @@ class QuantizeSpec extends SparkSpec {
       Vec(4, Seq(1f, 1f, 1f, 1f)))
     val corpus = df(vs)
     val probe = df(Seq(Vec(100, Seq(10f, 1f, 0f, 0f))))
-    val top = Similarity.ivfPqResidualTopK(corpus, probe, "vec_id", "embedding",
-        nCells = 2, nProbe = 2, m = 2, ksub = 4, k = 4)
+    val ix = Similarity.ivfBuild(corpus, "vec_id", "embedding",
+      Similarity.ivfCentroids(corpus, "vec_id", "embedding", 2),
+      Similarity.IvfCodec.Pq(m = 2, ksub = 4, residual = true))
+    val top = Similarity.ivfSearch(ix, probe, k = 4, nProbe = 2)
       .orderBy("rank")
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(top == Seq((1L, 100.0), (4L, 11.0), (2L, 10.0), (3L, 0.0)))
