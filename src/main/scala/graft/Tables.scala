@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+
+import graft.lake.LocalParquet
 
 /** Readers for the driver-generated TPC-H-ish testdata lake (TESTDATA.md).
   *
@@ -30,6 +36,9 @@ import org.apache.spark.sql.functions._
   * so a UTC session is REQUIRED for oracle parity (set below;
   * build.sbt also pins -Dspark.sql.session.timeZone=UTC for all
   * runners).
+  *
+  * Every table's schema comes from its footer ([[parquet]]), so
+  * building a table's frame launches no schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -38,7 +47,22 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** `path` (one parquet file or a Spark-written directory) read with
+    * the schema in the footer of its first data file in name order (the
+    * file Spark's inference reads without `mergeSchema`), converted on
+    * the driver by Spark's converter under the session's parquet confs
+    * at call time (`nanosAsLong` included). No cache: one footer open. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val first = LocalParquet.dataFiles(p.getFileSystem(conf), p).map(_._1).minBy(_.toString)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
+    val footer = try new Footer(first, r.getFooter) finally r.close()
+    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path)
+  }
 
   def events(spark: SparkSession, dir: String): DataFrame = {
     // The TIMESTAMP->NTZ cast below goes through the session timezone;
@@ -54,7 +78,7 @@ object Tables {
       spark.conf.set("spark.sql.session.timeZone", "UTC")
     }
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     // The lake has shipped `ts` both as TIMESTAMP(NANOS) (surfaces as
     // LongType under nanosAsLong; truncate to micros integrally) and as
     // plain TIMESTAMP(MICROS) (a real timestamp column; just strip the

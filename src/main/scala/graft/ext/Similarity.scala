@@ -253,12 +253,24 @@ object Similarity {
 
   /** Codebooks packed into one broadcastable row, ordered by
     * (subspace, code) so `element_at(cents, subspace*ksub + code + 1)`
-    * is the lookup. */
-  private def packCodebooks(codebooks: DataFrame): DataFrame =
-    codebooks.agg(transform(
+    * is the lookup. A local frame (every [[pqCodebooks]] /
+    * [[pqRefineCodebooks]] result) is packed on the driver, as
+    * [[packCentroids]] does; (subspace, code) is unique there, so its
+    * order is the aggregate's `array_sort` order. */
+  private def packCodebooks(codebooks: DataFrame): DataFrame = {
+    val c = codebooks.select(col("subspace"), col("code"), col("centroid"))
+    if (c.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      c.sparkSession.createDataFrame(
+        java.util.Collections.singletonList(Row(c.collect().toSeq
+          .sortBy(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+          .map(_.get(2)))),
+        StructType(Seq(StructField("__cb",
+          ArrayType(c.schema("centroid").dataType, containsNull = false)))))
+    else c.agg(transform(
       array_sort(collect_list(struct(
         col("subspace"), col("code"), col("centroid")))),
       e => e.getField("centroid")).as("__cb"))
+  }
 
   /** PQ encoding: each vector → `m` one-byte codes, code j = argmin
     * rounded L2 distance between subvector j and subspace j's

@@ -329,17 +329,11 @@ object CopyInto {
     val root = new Path(from)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(root), s"COPY INTO source does not exist: $from")
-    val buf = Vector.newBuilder[String]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) {
-        if (st.isDirectory) walk(st.getPath)
-        else buf += fs.makeQualified(st.getPath).toUri.toString
-      }
-    }
-    if (fs.getFileStatus(root).isDirectory) walk(root)
-    else buf += fs.makeQualified(root).toUri.toString
-    val all = buf.result()
+    val rootUri = fs.makeQualified(root).toUri
+    val all = PathModel.walk(fs, root).map(st => fs.makeQualified(st.getPath).toUri)
+      .filter(u => rootUri.relativize(u).getPath.split('/')
+        .forall(c => !c.startsWith("_") && !c.startsWith(".")))
+      .map(_.toString)
     pattern match {
       case None => all
       case Some(g) =>

@@ -33,7 +33,7 @@ import scala.jdk.CollectionConverters._
   * distributed reader models that with `mergeSchema` — absent fields
   * simply have no key here.
   */
-private[lake] object LocalParquet {
+private[graft] object LocalParquet {
 
   /** The `.parquet` part files under `p` (Spark writes a directory;
     * the driver-side writer below writes a plain file), with sizes.

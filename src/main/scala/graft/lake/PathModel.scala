@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,19 +26,34 @@ object PathModel {
     * Listing happens on the driver via Hadoop's FileSystem (same place
     * Spark's own FileIndex does it); the result is a DataFrame so all
     * downstream pruning/parsing is distributed and, at 100 TB, the
-    * listing itself can be replaced by an S3 Inventory table scan. */
+    * listing itself can be replaced by an S3 Inventory table scan. The
+    * listing is [[walk]] (`listStatus`), not `FileSystem.listFiles`:
+    * see there. */
   def listFiles(spark: SparkSession, root: String, suffix: String = ".csv.gz"): DataFrame = {
     import spark.implicits._
-    val path = new org.apache.hadoop.fs.Path(root)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.toString.endsWith(suffix))
-        buf += ((f.getPath.toString, f.getLen))
+    val path = new Path(root)
+    walk(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+      .collect { case f if f.getPath.toString.endsWith(suffix) =>
+        (f.getPath.toString, f.getLen) }
+      .toDF("path", "size")
+  }
+
+  /** The files under `root` (`root` itself when it is a file), in the
+    * order `FileSystem.listFiles` yields them: one `listStatus`
+    * per directory, depth-first. `listFiles` wraps every file in a
+    * `LocatedFileStatus`, whose constructor loads permissions — on the
+    * local FS without libhadoop that forks one `ls -ld` per file
+    * (Spark's `HadoopFSUtils` avoids that constructor for the same
+    * reason). `ChecksumFileSystem.listStatus` hides `.crc` sidecars just
+    * as `listFiles` did; `_`/`.` entries are the caller's to exclude. */
+  private[graft] def walk(fs: FileSystem, root: Path,
+      recursive: Boolean = true): Seq[FileStatus] = {
+    val out = Seq.newBuilder[FileStatus]
+    def go(p: Path): Unit = fs.listStatus(p).foreach { st =>
+      if (st.isFile) out += st else if (recursive) go(st.getPath)
     }
-    buf.toSeq.toDF("path", "size")
+    go(root)
+    out.result()
   }
 
   /** S2+S3: parse `.../SITE/PARTICIPANT/METRIC/.../YYYYMMDD_HHMM[_i].csv.gz`

@@ -403,16 +403,10 @@ object SkipIndex {
     val root = new org.apache.hadoop.fs.Path(dataDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Set.empty
-    val it = fs.listFiles(root, true)
-    val buf = scala.collection.mutable.Set.empty[String]
-    while (it.hasNext) {
-      val f = it.next().getPath
-      val rel = f.toUri.getPath
-      val segs = rel.split('/')
-      if (f.getName.endsWith(".parquet") &&
-          !segs.exists(s => s.startsWith("_") || s.startsWith(".")))
-        buf += normalize(rel)
-    }
-    buf.toSet
+    PathModel.walk(fs, root).map(_.getPath).collect {
+      case f if f.getName.endsWith(".parquet") &&
+          !f.toUri.getPath.split('/').exists(s => s.startsWith("_") || s.startsWith(".")) =>
+        normalize(f.toUri.getPath)
+    }.toSet
   }
 }

@@ -740,6 +740,12 @@ object Versioned {
   private def hasDvAt(spark: SparkSession, dir: String, version: Long): Boolean =
     metaAt(spark, dir, version).dels.exists(e => isDvRef(delParse(e)._1))
 
+  /** The `.parquet` part files a staging write left directly under
+    * `dir/rel`, as `rel/name`, in listing order. */
+  private def stagedParts(fs: FileSystem, dir: String, rel: String): Seq[String] =
+    PathModel.walk(fs, new Path(dir, rel), recursive = false)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).map(f => s"$rel/$f")
+
   /** Recursive data-file listing (relative, with byte length — the
     * listing's own statuses carry it, zero extra RPCs), excluding
     * metadata (`_manifest`, `_SUCCESS`, dotfiles). Driver-side,
@@ -748,19 +754,15 @@ object Versioned {
   private def listDataFilesWithLen(fs: FileSystem, root: Path,
       sub: Path): Seq[(String, Long)] = {
     if (!fs.exists(sub)) return Nil
-    val it = fs.listFiles(sub, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val rootUri = root.toUri.getPath.stripSuffix("/")
-    while (it.hasNext) {
-      val st = it.next()
+    PathModel.walk(fs, sub).flatMap { st =>
       val f = st.getPath
       val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-      val segs = rel.split('/')
       if (f.getName.endsWith(".parquet") &&
-          !segs.exists(s => s.startsWith("_") || s.startsWith(".")))
-        buf += ((rel, st.getLen))
-    }
-    buf.sortBy(_._1).toSeq
+          !rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
+        Some((rel, st.getLen))
+      else None
+    }.sortBy(_._1)
   }
 
   private def listDataFiles(fs: FileSystem, root: Path, sub: Path): Seq[String] =
@@ -2442,19 +2444,12 @@ object Versioned {
       if (!fs.exists(root)) return None
       val budget = footerLocalMaxFiles(spark)
       val rootUri = root.toUri.getPath.stripSuffix("/")
-      val it = fs.listFiles(root, true)
-      val parts = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val f = it.next().getPath
+      val parts = PathModel.walk(fs, root).map(_.getPath).filter { f =>
         val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        val segs = rel.split('/')
-        if (f.getName.endsWith(".parquet") &&
-            !segs.exists(s => s.startsWith("_") || s.startsWith("."))) {
-          parts += f
-          if (parts.size > budget) return None
-        }
+        f.getName.endsWith(".parquet") &&
+          !rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
       }
-      uniformSchemaLocal(spark, parts.toSeq)
+      if (parts.size > budget) None else uniformSchemaLocal(spark, parts)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   private def anchorDf(spark: SparkSession, dir: String,
@@ -5181,12 +5176,7 @@ object Versioned {
     // (guide §2.4; the append/merge staged-write discipline).
     toPhysical(meta0, keys).coalesce(1)
       .write.mode("errorifexists").parquet(s"$dir/$delRel")
-    val it = fs.listFiles(new Path(dir, delRel), false)
-    val delFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next().getPath.getName
-      if (f.endsWith(".parquet")) delFiles += s"$delRel/$f"
-    }
+    val delFiles = stagedParts(fs, dir, delRel)
     // zero files from a "successful" staging write is an FS/committer
     // fault, never a no-match (coalesce(1) guarantees one file on a
     // healthy write) — fail LOUDLY rather than silently skip a delete;
@@ -5597,12 +5587,7 @@ object Versioned {
       hits.select(col(fileCol).as(DvFileCol),
           col(DvSrcPos).cast("long").as(DvPosCol))
         .write.mode("errorifexists").parquet(s"$dir/$dvRel")
-      val it = fs.listFiles(new Path(dir, dvRel), false)
-      val dvFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath.getName
-        if (f.endsWith(".parquet")) dvFiles += s"$dvRel/$f"
-      }
+      val dvFiles = stagedParts(fs, dir, dvRel)
       // zero files from a "successful" staging write is an
       // FS/committer fault, never a no-match (an empty unpartitioned
       // write stages one schema-only file) — fail loudly
@@ -5741,12 +5726,7 @@ object Versioned {
       hits.select(col(fileCol).as(DvFileCol),
           col(DvSrcPos).cast("long").as(DvPosCol))
         .write.mode("errorifexists").parquet(s"$dir/$dvRel")
-      val it = fs.listFiles(new Path(dir, dvRel), false)
-      val dvFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath.getName
-        if (f.endsWith(".parquet")) dvFiles += s"$dvRel/$f"
-      }
+      val dvFiles = stagedParts(fs, dir, dvRel)
       // zero files from a "successful" staging write is an
       // FS/committer fault, never a no-match (an empty unpartitioned
       // write stages one schema-only file) — fail loudly
@@ -5979,12 +5959,7 @@ object Versioned {
         java.util.UUID.randomUUID().toString.take(8)
       toPhysical(meta0, keys).coalesce(1)
         .write.mode("errorifexists").parquet(s"$dir/$delRel")
-      val delFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(new Path(dir, delRel), false)
-      while (it.hasNext) {
-        val f = it.next().getPath.getName
-        if (f.endsWith(".parquet")) delFiles += s"$delRel/$f"
-      }
+      val delFiles = stagedParts(fs, dir, delRel)
       if (delFiles.isEmpty ||
           countFooterRows(spark, delFiles.map(r => s"$dir/$r").toSeq) == 0L) {
         fs.delete(new Path(dir, delRel), true)
@@ -6208,12 +6183,8 @@ object Versioned {
                   java.util.UUID.randomUUID().toString.take(8)
                 toPhysical(meta0, remaining.distinct()).coalesce(1)
                   .write.mode("errorifexists").parquet(s"$dir/$delRel")
-                val it = fs.listFiles(new Path(dir, delRel), false)
-                while (it.hasNext) {
-                  val f = it.next().getPath.getName
-                  if (f.endsWith(".parquet"))
-                    keptDels += bound.fold(s"$delRel/$f")(b => s"$delRel/$f @$b")
-                }
+                stagedParts(fs, dir, delRel).foreach { f =>
+                  keptDels += bound.fold(f)(b => s"$f @$b") }
               }
             }
           }
@@ -7059,9 +7030,7 @@ object Versioned {
     val delRoot = new Path(dir, "_deletes")
     if (fs.exists(delRoot)) {
       val rootUri = new Path(dir).toUri.getPath.stripSuffix("/")
-      val it = fs.listFiles(delRoot, true)
-      while (it.hasNext) {
-        val st = it.next()
+      PathModel.walk(fs, delRoot).foreach { st =>
         val f = st.getPath
         val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
         // same age gate as the change increments: a tombstone is

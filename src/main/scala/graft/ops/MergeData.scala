@@ -47,7 +47,11 @@ object MergeData {
     * shuffle buys one file per group. A group too big for one task
     * would need a salt column appended to the repartition keys; these
     * per-(site,participant,metric) groups are day-file unions and stay
-    * far below task size. */
+    * far below task size. The repartition pins the session's shuffle
+    * partition count: left to AQE, byte-based coalescing packs a small
+    * write into one task that then creates every group's file one
+    * after another, and a partitioned write pays per file created, not
+    * per byte. */
   /** `format`: "parquet" (default) or "csv.gz" — the reference's two
     * output formats (merge-data.py:93-96 writes gzipped csv by default
     * with `--parquet` opting into parquet; we default the other way,
@@ -68,7 +72,9 @@ object MergeData {
         // no keys (unpartitioned): keep the batch's parallelism —
         // repartition() on ZERO expressions hashes every row to one
         // partition, a single-task write
-        (if (keys.isEmpty) d else d.repartition(keys.map(col): _*))
+        (if (keys.isEmpty) d
+         else d.repartition(spark.sessionState.conf.numShufflePartitions,
+           keys.map(col): _*))
           .write
           .mode("overwrite")
           .partitionBy(keys: _*)

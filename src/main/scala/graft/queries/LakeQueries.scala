@@ -674,12 +674,14 @@ object LakeQueries {
       .join(inv.select("path", "site", "participant_id", "metric"), "path")
       .select("site", "participant_id", "metric", "timestamp", "value")
       .persist()
-    MergeData.writeMerged(s, data, outDir)
-    val patch = data
-      .filter(col("site") === "site_1" && col("participant_id") === "p1" &&
-        col("metric") === "click")
-      .withColumn("value", col("value") * 2)
-    MergeData.writeMerged(s, patch, outDir)
+    try {
+      MergeData.writeMerged(s, data, outDir)
+      val patch = data
+        .filter(col("site") === "site_1" && col("participant_id") === "p1" &&
+          col("metric") === "click")
+        .withColumn("value", col("value") * 2)
+      MergeData.writeMerged(s, patch, outDir)
+    } finally data.unpersist()
     s.read.parquet(outDir)
       .groupBy("site", "participant_id", "metric")
       .agg(count(lit(1)).as("row_count"),
@@ -2304,17 +2306,10 @@ object LakeQueries {
               Versioned.mergeInto(s, lake, b1, Seq("event_type"),
                 Seq("event_id"), changeFeed = Some((feedDir, 1L)),
                 commitTs = 3000L)
-              def physicalParquetCount(): Int = {
-                val it = fs.listFiles(
-                  new org.apache.hadoop.fs.Path(lake), true)
-                var n = 0
-                while (it.hasNext) {
-                  val p = it.next().getPath
-                  if (p.getName.endsWith(".parquet") &&
-                      !p.toString.contains("/_")) n += 1
-                }
-                n
-              }
+              def physicalParquetCount(): Int =
+                PathModel.walk(fs, new org.apache.hadoop.fs.Path(lake))
+                  .map(_.getPath).count(p => p.getName.endsWith(".parquet") &&
+                    !p.toString.contains("/_"))
               val physBefore = physicalParquetCount()
               Versioned.restore(s, lake, 1L,
                 changeFeed = Some((feedDir, 2L)),
@@ -2420,16 +2415,10 @@ object LakeQueries {
             require(Versioned.filesAt(s, clone, 0L)
               .forall(Versioned.refIsForeign),
               "a shallow clone's v0 must be entirely foreign refs")
-            def localParquet(): Int = {
-              val it = fs.listFiles(new org.apache.hadoop.fs.Path(clone), true)
-              var n = 0
-              while (it.hasNext) {
-                val p = it.next().getPath
-                if (p.getName.endsWith(".parquet") &&
-                    !p.toString.contains("/_")) n += 1
-              }
-              n
-            }
+            def localParquet(): Int =
+              PathModel.walk(fs, new org.apache.hadoop.fs.Path(clone))
+                .map(_.getPath).count(p => p.getName.endsWith(".parquet") &&
+                  !p.toString.contains("/_"))
             require(localParquet() == 0,
               "a shallow clone must copy zero data files")
             val base = graft.Tables(s, dir, "events")
@@ -5078,14 +5067,10 @@ object LakeQueries {
             .filter(col("event_type").isin("click", "view"))
           // a PLAIN parquet lake — written by vanilla Spark, no manifest
           base.write.partitionBy("event_type").parquet(lake)
-          def files(p: String): Set[String] = {
-            val it = fs.listFiles(new org.apache.hadoop.fs.Path(lake), true)
-            val b = Set.newBuilder[String]
-            while (it.hasNext) { val f = it.next().getPath
-              if (f.getName.endsWith(".parquet") &&
-                  f.toString.contains(s"event_type=$p/")) b += f.toString }
-            b.result()
-          }
+          def files(p: String): Set[String] =
+            PathModel.walk(fs, new org.apache.hadoop.fs.Path(lake))
+              .map(_.getPath.toString).filter(f => f.endsWith(".parquet") &&
+                f.contains(s"event_type=$p/")).toSet
           val clickBefore = files("click")
           val viewBefore = files("view")
           val m = sqlMaint(s, s"CONVERT TO GRAFT gsql.`$lake` " +

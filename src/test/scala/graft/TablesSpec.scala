@@ -65,4 +65,48 @@ class TablesSpec extends SparkSpec {
     }
     assert(readTs(longDir) == readTs(tsDir))
   }
+
+  private val sfDir = "/root/testdata/sf0.001"
+
+  private def eventsLakes(): Seq[String] = Seq(
+    lake { path =>
+      df(microsUtc.map(us => Tuple2(us * 1000L, "a")), "ts", "event_type")
+        .write.mode("overwrite").parquet(path)
+    },
+    lake { path =>
+      df(microsUtc.map(us => Tuple2(us, "a")), "us", "event_type")
+        .select(timestamp_micros(col("us")).as("ts"), col("event_type"))
+        .write.mode("overwrite").parquet(path)
+    })
+
+  test("the footer schema equals Spark's inferred one: every sf0.001 table and both events lakes") {
+    Tables.events(spark, sfDir) // sets nanosAsLong as every events read does
+    val paths = Tables.names.map(n => s"$sfDir/$n.parquet") ++
+      eventsLakes().map(d => s"$d/events.parquet")
+    paths.foreach { p =>
+      assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+    Tables.names.filterNot(_ == "events").foreach { n =>
+      assert(Tables(spark, sfDir, n).schema ==
+        spark.read.parquet(s"$sfDir/$n.parquet").schema, n)
+    }
+  }
+
+  test("building a table's frame runs no Spark job") {
+    val lakes = eventsLakes()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftColumnBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      Tables.names.foreach(n => Tables(spark, sfDir, n))
+      lakes.foreach(d => Tables.events(spark, d))
+      org.apache.spark.sql.GraftColumnBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0)
+  }
 }

@@ -1,5 +1,10 @@
 package graft.lake
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -51,5 +56,43 @@ class PathModelSpec extends SparkSpec {
     val d = PathModel.includeBySubstring(parsed, Seq("eart"))
     assert(rowsOf(d.select("metric")) == Seq(Seq("heart_rate")))
     assert(PathModel.includeBySubstring(parsed, Nil).count() == 2)
+  }
+
+  test("walk yields exactly fs.listFiles's files in its order (nested/empty dirs, _ and . entries, .crc sidecars, a file root)") {
+    // the local FS is a ChecksumFileSystem: every create writes a .crc
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(Files.createTempDirectory("graft-walk").toUri)
+    Seq("a.csv.gz", "s1/p1/hr/20240101_0000.csv.gz", "s1/p1/hr/deep/x.parquet",
+        "_SUCCESS", "_tmp/y.parquet", ".hidden/z", "s2/.dot", "s2/_under")
+      .foreach { rel =>
+        val o = fs.create(new Path(root, rel)); o.write(Array[Byte](1, 2, 3)); o.close()
+      }
+    fs.mkdirs(new Path(root, "empty/nested/also_empty"))
+    assert(Files.exists(Paths.get(new Path(root, "s1/p1/hr/.20240101_0000.csv.gz.crc").toUri)))
+    def listed(p: Path, recursive: Boolean): Seq[(String, Long)] = {
+      val it = fs.listFiles(p, recursive)
+      val b = Seq.newBuilder[(String, Long)]
+      while (it.hasNext) { val f = it.next(); b += ((f.getPath.toString, f.getLen)) }
+      b.result()
+    }
+    for (p <- Seq(root, new Path(root, "s1"), new Path(root, "empty"),
+        new Path(root, "a.csv.gz")); recursive <- Seq(true, false)) {
+      val walked = PathModel.walk(fs, p, recursive).map(f => (f.getPath.toString, f.getLen))
+      assert(walked == listed(p, recursive), s"$p recursive=$recursive")
+    }
+    val all = PathModel.walk(fs, root).map(_.getPath.getName)
+    assert(all.size == 8 && !all.exists(_.endsWith(".crc")), all)
+  }
+
+  test("no file under src/main/scala lists through fs.listFiles( or listLocatedStatus") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root, not ${sys.props("user.dir")}")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = Files.readString(p)
+        src.contains("fs.listFiles(") || src.contains("listLocatedStatus")
+      }.toSeq
+    assert(offenders.isEmpty, s"list through PathModel.walk: $offenders")
   }
 }

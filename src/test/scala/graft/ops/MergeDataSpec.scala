@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -66,6 +68,38 @@ class MergeDataSpec extends SparkSpec {
       s"file contents missing group columns: ${one.columns.mkString(",")}")
     intercept[IllegalArgumentException] {
       MergeData.writeMerged(spark, full, out, format = "tsv")
+    }
+  }
+
+  test("writeMerged: more groups than shuffle partitions -> one file per group, one write task per partition") {
+    val out = Files.createTempDirectory("graft-merge-wide").toString
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val groups = 3 * parts
+    val rows = for (g <- 0 until groups; i <- 0 until 5)
+      yield (s"s${g % 3}", s"p$g", "hr", i.toDouble)
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.add((e.stageInfo.stageId, e.stageInfo.numTasks))
+    }
+    org.apache.spark.sql.GraftColumnBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      MergeData.writeMerged(spark,
+        df(rows, "site", "participant_id", "metric", "v"), out)
+      org.apache.spark.sql.GraftColumnBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    // the last stage is the write itself, downstream of the shuffle
+    assert(stages.asScala.maxBy(_._1)._2 == parts)
+    val groupDirs = Files.walk(java.nio.file.Paths.get(out)).iterator().asScala
+      .filter(p => p.getFileName.toString.startsWith("metric=")).toSeq
+    assert(groupDirs.size == groups)
+    groupDirs.foreach { d =>
+      val data = Files.list(d).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
+      assert(data.size == 1, s"$d: $data")
     }
   }
 }
