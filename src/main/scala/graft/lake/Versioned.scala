@@ -828,7 +828,7 @@ object Versioned {
     while ((acc.size + unknowable.size) < live.size && !sawRollup &&
         it.hasNext) {
       val mv = it.next()
-      manifestSizeWalkReads += 1
+      manifestSizeWalkReads.increment()
       manifestLinesAt(fs, dir, mv).foreach { l =>
         if (l.startsWith("#bytes ")) {
           val toks = l.stripPrefix("#bytes ").trim.split(' ')
@@ -851,14 +851,18 @@ object Versioned {
 
   /** Diagnostic counter: manifests TEXT-READ by [[fileSizesKnown]]'s
     * newest-first walk — the roll-up spec pins it at
-    * ≤ CheckpointInterval + 1 on any history depth. */
-  private[lake] var manifestSizeWalkReads: Long = 0L
+    * ≤ CheckpointInterval + 1 on any history depth. Thread-safe;
+    * readers take deltas of `sum()`. */
+  private[lake] val manifestSizeWalkReads =
+    new java.util.concurrent.atomic.LongAdder
 
   /** Diagnostic counter: manifests TEXT-READ by the CHECKPOINT
     * write-side roll-up walk — the `-1` sentinel spec pins it: once a
     * roll-up stamped pre-rail files recorded-unknowable, later
-    * checkpoints stop at it instead of re-reading all history. */
-  private[lake] var rollupWalkReads: Long = 0L
+    * checkpoints stop at it instead of re-reading all history.
+    * Thread-safe; readers take deltas of `sum()`. */
+  private[lake] val rollupWalkReads =
+    new java.util.concurrent.atomic.LongAdder
 
   /** Sizes for EVERY file live at `version`: manifest-recorded where
     * available, one `getFileStatus` per uncovered file otherwise (the
@@ -1097,7 +1101,7 @@ object Versioned {
       // every checkpoint forever.
       while (it.hasNext && (rolled.size + stagedLive) < liveSet.size) {
         val (mv, _) = it.next()
-        rollupWalkReads += 1
+        rollupWalkReads.increment()
         manifestLinesAt(fs, dir, mv).foreach { l =>
           if (l.startsWith("#bytes ")) {
             val toks = l.stripPrefix("#bytes ").trim.split(' ')
@@ -2831,23 +2835,13 @@ object Versioned {
     * itself one more commit (a delta manifest bounded by the file-list
     * diff between the two versions, never the lake).
     *
-    * @param changeFeed optional (dir, batchId): publish the ROW-LEVEL
-    *   diff current→target as a Delta-CDF increment so feed consumers
-    *   converge across the restore. Rows are classed BY `rowKey` —
-    *   keys only in the current state emit `delete`, keys only in the
-    *   target emit `insert`, keys in both with changed rows emit
-    *   `update_preimage`/`update_postimage` — because a feed batch is
-    *   replayed as ONE merge batch, where a same-key delete+insert
-    *   pair would collide. Same staged-then-promote discipline as the
-    *   merge paths: a restore that loses the commit CAS leaves no
-    *   visible feed trace. This diff is the only non-metadata work,
-    *   and only runs when a feed is attached.
-    * @param rowKey required with `changeFeed` (the diff's row identity).
+    * With the change feed enabled, the commit publishes the ROW-LEVEL
+    * diff current→target ([[restoreDiff]]) as its increment, so feed
+    * consumers converge across the restore; that diff is the only
+    * non-metadata work, and only runs on a feed-enabled table.
     * Returns the committed version — or the current version unchanged
     * when it already equals the target state (idempotent replay). */
   def restore(spark: SparkSession, dir: String, toVersion: Long,
-      changeFeed: Option[(String, Long)] = None,
-      rowKey: Seq[String] = Nil,
       commitTs: Long = System.currentTimeMillis()): Long = {
     val v = currentVersion(spark, dir)
     require(v >= 0, s"no manifest in $dir — call init() first")
@@ -2856,14 +2850,8 @@ object Versioned {
     val live = filesAt(spark, dir, v)
     val target = filesAt(spark, dir, toVersion)
     val targetDels = deleteFilesAt(spark, dir, toVersion)
-    if (target == live && targetDels == deleteFilesAt(spark, dir, v)) {
-      // replay after a crash between a prior restore's commit and its
-      // promote: the state already reads as the target, but the
-      // increment may still be sitting staged — publish it
-      changeFeed.foreach { case (fd, b) =>
-        graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
+    if (target == live && targetDels == deleteFilesAt(spark, dir, v))
       return v // already the target state — nothing to commit
-    }
     val fs = fsOf(spark, dir)
     // a SCOPED tombstone's exemption is defined by file ADD-versions,
     // and a restore RE-ADDS files in its own commit — the re-added
@@ -2894,26 +2882,14 @@ object Versioned {
     // and skipping this check would commit a table in violation
     enforceConstraints(spark, dir, v, snapshotUnderMeta(spark, dir, toVersion, v),
       s"restore to version $toVersion")
-    changeFeed.foreach { case (fd, batchId) =>
-      require(rowKey.nonEmpty, "restore with changeFeed needs rowKey")
-      graft.ops.MergeData.stageFeedIncrement(spark, fd, batchId,
-        restoreDiff(spark, dir, v, toVersion, rowKey), v)
-    }
-    // table-property CDF: crash-atomic increment published by the CAS,
+    // change feed: crash-atomic increment published by the CAS,
     // keyed by the property's row identity
     val autoInc = metaAt(spark, dir, v).cdf.map { key =>
       writeChangeInc(spark, dir, restoreDiff(spark, dir, v, toVersion, key))
     }
-    try writeCommit(fs, dir, v + 1, target, live,
+    writeCommit(fs, dir, v + 1, target, live,
       carryMeta(spark, dir, v, commitTs, None, targetDels, "restore")
         .copy(cdfInc = autoInc))
-    catch { case e: Throwable =>
-      changeFeed.foreach { case (fd, b) =>
-        graft.ops.MergeData.discardStagedIncrement(spark, fd, b) }
-      throw e
-    }
-    changeFeed.foreach { case (fd, b) =>
-      graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
     v + 1
   }
 
@@ -3516,8 +3492,6 @@ object Versioned {
   // `#ver 1` protocol floor the property sets: they refuse to read —
   // and therefore to commit — rather than commit feed-less mutations.
 
-  /** Write `actions` as an (unpublished) change-increment dir;
-    * returns its table-relative path for the commit's `#cdfinc`. */
   /** Write one table-property CDF increment (every emitter passes
     * through here). EMITTER INVARIANT — preimages are PAIRED: an
     * `update_preimage` row is always written together with its
@@ -3745,16 +3719,6 @@ object Versioned {
     else parts.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
-  /** Replicate `srcDir`'s committed changes onto `replicaDir` by
-    * collapsing the range's increments into ONE merge batch
-    * ([[reduceIncrementRun]] — last action per key, provably the
-    * sequential result) — the table-property twin of
-    * [[graft.ops.MergeData.applyChangeFeed]]: a replica seeded from a
-    * snapshot at version `sinceV` converges to `untilV` (current if
-    * -1) no matter which MIX of merge/append/delete/restore commits
-    * produced the history. Driver cost is bounded by the version
-    * range; the merge touches only the range's increments' partitions.
-    * Returns the version the replica now reflects. */
   /** Recover a replica from a crash inside a prior remap swap. Two
     * leftover shapes are possible: with the replica dir PRESENT, any
     * `_remap_*` staging (complete-but-unpromoted or incomplete) and
@@ -3787,6 +3751,17 @@ object Versioned {
     }
   }
 
+  /** Replicate `srcDir`'s committed changes onto the plain-parquet
+    * replica `replicaDir` by collapsing the range's increments into ONE
+    * merge batch ([[reduceIncrementRun]] — last action per key,
+    * provably the sequential result): a replica seeded from a snapshot
+    * at version `sinceV` converges to `untilV` (current if -1) no
+    * matter which MIX of merge/append/delete/restore commits produced
+    * the history. A consumer persists the returned version as its
+    * high-water mark and passes it back as the next `sinceV`. Driver
+    * cost is bounded by the version range; the merge touches only the
+    * range's increments' partitions. Returns the version the replica
+    * now reflects. */
   def applyTableChanges(spark: SparkSession, srcDir: String,
       replicaDir: String, partitionKeys: Seq[String],
       sinceV: Long, untilV: Long = -1L): Long = {
@@ -4556,8 +4531,9 @@ object Versioned {
 
   /** Diagnostic counter: aggregates SERVED metadata-only (the SQL
     * pushdown and the library path both bump it) — the oracle leg
-    * pins it against `sizeStatProbes`-style zero-scan expectations. */
-  @volatile var metadataAggServed: Long = 0L
+    * pins it against `sizeStatProbes`-style zero-scan expectations.
+    * Thread-safe; readers take deltas of `sum()`. */
+  val metadataAggServed = new java.util.concurrent.atomic.LongAdder
 
   /** Answers `aggs` at `version` from the manifest + stats sidecars,
     * or None when ANY guard fails — the caller must then aggregate
@@ -4615,7 +4591,7 @@ object Versioned {
       if (live.isEmpty) {
         // zero-file table: count(*) = 0 is exact; min/max are NULL —
         // served here so an empty table's dashboard stays zero-scan
-        metadataAggServed += 1
+        metadataAggServed.increment()
         return Some(aggs.map {
           case MetaCount => 0L
           case MetaCountCol(_) => 0L
@@ -4710,7 +4686,7 @@ object Versioned {
       }
       if (out.exists(_.isEmpty)) None
       else {
-        metadataAggServed += 1
+        metadataAggServed.increment()
         Some(out.map(_.get))
       }
     } catch { case _: IllegalArgumentException => None } // coverage bail
@@ -4750,7 +4726,7 @@ object Versioned {
       val needCol = aggs.exists { case MetaCount => false; case _ => true }
       if (dvEs.nonEmpty && needCol) return None
       val liveAll = filesAt(spark, dir, v)
-      if (liveAll.isEmpty) return { metadataAggServed += 1; Some(Nil) }
+      if (liveAll.isEmpty) return { metadataAggServed.increment(); Some(Nil) }
       val parsed: Seq[(String, Map[String, String])] = liveAll.map { r =>
         r -> refRel(r).split('/').dropRight(1)
           .filter(_.contains('=')).map { seg =>
@@ -4772,7 +4748,7 @@ object Versioned {
         return None
       val live = parsed.collect { case (r, pv) if partitionPred.forall {
         case (k, vs) => vs.contains(pv(k)) } => (r, pv) }
-      if (live.isEmpty) { metadataAggServed += 1; return Some(Nil) }
+      if (live.isEmpty) { metadataAggServed.increment(); return Some(Nil) }
       val renames = metaAt(spark, dir, v).renames
       val cols = aggs.collect {
         case MetaCountCol(c) => c
@@ -4902,7 +4878,7 @@ object Versioned {
           Some((g.split(sep, -1).toSeq, vals.map(_.get)))
         }
       }.toSeq
-      metadataAggServed += 1
+      metadataAggServed.increment()
       Some(out)
     } catch { case _: IllegalArgumentException => None } // coverage bail
   }
@@ -5126,17 +5102,12 @@ object Versioned {
     * key list, not a petabyte of partitions); the read-side anti-join
     * costs until [[materializeDeletes]] compacts — the classic MOR
     * trade. Every tombstone on one table must use the SAME `keyCols`
-    * (enforced). Returns the committed version (unchanged when
-    * nothing matches).
-    *
-    * @param changeFeed optional (dir, batchId): also publish the FULL
-    *   deleted rows as a `_action='delete'` feed increment (same
-    *   write-once pre-commit contract as the merge paths), so CDC
-    *   replicas converge across MOR deletes too — a feed consumer
-    *   replays the increment as an ordinary delete batch. */
+    * (enforced). With the change feed enabled, the commit publishes
+    * the FULL deleted rows as its `_action='delete'` increment, so CDC
+    * replicas converge across MOR deletes too. Returns the committed
+    * version (unchanged when nothing matches). */
   def deleteWhere(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column, keyCols: Seq[String],
-      changeFeed: Option[(String, Long)] = None,
       commitTs: Long = System.currentTimeMillis()): Long = {
     require(keyCols.nonEmpty, "deleteWhere needs at least one key column")
     val v = init(spark, dir, commitTs)
@@ -5184,38 +5155,19 @@ object Versioned {
     require(delFiles.nonEmpty,
       s"deleteWhere staging write produced no parquet files under $delRel")
     if (countFooterRows(spark, delFiles.map(r => s"$dir/$r").toSeq) == 0L) {
-      // nothing matched: drop the schema-only staging file. Replay
-      // after a crash between a prior commit and its promote: the keys
-      // already read as deleted, but the increment may still be
-      // sitting staged — publish it
+      // nothing matched: drop the schema-only staging file
       fs.delete(new Path(dir, delRel), true)
-      changeFeed.foreach { case (fd, b) =>
-        graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
       return v
     }
-    // the increment is STAGED before the commit (resolution against
-    // the immutable snapshot v — replay-consistent like the merge
-    // paths) and published only after the version is reserved
-    changeFeed.foreach { case (fd, batchId) =>
-      graft.ops.MergeData.stageFeedIncrement(spark, fd, batchId,
-        deletedRows.withColumn("_action", lit("delete")), v)
-    }
-    // table-property CDF: crash-atomic increment published by the CAS
+    // change feed: crash-atomic increment published by the CAS
     val autoInc = metaAt(spark, dir, v).cdf.map { _ =>
       writeChangeInc(spark, dir,
         deletedRows.withColumn("_action", lit("delete")))
     }
     val live = filesAt(spark, dir, v)
-    try writeCommit(fs, dir, v + 1, live, live,
+    writeCommit(fs, dir, v + 1, live, live,
       carryMeta(spark, dir, v, commitTs, None, carried ++ delFiles, "delete")
         .copy(cdfInc = autoInc))
-    catch { case e: Throwable =>
-      changeFeed.foreach { case (fd, b) =>
-        graft.ops.MergeData.discardStagedIncrement(spark, fd, b) }
-      throw e
-    }
-    changeFeed.foreach { case (fd, b) =>
-      graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
     v + 1
   }
 
@@ -5699,7 +5651,6 @@ object Versioned {
     * or the current one on a no-match no-op. */
   def deleteWhereVectors(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
-      changeFeed: Option[(String, Long)] = None,
       commitTs: Long = System.currentTimeMillis()): Long = {
     val v = init(spark, dir, commitTs)
     val meta0 = metaAt(spark, dir, v)
@@ -5734,33 +5685,19 @@ object Versioned {
         s"deleteWhereVectors staging write produced no parquet files under $dvRel")
       if (countFooterRows(spark, dvFiles.map(r => s"$dir/$r").toSeq) == 0L) {
         fs.delete(new Path(dir, dvRel), true)
-        changeFeed.foreach { case (fd, b) =>
-          graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
         return v // no row matched: no-op, no commit
       }
       val deletedRows = hits.drop(DvSrcPos).drop(fileCol)
-      // external feed: staged now, promoted only after the CAS wins
-      changeFeed.foreach { case (fd, batchId) =>
-        graft.ops.MergeData.stageFeedIncrement(spark, fd, batchId,
-          deletedRows.withColumn("_action", lit("delete")), v)
-      }
-      // table-property CDF: crash-atomic increment published by the CAS
+      // change feed: crash-atomic increment published by the CAS
       val autoInc = meta0.cdf.map { _ =>
         writeChangeInc(spark, dir,
           deletedRows.withColumn("_action", lit("delete")))
       }
       val carried = deleteFilesAt(spark, dir, v)
-      try writeCommit(fs, dir, v + 1, live, live,
+      writeCommit(fs, dir, v + 1, live, live,
         carryMeta(spark, dir, v, commitTs, None,
           carried ++ dvFiles, "delete")
           .copy(cdfInc = autoInc))
-      catch { case e: Throwable =>
-        changeFeed.foreach { case (fd, b) =>
-          graft.ops.MergeData.discardStagedIncrement(spark, fd, b) }
-        throw e
-      }
-      changeFeed.foreach { case (fd, b) =>
-        graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
       v + 1
     } finally hits.unpersist()
   }
@@ -5865,22 +5802,21 @@ object Versioned {
     * before the commit, so the batch's own inserts — added AT the
     * commit — survive their own key's tombstone. Keys that match no
     * existing row tombstone nothing (the anti-join never finds them);
-    * no base scan runs unless a change feed needs pre-images.
+    * no base scan runs unless the change feed needs pre-images.
     *
     * Lost manifest CAS → full re-resolve and re-write (up to
     * `maxAttempts`): the work is O(batch), so the simple
     * always-correct retry is also the cheap one here; abandoned
     * tombstone/data files are unreferenced and vacuum-reaped.
     *
-    * @param changeFeed / cdf property: publishes the resolved
-    *   increment (update pre/post images, inserts, deleted rows) —
-    *   resolving pre-images is the one place this path scans the
-    *   base (key-pruned column scan, feed-attached tables only).
+    * With the change feed enabled, the commit publishes the resolved
+    * increment (update pre/post images, inserts, deleted rows) —
+    * resolving pre-images is the one place this path scans the base
+    * (key-pruned column scan, feed-enabled tables only).
     * @param txn exactly-once replay marker, as [[mergeInto]].
     * Returns the committed (or already-committed) version. */
   def mergeIntoMor(spark: SparkSession, dir: String, updates: DataFrame,
       partitionKeys: Seq[String], rowKey: Seq[String],
-      changeFeed: Option[(String, Long)] = None,
       txn: Option[(String, Long)] = None,
       commitTs: Long = System.currentTimeMillis(),
       statsCols: Seq[String] = Nil,
@@ -5889,7 +5825,7 @@ object Versioned {
     var attempt = 1
     while (true) {
       try return mergeIntoMorOnce(spark, dir, updates, partitionKeys,
-        rowKey, changeFeed, txn, commitTs, statsCols)
+        rowKey, txn, commitTs, statsCols)
       catch {
         case e: IllegalArgumentException
             if e.getMessage != null &&
@@ -5903,14 +5839,12 @@ object Versioned {
 
   private def mergeIntoMorOnce(spark: SparkSession, dir: String,
       updates: DataFrame, partitionKeys: Seq[String], rowKey: Seq[String],
-      changeFeed: Option[(String, Long)], txn: Option[(String, Long)],
+      txn: Option[(String, Long)],
       commitTs: Long, statsCols: Seq[String]): Long = {
     require(rowKey.nonEmpty, "mergeIntoMor needs at least one rowKey column")
     val v = init(spark, dir, commitTs)
     txn match {
       case Some((id, batchId)) if lastTxn(spark, dir, id) >= batchId =>
-        changeFeed.foreach { case (fd, b) =>
-          graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
         return currentVersion(spark, dir)
       case _ =>
     }
@@ -5965,7 +5899,7 @@ object Versioned {
         fs.delete(new Path(dir, delRel), true)
         require(requirement = false, "mergeIntoMor got an empty batch")
       }
-      // resolved CDF actions — the one base scan, feed-attached only
+      // resolved CDF actions — the one base scan, feed-enabled only
       def resolveActions(): DataFrame = {
         val snap = snapshotAll(spark, dir, v)
         val snapKeys = snap.select(rowKey.map(col): _*).distinct()
@@ -5986,10 +5920,6 @@ object Versioned {
           .unionByName(jn(snap, delKeys, "left_semi")
             .withColumn("_action", lit("delete")),
             allowMissingColumns = true)
-      }
-      changeFeed.foreach { case (fd, batchId) =>
-        graft.ops.MergeData.stageFeedIncrement(spark, fd, batchId,
-          resolveActions(), v)
       }
       val autoInc = meta0.cdf.map { key =>
         if (key == Seq(RowIdCol))
@@ -6036,20 +5966,12 @@ object Versioned {
         } else stagedIns
       val scoped = delFiles.map(p => s"$p @${v + 1}")
       beforeCommitHook()
-      try {
-        val cm = carryMeta(spark, dir, v, commitTs, txn,
-          rawDels ++ scoped, "merge-mor")
-        writeCommit(fs, dir, v + 1, live ++ newFiles, live,
-          cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
-            pinnedSchema = pinOut.orElse(cm.pinnedSchema),
-            idents = advIdents))
-      } catch { case e: Throwable =>
-        changeFeed.foreach { case (fd, b) =>
-          graft.ops.MergeData.discardStagedIncrement(spark, fd, b) }
-        throw e
-      }
-      changeFeed.foreach { case (fd, b) =>
-        graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
+      val cm = carryMeta(spark, dir, v, commitTs, txn,
+        rawDels ++ scoped, "merge-mor")
+      writeCommit(fs, dir, v + 1, live ++ newFiles, live,
+        cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
+          pinnedSchema = pinOut.orElse(cm.pinnedSchema),
+          idents = advIdents))
       maybeWriteIncStats(spark, dir, v, newFiles, statsCols)
       v + 1
     } finally batch0.unpersist()
@@ -6074,14 +5996,11 @@ object Versioned {
     * interplay comment. Requires the tombstone key columns to be a
     * subset of `rowKey` (refused loudly otherwise).
     *
-    * @param changeFeed optional (dir, batchId): publish this batch's
-    *   resolved Delta-CDF increment — STAGED before the commit
-    *   (actions resolve against the immutable pre-merge snapshot,
-    *   write-once on replay) and published only after the manifest
-    *   CAS reserves the version, so a losing concurrent writer leaves
-    *   no visible feed trace (see
-    *   [[graft.ops.MergeData.stageFeedIncrement]]); snapshot isolation
-    *   and CDC ride ONE write path.
+    * With the change feed enabled, the commit publishes the batch's
+    * resolved Delta-CDF increment (actions resolve against the
+    * immutable pre-merge snapshot) crash-atomically with the manifest
+    * CAS, so a losing concurrent writer leaves no visible feed trace;
+    * snapshot isolation and CDC ride ONE write path.
     * @param txn optional (txnId, batchId) idempotence marker (Delta's
     *   `txn` action): if `batchId <=` [[lastTxn]] for `txnId`, the
     *   batch already committed — return the current version WITHOUT
@@ -6090,7 +6009,6 @@ object Versioned {
     * Returns the committed (or already-committed) version. */
   def mergeInto(spark: SparkSession, dir: String, updates: DataFrame,
       partitionKeys: Seq[String], rowKey: Seq[String],
-      changeFeed: Option[(String, Long)] = None,
       txn: Option[(String, Long)] = None,
       commitTs: Long = System.currentTimeMillis(),
       statsCols: Seq[String] = Nil): Long = {
@@ -6098,11 +6016,7 @@ object Versioned {
     val v = init(spark, dir, commitTs)
     txn match {
       case Some((id, batchId)) if lastTxn(spark, dir, id) >= batchId =>
-        // replayed batch: already committed — publish any increment a
-        // crash left staged between that commit and its promote
-        changeFeed.foreach { case (fd, b) =>
-          graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
-        return currentVersion(spark, dir)
+        return currentVersion(spark, dir) // replayed batch: already committed
       case _ =>
     }
     val live = filesAt(spark, dir, v)
@@ -6245,16 +6159,7 @@ object Versioned {
             allowMissingColumns = true)
         }
 
-      // the feed increment is STAGED before the commit (resolution is
-      // crash-consistent: actions resolve against snapshot v, which no
-      // commit mutates) but published only AFTER the version is
-      // reserved — a writer that loses the commit CAS aborts with no
-      // visible feed trace
-      changeFeed.foreach { case (fd, batchId) =>
-        graft.ops.MergeData.stageFeedIncrement(spark, fd, batchId,
-          graft.ops.MergeData.resolveFeedActions(res, batch, rowKey, del), v)
-      }
-      // table-property CDF: the increment is written invisibly now and
+      // change feed: the increment is written invisibly now and
       // published BY the manifest CAS below (`#cdfinc`) — crash-atomic,
       // nothing to promote or discard
       val autoInc = meta0.cdf.map { key =>
@@ -6307,56 +6212,48 @@ object Versioned {
       var committed = -1L
       var replayWon = false
       var attempt = 1
-      try {
-        while (committed < 0 && !replayWon) {
-          beforeCommitHook()
-          try {
-            val cm = carryMeta(spark, dir, curV, commitTs, txn, nextDels,
-              "merge")
-            writeCommit(fs, dir, curV + 1,
-              curLive.filterNot(underTouched) ++ newFiles, curLive,
-              cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
-                pinnedSchema = pinOut.orElse(cm.pinnedSchema),
-                idents = advIdents))
-            committed = curV + 1
-          } catch {
-            case e: IllegalArgumentException
-                if e.getMessage != null &&
-                  e.getMessage.contains("concurrent commit") &&
-                  attempt < 5 =>
-              attempt += 1
-              val newV = currentVersion(spark, dir)
-              if (txn.exists { case (id, batchId) =>
-                  lastTxn(spark, dir, id) >= batchId }) replayWon = true
-              else {
-                val newMeta = metaAt(spark, dir, newV)
-                val newLive = filesAt(spark, dir, newV)
-                val changed = (newLive.toSet -- curLive.toSet) ++
-                  (curLive.toSet -- newLive.toSet)
-                val disjoint = changed.forall(f => !underTouched(f))
-                // the semantics-bearing rails come from the registry
-                // (so a new rail is guarded by default — this list
-                // once omitted `defaults`); merge is additionally
-                // strict on chks/pkeys/dels because its staged result
-                // was RESOLVED against snapshot v, not just written
-                val sameRules = !CommitMeta.railsMoved(newMeta, meta0) &&
-                  newMeta.chks == meta0.chks &&
-                  newMeta.pkeys == meta0.pkeys &&
-                  autoRen.keySet.intersect(newMeta.renames.keySet).isEmpty &&
-                  deleteFilesAt(spark, dir, newV) == dels
-                if (!(disjoint && sameRules)) throw e
-                curV = newV
-                curLive = newLive
-              }
-          }
+      while (committed < 0 && !replayWon) {
+        beforeCommitHook()
+        try {
+          val cm = carryMeta(spark, dir, curV, commitTs, txn, nextDels,
+            "merge")
+          writeCommit(fs, dir, curV + 1,
+            curLive.filterNot(underTouched) ++ newFiles, curLive,
+            cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
+              pinnedSchema = pinOut.orElse(cm.pinnedSchema),
+              idents = advIdents))
+          committed = curV + 1
+        } catch {
+          case e: IllegalArgumentException
+              if e.getMessage != null &&
+                e.getMessage.contains("concurrent commit") &&
+                attempt < 5 =>
+            attempt += 1
+            val newV = currentVersion(spark, dir)
+            if (txn.exists { case (id, batchId) =>
+                lastTxn(spark, dir, id) >= batchId }) replayWon = true
+            else {
+              val newMeta = metaAt(spark, dir, newV)
+              val newLive = filesAt(spark, dir, newV)
+              val changed = (newLive.toSet -- curLive.toSet) ++
+                (curLive.toSet -- newLive.toSet)
+              val disjoint = changed.forall(f => !underTouched(f))
+              // the semantics-bearing rails come from the registry
+              // (so a new rail is guarded by default — this list
+              // once omitted `defaults`); merge is additionally
+              // strict on chks/pkeys/dels because its staged result
+              // was RESOLVED against snapshot v, not just written
+              val sameRules = !CommitMeta.railsMoved(newMeta, meta0) &&
+                newMeta.chks == meta0.chks &&
+                newMeta.pkeys == meta0.pkeys &&
+                autoRen.keySet.intersect(newMeta.renames.keySet).isEmpty &&
+                deleteFilesAt(spark, dir, newV) == dels
+              if (!(disjoint && sameRules)) throw e
+              curV = newV
+              curLive = newLive
+            }
         }
-      } catch { case e: Throwable =>
-        changeFeed.foreach { case (fd, batchId) =>
-          graft.ops.MergeData.discardStagedIncrement(spark, fd, batchId) }
-        throw e
       }
-      changeFeed.foreach { case (fd, batchId) =>
-        graft.ops.MergeData.promoteFeedIncrement(spark, fd, batchId) }
       if (replayWon) currentVersion(spark, dir)
       else {
         // commit-time stats: one footer pass over THIS commit's files
@@ -6377,8 +6274,8 @@ object Versioned {
     * against the freshly read current snapshot and tries again, up to
     * `maxAttempts`. Correct for independent writers because every
     * attempt resolves against the snapshot it reads at entry, and a
-    * losing attempt abandons its work invisibly (data files
-    * unreferenced until [[vacuum]], staged feed increment discarded).
+    * losing attempt abandons its work invisibly (data files and any
+    * change increment stay unreferenced until [[vacuum]]).
     * The retry re-does the resolution — the simple, always-correct
     * policy; Delta's disjoint-partition rebase (skipping re-resolution
     * when the winner touched other partitions) is an optimization this
@@ -6387,7 +6284,6 @@ object Versioned {
     * concurrent-commit error when attempts are exhausted. */
   def mergeIntoRetry(spark: SparkSession, dir: String, updates: DataFrame,
       partitionKeys: Seq[String], rowKey: Seq[String],
-      changeFeed: Option[(String, Long)] = None,
       txn: Option[(String, Long)] = None,
       commitTs: Long = System.currentTimeMillis(),
       maxAttempts: Int = 3,
@@ -6396,7 +6292,7 @@ object Versioned {
     var attempt = 1
     while (true) {
       try return mergeInto(spark, dir, updates, partitionKeys, rowKey,
-        changeFeed, txn, commitTs, statsCols)
+        txn, commitTs, statsCols)
       catch {
         case e: IllegalArgumentException
             if e.getMessage != null &&

@@ -145,19 +145,8 @@ object MergeData {
     * and the swap path uses Hive's `__HIVE_DEFAULT_PARTITION__`
     * rendering, the same directory the partitioned write produces.
     */
-  /** @param changeFeed optional (dir, batchId): also emit this batch's
-    *   resolved change rows — every applied update/insert/delete with an
-    *   `_action` column; a DELETE of an absent key resolves to no row
-    *   (it changed nothing) — under `dir/batch_id=N`. Each increment is
-    *   WRITE-ONCE, committed by atomic rename, and emitted BEFORE the
-    *   data swap: actions resolve against the pre-merge base, so a
-    *   replayed batch (crash-restart) keeps its original, correctly
-    *   resolved increment instead of re-resolving against the merged
-    *   state into zero-deltas. Downstream incremental consumers read
-    *   the feed append-only. The Delta change-data-feed analogue. */
   def mergeInto(spark: SparkSession, baseDir: String, updates: DataFrame,
-      partitionKeys: Seq[String], rowKey: Seq[String],
-      changeFeed: Option[(String, Long)] = None): Unit = {
+      partitionKeys: Seq[String], rowKey: Seq[String]): Unit = {
     require(rowKey.nonEmpty, "mergeInto needs at least one rowKey column")
     val hasDelete = updates.columns.contains("__delete")
     // null __delete = upsert: without the coalesce a null marker's key
@@ -169,45 +158,8 @@ object MergeData {
     // batch size, never lake size, so caching it is always safe
     val batch = updates.persist()
     try {
-      mergeIntoImpl(spark, baseDir, batch, partitionKeys, rowKey, del, changeFeed)
+      mergeIntoImpl(spark, baseDir, batch, partitionKeys, rowKey, del)
     } finally batch.unpersist()
-  }
-
-  /** Replay a change feed (the `changeFeed` output of [[mergeInto]])
-    * onto a replica lake — CDC replication: a replica seeded from the
-    * same base converges to the primary by applying feed batches in
-    * batch_id order, because each feed batch IS a valid merge batch
-    * (`_action='delete'` rows become `__delete`). The driver-side loop
-    * is bounded by the number of UNAPPLIED batches (pass `sinceBatch`
-    * = the replica's high-water mark, exactly like any log consumer),
-    * and each application touches only that batch's partitions.
-    * `untilBatch` bounds the replay from above (point-in-time restore,
-    * or a catch-up that must stop at a published watermark). */
-  def applyChangeFeed(spark: SparkSession, feedDir: String,
-      replicaDir: String, partitionKeys: Seq[String], rowKey: Seq[String],
-      sinceBatch: Long = -1L, untilBatch: Long = Long.MaxValue): Unit = {
-    // mergeSchema: feed batches published before a schema evolution sit
-    // next to evolved ones; the replica applies the union schema.
-    // Uniform footers (the common case) serve it driver-side instead
-    // of paying the inference job (guide §2.4).
-    val feed0 =
-      graft.lake.Versioned.uniformDirSchemaLocal(spark, feedDir) match {
-        case Some(s) => spark.read.schema(s).parquet(feedDir)
-        case None => spark.read.option("mergeSchema", "true").parquet(feedDir)
-      }
-    val feed = feed0
-      .filter(col("batch_id") > sinceBatch && col("batch_id") <= untilBatch)
-    val batchIds = feed.select("batch_id").distinct()
-      .collect().map(_.getAs[Number]("batch_id").longValue()).sorted
-    batchIds.foreach { id =>
-      // preimages describe what a batch REPLACED — replay applies only
-      // the post-state rows (inserts, postimages, deletes)
-      val b = feed.filter(col("batch_id") === id &&
-          col("_action") =!= "update_preimage")
-        .withColumn("__delete", col("_action") === "delete")
-        .drop("_action", "batch_id")
-      mergeInto(spark, replicaDir, b, partitionKeys, rowKey)
-    }
   }
 
   /** Per-group aggregate deltas from a change feed — incremental
@@ -308,44 +260,16 @@ object MergeData {
     MergeResolution(touchedRows, touchedDirs, base, applied, merged)
   }
 
-  /** Change-feed emission shared by both commit strategies. Actions
-    * resolve against the PRE-merge base (rowKey-shaped joins over the
-    * touched partitions only) and must be called BEFORE the commit
-    * mutates visible state. Delta-CDF row classes — preimages carry
-    * the OLD row, which is what makes downstream incremental aggregate
-    * maintenance possible (delta = postimage − preimage):
+  /** Resolve a batch's Delta-CDF action rows against its PRE-merge
+    * base (rowKey-shaped joins over the touched partitions only) — the
+    * change increment [[graft.lake.Versioned.mergeInto]] publishes with
+    * its commit when the table's change feed is enabled. Preimages
+    * carry the OLD row, which is what makes downstream incremental
+    * aggregate maintenance possible (delta = postimage − preimage):
     *   insert            — batch row, key absent from base
     *   update_postimage  — batch row, key present
     *   update_preimage   — the BASE row that postimage replaced
-    *   delete            — the BASE row removed (absent key = no row)
-    *
-    * WRITE-ONCE per batch_id, committed by atomic rename. Actions
-    * resolve against the PRE-merge base, so a batch REPLAYED after
-    * its commit landed would re-resolve against the merged state
-    * and publish garbage (pre == post zero-deltas, inserts become
-    * self-updates) — exactly what a crashed-and-restarted streaming
-    * merge does. Skipping an increment that already exists keeps the
-    * original, correctly-resolved actions; and because the feed is
-    * emitted BEFORE the commit, every crash window replays
-    * consistently (feed absent → base still pre-merge → correct
-    * re-resolve; feed present → skip). The staging+rename makes the
-    * increment all-or-nothing, so a crash mid-write can't leave a
-    * half increment that the skip check would then trust. */
-  private[graft] def emitChangeFeed(spark: SparkSession,
-      res: MergeResolution, updates: DataFrame, rowKey: Seq[String],
-      del: org.apache.spark.sql.Column, dir: String, batchId: Long): Unit = {
-    val feedRoot = new org.apache.hadoop.fs.Path(dir)
-    val feedFs = feedRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(feedRoot, s"batch_id=$batchId")
-    if (!feedFs.exists(target))
-      writeFeedIncrement(spark, dir, batchId,
-        resolveFeedActions(res, updates, rowKey, del))
-  }
-
-  /** Resolve a batch's Delta-CDF action rows against its PRE-merge
-    * base (rowKey-shaped joins over the touched partitions only) —
-    * shared by the swap path's [[emitChangeFeed]] and the manifest
-    * path's staged emission ([[stageFeedIncrement]]). */
+    *   delete            — the BASE row removed (absent key = no row) */
   private[graft] def resolveFeedActions(res: MergeResolution,
       updates: DataFrame, rowKey: Seq[String],
       del: org.apache.spark.sql.Column): DataFrame = {
@@ -369,149 +293,9 @@ object MergeData {
         allowMissingColumns = true)
   }
 
-  private def feedFs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def feedStagePath(dir: String, batchId: Long, base: Long) =
-    new org.apache.hadoop.fs.Path(dir,
-      if (base < 0) s"_stg_batch_id=$batchId"
-      else s"_stg_batch_id=$batchId.base=$base")
-  private def feedFinalPath(dir: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(dir, s"batch_id=$batchId")
-
-  /** The staged increment for `batchId`, if any, with the base version
-    * it was resolved against (-1 for stages written before base
-    * tracking, or by the base-less swap path). */
-  private def findStaged(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      batchId: Long): Option[(org.apache.hadoop.fs.Path, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(root)) return None
-    val exact = s"_stg_batch_id=$batchId"
-    val pfx = s"_stg_batch_id=$batchId.base="
-    fs.listStatus(root).iterator.map(_.getPath).collectFirst {
-      case p if p.getName == exact => (p, -1L)
-      case p if p.getName.startsWith(pfx) =>
-        (p, p.getName.stripPrefix(pfx).toLong)
-    }
-  }
-
-  /** Stage `batch_id=N`'s increment WITHOUT publishing it — the
-    * `_`-prefixed staging dir is invisible to feed readers. The
-    * manifest commit path must not publish an increment before its
-    * version is actually reserved: a writer that loses the commit CAS
-    * aborts with NO visible feed trace (emitting pre-commit would keep
-    * the loser's stale increment forever, undermining exactly what the
-    * CAS detects). First resolution wins: an increment already staged
-    * (by a crashed prior attempt of the same writer, resolved against
-    * the same pre-merge snapshot) is KEPT rather than re-resolved —
-    * that is what makes crash replay consistent — and an increment
-    * already PUBLISHED means nothing to do. `actions` is by-name and
-    * only resolved when a fresh stage is actually written. The staged
-    * write itself is all-or-nothing (tmp dir + atomic rename), so a
-    * crash mid-write can't leave a half increment the keep-check would
-    * then trust.
-    *
-    * First-resolution-wins is qualified BY BASE VERSION (`baseVersion`
-    * = the snapshot version the actions resolved against): a stage is
-    * kept only when it was resolved against the SAME base — that is
-    * the crash-replay case. A leftover stage with a different base is
-    * a writer that lost the commit CAS and crashed before its discard;
-    * its resolution is stale (the winner changed the base), so keeping
-    * it would publish CDF rows that disagree with what the commit
-    * actually did. Such stages are discarded and restaged fresh. */
-  private[graft] def stageFeedIncrement(spark: SparkSession, dir: String,
-      batchId: Long, actions: => DataFrame, baseVersion: Long = -1L): Unit = {
-    val fs = feedFs(spark, dir)
-    if (fs.exists(feedFinalPath(dir, batchId))) return
-    findStaged(fs, dir, batchId) match {
-      case Some((_, base)) if base == baseVersion => return // crash replay
-      case Some((p, _)) => fs.delete(p, true) // stale base: restage
-      case None =>
-    }
-    val tmp = new org.apache.hadoop.fs.Path(
-      dir + "_feedstg_" + java.util.UUID.randomUUID().toString.take(8))
-    val dst = feedStagePath(dir, batchId, baseVersion)
-    try {
-      actions.write.mode("overwrite").parquet(tmp.toString)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-      require(fs.rename(tmp, dst), s"feed stage: rename $tmp -> $dst failed")
-    } finally fs.delete(tmp, true)
-  }
-
-  /** Publish a staged increment after its commit landed: one atomic
-    * rename into `batch_id=N`. No-op when already published (a
-    * leftover stage is dropped — write-once keeps the published copy)
-    * or when nothing is staged. Also called on the txn-replay skip
-    * path, so an increment orphaned by a crash between the manifest
-    * commit and its promote still gets published. */
-  private[graft] def promoteFeedIncrement(spark: SparkSession, dir: String,
-      batchId: Long): Unit = {
-    val fs = feedFs(spark, dir)
-    val dst = feedFinalPath(dir, batchId)
-    val stg = findStaged(fs, dir, batchId)
-    if (fs.exists(dst)) { stg.foreach(s => fs.delete(s._1, true)); return }
-    stg.foreach { case (p, _) =>
-      require(fs.rename(p, dst), s"feed promote: rename $p -> $dst failed") }
-  }
-
-  /** Reap a staged increment after an aborted commit (a lost CAS):
-    * the abort means another writer owns the version, so the staged
-    * resolution is stale — the retry re-resolves fresh. */
-  private[graft] def discardStagedIncrement(spark: SparkSession, dir: String,
-      batchId: Long): Unit = {
-    val fs = feedFs(spark, dir)
-    findStaged(fs, dir, batchId).foreach(s => fs.delete(s._1, true))
-  }
-
-  /** Feed RETENTION: delete published increments with `batch_id <=
-    * uptoBatch`. A change feed is an append-only log and grows
-    * forever without this; the safe bound is the MINIMUM high-water
-    * mark across consumers (a streaming replica's mark is in its own
-    * manifest txn map — [[graft.lake.Versioned.lastTxn]]; a batch
-    * consumer's is whatever `sinceBatch` it persists), because a
-    * consumer can never need an increment at or below its mark again.
-    * Staged (unpublished) increments are never touched. Returns the
-    * reaped batch ids. */
-  def vacuumFeed(spark: SparkSession, feedDir: String,
-      uptoBatch: Long): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(feedDir)
-    val fs = feedFs(spark, feedDir)
-    if (!fs.exists(root)) return Nil
-    val reaped = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch_id=") =>
-        n.stripPrefix("batch_id=").toLong }
-      .filter(_ <= uptoBatch).sorted
-    reaped.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"batch_id=$id"), true)
-    }
-    reaped
-  }
-
-  /** The write-once increment commit shared by every feed emitter
-    * ([[emitChangeFeed]], [[graft.lake.Versioned.deleteWhere]]): stage,
-    * then atomically rename into `batch_id=N`; an increment that
-    * already exists is kept untouched (see [[emitChangeFeed]] for why
-    * keeping the original is what makes crash replay consistent). */
-  private[graft] def writeFeedIncrement(spark: SparkSession, dir: String,
-      batchId: Long, actions: DataFrame): Unit = {
-    val feedRoot = new org.apache.hadoop.fs.Path(dir)
-    val feedFs = feedRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(feedRoot, s"batch_id=$batchId")
-    if (feedFs.exists(target)) return
-    val stg = new org.apache.hadoop.fs.Path(
-      dir + "_feedstg_" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      actions.write.mode("overwrite").parquet(stg.toString)
-      feedFs.mkdirs(feedRoot)
-      require(feedFs.rename(stg, target),
-        s"feed commit: rename $stg -> $target failed")
-    } finally feedFs.delete(stg, true)
-  }
-
   private def mergeIntoImpl(spark: SparkSession, baseDir: String,
       updates: DataFrame, partitionKeys: Seq[String], rowKey: Seq[String],
-      del: org.apache.spark.sql.Column,
-      changeFeed: Option[(String, Long)]): Unit = {
+      del: org.apache.spark.sql.Column): Unit = {
     // mergeSchema: an evolved lake holds files written before a column
     // existed next to files written after; the union schema is the
     // table's schema (Delta keeps this in its log — here the footers
@@ -526,11 +310,6 @@ object MergeData {
       }
     val res = resolveMerge(baseAll, updates, partitionKeys, rowKey, del)
     val merged = res.merged
-
-    // feed lands before the swap below mutates the base
-    changeFeed.foreach { case (dir, batchId) =>
-      emitChangeFeed(spark, res, updates, rowKey, del, dir, batchId)
-    }
 
     // The write target IS the read source, which Spark's file-source
     // overwrite check rightly refuses (and an eager cache wouldn't

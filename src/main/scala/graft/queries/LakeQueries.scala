@@ -209,22 +209,24 @@ object LakeQueries {
     Seq(b0, b1, b2)
   }
 
-  /** Memoized primary + change feed for the swap-path CDC queries
-    * (q121, q139): the full events base merged through the 3-batch
-    * [[cdcPayload]], each batch publishing its write-once feed
-    * increment. Memoized per testdata mtime (the fixtureLake pattern):
-    * replication stays a pure function of (snapshot, log) because the
-    * log is write-once and deterministic in the source data — building
-    * it once per data version is the same log every run; consumers
-    * still rebuild their REPLICAS fresh per run. A half-built root
-    * (missing `_SUCCESS`) is wiped and rebuilt. */
-  private def cdcFixture(s: SparkSession, dir: String): (String, String) = {
+  /** Memoized CDF-enabled primary for the change-feed queries (q119,
+    * q120, q121, q139, q165, q171): the full events base, the change
+    * feed enabled on `event_id`, then the 3-batch [[cdcPayload]]. Each
+    * merge publishes its increment with its commit, so the feed is
+    * `changesBetween(lake, 1, 4)`. Versions (pinned commit timestamps):
+    *   v0 init = full events base    (ts 1000)
+    *   v1 enable-cdf rowKey=event_id (ts 1500)
+    *   v2..v4 merge b0..b2           (ts 2000, 3000, 4000)
+    * Memoized per testdata mtime (the fixtureLake pattern): the log is
+    * immutable and deterministic in the source data, so one build is
+    * every run's log; consumers still rebuild their REPLICAS fresh per
+    * run. A half-built root (missing `_SUCCESS`) is wiped and rebuilt. */
+  private def cdcFixture(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val stamp = new File(dir, "events.parquet").lastModified()
     val root = new File(new File(sys.props("user.dir"), "target"),
-      s"graft_cdcfix_${tag}_$stamp")
-    val primary = new File(root, "primary").getAbsolutePath
-    val feedDir = new File(root, "feed").getAbsolutePath
+      s"graft_cdcfeed_${tag}_$stamp")
+    val lake = new File(root, "lake").getAbsolutePath
     LakeQueries.synchronized {
       if (!new File(root, "_SUCCESS").exists()) {
         val fs = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
@@ -232,31 +234,31 @@ object LakeQueries {
         fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
         val base = Tables(s, dir, "events").select(MergeCols.map(col): _*).persist()
         try {
-          val Seq(b0, b1, b2) = cdcPayload(base)
-          MergeData.writeMerged(s, base, primary, keys = Seq("event_type"))
-          Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-            MergeData.mergeInto(s, primary, b, Seq("event_type"),
-              Seq("event_id"), changeFeed = Some((feedDir, i.toLong)))
+          MergeData.writeMerged(s, base, lake, keys = Seq("event_type"))
+          Versioned.init(s, lake, commitTs = 1000L)
+          Versioned.enableChangeFeed(s, lake, Seq("event_id"), commitTs = 1500L)
+          cdcPayload(base).zipWithIndex.foreach { case (b, i) =>
+            Versioned.mergeInto(s, lake, b, Seq("event_type"),
+              Seq("event_id"), commitTs = 2000L + i * 1000L)
           }
         } finally base.unpersist()
         new File(root, "_SUCCESS").createNewFile()
       }
     }
-    (primary, feedDir)
+    lake
   }
 
-  /** Memoized MANIFEST-committed primary + change feed (q165): the
-    * same [[cdcPayload]] sequence committed through
-    * [[Versioned.mergeInto]] — snapshot isolation and CDC on one write
-    * path. click/view slice only (the untouched-partition leg is
-    * q121's); versions: v0 = base, v1..v3 = after b0..b2. */
-  private def versionedCdcFixture(s: SparkSession, dir: String): (String, String) = {
+  /** Memoized MANIFEST-committed history (q172, q174, q176, q194):
+    * the same [[cdcPayload]] sequence committed through
+    * [[Versioned.mergeInto]] with no change feed, so its history is
+    * exactly init + 3 merges. click/view slice only; versions:
+    * v0 = base, v1..v3 = after b0..b2. */
+  private def versionedCdcFixture(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val stamp = new File(dir, "events.parquet").lastModified()
     val root = new File(new File(sys.props("user.dir"), "target"),
       s"graft_vcdcfix_${tag}_$stamp")
     val lake = new File(root, "lake").getAbsolutePath
-    val feedDir = new File(root, "feed").getAbsolutePath
     LakeQueries.synchronized {
       if (!new File(root, "_SUCCESS").exists()) {
         val fs = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
@@ -273,14 +275,13 @@ object LakeQueries {
           val batches = cdcPayload(base)
           batches.zipWithIndex.foreach { case (b, i) =>
             Versioned.mergeInto(s, lake, b, Seq("event_type"),
-              Seq("event_id"), changeFeed = Some((feedDir, i.toLong)),
-              commitTs = 2000L + i * 1000L)
+              Seq("event_id"), commitTs = 2000L + i * 1000L)
           }
         } finally base.unpersist()
         new File(root, "_SUCCESS").createNewFile()
       }
     }
-    (lake, feedDir)
+    lake
   }
 
   /** Stream the graft lake `src` into the graft lake `sink` through
@@ -1004,55 +1005,23 @@ object LakeQueries {
       "per-file bloom index point lookup == full-scan IN filter; zone maps can't prune an unclustered key"),
 
     // ---------------------------------------------------------------
-    // Change-data-feed: the SAME deterministic batch as q115, but the
-    // output is the FEED — every applied change with its resolved
-    // _action. The base lake is rebuilt fresh each run (actions
-    // resolve against the pre-merge base, so a memoized mutated lake
-    // would re-resolve differently); the oracle derives each action
-    // class straight from the events table. Aggregated per action:
-    // a green row pins the classification, the counts, the carried
-    // values, and the delete-of-absent no-op (absent keys never
-    // reach the feed).
+    // Change-data-feed: the SAME deterministic batch as q115 (it is
+    // cdcPayload's b0), but the output is the FEED — the increment the
+    // CDF-enabled cdcFixture's first merge published with its commit
+    // (v2), every applied change with its resolved _action. The oracle
+    // derives each action class straight from the events table.
+    // Aggregated per action: a green row pins the classification, the
+    // counts, the carried values, and the delete-of-absent no-op
+    // (absent keys never reach the feed).
     // ---------------------------------------------------------------
     Q("q119_change_feed",
-      (s, dir) => {
-        val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val stamp = new File(dir, "events.parquet").lastModified()
-        val root = new File(
-          new File(sys.props("user.dir"), "target"),
-          s"graft_cdfq_${tag}_$stamp").getAbsolutePath
-        val lakeDir = s"$root/lake"
-        val feedDir = s"$root/feed"
-        val cols = Seq("event_id", "user_id", "value", "event_type")
-        def base = graft.Tables(s, dir, "events").select(cols.map(col): _*)
-        val touched = base.filter(col("event_type").isin("click", "view"))
-        val batch =
-          touched.filter(col("event_id") % 10 === 0)
-            .withColumn("value", col("value") * 2)
-            .withColumn("__delete", lit(false))
-          .unionByName(
-            touched.filter(col("event_id") % 10 === 1)
-              .withColumn("__delete", lit(true)))
-          .unionByName(
-            touched.filter(col("event_id") % 100 === 2)
-              .withColumn("event_id", col("event_id") + lit(10000000L))
-              .withColumn("value", col("value") + 1)
-              .withColumn("__delete", lit(false)))
-        LakeQueries.synchronized {
-          // fresh base EVERY run — feed actions resolve against the
-          // pre-merge state, which must therefore be reproducible
-          MergeData.writeMerged(s, base, lakeDir, keys = Seq("event_type"))
-          MergeData.mergeInto(s, lakeDir, batch,
-            partitionKeys = Seq("event_type"), rowKey = Seq("event_id"),
-            changeFeed = Some((feedDir, 0L)))
-        }
-        s.read.parquet(feedDir)
+      (s, dir) =>
+        Versioned.changesBetween(s, cdcFixture(s, dir), 1L, 2L)
           .groupBy("_action")
           .agg(count(lit(1)).as("n"),
             round(sum("value"), 4).as("sum_value"),
             count_distinct(col("event_id")).as("n_ids"))
-          .orderBy("_action")
-      },
+          .orderBy("_action"),
       Some("""
         WITH feed AS (
           SELECT 'update_postimage' AS _action, event_id, value * 2 AS value
@@ -1075,48 +1044,19 @@ object LakeQueries {
     // ---------------------------------------------------------------
     // Incremental view maintenance closed end-to-end: a grouped
     // (sum, count) view of the PRE-merge lake is advanced by
-    // feedDeltas over the change feed alone — never rescanning the
-    // merged data — and must land exactly on the POST-merge state,
+    // feedDeltas over q119's change increment alone — never rescanning
+    // the merged data — and must land exactly on the POST-merge state,
     // which the oracle recomputes from events (q115's CASE/union
     // form). Green row = preimage algebra (post − pre ± ins/del) is
     // exact, not approximately right.
     // ---------------------------------------------------------------
     Q("q120_incremental_view",
       (s, dir) => {
-        val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val stamp = new File(dir, "events.parquet").lastModified()
-        val root = new File(
-          new File(sys.props("user.dir"), "target"),
-          s"graft_ivmq_${tag}_$stamp").getAbsolutePath
-        val lakeDir = s"$root/lake"
-        val feedDir = s"$root/feed"
-        val cols = Seq("event_id", "user_id", "value", "event_type")
-        def base = graft.Tables(s, dir, "events").select(cols.map(col): _*)
-        val touched = base.filter(col("event_type").isin("click", "view"))
-        val batch =
-          touched.filter(col("event_id") % 10 === 0)
-            .withColumn("value", col("value") * 2)
-            .withColumn("__delete", lit(false))
-          .unionByName(
-            touched.filter(col("event_id") % 10 === 1)
-              .withColumn("__delete", lit(true)))
-          .unionByName(
-            touched.filter(col("event_id") % 100 === 2)
-              .withColumn("event_id", col("event_id") + lit(10000000L))
-              .withColumn("value", col("value") + 1)
-              .withColumn("__delete", lit(false)))
-        LakeQueries.synchronized {
-          // fresh base every run — the view starts from a reproducible
-          // pre-merge state (same rationale as q119)
-          MergeData.writeMerged(s, base, lakeDir, keys = Seq("event_type"))
-          MergeData.mergeInto(s, lakeDir, batch,
-            partitionKeys = Seq("event_type"), rowKey = Seq("event_id"),
-            changeFeed = Some((feedDir, 0L)))
-        }
-        val before = base.groupBy("event_type")
+        val lake = cdcFixture(s, dir)
+        val before = Versioned.snapshot(s, lake, 1L).groupBy("event_type")
           .agg(sum("value").as("s"), count(lit(1)).as("n"))
         val deltas = MergeData.feedDeltas(
-          s.read.parquet(feedDir), Seq("event_type"), "value")
+          Versioned.changesBetween(s, lake, 1L, 2L), Seq("event_type"), "value")
         before.join(deltas, Seq("event_type"), "left")
           .select(col("event_type"),
             round(col("s") + coalesce(col("delta_sum"), lit(0.0)), 4)
@@ -1143,13 +1083,14 @@ object LakeQueries {
 
     // ---------------------------------------------------------------
     // Multi-batch CDC replication closed end-to-end: the shared
-    // 3-batch cdcFixture (primary + write-once feed, memoized per
-    // testdata mtime — the log is deterministic in the source data, so
-    // one build IS every run's log); a replica bootstrapped FRESH each
-    // run from the pre-merge snapshot replays the feed — batches 0-1
-    // in one bounded pass (untilBatch = the published watermark), then
-    // batch 2 ALONE via the sinceBatch high-water mark (the
-    // log-consumer contract a real CDC pipeline depends on). The
+    // 3-batch CDF-enabled cdcFixture (memoized per testdata mtime — the
+    // log is deterministic in the source data, so one build IS every
+    // run's log); a replica bootstrapped FRESH each run from the
+    // pre-merge snapshot replays the feed with applyTableChanges —
+    // versions 2-3 (batches 0-1) in one bounded pass (untilV = the
+    // published watermark), then v4 (batch 2) ALONE from the returned
+    // high-water mark (the log-consumer contract a real CDC pipeline
+    // depends on). The
     // replica aggregate must land exactly on the primary's
     // post-3-batch state, which the oracle recomputes from events with
     // CASE/filter/union. Cross-batch sequencing is exercised for real:
@@ -1158,14 +1099,13 @@ object LakeQueries {
     // ---------------------------------------------------------------
     Q("q121_cdf_replication",
       (s, dir) => {
-        val (_, feedDir) = cdcFixture(s, dir)
+        val lake = cdcFixture(s, dir)
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val replica = new File(
           new File(sys.props("user.dir"), "target"),
           s"graft_cdcrepl_$tag/replica").getAbsolutePath
         val base = graft.Tables(s, dir, "events").select(MergeCols.map(col): _*)
         val pk = Seq("event_type")
-        val rk = Seq("event_id")
         LakeQueries.synchronized {
           // fresh replica every run: replication must be a pure
           // function of (snapshot, log), not of a previous run
@@ -1174,9 +1114,10 @@ object LakeQueries {
           fs.delete(new org.apache.hadoop.fs.Path(replica), true)
           MergeData.writeMerged(s, base, replica, keys = pk)
           // catch-up to the watermark as of "before batch 2"...
-          MergeData.applyChangeFeed(s, feedDir, replica, pk, rk, untilBatch = 1L)
-          // ...then apply ONLY batch 2 via the high-water mark
-          MergeData.applyChangeFeed(s, feedDir, replica, pk, rk, sinceBatch = 1L)
+          val hw = Versioned.applyTableChanges(s, lake, replica, pk,
+            sinceV = 1L, untilV = 3L)
+          // ...then apply ONLY batch 2 from the high-water mark
+          Versioned.applyTableChanges(s, lake, replica, pk, sinceV = hw)
         }
         s.read.parquet(replica)
           .groupBy("event_type")
@@ -1207,7 +1148,7 @@ object LakeQueries {
                round(sum(value::DOUBLE), 4) AS sum_value,
                count(DISTINCT event_id) AS n_ids
         FROM fin GROUP BY 1 ORDER BY 1"""),
-      "3-batch CDC replication: snapshot bootstrap + feed replay (full pass, then sinceBatch increment) == direct-merge oracle"),
+      "3-batch CDC replication: snapshot bootstrap + feed replay (bounded pass, then the high-water increment) == direct-merge oracle"),
 
     // ---------------------------------------------------------------
     // Schema evolution under MERGE INTO (Delta mergeSchema semantics):
@@ -1498,8 +1439,8 @@ object LakeQueries {
     // CDF increments, and the full validity history is reconstructed
     // from snapshot + feed alone — never rescanning the lake. Opens =
     // base rows (valid_from −1) ∪ insert/postimage rows (valid_from =
-    // batch_id); an open's valid_to = the key's earliest close
-    // (preimage/delete) in a LATER batch — one equi-join on the key +
+    // _commit_version); an open's valid_to = the key's earliest close
+    // (preimage/delete) in a LATER commit — one equi-join on the key +
     // a min, which also handles delete-then-reinsert correctly. The
     // oracle recomputes version counts from the batch formulas and the
     // open set from q121's direct-merge CASE/union; agreement proves
@@ -1511,19 +1452,18 @@ object LakeQueries {
         // the shared memoized cdcFixture IS the (snapshot, log) pair;
         // the history derivation below reads ONLY snapshot + feed —
         // zero lake mutations per run
-        val (_, feedDir) = cdcFixture(s, dir)
-        val base = graft.Tables(s, dir, "events")
-          .select(MergeCols.map(col): _*)
-        val feed = s.read.parquet(feedDir)
+        val lake = cdcFixture(s, dir)
+        val base = Versioned.snapshot(s, lake, 1L)
+        val feed = Versioned.changesBetween(s, lake, 1L, 4L)
         val opens = base.select("event_id", "event_type", "value")
           .withColumn("valid_from", lit(-1L))
           .unionByName(
             feed.filter(col("_action").isin("insert", "update_postimage"))
               .select(col("event_id"), col("event_type"), col("value"),
-                col("batch_id").cast("long").as("valid_from")))
+                col("_commit_version").as("valid_from")))
         val closes = feed
           .filter(col("_action").isin("update_preimage", "delete"))
-          .select(col("event_id"), col("batch_id").cast("long").as("__cb"))
+          .select(col("event_id"), col("_commit_version").as("__cb"))
         val scd = opens.join(closes, Seq("event_id"), "left")
           .withColumn("__cb2",
             when(col("__cb") > col("valid_from"), col("__cb")))
@@ -1640,37 +1580,37 @@ object LakeQueries {
 
     // ---------------------------------------------------------------
     // Snapshot isolation AND CDC on ONE write path: the q121 3-batch
-    // sequence committed through Versioned.mergeInto with changeFeed —
-    // each manifest commit also publishes its write-once CDF
-    // increment. The query reads (a) a TIME-TRAVEL aggregate at every
-    // intermediate version v1/v2/v3, each oracled against that batch
-    // prefix's recomputed state, and (b) a replica bootstrapped fresh
-    // from the pre-merge base and converged by replaying the feed
-    // (bounded catch-up to batch 1, then the sinceBatch increment) —
-    // which must equal v3. A green row therefore pins that the
-    // manifest-committed merge resolves actions identically to the
-    // swap path (q121) AND that every historical version stays
-    // readable underneath the CDC stream.
+    // sequence committed through Versioned.mergeInto on the CDF-enabled
+    // cdcFixture — each manifest commit also publishes its CDF
+    // increment. The query reads (a) a TIME-TRAVEL aggregate of the
+    // click/view slice after every batch (v2/v3/v4, labelled v1..v3 by
+    // batch), each oracled against that batch prefix's recomputed
+    // state, and (b) a click/view replica bootstrapped fresh from the
+    // pre-merge base and converged by replicating the feed (bounded
+    // catch-up through batch 1, then the high-water increment) — which
+    // must equal the last batch's state. A green row therefore pins
+    // that the published increments replay to exactly the committed
+    // state AND that every historical version stays readable
+    // underneath the CDC stream.
     // ---------------------------------------------------------------
     Q("q165_versioned_cdf_replication",
       (s, dir) => {
-        val (vlake, vfeed) = versionedCdcFixture(s, dir)
+        val lake = cdcFixture(s, dir)
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val replica = new File(
           new File(sys.props("user.dir"), "target"),
           s"graft_vcdcrepl_$tag/replica").getAbsolutePath
-        val baseCV = graft.Tables(s, dir, "events")
-          .select(MergeCols.map(col): _*)
-          .filter(col("event_type").isin("click", "view"))
+        val cv = col("event_type").isin("click", "view")
         val pk = Seq("event_type")
-        val rk = Seq("event_id")
         LakeQueries.synchronized {
           val fs = new org.apache.hadoop.fs.Path(replica)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(replica), true)
-          MergeData.writeMerged(s, baseCV, replica, keys = pk)
-          MergeData.applyChangeFeed(s, vfeed, replica, pk, rk, untilBatch = 1L)
-          MergeData.applyChangeFeed(s, vfeed, replica, pk, rk, sinceBatch = 1L)
+          MergeData.writeMerged(s, Versioned.snapshot(s, lake, 1L).filter(cv),
+            replica, keys = pk)
+          val hw = Versioned.applyTableChanges(s, lake, replica, pk,
+            sinceV = 1L, untilV = 3L)
+          Versioned.applyTableChanges(s, lake, replica, pk, sinceV = hw)
         }
         def agg(d: DataFrame, tag: String) =
           d.groupBy("event_type").agg(
@@ -1678,9 +1618,9 @@ object LakeQueries {
               round(sum("value"), 4).as("sum_value"),
               count_distinct(col("event_id")).as("n_ids"))
             .withColumn("src", lit(tag))
-        agg(Versioned.snapshot(s, vlake, 1L), "v1")
-          .unionByName(agg(Versioned.snapshot(s, vlake, 2L), "v2"))
-          .unionByName(agg(Versioned.snapshot(s, vlake, 3L), "v3"))
+        agg(Versioned.snapshot(s, lake, 2L).filter(cv), "v1")
+          .unionByName(agg(Versioned.snapshot(s, lake, 3L).filter(cv), "v2"))
+          .unionByName(agg(Versioned.snapshot(s, lake, 4L).filter(cv), "v3"))
           .unionByName(agg(s.read.parquet(replica), "replica"))
           .select("src", "event_type", "row_count", "sum_value", "n_ids")
           .orderBy("src", "event_type")
@@ -1954,9 +1894,10 @@ object LakeQueries {
     // CDC across a MERGE-ON-READ delete: the tombstone commit also
     // publishes its deleted rows as a feed increment, so a replica
     // that replays the feed converges even though the primary's
-    // delete never rewrote a data file. Primary = versioned lake with
-    // one feed-emitting deleteWhere (memoized); replica = fresh swap
-    // lake + applyChangeFeed per run. Both aggregates must equal the
+    // delete never rewrote a data file. Primary = CDF-enabled
+    // versioned lake with one deleteWhere (memoized; v0 init, v1
+    // enable-cdf, v2 delete); replica = fresh swap lake +
+    // applyTableChanges per run. Both aggregates must equal the
     // same filter oracle — and the primary leg reads the TOMBSTONED
     // (un-materialized) snapshot, so the anti-join read path and the
     // feed-replayed COW path are pinned equal through one oracle.
@@ -1966,9 +1907,8 @@ object LakeQueries {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val stamp = new File(dir, "events.parquet").lastModified()
         val root = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_morrepl_${tag}_$stamp")
+          s"graft_morcdf_${tag}_$stamp")
         val lake = new File(root, "lake").getAbsolutePath
-        val feedDir = new File(root, "feed").getAbsolutePath
         def baseCV = graft.Tables(s, dir, "events")
           .select(MergeCols.map(col): _*)
           .filter(col("event_type").isin("click", "view"))
@@ -1979,8 +1919,9 @@ object LakeQueries {
             fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
             MergeData.writeMerged(s, baseCV, lake, keys = Seq("event_type"))
             Versioned.init(s, lake)
+            Versioned.enableChangeFeed(s, lake, Seq("event_id"))
             Versioned.deleteWhere(s, lake, col("user_id") % 5 === 2,
-              keyCols = Seq("event_id"), changeFeed = Some((feedDir, 0L)))
+              keyCols = Seq("event_id"))
             new File(root, "_SUCCESS").createNewFile()
           }
         }
@@ -1992,8 +1933,8 @@ object LakeQueries {
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(replica), true)
           MergeData.writeMerged(s, baseCV, replica, keys = Seq("event_type"))
-          MergeData.applyChangeFeed(s, feedDir, replica,
-            Seq("event_type"), Seq("event_id"))
+          Versioned.applyTableChanges(s, lake, replica, Seq("event_type"),
+            sinceV = 1L)
         }
         def agg(d: DataFrame, src: String) =
           d.groupBy("event_type").agg(
@@ -2023,19 +1964,21 @@ object LakeQueries {
 
     // ---------------------------------------------------------------
     // STREAMING change-feed source (Delta's readChangeFeed streaming
-    // mode): a file stream over the versioned fixture's feed drives a
-    // fresh VERSIONED replica to convergence inside the query —
-    // Trigger.AvailableNow terminates, then the replica's aggregate
-    // must equal the full 3-batch recompute oracle (q165's st3). The
-    // replica applies increments through the manifest merge core with
-    // (txnId, feedBatchId) markers, so its version count is pinned
-    // too: exactly init + one commit per feed batch. The REPLICA is
+    // mode): readStream.format("graft") with readChanges over the
+    // CDF-enabled cdcFixture, seeded at the enable version and capped
+    // at one commit per micro-batch, drives a fresh VERSIONED replica
+    // to convergence inside the query — Trigger.AvailableNow
+    // terminates, then the replica's aggregate must equal the full
+    // 3-batch recompute oracle (q165's st3). The replica applies each
+    // increment through the manifest merge core with a (txnId,
+    // micro-batch id) marker, so its version count is pinned too:
+    // exactly init + one commit per merge increment. The REPLICA is
     // rebuilt fresh per run (replication must be a pure function of
-    // (snapshot, log)); the primary+feed are the memoized fixture.
+    // (snapshot, log)); the primary is the memoized fixture.
     // ---------------------------------------------------------------
     Q("q171_streaming_replica",
       (s, dir) => {
-        val (_, vfeed) = versionedCdcFixture(s, dir)
+        val lake = cdcFixture(s, dir)
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val root = new File(new File(sys.props("user.dir"), "target"),
           s"graft_streplq_$tag")
@@ -2049,11 +1992,28 @@ object LakeQueries {
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
           MergeData.writeMerged(s, baseCV, replica, keys = Seq("event_type"))
-          graft.streaming.StreamingReplica.start(s, vfeed, replica,
-            Seq("event_type"), Seq("event_id"), ckpt).awaitTermination()
+          Versioned.init(s, replica)
+          s.readStream.format("graft")
+            .option("readChanges", "true")
+            .option("startingVersion", "1")
+            .option("maxVersionsPerTrigger", "1")
+            .load(lake)
+            .writeStream
+            .option("checkpointLocation", ckpt)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .foreachBatch { (d: DataFrame, bid: Long) =>
+              val b = d.filter(col("_action") =!= "update_preimage")
+                .withColumn("__delete", col("_action") === "delete")
+                .drop("_action", "_commit_version")
+              if (!b.isEmpty)
+                Versioned.mergeInto(s, replica, b, Seq("event_type"),
+                  Seq("event_id"), txn = Some(("q171_follow", bid)))
+              ()
+            }
+            .start().awaitTermination()
         }
         require(Versioned.currentVersion(s, replica) == 3L,
-          "streamed replica must commit exactly one version per feed batch")
+          "streamed replica must commit exactly one version per merge increment")
         Versioned.snapshot(s, replica)
           .groupBy("event_type").agg(
             count(lit(1)).as("row_count"),
@@ -2082,7 +2042,7 @@ object LakeQueries {
                count(DISTINCT event_id) AS n_ids
         FROM st3 GROUP BY 1
         ORDER BY 1"""),
-      "streaming CDF source: file-stream-driven versioned replica converges to the 3-batch recompute oracle"),
+      "streaming CDF source: readChanges-stream-driven versioned replica converges to the 3-batch recompute oracle"),
 
     // ---------------------------------------------------------------
     // TIMESTAMP AS OF time travel: the versioned fixture commits with
@@ -2095,7 +2055,7 @@ object LakeQueries {
     // ---------------------------------------------------------------
     Q("q172_timestamp_travel",
       (s, dir) => {
-        val (vlake, _) = versionedCdcFixture(s, dir)
+        val vlake = versionedCdcFixture(s, dir)
         require(Versioned.versionAsOf(s, vlake, 1500L) == 0L)
         require(Versioned.versionAsOf(s, vlake, 2000L) == 1L)
         def agg(d: DataFrame, src: String) =
@@ -2249,7 +2209,7 @@ object LakeQueries {
     // ---------------------------------------------------------------
     Q("q174_describe_history",
       (s, dir) => {
-        val (vlake, _) = versionedCdcFixture(s, dir)
+        val vlake = versionedCdcFixture(s, dir)
         Versioned.history(s, vlake)
           .select(col("version"), col("commit_ts"), col("operation"),
             col("is_checkpoint"), col("n_pending_delete_files"))
@@ -2268,15 +2228,15 @@ object LakeQueries {
 
     // ---------------------------------------------------------------
     // RESTORE TABLE TO VERSION AS OF (Delta's RESTORE): its own
-    // memoized fixture commits v0 = base, v1 = b0, v2 = b1 (feed
-    // batches 0, 1), then RESTORES to v1 as v3 — a metadata-only
+    // memoized CDF-enabled fixture commits v0 = base, v1 = enable-cdf,
+    // v2 = b0, v3 = b1, then RESTORES to v2 as v4 — a metadata-only
     // commit (zero data files moved) that also publishes the row-level
-    // v2→v1 diff as feed batch 2. Legs: the restored latest snapshot
-    // == v1's recompute oracle (st1), the rolled-back v2 still
+    // v3→v2 diff as its increment. Legs: the restored latest snapshot
+    // == v2's recompute oracle (st1), the rolled-back v3 still
     // time-travels to st2, and a fresh per-run replica seeded from the
-    // BASE converges to st1 by replaying all three feed batches — the
+    // BASE converges to st1 by replicating all three increments — the
     // merge increments AND the restore diff through one consumer path.
-    // require()s pin the protocol shape: 4 versions, restore replay is
+    // require()s pin the protocol shape: 5 versions, restore replay is
     // a version-level no-op, and no data file was written by it.
     // ---------------------------------------------------------------
     Q("q175_restore",
@@ -2284,9 +2244,8 @@ object LakeQueries {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val stamp = new File(dir, "events.parquet").lastModified()
         val root = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_restfix_${tag}_$stamp")
+          s"graft_restcdf_${tag}_$stamp")
         val lake = new File(root, "lake").getAbsolutePath
-        val feedDir = new File(root, "feed").getAbsolutePath
         def baseCV = graft.Tables(s, dir, "events")
           .select(MergeCols.map(col): _*)
           .filter(col("event_type").isin("click", "view"))
@@ -2299,25 +2258,23 @@ object LakeQueries {
             try {
               MergeData.writeMerged(s, base, lake, keys = Seq("event_type"))
               Versioned.init(s, lake, commitTs = 1000L)
+              Versioned.enableChangeFeed(s, lake, Seq("event_id"),
+                commitTs = 1500L)
               val Seq(b0, b1, _) = cdcPayload(base)
               Versioned.mergeInto(s, lake, b0, Seq("event_type"),
-                Seq("event_id"), changeFeed = Some((feedDir, 0L)),
-                commitTs = 2000L)
+                Seq("event_id"), commitTs = 2000L)
               Versioned.mergeInto(s, lake, b1, Seq("event_type"),
-                Seq("event_id"), changeFeed = Some((feedDir, 1L)),
-                commitTs = 3000L)
+                Seq("event_id"), commitTs = 3000L)
               def physicalParquetCount(): Int =
                 PathModel.walk(fs, new org.apache.hadoop.fs.Path(lake))
                   .map(_.getPath).count(p => p.getName.endsWith(".parquet") &&
                     !p.toString.contains("/_"))
               val physBefore = physicalParquetCount()
-              Versioned.restore(s, lake, 1L,
-                changeFeed = Some((feedDir, 2L)),
-                rowKey = Seq("event_id"), commitTs = 4000L)
+              Versioned.restore(s, lake, 2L, commitTs = 4000L)
               // metadata-only: exactly the target version's files, and
               // not one physical data file written
-              require(Versioned.filesAt(s, lake, 3L) ==
-                Versioned.filesAt(s, lake, 1L),
+              require(Versioned.filesAt(s, lake, 4L) ==
+                Versioned.filesAt(s, lake, 2L),
                 "restore must reference exactly the target version's files")
               require(physicalParquetCount() == physBefore,
                 "restore must not write data files")
@@ -2325,10 +2282,10 @@ object LakeQueries {
             new File(root, "_SUCCESS").createNewFile()
           }
         }
-        require(Versioned.currentVersion(s, lake) == 3L)
+        require(Versioned.currentVersion(s, lake) == 4L)
         // replay is a version-level no-op
-        require(Versioned.restore(s, lake, 1L) == 3L)
-        // fresh per-run replica: base + all three feed batches == st1
+        require(Versioned.restore(s, lake, 2L) == 4L)
+        // fresh per-run replica: base + all three increments == st1
         val replica = new File(new File(sys.props("user.dir"), "target"),
           s"graft_restfix_rep_$tag/replica").getAbsolutePath
         LakeQueries.synchronized {
@@ -2336,8 +2293,8 @@ object LakeQueries {
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(replica), true)
           MergeData.writeMerged(s, baseCV, replica, keys = Seq("event_type"))
-          MergeData.applyChangeFeed(s, feedDir, replica,
-            Seq("event_type"), Seq("event_id"))
+          Versioned.applyTableChanges(s, lake, replica, Seq("event_type"),
+            sinceV = 1L)
         }
         def agg(d: DataFrame, src: String) =
           d.groupBy("event_type").agg(
@@ -2346,7 +2303,7 @@ object LakeQueries {
               count_distinct(col("event_id")).as("n_ids"))
             .withColumn("src", lit(src))
         agg(Versioned.snapshot(s, lake), "restored")
-          .unionByName(agg(Versioned.snapshot(s, lake, 2L), "pre_restore"))
+          .unionByName(agg(Versioned.snapshot(s, lake, 3L), "pre_restore"))
           .unionByName(agg(s.read.parquet(replica), "replica"))
           .select("src", "event_type", "row_count", "sum_value", "n_ids")
           .orderBy("src", "event_type")
@@ -2399,7 +2356,7 @@ object LakeQueries {
     // ---------------------------------------------------------------
     Q("q176_shallow_clone",
       (s, dir) => {
-        val (vlake, _) = versionedCdcFixture(s, dir)
+        val vlake = versionedCdcFixture(s, dir)
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val stamp = new File(dir, "events.parquet").lastModified()
         val root = new File(new File(sys.props("user.dir"), "target"),
@@ -3881,7 +3838,7 @@ object LakeQueries {
     // ---------------------------------------------------------------
     Q("q194_datasource_read",
       (s, dir) => {
-        val (vlake, _) = versionedCdcFixture(s, dir)
+        val vlake = versionedCdcFixture(s, dir)
         val latest = s.read.format("graft").load(vlake)
         require(latest.queryExecution.executedPlan.toString()
           .contains("GraftFileIndex"),
@@ -5901,14 +5858,14 @@ object LakeQueries {
             "FOR COLUMNS (user_id, value)")
         }
         // the dashboard query: answered METADATA-ONLY, require()d
-        val served0 = Versioned.metadataAggServed
+        val served0 = Versioned.metadataAggServed.sum()
         val aggDf = s.sql(
           s"""SELECT count(*) AS n, count(value) AS n_value,
              |       min(value) AS min_value, max(value) AS max_value,
              |       min(user_id) AS min_user, max(user_id) AS max_user
              |FROM gsql.`$lake`""".stripMargin)
         val agg = aggDf.collect()(0)
-        require(Versioned.metadataAggServed - served0 >= 1L,
+        require(Versioned.metadataAggServed.sum() - served0 >= 1L,
           "the aggregate must be served from the stats rail, not a scan")
         require(!aggDf.queryExecution.executedPlan.toString
             .toLowerCase.contains("parquet"),
@@ -5917,27 +5874,27 @@ object LakeQueries {
         // file subset (Delta's metadata-only answering under
         // partition predicates — every row of a surviving file
         // matches by construction, so the subset answer stays exact)
-        val servedW0 = Versioned.metadataAggServed
+        val servedW0 = Versioned.metadataAggServed.sum()
         val whereN = s.sql(s"SELECT count(*) AS n FROM gsql.`$lake` " +
           "WHERE event_type = 'click'").collect()(0).getLong(0)
-        require(Versioned.metadataAggServed - servedW0 >= 1L,
+        require(Versioned.metadataAggServed.sum() - servedW0 >= 1L,
           "a partition-aligned predicate must stay metadata-answered")
         // a genuinely RESIDUAL predicate (non-partition column) BAILS
         // to the scan (and still answers)
-        val servedR0 = Versioned.metadataAggServed
+        val servedR0 = Versioned.metadataAggServed.sum()
         val posN = s.sql(s"SELECT count(*) AS n FROM gsql.`$lake` " +
           "WHERE value > 0.0").collect()(0).getLong(0)
-        require(Versioned.metadataAggServed == servedR0,
+        require(Versioned.metadataAggServed.sum() == servedR0,
           "a residual predicate must bail to the ordinary scan")
         // a deletion vector: count stays pushed AND exact
         LakeQueries.synchronized {
           Versioned.deleteWhereVectors(s, lake, col("user_id") % 7 === 0,
             commitTs = 2000L)
         }
-        val servedDv0 = Versioned.metadataAggServed
+        val servedDv0 = Versioned.metadataAggServed.sum()
         val nAfterDv = s.sql(s"SELECT count(*) AS n FROM gsql.`$lake`")
           .collect()(0).getLong(0)
-        require(Versioned.metadataAggServed - servedDv0 >= 1L,
+        require(Versioned.metadataAggServed.sum() - servedDv0 >= 1L,
           "count under a deletion vector must stay metadata-answered")
         require(nAfterDv == Versioned.snapshot(s, lake).count(),
           "the DV-adjusted metadata count must equal the MOR snapshot")
@@ -5994,7 +5951,7 @@ object LakeQueries {
           sqlMaint(s, s"ANALYZE TABLE gsql.`$lake` COMPUTE STATISTICS " +
             "FOR COLUMNS (user_id, value)")
         }
-        val served0 = Versioned.metadataAggServed
+        val served0 = Versioned.metadataAggServed.sum()
         val gDf = s.sql(
           s"""SELECT event_type, count(*) AS n, count(value) AS n_value,
              |       min(value) AS min_value, max(value) AS max_value,
@@ -6002,17 +5959,17 @@ object LakeQueries {
              |FROM gsql.`$lake` GROUP BY event_type
              |ORDER BY event_type""".stripMargin)
         val out = gDf.collect()
-        require(Versioned.metadataAggServed - served0 >= 1L,
+        require(Versioned.metadataAggServed.sum() - served0 >= 1L,
           "the grouped aggregate must be served from the stats rail")
         require(!gDf.queryExecution.executedPlan.toString
             .toLowerCase.contains("parquet"),
           "a metadata-answered grouped aggregate must not scan parquet")
         // a non-partition GROUP BY bails (and the row count is sane)
-        val servedB0 = Versioned.metadataAggServed
+        val servedB0 = Versioned.metadataAggServed.sum()
         val distinctUsers = s.sql(
           s"SELECT user_id, count(*) AS c FROM gsql.`$lake` " +
             "GROUP BY user_id").count()
-        require(Versioned.metadataAggServed == servedB0,
+        require(Versioned.metadataAggServed.sum() == servedB0,
           "GROUP BY a non-partition column must bail to the scan")
         import s.implicits._
         out.map(r => (r.getString(0), r.getLong(1), r.getLong(2),

@@ -2,10 +2,14 @@ package graft.queries
 
 import java.io.File
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.lake.Versioned
 import graft.ops.MergeData
 import graft.plans.MaterializedViews
 import graft.plans.MaterializedViews.MvDef
@@ -65,13 +69,26 @@ object MvQueries {
     (basePath, mvPath)
   }
 
-  /** Fail loudly unless the physical plan reads ONLY the summary. */
-  private def requireMvScan(d: DataFrame, mvPath: String,
+  /** Fail loudly unless the physical plan reads ONLY the summary.
+    * Checks the root paths of the plan's file scans, never the plan
+    * text: Spark cuts a scan's printed `Location` at
+    * `spark.sql.maxMetadataStringLength`, so a long path would vanish
+    * from the text whether or not it is scanned. */
+  private[graft] def requireMvScan(d: DataFrame, mvPath: String,
       basePath: String): DataFrame = {
-    val plan = d.queryExecution.executedPlan.toString
-    require(plan.contains(mvPath),
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case sc: FileSourceScanExec => Seq(sc)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+    }.flatten
+    val plan = d.queryExecution.executedPlan
+    val roots = scans(plan).flatMap(_.relation.location.rootPaths)
+      .map(p => Path.getPathWithoutSchemeAndAuthority(p).toString)
+    def under(p: String)(r: String) = r == p || r.startsWith(p + "/")
+    val mv = MaterializedViews.norm(mvPath)
+    val base = MaterializedViews.norm(basePath)
+    require(roots.exists(under(mv)),
       s"MV rewrite did not fire — plan does not scan $mvPath:\n$plan")
-    require(!plan.contains(basePath),
+    require(!roots.exists(under(base)),
       s"MV rewrite left a base scan of $basePath in the plan:\n$plan")
     d
   }
@@ -93,8 +110,9 @@ object MvQueries {
     requireMvScan(q, mvPath, basePath)
   }
 
-  /** q148: merge a batch into a partitioned lake (updates + deletes +
-    * inserts), advance the summary from the CHANGE FEED ONLY
+  /** q148: merge a batch into a partitioned versioned lake with the
+    * change feed enabled (updates + deletes + inserts), advance the
+    * summary from the merge's CHANGE INCREMENT ONLY
     * ([[MergeData.feedDeltas]] → [[MaterializedViews.appliedDeltas]]),
     * and serve the post-merge aggregate through the rewrite. The lake
     * is rebuilt and the merge replayed every run, so feed emission,
@@ -104,13 +122,12 @@ object MvQueries {
   private def mvIncremental(s: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val lakeDir = target(s"graft_mvlake_$tag")
-    val feedDir = target(s"graft_mvfeed_$tag")
     val mv0Dir = target(s"graft_mvinc0_$tag")
     val mv1Dir = target(s"graft_mvinc1_$tag")
     // a previous invocation in this JVM (bench warm-up/repeat runs)
     // left its registration behind — drop it before wiping its summary
     MaterializedViews.deregister(lakeDir)
-    Seq(lakeDir, feedDir, mv0Dir, mv1Dir).foreach(rm)
+    Seq(lakeDir, mv0Dir, mv1Dir).foreach(rm)
 
     // two event types keep the per-run rebuild+merge cost proportional
     // to what the oracle actually checks (the mechanics are identical)
@@ -139,16 +156,20 @@ object MvQueries {
         .unionByName(
           ev.filter(col("event_id") % 4 === 0)
             .withColumn("__delete", lit(false)))
-    MergeData.mergeInto(s, lakeDir, batch, Seq("event_type"), Seq("event_id"),
-      changeFeed = Some((feedDir, 0L)))
+    Versioned.init(s, lakeDir)
+    val v0 = Versioned.enableChangeFeed(s, lakeDir, Seq("event_id"))
+    val v1 = Versioned.mergeInto(s, lakeDir, batch, Seq("event_type"),
+      Seq("event_id"))
 
-    // summary advanced from the feed increment alone — no base rescan
+    // summary advanced from the merge's increment alone — no base rescan
     val deltas = MergeData.feedDeltas(
-      s.read.parquet(feedDir).filter(col("batch_id") === 0),
-      Seq("user_id"), "vt")
+      Versioned.changesBetween(s, lakeDir, v0, v1), Seq("user_id"), "vt")
     MaterializedViews
       .appliedDeltas(s.read.parquet(mv0Dir), deltas, d0, sumOf = "vt")
       .write.mode("overwrite").parquet(mv1Dir)
+    // the summary is registered against the lake DIRECTORY: reap the
+    // files the merge superseded so a plain read of it is the table
+    Versioned.vacuum(s, lakeDir, keepVersions = 1)
 
     graft.GraftExtensions.register(s)
     MaterializedViews.register(d0.copy(mvPath = mv1Dir))

@@ -27,17 +27,11 @@ object StreamingMerge {
 
   /** @param afterBatch runs after the merge lands but BEFORE the
     *   streaming commit records the batch — the crash window replay
-    *   idempotence exists for (tests throw here).
-    * @param changeDir optional change-data-feed root: each micro-batch's
-    *   resolved update/insert/delete rows land under `batch_id=N` via
-    *   dynamic overwrite, so a crash-replayed batch rewrites its own
-    *   feed increment — downstream incremental consumers read the feed
-    *   append-only and never see a double-applied batch. */
+    *   idempotence exists for (tests throw here). */
   def start(updates: DataFrame, baseDir: String,
       partitionKeys: Seq[String], rowKey: Seq[String], checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      afterBatch: Long => Unit = _ => (),
-      changeDir: Option[String] = None): StreamingQuery =
+      afterBatch: Long => Unit = _ => ()): StreamingQuery =
     updates.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -45,11 +39,23 @@ object StreamingMerge {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {
           MergeData.mergeInto(batch.sparkSession, baseDir, batch,
-            partitionKeys, rowKey, changeFeed = changeDir.map(d => (d, id)))
+            partitionKeys, rowKey)
         }
         afterBatch(id)
       }
       .start()
+
+  /** The default txn id of a checkpointed stream: a SHA-256 prefix
+    * (64 bits) of the checkpoint path — stable across JVMs/restarts for
+    * a given checkpoint, so existing checkpoints keep their markers,
+    * and — unlike a 32-bit String.hashCode — collision between two
+    * distinct streams' checkpoints (which would silently share a
+    * high-water mark and skip each other's batches) is negligible. */
+  private[streaming] def checkpointTxnId(checkpoint: String): String = {
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(checkpoint.getBytes("UTF-8"))
+    "ckpt-" + d.take(8).map(b => f"$b%02x").mkString
+  }
 
   /** [[start]] committing through the manifest protocol
     * ([[graft.lake.Versioned]]): every micro-batch merge is an atomic
@@ -66,26 +72,15 @@ object StreamingMerge {
     *   markers; defaults to a stable hash of the checkpoint path (the
     *   same stream restarts with the same checkpoint, hence the same
     *   id). Pass explicitly when two streams share a checkpoint
-    *   naming scheme.
-    * @param changeDir optional CDF root, as in [[start]]: the feed
-    *   increment is emitted by the same write-once pre-commit contract,
-    *   so snapshot history and the change feed ride one write path. */
+    *   naming scheme. On a table with the change feed enabled, each
+    *   commit also publishes its increment, so snapshot history and
+    *   the change feed ride one write path. */
   def startVersioned(updates: DataFrame, baseDir: String,
       partitionKeys: Seq[String], rowKey: Seq[String], checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       afterBatch: Long => Unit = _ => (),
-      txnId: Option[String] = None,
-      changeDir: Option[String] = None): StreamingQuery = {
-    // SHA-256 prefix (64 bits) of the checkpoint path: stable across
-    // JVMs/restarts for a given checkpoint, and — unlike a 32-bit
-    // String.hashCode — collision between two distinct streams'
-    // checkpoints (which would silently share a high-water mark and
-    // skip each other's batches) is negligible
-    val id = txnId.getOrElse {
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(checkpoint.getBytes("UTF-8"))
-      "ckpt-" + d.take(8).map(b => f"$b%02x").mkString
-    }
+      txnId: Option[String] = None): StreamingQuery = {
+    val id = txnId.getOrElse(checkpointTxnId(checkpoint))
     updates.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -93,9 +88,7 @@ object StreamingMerge {
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         if (!batch.isEmpty) {
           graft.lake.Versioned.mergeInto(batch.sparkSession, baseDir, batch,
-            partitionKeys, rowKey,
-            changeFeed = changeDir.map(d => (d, bid)),
-            txn = Some((id, bid)))
+            partitionKeys, rowKey, txn = Some((id, bid)))
         }
         afterBatch(bid)
       }
@@ -120,11 +113,7 @@ object StreamingMerge {
       afterBatch: Long => Unit = _ => (),
       txnId: Option[String] = None,
       statsCols: Seq[String] = Nil): StreamingQuery = {
-    val id = txnId.getOrElse {
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(checkpoint.getBytes("UTF-8"))
-      "ckpt-" + d.take(8).map(b => f"$b%02x").mkString
-    }
+    val id = txnId.getOrElse(checkpointTxnId(checkpoint))
     rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

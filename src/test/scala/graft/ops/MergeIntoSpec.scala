@@ -1,7 +1,12 @@
 package graft.ops
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.lake.Versioned
 
 /** Row-level MERGE INTO (copy-on-write): update/delete/insert semantics
   * AND the physical guarantee that only touched partitions rewrite —
@@ -65,69 +70,69 @@ class MergeIntoSpec extends SparkSpec {
     assert(state(dir.getAbsolutePath) == once && once == Set(("a", 1L, 5.0)))
   }
 
-  test("change feed resolves actions against the pre-merge base") {
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_cdf").toFile
+  /** A versioned lake over `rows` with the change feed enabled on
+    * (site, id): v0 init, v1 enable-cdf. */
+  private def cdfLake(name: String, rows: Seq[(String, Long, Double)]): String = {
+    val root = java.nio.file.Files.createTempDirectory(name).toFile
     root.deleteOnExit()
     val lake = new java.io.File(root, "lake").getAbsolutePath
-    val feed = new java.io.File(root, "feed").getAbsolutePath
-    MergeData.writeMerged(spark,
-      df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0)), "site", "id", "v"),
-      lake, keys = Seq("site"))
+    MergeData.writeMerged(spark, df(rows, "site", "id", "v"), lake,
+      keys = Seq("site"))
+    Versioned.init(spark, lake)
+    Versioned.enableChangeFeed(spark, lake, Seq("site", "id"))
+    lake
+  }
+
+  test("change feed resolves actions against the pre-merge base") {
+    val lake = cdfLake("graft_merge_cdf", Seq(("a", 1L, 1.0), ("a", 2L, 2.0)))
     val updates = df(Seq(
       ("a", 1L, 100.0, false),  // matched → update
       ("a", 2L, 0.0, true),     // matched → delete
       ("a", 3L, 3.0, false),    // unmatched → insert
       ("a", 99L, 0.0, true)),   // delete of absent key → NO feed row
       "site", "id", "v", "__delete")
-    MergeData.mergeInto(spark, lake, updates, Seq("site"), Seq("site", "id"),
-      changeFeed = Some((feed, 7L)))
-    val rows = spark.read.parquet(feed)
-      .select("batch_id", "id", "_action", "v").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getDouble(3)))
+    val v = Versioned.mergeInto(spark, lake, updates, Seq("site"),
+      Seq("site", "id"), txn = Some(("cdf-replay", 7L)))
+    def feed() = Versioned.changesBetween(spark, lake, 1L,
+        Versioned.currentVersion(spark, lake))
+      .select("_commit_version", "id", "_action", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
       .toSet
+    val rows = feed()
     // Delta-CDF shape: preimages/deletes carry the OLD row's values
     assert(rows == Set(
-      (7, 1L, "update_preimage", 1.0), (7, 1L, "update_postimage", 100.0),
-      (7, 2L, "delete", 2.0), (7, 3L, "insert", 3.0)))
-    // replaying the batch under the same batch_id KEEPS the original
-    // increment verbatim (write-once): re-resolving against the now-
-    // merged base would publish zero-deltas and bogus self-updates —
-    // the exact failure a crash-restarted streaming merge would hit
-    MergeData.mergeInto(spark, lake, updates, Seq("site"), Seq("site", "id"),
-      changeFeed = Some((feed, 7L)))
-    val replay = spark.read.parquet(feed)
-      .select("batch_id", "id", "_action", "v").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getDouble(3)))
-      .toSet
-    assert(replay == rows, "replay must preserve the original feed increment")
+      (v, 1L, "update_preimage", 1.0), (v, 1L, "update_postimage", 100.0),
+      (v, 2L, "delete", 2.0), (v, 3L, "insert", 3.0)))
+    // replaying the batch under the same txn marker commits nothing, so
+    // the published increment stays the original: re-resolving against
+    // the now-merged base would publish zero-deltas and bogus
+    // self-updates — the exact failure a crash-restarted streaming
+    // merge would hit
+    assert(Versioned.mergeInto(spark, lake, updates, Seq("site"),
+      Seq("site", "id"), txn = Some(("cdf-replay", 7L))) == v)
+    assert(feed() == rows, "replay must preserve the original feed increment")
   }
 
   test("feed deltas maintain a grouped aggregate without rescanning the lake") {
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_ivm").toFile
-    root.deleteOnExit()
-    val lake = new java.io.File(root, "lake").getAbsolutePath
-    val feed = new java.io.File(root, "feed").getAbsolutePath
-    val base = df(Seq(
-      ("a", 1L, 1.0), ("a", 2L, 2.0), ("a", 3L, 3.0), ("b", 10L, 10.0)),
-      "site", "id", "v")
-    MergeData.writeMerged(spark, base, lake, keys = Seq("site"))
+    val base = Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("a", 3L, 3.0), ("b", 10L, 10.0))
+    val lake = cdfLake("graft_merge_ivm", base)
     // the view BEFORE the merge
-    val before = base.groupBy("site")
+    val before = df(base, "site", "id", "v").groupBy("site")
       .agg(sum("v").as("s"), count(lit(1)).as("n"))
-    MergeData.mergeInto(spark, lake,
+    val v = Versioned.mergeInto(spark, lake,
       df(Seq(("a", 1L, 100.0, false), ("a", 2L, 0.0, true),
         ("a", 4L, 4.0, false), ("b", 10L, 0.0, true)),
         "site", "id", "v", "__delete"),
-      Seq("site"), Seq("site", "id"), changeFeed = Some((feed, 0L)))
+      Seq("site"), Seq("site", "id"))
     // maintained = before + deltas; truth = recompute from the lake
     val deltas = MergeData.feedDeltas(
-      spark.read.parquet(feed), Seq("site"), "v")
+      Versioned.changesBetween(spark, lake, 1L, v), Seq("site"), "v")
     val maintained = before.join(deltas, Seq("site"), "full")
       .select(col("site"),
         (coalesce(col("s"), lit(0.0)) + coalesce(col("delta_sum"), lit(0.0))).as("s"),
         (coalesce(col("n"), lit(0L)) + coalesce(col("delta_count"), lit(0L))).as("n"))
       .filter(col("n") > 0)
-    val truth = spark.read.parquet(lake).groupBy("site")
+    val truth = Versioned.snapshot(spark, lake).groupBy("site")
       .agg(sum("v").as("s"), count(lit(1)).as("n"))
     assert(rowsOf(maintained.orderBy("site")) == rowsOf(truth.orderBy("site")))
     assert(rowsOf(maintained.orderBy("site")) ==
@@ -135,41 +140,38 @@ class MergeIntoSpec extends SparkSpec {
   }
 
   test("replica converges to primary by replaying the change feed") {
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_repl").toFile
-    root.deleteOnExit()
-    val primary = new java.io.File(root, "primary").getAbsolutePath
-    val replica = new java.io.File(root, "replica").getAbsolutePath
-    val feed = new java.io.File(root, "feed").getAbsolutePath
-    val base = df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0)),
-      "site", "id", "v")
-    MergeData.writeMerged(spark, base, primary, keys = Seq("site"))
-    MergeData.writeMerged(spark, base, replica, keys = Seq("site"))
+    val base = Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0))
+    val primary = cdfLake("graft_merge_repl", base)
+    val replica = primary + "_replica"
+    MergeData.writeMerged(spark, df(base, "site", "id", "v"), replica,
+      keys = Seq("site"))
 
-    // two primary merge batches, feed enabled
-    MergeData.mergeInto(spark, primary,
+    // two primary merge batches, each publishing its increment
+    val v0 = Versioned.mergeInto(spark, primary,
       df(Seq(("a", 1L, 100.0, false), ("a", 2L, 0.0, true), ("c", 7L, 7.0, false)),
         "site", "id", "v", "__delete"),
-      Seq("site"), Seq("site", "id"), changeFeed = Some((feed, 0L)))
-    MergeData.mergeInto(spark, primary,
+      Seq("site"), Seq("site", "id"))
+    Versioned.mergeInto(spark, primary,
       df(Seq(("c", 7L, 70.0, false), ("b", 10L, 0.0, true)),
         "site", "id", "v", "__delete"),
-      Seq("site"), Seq("site", "id"), changeFeed = Some((feed, 1L)))
+      Seq("site"), Seq("site", "id"))
 
-    // bounded catch-up (point-in-time restore): untilBatch = 0 stops
-    // at batch 0's state...
-    MergeData.applyChangeFeed(spark, feed, replica, Seq("site"), Seq("site", "id"),
-      untilBatch = 0L)
+    // bounded catch-up (point-in-time restore): untilV stops at the
+    // first batch's state...
+    val hw = Versioned.applyTableChanges(spark, primary, replica, Seq("site"),
+      sinceV = 1L, untilV = v0)
+    assert(hw == v0)
     assert(state(replica) == Set(
       ("a", 1L, 100.0), ("b", 10L, 10.0), ("c", 7L, 7.0)))
     // ...then the high-water mark applies only what's above it
-    MergeData.applyChangeFeed(spark, feed, replica, Seq("site"), Seq("site", "id"),
-      sinceBatch = 0L)
-    assert(state(replica) == state(primary))
+    Versioned.applyTableChanges(spark, primary, replica, Seq("site"), sinceV = hw)
+    val primaryState = Versioned.snapshot(spark, primary).select("site", "id", "v")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(state(replica) == primaryState)
     assert(state(replica) == Set(("a", 1L, 100.0), ("c", 7L, 70.0)))
-    // replaying from batch 1 again is idempotent (keys already final)
-    MergeData.applyChangeFeed(spark, feed, replica, Seq("site"), Seq("site", "id"),
-      sinceBatch = 0L)
-    assert(state(replica) == state(primary))
+    // replaying from the same mark again is idempotent (keys already final)
+    Versioned.applyTableChanges(spark, primary, replica, Seq("site"), sinceV = hw)
+    assert(state(replica) == primaryState)
   }
 
   test("a null __delete marker is an upsert, never a silent delete") {
@@ -264,5 +266,24 @@ class MergeIntoSpec extends SparkSpec {
       df(Seq(("a", 1L, 0.0, true)), "site", "id", "v", "__delete"),
       Seq("site"), Seq("site", "id"))
     assert(state(dir.getAbsolutePath) == Set(("b", 2L, 2.0)))
+  }
+
+  test("no file under src/main/scala names the batch_id=N directory change feed") {
+    // the table-property feed (Versioned.enableChangeFeed, `#cdfinc`)
+    // is the engine's one change feed; its argument-passed directory
+    // twin and that twin's streaming follower were deleted
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root, not ${sys.props("user.dir")}")
+    val banned = Seq("applyChangeFeed", "StreamingReplica",
+      "stageFeedIncrement", "vacuumFeed", "changeDir")
+    val param = "changeFeed\\s*(:|=(?!=))".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        (banned.filter(src.contains) ++
+          param.findFirstIn(src).toSeq).map(hit => s"$p: $hit")
+      }.toSeq
+    assert(offenders.isEmpty, s"serve change data through the table-property feed: $offenders")
   }
 }

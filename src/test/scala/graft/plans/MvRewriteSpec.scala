@@ -6,7 +6,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.lake.Versioned
 import graft.ops.MergeData
+import graft.queries.MvQueries
 
 /** The materialized-view rewrite must redirect matching aggregates onto
   * the summary scan (visible in the physical plan), return results
@@ -226,7 +228,6 @@ class MvRewriteSpec extends SparkSpec {
     // lake + MV over it, then one merge batch; MV advanced from the
     // change feed only; the rewritten query serves the post-merge state
     val lakeDir = s"$root/lake"
-    val feedDir = s"$root/feed"
     val mv2Dir = s"$root/mv2"
     val init = spark.createDataset(Seq(
       (1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L), (4L, "b", 2L)))
@@ -241,10 +242,14 @@ class MvRewriteSpec extends SparkSpec {
     val batch = spark.createDataset(Seq(
       (1L, "a", 13L, false), (3L, "b", 0L, true), (5L, "b", 50L, false)))
       .toDF("id", "k", "v", "__delete")
-    MergeData.mergeInto(spark, lakeDir, batch, Seq("k"), Seq("id"),
-      changeFeed = Some((feedDir, 0L)))
+    Versioned.init(spark, lakeDir)
+    val v0 = Versioned.enableChangeFeed(spark, lakeDir, Seq("id"))
+    val v1 = Versioned.mergeInto(spark, lakeDir, batch, Seq("k"), Seq("id"))
+    // the plain read of the lake directory below must be the table:
+    // reap the files the merge superseded
+    Versioned.vacuum(spark, lakeDir, keepVersions = 1)
 
-    val feed = spark.read.parquet(feedDir)
+    val feed = Versioned.changesBetween(spark, lakeDir, v0, v1)
     val deltas = MergeData.feedDeltas(feed, Seq("k"), "v")
     val mv1 = spark.read.parquet(mv2Dir)
     val advanced = appliedDeltas(mv1, deltas, d0, sumOf = "v")
@@ -261,5 +266,29 @@ class MvRewriteSpec extends SparkSpec {
       assert(plan.contains(mv3Dir) && !plan.contains(lakeDir), plan)
       assert(rowsOf(q) === Seq(Seq("a", 33L, 2L), Seq("b", 52L, 2L)))
     } finally deregister(lakeDir)
+  }
+
+  test("requireMvScan checks scan root paths, not the cut plan text") {
+    val key = "spark.sql.maxMetadataStringLength"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "10")
+    try {
+      def q = base.groupBy("k").agg(sum("v").as("s"))
+      withMv {
+        // the printed scan Location is cut well before either path...
+        assert(!q.queryExecution.executedPlan.toString.contains(mvPath))
+        // ...yet the rewrite fired, and the check sees it
+        MvQueries.requireMvScan(q, mvPath, basePath)
+      }
+      // a plan that scans the base beside the summary is refused
+      val both = q.unionByName(spark.read.parquet(mvPath)
+        .select(col("k"), col(sumCol("v")).as("s")))
+      assert(intercept[IllegalArgumentException] {
+        MvQueries.requireMvScan(both, mvPath, basePath)
+      }.getMessage.contains("base scan"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

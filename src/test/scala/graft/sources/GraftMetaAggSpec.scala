@@ -33,10 +33,10 @@ class GraftMetaAggSpec extends SparkSpec {
 
   /** Runs `sql`, returning (row, served delta, physical plan). */
   private def run(sql: String): (org.apache.spark.sql.Row, Long, String) = {
-    val before = Versioned.metadataAggServed
+    val before = Versioned.metadataAggServed.sum()
     val df = spark.sql(sql)
     val row = df.collect()(0)
-    (row, Versioned.metadataAggServed - before,
+    (row, Versioned.metadataAggServed.sum() - before,
       df.queryExecution.executedPlan.toString)
   }
 
@@ -93,32 +93,32 @@ class GraftMetaAggSpec extends SparkSpec {
 
     // GROUP BY the PARTITION column → served per group: each group's
     // rows are exactly its path-matched files' rows
-    val beforeG = Versioned.metadataAggServed
+    val beforeG = Versioned.metadataAggServed.sum()
     val gDf = spark.sql(
       s"SELECT site, count(*) AS c, min(v) AS mn FROM ${tbl(dir)} " +
         "GROUP BY site")
     val g = gDf.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(Versioned.metadataAggServed - beforeG >= 1L,
+    assert(Versioned.metadataAggServed.sum() - beforeG >= 1L,
       "GROUP BY a partition column must be served from metadata")
     assert(!gDf.queryExecution.executedPlan.toString.toLowerCase
       .contains("parquet"))
     assert(g == Set(("a", 2L, 1.5), ("b", 1L, 10.5), ("c", 1L, -3.5),
       ("d", 1L, 50.5)))
     // grouped + partition-aligned WHERE compose
-    val beforeGW = Versioned.metadataAggServed
+    val beforeGW = Versioned.metadataAggServed.sum()
     val gw = spark.sql(
       s"SELECT site, count(*) AS c FROM ${tbl(dir)} " +
         "WHERE site IN ('a', 'b') GROUP BY site")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(Versioned.metadataAggServed - beforeGW >= 1L)
+    assert(Versioned.metadataAggServed.sum() - beforeGW >= 1L)
     assert(gw == Map("a" -> 2L, "b" -> 1L))
     // GROUP BY a NON-partition column → bail, same answers
-    val beforeGN = Versioned.metadataAggServed
+    val beforeGN = Versioned.metadataAggServed.sum()
     val gn = spark.sql(
       s"SELECT id, count(*) AS c FROM ${tbl(dir)} GROUP BY id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(Versioned.metadataAggServed == beforeGN,
+    assert(Versioned.metadataAggServed.sum() == beforeGN,
       "GROUP BY a non-partition column must bail to the scan")
     assert(gn.values.sum == 5L)
 
@@ -161,21 +161,21 @@ class GraftMetaAggSpec extends SparkSpec {
     // GROUPED pure counts SUBTRACT the vector per group (the entry
     // names its file, the file names its group — still metadata),
     // and a fully-deleted partition VANISHES like the scan's
-    val beforeGDv = Versioned.metadataAggServed
+    val beforeGDv = Versioned.metadataAggServed.sum()
     val gDv = spark.sql(
       s"SELECT site, count(*) AS c FROM ${tbl(dir)} GROUP BY site")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(Versioned.metadataAggServed - beforeGDv >= 1L,
+    assert(Versioned.metadataAggServed.sum() - beforeGDv >= 1L,
       "grouped pure counts must stay metadata-answered under DVs")
     assert(gDv == Map("a" -> 2L, "c" -> 1L, "d" -> 1L),
       s"per-group DV subtraction must match the MOR snapshot (got $gDv)")
     // but a grouped VALUE aggregate under a DV bails (the deleted row
     // could hold the group's extremum)
-    val beforeGDvM = Versioned.metadataAggServed
+    val beforeGDvM = Versioned.metadataAggServed.sum()
     val gDvM = spark.sql(
       s"SELECT site, max(v) AS mx FROM ${tbl(dir)} GROUP BY site")
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-    assert(Versioned.metadataAggServed == beforeGDvM,
+    assert(Versioned.metadataAggServed.sum() == beforeGDvM,
       "grouped extrema must bail under deletion vectors")
     assert(gDvM == Map("a" -> 2.5, "c" -> -3.5, "d" -> 50.5))
 

@@ -469,6 +469,15 @@ class GraftStreamSourceSpec extends SparkSpec {
     assert(state(Versioned.snapshot(spark, replica)) ==
       Set(("a", 1L, 1.0), ("b", 10L, 10.0), ("a", 2L, 2.0)),
       "restored state: v2's rows")
+    // one replica commit per followed version (the replayed batch
+    // found its txn marker), and the batch replication twin agrees
+    assert(Versioned.currentVersion(spark, replica) == 5L)
+    val twin = new java.io.File(root, "twin").getAbsolutePath
+    MergeData.writeMerged(spark, Versioned.snapshot(spark, src, 1L),
+      twin, keys = Seq("site"))
+    Versioned.applyTableChanges(spark, src, twin, Seq("site"), sinceV = 1L)
+    assert(state(spark.read.parquet(twin)) ==
+      state(Versioned.snapshot(spark, replica)))
     // further waves stream incrementally
     Versioned.append(spark, src,
       df(Seq(("c", 20L, 20.0)), "site", "id", "v"), Seq("site"))

@@ -3,10 +3,13 @@ package graft.streaming
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.lake.Versioned
 import graft.ops.MergeData
 
 /** Streamed CDC-apply must equal the same batches applied with batch
@@ -45,11 +48,10 @@ class StreamingMergeSpec extends SparkSpec {
   }
 
   private def runOnce(lake: String, in: String, ckpt: String,
-      afterBatch: Long => Unit = _ => (),
-      changeDir: Option[String] = None): Unit = {
+      afterBatch: Long => Unit = _ => ()): Unit = {
     val stream = spark.readStream.schema(schema).csv(in)
     val q = StreamingMerge.start(stream, lake, Seq("site"), Seq("site", "id"),
-      ckpt, afterBatch = afterBatch, changeDir = changeDir)
+      ckpt, afterBatch = afterBatch)
     try q.awaitTermination()
     finally if (q.isActive) q.stop()
   }
@@ -75,44 +77,58 @@ class StreamingMergeSpec extends SparkSpec {
       ("a", 1L, 200.0), ("b", 11L, 11.0), ("c", 7L, 7.0)))
   }
 
+  private def streamVersioned(lake: String, in: String, ckpt: String,
+      afterBatch: Long => Unit = _ => ()): Unit = {
+    val q = StreamingMerge.startVersioned(spark.readStream.schema(schema).csv(in),
+      lake, Seq("site"), Seq("site", "id"), ckpt, afterBatch = afterBatch)
+    try q.awaitTermination()
+    finally if (q.isActive) q.stop()
+  }
+
+  private def versionedState(lake: String, v: Long = -1L): Set[(String, Long, Double)] =
+    graft.lake.Versioned.snapshot(spark, lake, v)
+      .select("site", "id", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+
   test("streamed change feed replicates the lake batch-for-batch") {
     val (lake, in, ckpt) = mkDirs()
-    val feed = new File(new File(lake).getParentFile, "feed").getAbsolutePath
     val replica = new File(new File(lake).getParentFile, "replica").getAbsolutePath
     seedBase(lake)
     seedBase(replica)
+    graft.lake.Versioned.init(spark, lake)
+    graft.lake.Versioned.enableChangeFeed(spark, lake, Seq("site", "id")) // v1
     writeBatch(in, "b1.csv", Seq(
       ("a", 1L, 100.0, false), ("a", 2L, 0.0, true), ("c", 7L, 7.0, false)))
-    runOnce(lake, in, ckpt, changeDir = Some(feed))
+    streamVersioned(lake, in, ckpt)
+    // the second micro-batch crashes after its commit; the replay finds
+    // its txn marker and publishes no second increment
     writeBatch(in, "b2.csv", Seq(
       ("c", 7L, 70.0, false), ("b", 10L, 0.0, true)))
-    runOnce(lake, in, ckpt, changeDir = Some(feed))
-    // two micro-batches → two batch_id increments, each carrying the
-    // Delta row classes; replaying them converges the replica
-    val ids = spark.read.parquet(feed).select("batch_id").distinct().count()
-    assert(ids == 2)
-    MergeData.applyChangeFeed(spark, feed, replica, Seq("site"), Seq("site", "id"))
-    assert(state(replica) == state(lake))
+    intercept[Exception] {
+      streamVersioned(lake, in, ckpt,
+        afterBatch = _ => throw new RuntimeException("injected crash"))
+    }
+    streamVersioned(lake, in, ckpt)
+    // two micro-batches → two increments, each carrying the Delta row
+    // classes; replaying them converges the replica
+    val cur = graft.lake.Versioned.currentVersion(spark, lake)
+    assert(cur == 3L)
+    val versions = graft.lake.Versioned.changesBetween(spark, lake, 1L, cur)
+      .select("_commit_version").distinct().collect().map(_.getLong(0)).toSet
+    assert(versions == Set(2L, 3L))
+    graft.lake.Versioned.applyTableChanges(spark, lake, replica, Seq("site"),
+      sinceV = 1L)
+    assert(state(replica) == versionedState(lake))
     assert(state(replica) == Set(("a", 1L, 100.0), ("c", 7L, 70.0)))
   }
 
   test("versioned streaming: manifest history accumulates; crash-replay does NOT advance the version") {
     val (lake, in, ckpt) = mkDirs()
-    val feed = new File(new File(lake).getParentFile, "vfeed").getAbsolutePath
     seedBase(lake)
     graft.lake.Versioned.init(spark, lake)
-    def runVersioned(afterBatch: Long => Unit = _ => ()): Unit = {
-      val stream = spark.readStream.schema(schema).csv(in)
-      val q = StreamingMerge.startVersioned(stream, lake,
-        Seq("site"), Seq("site", "id"), ckpt, afterBatch = afterBatch,
-        changeDir = Some(feed))
-      try q.awaitTermination()
-      finally if (q.isActive) q.stop()
-    }
-    def snapState(v: Long): Set[(String, Long, Double)] =
-      graft.lake.Versioned.snapshot(spark, lake, v)
-        .select("site", "id", "v").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    def runVersioned(afterBatch: Long => Unit = _ => ()): Unit =
+      streamVersioned(lake, in, ckpt, afterBatch)
+    def snapState(v: Long): Set[(String, Long, Double)] = versionedState(lake, v)
 
     writeBatch(in, "b1.csv", Seq(
       ("a", 1L, 100.0, false), ("a", 2L, 0.0, true), ("c", 7L, 7.0, false)))
@@ -138,12 +154,6 @@ class StreamingMergeSpec extends SparkSpec {
     // and the stream's full history time-travels: v1 still intact
     assert(snapState(1L) == Set(
       ("a", 1L, 100.0), ("b", 10L, 10.0), ("c", 7L, 7.0)))
-
-    // the versioned path emitted one write-once CDF increment per
-    // micro-batch (the replayed batch kept its original increment)
-    val ids = spark.read.parquet(feed).select("batch_id").distinct()
-      .collect().map(_.getAs[Number](0).longValue()).toSet
-    assert(ids == Set(0L, 1L))
 
     // streamed versioned lake == the same batches applied with batch
     // Versioned.mergeInto on a twin lake
@@ -234,5 +244,68 @@ class StreamingMergeSpec extends SparkSpec {
       .select("site", "id", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(added == Set(("a", 50L, 5.0), ("b", 60L, 6.0), ("c", 70L, 7.0)))
+  }
+
+  test("CDC chain: csv stream -> CDF primary -> readChanges -> replica") {
+    val (primary, in, ckpt) = mkDirs()
+    val root = new File(primary).getParentFile
+    val replica = new File(root, "replica").getAbsolutePath
+    val base = df(Seq(("a", 1L, 1.0), ("b", 10L, 10.0)), "site", "id", "v")
+    MergeData.writeMerged(spark, base, primary, keys = Seq("site"))
+    Versioned.init(spark, primary)
+    Versioned.enableChangeFeed(spark, primary, Seq("site", "id")) // v1
+    MergeData.writeMerged(spark, base, replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
+    // upstream: the csv stream merges into the primary, one versioned
+    // commit per micro-batch; downstream: the primary's change stream
+    // (one commit per batch) merges into the replica, txn-marked
+    def runChain(): Unit = {
+      streamVersioned(primary, in, ckpt)
+      val q = spark.readStream.format("graft")
+        .option("readChanges", "true")
+        .option("startingVersion", "1")
+        .option("maxVersionsPerTrigger", "1")
+        .load(primary)
+        .writeStream
+        .option("checkpointLocation", new File(root, "ckpt_replica").getAbsolutePath)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (d: DataFrame, bid: Long) =>
+          val b = d.filter(col("_action") =!= "update_preimage")
+            .withColumn("__delete", col("_action") === "delete")
+            .drop("_action", "_commit_version")
+          if (!b.isEmpty)
+            Versioned.mergeInto(spark, replica, b, Seq("site"),
+              Seq("site", "id"), txn = Some(("chain", bid)))
+          ()
+        }
+        .start()
+      try q.awaitTermination()
+      finally if (q.isActive) q.stop()
+    }
+
+    writeBatch(in, "w0.csv", Seq(("a", 1L, 100.0, false), ("c", 7L, 7.0, false)))
+    runChain()
+    assert(versionedState(replica) == versionedState(primary))
+    assert(versionedState(replica) ==
+      Set(("a", 1L, 100.0), ("b", 10L, 10.0), ("c", 7L, 7.0)))
+
+    // second wave, incremental end to end — including a delete
+    writeBatch(in, "w1.csv", Seq(("b", 10L, 0.0, true), ("c", 7L, 77.0, false)))
+    runChain()
+    assert(versionedState(replica) == versionedState(primary))
+    assert(versionedState(replica) == Set(("a", 1L, 100.0), ("c", 7L, 77.0)))
+
+    // a MERGE-ON-READ delete on the primary streams as an ordinary
+    // delete batch: the tombstoned primary and the rewritten replica
+    // converge
+    Versioned.deleteWhere(spark, primary, col("id") === 1L, Seq("site", "id"))
+    runChain()
+    assert(Versioned.deleteFilesAt(spark, primary).nonEmpty,
+      "primary stays merge-on-read")
+    assert(versionedState(replica) == versionedState(primary))
+    assert(versionedState(replica) == Set(("c", 7L, 77.0)))
+    // one replica version per primary commit after the enable
+    assert(Versioned.currentVersion(spark, primary) == 4L)
+    assert(Versioned.currentVersion(spark, replica) == 3L)
   }
 }
