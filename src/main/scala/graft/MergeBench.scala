@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.MergeData
 
-/** Measures the COW merge scale claim: mergeInto cost is a function of
-  * the TOUCHED partitions' data, not the lake's size. Two lakes with
-  * identical per-partition volume but 10× different partition counts
-  * (so 10× total rows) get the same 2-partition upsert batch; the merge
-  * times should be ~flat while a full-lake rewrite would be ~10×.
+/** Measures the COW merge scale claim: [[graft.lake.Versioned.mergeInto]]
+  * cost is a function of the TOUCHED partitions' data, not the lake's
+  * size. Two versioned lakes with identical per-partition volume but
+  * 10× different partition counts (so 10× total rows) get the same
+  * 2-partition upsert batch; the merge times should be ~flat while a
+  * full-lake rewrite would be ~10×.
   *
   * Usage: runMain graft.MergeBench [rowsPerPartition]
   * Prints one line per lake: nParts totalRows batchRows mergeSec.
@@ -48,21 +49,12 @@ object MergeBench {
       // scan here) must not be charged to the merge being measured
       val b = batch(nParts).localCheckpoint()
       val bRows = b.count()
+      graft.lake.Versioned.init(spark, dir)
       val t0 = System.nanoTime()
-      MergeData.mergeInto(spark, dir, b, Seq("p"), Seq("k"))
+      graft.lake.Versioned.mergeInto(spark, dir, b, Seq("p"), Seq("k"))
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"MERGEBENCH nParts=$nParts%4d totalRows=${nParts * perPart}%9d " +
         f"batchRows=$bRows%7d mergeSec=$sec%.2f")
-      // the same batch through the MANIFEST commit (lake/Versioned):
-      // same touched-partition scope, plus one manifest write — the
-      // delta between the two lines is the versioning overhead
-      val vdir = lake(nParts)
-      graft.lake.Versioned.init(spark, vdir)
-      val t1 = System.nanoTime()
-      graft.lake.Versioned.mergeInto(spark, vdir, b, Seq("p"), Seq("k"))
-      val vsec = (System.nanoTime() - t1) / 1e9
-      println(f"MERGEBENCH nParts=$nParts%4d totalRows=${nParts * perPart}%9d " +
-        f"batchRows=$bRows%7d versionedMergeSec=$vsec%.2f")
     }
     spark.stop()
   }

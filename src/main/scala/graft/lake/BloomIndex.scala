@@ -90,15 +90,14 @@ object BloomIndex {
     * LIVE files there (per the manifest — the directory listing still
     * holds superseded files); everything else is kept as-is. Work
     * scales with the merge batch, never the lake. A partition deleted
-    * outright contributes no new entries. */
+    * outright contributes no new entries; "" in `touchedDirs` is the
+    * root of an UNPARTITIONED table and covers every file. */
   def refreshForFiles(spark: SparkSession, dataDir: String, idx: DataFrame,
       cols: Seq[String], expectedPerFile: Long, fpp: Double,
       touchedDirs: Seq[String], liveFiles: Seq[String]): DataFrame = {
     require(touchedDirs.nonEmpty, "refresh needs at least one touched partition")
-    val touched = (f: Column) => touchedDirs.map(d => f.contains(s"/$d/"))
-      .reduce(_ || _)
-    val survivors = idx.filter(!touched(col("file")))
-    val fresh = liveFiles.filter(f => touchedDirs.exists(d => f.contains(s"/$d/")))
+    val survivors = idx.filter(!SkipIndex.underTouched(touchedDirs, col("file")))
+    val fresh = liveFiles.filter(SkipIndex.underTouched(touchedDirs, _))
     if (fresh.isEmpty) survivors
     else survivors.unionByName(
       buildForFiles(spark, dataDir, fresh, cols, expectedPerFile, fpp))
@@ -183,7 +182,7 @@ object BloomIndex {
     val indexed = idx.select("file").distinct()
       .collect().map(r => SkipIndex.normalizePath(r.getString(0))).toSet
     val live = liveFiles.map(SkipIndex.normalizePath).toSet
-    require(indexed == live,
+    require(SkipIndex.describes(spark, indexed, live),
       s"bloom index does not describe this file set (" +
         s"${(live -- indexed).size} unindexed, ${(indexed -- live).size} extra): " +
         "build/refresh the index against this version's manifest")

@@ -268,8 +268,9 @@ object SkipIndex {
     * rows. The guard compares the index's file set against the lake's
     * current listing and fails loudly on any drift — the listing is
     * driver-side and file-count-bounded, the same work any unversioned
-    * read performs anyway. After a COW merge, [[refresh]] the index
-    * (touched partitions only) instead of rebuilding it. */
+    * read performs anyway. A lake that is rewritten is a
+    * [[Versioned]] one: refresh its index with [[refreshForFiles]] and
+    * read through [[Versioned.prunedRead]]. */
   def prunedReadMulti(spark: SparkSession, dataDir: String, idx: DataFrame,
       preds: Seq[(String, Double, Double)], validate: Boolean = true): DataFrame = {
     if (validate) {
@@ -281,7 +282,7 @@ object SkipIndex {
       require(missing.isEmpty && gone.isEmpty,
         s"stale skip index for $dataDir (" +
           s"${missing.size} unindexed file(s), ${gone.size} vanished file(s)): " +
-          "refresh() it after rewrites, or rebuild")
+          "rebuild it after rewrites")
     }
     val files = candidateFilesMulti(idx, preds)
     if (files.isEmpty)
@@ -314,33 +315,6 @@ object SkipIndex {
     }.reduce(_ && _)
   }
 
-  /** Incremental index maintenance after a COW merge: entries for files
-    * under the TOUCHED partition directories are dropped and rebuilt
-    * from those directories' current files; everything else is kept
-    * as-is. Work scales with the merge batch (touched partitions), not
-    * the lake — the same scope invariant as the merge itself. A
-    * partition deleted outright (delete-all batch) simply contributes
-    * no new entries.
-    *
-    * `touchedDirs` are partition-relative paths (`k=v[/k2=v2]`), i.e.
-    * exactly the strings `ExternalCatalogUtils.getPartitionPathString`
-    * renders for the merge's touched-partition set. */
-  def refresh(spark: SparkSession, dataDir: String, idx: DataFrame,
-      cols: Seq[String], touchedDirs: Seq[String]): DataFrame = {
-    require(touchedDirs.nonEmpty, "refresh needs at least one touched partition")
-    val touched = touchedDirs.map(d => col("file").contains(s"/$d/"))
-      .reduce(_ || _)
-    val survivors = idx.filter(!touched)
-    val fs = new org.apache.hadoop.fs.Path(dataDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = touchedDirs
-      .map(d => new org.apache.hadoop.fs.Path(dataDir, d))
-      .filter(fs.exists).map(_.toString)
-    if (existing.isEmpty) survivors
-    else survivors.unionByName(build(
-      spark.read.option("basePath", dataDir).parquet(existing: _*), cols))
-  }
-
   /** [[prunedReadMulti]] for a lake whose live-file set is EXPLICIT (a
     * [[Versioned]] manifest): the on-disk listing of such a lake
     * includes superseded files kept for time travel, so validation
@@ -359,7 +333,7 @@ object SkipIndex {
     val indexed = idx.select("file").distinct()
       .collect().map(r => normalize(r.getString(0))).toSet
     val live = liveFiles.map(normalize).toSet
-    require(indexed == live,
+    require(describes(spark, indexed, live),
       s"skip index does not describe this file set (" +
         s"${(live -- indexed).size} unindexed, ${(indexed -- live).size} extra): " +
         "build/refresh the index against this version's manifest")
@@ -373,21 +347,50 @@ object SkipIndex {
     }
   }
 
-  /** [[refresh]] for a versioned lake: rebuilt entries come from the
-    * LIVE files under the touched partitions (per the manifest), never
-    * from the directory listing — which still holds superseded files. */
+  /** Incremental index maintenance after a versioned merge: entries
+    * for files under the TOUCHED partition directories are dropped and
+    * rebuilt from the LIVE files there (per the manifest — the
+    * directory listing still holds superseded files); everything else
+    * is kept as-is. Work scales with the merge batch, not the lake. A
+    * partition deleted outright contributes no new entries.
+    *
+    * `touchedDirs` are partition-relative paths (`k=v[/k2=v2]`), i.e.
+    * exactly the strings `ExternalCatalogUtils.getPartitionPathString`
+    * renders for the merge's touched-partition set; "" is the root of
+    * an UNPARTITIONED table and covers every file. */
   def refreshForFiles(spark: SparkSession, dataDir: String, idx: DataFrame,
       cols: Seq[String], touchedDirs: Seq[String],
       liveFiles: Seq[String]): DataFrame = {
     require(touchedDirs.nonEmpty, "refresh needs at least one touched partition")
-    val touched = (f: Column) => touchedDirs.map(d => f.contains(s"/$d/"))
-      .reduce(_ || _)
-    val survivors = idx.filter(!touched(col("file")))
-    val fresh = liveFiles.filter(f => touchedDirs.exists(d => f.contains(s"/$d/")))
+    val survivors = idx.filter(!underTouched(touchedDirs, col("file")))
+    val fresh = liveFiles.filter(underTouched(touchedDirs, _))
     if (fresh.isEmpty) survivors
     else survivors.unionByName(build(
       spark.read.option("basePath", dataDir).parquet(fresh: _*), cols))
   }
+
+  /** Whether an index over the `indexed` files describes the `live`
+    * set: no extra file, and every unindexed live file EMPTY. A
+    * scan-built index never sees a file without rows, and an
+    * unpartitioned Spark write's first task writes one even when its
+    * partition is empty. Footer reads on the driver, for the
+    * unindexed files only (none in the common case). */
+  private[lake] def describes(spark: SparkSession, indexed: Set[String],
+      live: Set[String]): Boolean =
+    indexed.subsetOf(live) && (live -- indexed).forall { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount == 0L finally r.close()
+    }
+
+  /** Whether file `f` lies under one of `touchedDirs` (see
+    * [[refreshForFiles]]; "" is the table root, so everything). */
+  private[lake] def underTouched(touchedDirs: Seq[String], f: String): Boolean =
+    touchedDirs.exists(d => d.isEmpty || f.contains(s"/$d/"))
+  private[lake] def underTouched(touchedDirs: Seq[String], f: Column): Column =
+    touchedDirs.map(d => if (d.isEmpty) lit(true) else f.contains(s"/$d/"))
+      .reduce(_ || _)
 
   private def normalize(p: String): String = p.replaceFirst("^file:/+", "/")
 

@@ -23,14 +23,16 @@ final case class PruneNotNull(column: String) extends PrunePred
 /** Versioned (snapshot-isolated) lake: a minimal Delta/Iceberg-style
   * manifest layer over a Hive-partitioned parquet directory.
   *
-  * The COW merge in [[graft.ops.MergeData.mergeInto]] commits by
-  * partition-directory swap — correct and idempotent, but a reader
-  * concurrent with the swap can observe a partition mid-replacement,
-  * and history is gone the moment the swap lands. Table formats solve
-  * both with a log: DATA FILES ARE IMMUTABLE, each commit appends new
-  * files plus one manifest entry, and the manifest write is the atomic
-  * commit point. This object is that protocol, reduced to its
-  * load-bearing minimum — Delta's delta-log-plus-checkpoint shape:
+  * Every row-level mutation of the engine ([[mergeInto]] and the
+  * change-feed replicas of [[applyTableChanges]] among them) commits
+  * here. Rewriting a partition in place (delete the directory, rename
+  * a staged copy over it) would let a concurrent reader see the
+  * partition missing and would lose history the moment it lands;
+  * table formats solve both with a log: DATA FILES ARE IMMUTABLE, each
+  * commit appends new files plus one manifest entry, and the manifest
+  * write is the atomic commit point. This object is that protocol,
+  * reduced to its load-bearing minimum — Delta's
+  * delta-log-plus-checkpoint shape:
   *
   *  - most commits write a DELTA manifest `_manifest/v<N>.delta.txt`
   *    holding only `+file`/`-file` lines — bounded by the commit's own
@@ -62,8 +64,7 @@ final case class PruneNotNull(column: String) extends PrunePred
   * Scale shape: per-commit driver I/O is bounded by the BATCH (delta
   * lines) plus one periodic checkpoint amortized over
   * [[CheckpointInterval]] commits; data movement is bounded by the
-  * merge batch's touched partitions, exactly like the swap-based
-  * merge. Reference: Delta Lake's transaction protocol (public spec);
+  * merge batch's touched partitions, never by the lake. Reference: Delta Lake's transaction protocol (public spec);
   * re-expressed from scratch on plain Hadoop FS + Spark reads.
   */
 object Versioned {
@@ -2433,29 +2434,6 @@ object Versioned {
       Some(parseFooterSchema(json))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[uniformSchemaLocal]] over a DIRECTORY's recursive data files —
-    * the dir-read twin for consumers that read a whole (possibly
-    * Hive-partitioned) lake with `mergeSchema` (partition columns are
-    * not in footers; Spark appends them from the paths when an
-    * explicit data schema is passed, exactly as on the pinned read
-    * path). Bails (None) past `spark.graft.footer.localMaxFiles`
-    * files — the large-lake regime keeps the distributed merge. */
-  private[graft] def uniformDirSchemaLocal(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.types.StructType] =
-    try {
-      val fs = fsOf(spark, dir)
-      val root = new Path(dir)
-      if (!fs.exists(root)) return None
-      val budget = footerLocalMaxFiles(spark)
-      val rootUri = root.toUri.getPath.stripSuffix("/")
-      val parts = PathModel.walk(fs, root).map(_.getPath).filter { f =>
-        val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        f.getName.endsWith(".parquet") &&
-          !rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
-      }
-      if (parts.size > budget) None else uniformSchemaLocal(spark, parts)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   private def anchorDf(spark: SparkSession, dir: String,
       metaV: Long): Option[DataFrame] = {
     metaAt(spark, dir, metaV).anchorRef.foreach { ref =>
@@ -3719,116 +3697,6 @@ object Versioned {
     else parts.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
-  /** Recover a replica from a crash inside a prior remap swap. Two
-    * leftover shapes are possible: with the replica dir PRESENT, any
-    * `_remap_*` staging (complete-but-unpromoted or incomplete) and
-    * any `_old_*` aside (promote finished, cleanup didn't) are
-    * superseded — reaped; with the replica dir MISSING (crash between
-    * rename-aside and promote), the `_remap_*` staging holds the
-    * complete remapped replica (the aside rename only runs after the
-    * staging write returned) — promoted, with the aside copy as the
-    * defensive fallback. Idempotent; called on entry by
-    * [[applyTableChanges]] before any new work. */
-  private[lake] def resumeCrashedRemap(spark: SparkSession,
-      replicaDir: String): Unit = {
-    val rp = new Path(replicaDir)
-    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = rp.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val name = rp.getName
-    val leftovers = fs.listStatus(parent).map(_.getPath)
-      .filter(p => p.getName.startsWith(name + "_remap_") ||
-        p.getName.startsWith(name + "_old_"))
-    if (leftovers.isEmpty) return
-    if (fs.exists(rp)) leftovers.foreach(fs.delete(_, true))
-    else {
-      val staging = leftovers.filter(_.getName.startsWith(name + "_remap_"))
-      val aside = leftovers.filter(_.getName.startsWith(name + "_old_"))
-      staging.headOption.orElse(aside.headOption).foreach { src =>
-        require(fs.rename(src, rp), s"remap resume: rename $src -> $rp failed")
-        (staging ++ aside).filterNot(_ == src).foreach(fs.delete(_, true))
-      }
-    }
-  }
-
-  /** Replicate `srcDir`'s committed changes onto the plain-parquet
-    * replica `replicaDir` by collapsing the range's increments into ONE
-    * merge batch ([[reduceIncrementRun]] — last action per key,
-    * provably the sequential result): a replica seeded from a snapshot
-    * at version `sinceV` converges to `untilV` (current if -1) no
-    * matter which MIX of merge/append/delete/restore commits produced
-    * the history. A consumer persists the returned version as its
-    * high-water mark and passes it back as the next `sinceV`. Driver
-    * cost is bounded by the version range; the merge touches only the
-    * range's increments' partitions. Returns the version the replica
-    * now reflects. */
-  def applyTableChanges(spark: SparkSession, srcDir: String,
-      replicaDir: String, partitionKeys: Seq[String],
-      sinceV: Long, untilV: Long = -1L): Long = {
-    val cur = if (untilV >= 0) untilV else currentVersion(spark, srcDir)
-    val key = changeFeedKey(spark, srcDir, cur).getOrElse(
-      throw new IllegalArgumentException(
-        s"$srcDir has no change-feed table property: enableChangeFeed() first"))
-    val mFrom = metaAt(spark, srcDir, sinceV)
-    val mTo = metaAt(spark, srcDir, cur)
-    // SCHEMA EVOLUTION IN RANGE: the replica was seeded from
-    // snapshot(sinceV) and so speaks sinceV's logical names. When the
-    // range contains RENAME/DROP commits, re-spell the replica ONCE up
-    // front to `cur`'s names (one bounded rewrite — the plain-parquet
-    // replica's honest cost; a versioned replica pays metadata only),
-    // then apply every increment translated to the same final names.
-    // Delta's streaming CDF read refuses here and demands a fresh
-    // checkpoint; converging through the rename is strictly stronger.
-    if (mFrom.renames != mTo.renames || mFrom.droppedCols != mTo.droppedCols) {
-      // write target == read source, so stage-and-swap (the same COW
-      // commit MergeData.mergeInto uses): the staging write is the only
-      // job, the swap is FS metadata ops — sequenced so that ONE of
-      // the two directories exists at every instant. The naive
-      // delete-then-rename has a crash window with NO replica dir and
-      // the remapped data stranded in a staging dir nothing looks for;
-      // instead the OLD replica is renamed aside first (so a crash
-      // before the promote leaves the aside dir to resume from), and
-      // [[resumeCrashedRemap]] probes for both leftover shapes on
-      // entry before any new work.
-      resumeCrashedRemap(spark, replicaDir)
-      val staging = new Path(replicaDir + "_remap_" +
-        java.util.UUID.randomUUID().toString.take(8))
-      val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rep = translateLogical(mFrom, mTo, spark.read.parquet(replicaDir))
-      try graft.ops.MergeData.writeMerged(spark, rep, staging.toString,
-        keys = partitionKeys)
-      catch { case e: Throwable => fs.delete(staging, true); throw e }
-      val aside = new Path(replicaDir + "_old_" +
-        java.util.UUID.randomUUID().toString.take(8))
-      require(fs.rename(new Path(replicaDir), aside),
-        s"replica remap: rename-aside $replicaDir -> $aside failed")
-      require(fs.rename(staging, new Path(replicaDir)),
-        s"replica remap: promote $staging -> $replicaDir failed; " +
-          s"pre-remap data intact in $aside")
-      fs.delete(aside, true)
-    }
-    // Every increment is translated to the SAME range-end names, so
-    // the whole range is one name-consistent run: collapse it into ONE
-    // merge commit ([[reduceIncrementRun]] — k merges' fixed cost
-    // becomes one, guide §2.4/§3). Emptiness still comes off each
-    // increment's footers (driver-side, no job; see incrementRowsLocal
-    // for why preimage-only is impossible).
-    val run = ((sinceV + 1) to cur).flatMap { v =>
-      changeIncrementAt(spark, srcDir, v).flatMap { inc =>
-        val b = translateLogical(metaAt(spark, srcDir, v), mTo, inc)
-        val empty = incrementRowsLocal(spark, srcDir, v) match {
-          case Some(n) => n == 0L
-          case None => b.filter(col("_action") =!= "update_preimage").isEmpty
-        }
-        if (empty) None else Some(v -> b)
-      }
-    }
-    if (run.nonEmpty)
-      graft.ops.MergeData.mergeInto(spark, replicaDir,
-        reduceIncrementRun(run, key), partitionKeys, key)
-    cur
-  }
-
   /** Collapse a contiguous, name-consistent run of CDF increments
     * (each still carrying `_action`, preimages included) into ONE
     * merge batch whose application reproduces the sequential
@@ -3871,21 +3739,27 @@ object Versioned {
       .drop("_action", vcol)
   }
 
-  /** [[applyTableChanges]] for a replica that is ITSELF a versioned
-    * table — the payoff of the mapping being metadata: RENAME/DROP
-    * commits in range mirror onto the replica as [[renameColumn]]/
-    * [[dropColumn]] (zero data files rewritten on either side, where
-    * the plain-parquet variant pays one replica rewrite), and each
-    * run of increments BETWEEN barriers collapses into one
-    * [[Versioned.mergeInto]] under that run's names — which the
-    * just-mirrored replica speaks ([[reduceIncrementRun]]).
+  /** Replicate `srcDir`'s committed changes onto the versioned replica
+    * `replicaDir` (seeded from a snapshot at version `sinceV`, then
+    * [[init]]ed): the replica converges to `untilV` (current if -1) no
+    * matter which MIX of merge/append/delete/restore commits produced
+    * the history. A consumer persists the returned version as its
+    * high-water mark and passes it back as the next `sinceV`. Driver
+    * cost is bounded by the version range; each merge touches only its
+    * increments' partitions.
+    *
+    * RENAME/DROP commits in range mirror onto the replica as
+    * [[renameColumn]]/[[dropColumn]] (metadata-only on both sides), and
+    * each run of increments BETWEEN those barriers collapses into one
+    * [[mergeInto]] under that run's names — which the just-mirrored
+    * replica speaks ([[reduceIncrementRun]]).
     * Mirroring reads the source's `#op` label and diffs adjacent
     * metas: a rename commit moves exactly one physical between
     * logical names, a drop retires exactly one physical; auto-renames
     * minted inside merge commits are NOT schema changes (the re-added
     * column arrives through the increment itself). Returns the source
     * version the replica now reflects. */
-  def applyTableChangesVersioned(spark: SparkSession, srcDir: String,
+  def applyTableChanges(spark: SparkSession, srcDir: String,
       replicaDir: String, partitionKeys: Seq[String],
       sinceV: Long, untilV: Long = -1L): Long = {
     val cur = if (untilV >= 0) untilV else currentVersion(spark, srcDir)
@@ -5977,11 +5851,17 @@ object Versioned {
     } finally batch0.unpersist()
   }
 
-  /** Row-level MERGE INTO with snapshot isolation — the EXACT
-    * semantics of [[graft.ops.MergeData.mergeInto]] (update/delete/
-    * insert on rowKey, schema evolution, touched-partition scope; both
-    * paths call the one shared [[graft.ops.MergeData.resolveMerge]]
-    * core) committed through the manifest instead of a directory swap.
+  /** Row-level MERGE INTO with snapshot isolation, copy-on-write —
+    * the Delta/Hudi-style mutation the reference's `--update` flag
+    * gestures at but only does at whole-group granularity
+    * (merge-data.py:69-77 skip-existing). Per batch row, matched on
+    * `rowKey`: `__delete` false/absent/NULL replaces the base row or
+    * inserts it, `__delete` true drops it (a NULL marker upserts, never
+    * silently deletes). Resolution is [[graft.ops.MergeData.resolveMerge]]:
+    * only the batch's touched partitions are read or rewritten (a
+    * static, null-safe partition predicate), a batch may ADD columns
+    * (older rows null-fill) but never drop one, and `rowKey` must
+    * locate a row within its partition.
     * New data files land as APPENDED parquet parts in the touched
     * partition directories (Spark's task-UUID part names never
     * collide); until the manifest rename they are invisible, after it

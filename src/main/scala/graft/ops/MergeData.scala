@@ -101,67 +101,6 @@ object MergeData {
     }
   }
 
-  /** Row-level MERGE INTO over a Hive-partitioned parquet lake —
-    * copy-on-write upsert/delete, the Delta/Hudi-style mutation layer
-    * the reference's `--update` flag gestures at but only does at
-    * whole-group granularity (merge-data.py:69-77 skip-existing).
-    *
-    * Semantics per `updates` row (matched on `rowKey` against base):
-    *   matched  + `__delete` false/absent → base row replaced (UPDATE)
-    *   matched  + `__delete` true         → base row dropped  (DELETE)
-    *   unmatched + `__delete` false       → appended           (INSERT)
-    *
-    * Scale shape — the whole point of the COW design:
-    *   - only partitions PRESENT in `updates` are read or rewritten:
-    *     the touched partition set (collected anyway for the commit
-    *     step) becomes a STATIC partition-column predicate on the base
-    *     scan, so pruning happens at planning time (PartitionFilters
-    *     in the scan node, no DPP reliance) and untouched data never
-    *     enters the plan;
-    *   - the matched/unmatched split is ONE left_anti + unionByName on
-    *     `rowKey` — a single equi-join shuffle of just the touched
-    *     partitions' rows, never a full-lake rewrite.
-    *
-    * `updates` must carry the partition columns, the `rowKey` columns,
-    * and every data column of the base — and MAY carry new columns:
-    * schema evolution (Delta's mergeSchema) null-fills the new columns
-    * on untouched base rows, while a batch MISSING a base column is
-    * rejected loudly (evolution adds, never drops). (An optional
-    * boolean `__delete` marks deletions; a NULL `__delete` is
-    * normalized to false, so an
-    * outer-join-produced or CSV-empty marker upserts rather than
-    * silently deleting). A DELETE-only batch still rewrites its
-    * partition (COW); at 100 TB you batch deletes with the day's
-    * upserts exactly like every COW table format does.
-    *
-    * Invariant: `rowKey` must uniquely locate a row WITHIN its
-    * partition and a key's partition value must be stable — matching
-    * is scoped to the batch's touched partitions (that is what buys
-    * static pruning), so a key that moves partitions would append in
-    * the new partition without removing the old row. Include the
-    * partition columns in `rowKey` (or derive the partition from the
-    * key, as q115 does with event_id → site) to satisfy it.
-    * Null partition values are handled: matching is null-safe (`<=>`)
-    * and the swap path uses Hive's `__HIVE_DEFAULT_PARTITION__`
-    * rendering, the same directory the partitioned write produces.
-    */
-  def mergeInto(spark: SparkSession, baseDir: String, updates: DataFrame,
-      partitionKeys: Seq[String], rowKey: Seq[String]): Unit = {
-    require(rowKey.nonEmpty, "mergeInto needs at least one rowKey column")
-    val hasDelete = updates.columns.contains("__delete")
-    // null __delete = upsert: without the coalesce a null marker's key
-    // would still anti-join the base row away while the replacement row
-    // is dropped by filter(!del) — silent data loss (null is not true)
-    val del = if (hasDelete) coalesce(col("__delete"), lit(false)) else lit(false)
-    // the merge consumes the batch three times (partition set, matched
-    // anti-join, applied rows) — materialize it ONCE; it is bounded by
-    // batch size, never lake size, so caching it is always safe
-    val batch = updates.persist()
-    try {
-      mergeIntoImpl(spark, baseDir, batch, partitionKeys, rowKey, del)
-    } finally batch.unpersist()
-  }
-
   /** Per-group aggregate deltas from a change feed — incremental
     * materialized-view maintenance without touching the base lake:
     * `new_sum = old_sum + delta_sum`, `new_count = old_count +
@@ -181,15 +120,21 @@ object MergeData {
           .as("delta_count"))
   }
 
-  /** The matched/unmatched resolution shared by BOTH commit strategies
-    * (swap-commit [[mergeIntoImpl]] and manifest-commit
-    * [[graft.lake.Versioned.mergeInto]]) — extracting it is what keeps
-    * their semantics from drifting: touched-partition scope, survivors
-    * anti-join, evolution guard and `__delete` handling are defined
-    * exactly once.
+  /** The matched/unmatched resolution of a row-level merge batch, the
+    * core of [[graft.lake.Versioned.mergeInto]]: touched-partition
+    * scope, survivors anti-join, evolution guard and `__delete`
+    * handling.
     *
-    * @param baseAll the WHOLE base table (a mergeSchema dir read, or a
-    *   versioned snapshot); resolution filters it to touched partitions
+    * Invariant: `rowKey` must uniquely locate a row WITHIN its
+    * partition and a key's partition value must be stable — matching
+    * is scoped to the batch's touched partitions (that is what buys
+    * static pruning), so a key that moves partitions would append in
+    * the new partition without removing the old row. Include the
+    * partition columns in `rowKey` (or derive the partition from the
+    * key, as q115 does with event_id → site) to satisfy it.
+    *
+    * @param baseAll the WHOLE base table (the pre-merge snapshot);
+    *   resolution filters it to touched partitions
     */
   private[graft] final case class MergeResolution(
       touchedRows: Seq[org.apache.spark.sql.Row],
@@ -204,12 +149,13 @@ object MergeData {
     // one driver-side pass over the batch's distinct partitions: it is
     // bounded by the batch (a day's CDC touches few partitions), and it
     // buys BOTH static partition pruning on the read and the commit's
-    // swap/replace list. UNPARTITIONED (no keys): the one "partition"
+    // replace list. UNPARTITIONED (no keys): the one "partition"
     // is the table root — touchedDirs' "" means "everything under the
-    // root" to every consumer (see [[graft.lake.Versioned.underDir]])
+    // root" to every consumer (Versioned.mergeInto's touched-file
+    // scope, SkipIndex/BloomIndex.refreshForFiles)
     if (partitionKeys.isEmpty) {
-      // ONE count answers emptiness AND (both callers persist the
-      // batch, or derive it from a persisted frame) warms the cache
+      // ONE count answers emptiness AND (every caller persists the
+      // batch, or derives it from a persisted frame) warms the cache
       // every later consumer reuses — isEmpty's executeTake escalated
       // through every empty partition as a separate probe job while
       // leaving the cache cold (guide §2.4)
@@ -291,58 +237,5 @@ object MergeData {
         "update_preimage"), allowMissingColumns = true)
       .unionByName(tag(base.join(delKeys, rowKey, "left_semi"), "delete"),
         allowMissingColumns = true)
-  }
-
-  private def mergeIntoImpl(spark: SparkSession, baseDir: String,
-      updates: DataFrame, partitionKeys: Seq[String], rowKey: Seq[String],
-      del: org.apache.spark.sql.Column): Unit = {
-    // mergeSchema: an evolved lake holds files written before a column
-    // existed next to files written after; the union schema is the
-    // table's schema (Delta keeps this in its log — here the footers
-    // are merged in a distributed job, bounded by file count). When
-    // every footer agrees (un-evolved base under the local-files
-    // budget — the CDC-replica case), the schema is served driver-side
-    // and the per-merge inference job is skipped (guide §2.4).
-    val baseAll =
-      graft.lake.Versioned.uniformDirSchemaLocal(spark, baseDir) match {
-        case Some(s) => spark.read.schema(s).parquet(baseDir)
-        case None => spark.read.option("mergeSchema", "true").parquet(baseDir)
-      }
-    val res = resolveMerge(baseAll, updates, partitionKeys, rowKey, del)
-    val merged = res.merged
-
-    // The write target IS the read source, which Spark's file-source
-    // overwrite check rightly refuses (and an eager cache wouldn't
-    // change the plan's file index). So commit the COW way every table
-    // format does: write the touched partitions to a staging dir, then
-    // swap each touched partition DIRECTORY into the base via rename.
-    // Driver-side FS work is bounded by the batch's touched-partition
-    // count (collected below) — the merge batch defines it, never the
-    // lake size — and rename is a metadata op on HDFS-like stores.
-    val staging = new org.apache.hadoop.fs.Path(
-      baseDir + "_staging_" + java.util.UUID.randomUUID().toString.take(8))
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try writeMerged(spark, merged, staging.toString, keys = partitionKeys)
-    catch { case e: Throwable => fs.delete(staging, true); throw e }
-    // From here staging is the only copy of each touched partition once
-    // its dst is deleted — so check every rename's boolean (HDFS-style
-    // semantics report non-empty-dst/quota failures by returning false,
-    // not throwing) and delete staging ONLY after all swaps succeed. A
-    // failed swap aborts loudly with the data recoverable in staging.
-    res.touchedDirs.foreach { rel =>
-      // "" = the UNPARTITIONED table root (resolveMerge's convention):
-      // the whole base directory is the one touched "partition"
-      val dst = if (rel.isEmpty) new org.apache.hadoop.fs.Path(baseDir)
-                else new org.apache.hadoop.fs.Path(baseDir, rel)
-      val src = if (rel.isEmpty) staging
-                else new org.apache.hadoop.fs.Path(staging, rel)
-      fs.delete(dst, true)
-      if (fs.exists(src)) { // DELETE-all batch leaves no staging dir
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(src, dst),
-          s"COW commit: rename $src -> $dst failed; partition left recoverable in $staging")
-      }
-    }
-    fs.delete(staging, true)
   }
 }

@@ -209,6 +209,18 @@ object LakeQueries {
     Seq(b0, b1, b2)
   }
 
+  /** A fresh versioned table at `lake` (any earlier one wiped): `rows`
+    * written partitioned by event_type, then [[Versioned.init]] as v0.
+    * Per-run merge targets and replicas start here, so their state is
+    * a pure function of (seed, log), never of a previous run. */
+  private def seedVersioned(s: SparkSession, lake: String, rows: DataFrame,
+      commitTs: Long = System.currentTimeMillis()): Unit = {
+    val p = new org.apache.hadoop.fs.Path(lake)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    MergeData.writeMerged(s, rows, lake, keys = Seq("event_type"))
+    Versioned.init(s, lake, commitTs)
+  }
+
   /** Memoized CDF-enabled primary for the change-feed queries (q119,
     * q120, q121, q139, q165, q171): the full events base, the change
     * feed enabled on `event_id`, then the 3-batch [[cdcPayload]]. Each
@@ -857,46 +869,29 @@ object LakeQueries {
       "z-clustered small-file compaction is lossless: read-back aggregate == original-table oracle"),
 
     // ---------------------------------------------------------------
-    // Row-level MERGE INTO (copy-on-write upsert/delete) — base lake
-    // partitioned by event_type, one deterministic batch touching TWO
-    // of the five partitions: UPDATE (id%10=0 doubles value), DELETE
-    // (id%10=1), INSERT (id%100=2 re-inserted under a new id). The
-    // oracle recomputes the post-merge state from the original table
-    // with CASE/filter/union. Base build is mtime-memoized; the merge
-    // batch REPLAYS every run — a green row therefore also proves
+    // Row-level MERGE INTO (copy-on-write upsert/delete) — a versioned
+    // lake partitioned by event_type, one deterministic batch touching
+    // TWO of the five partitions: UPDATE (id%10=0 doubles value),
+    // DELETE (id%10=1), INSERT (id%100=2 re-inserted under a new id).
+    // The oracle recomputes the post-merge state from the original
+    // table with CASE/filter/union. The lake is seeded fresh per run
+    // and the batch merges TWICE — a green row therefore also proves
     // replay idempotence (MergeIntoSpec pins it mechanically too).
     // ---------------------------------------------------------------
     Q("q115_merge_upsert",
       (s, dir) => {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val stamp = new File(dir, "events.parquet").lastModified()
         val lakeDir = new File(
           new File(sys.props("user.dir"), "target"),
-          s"graft_mergeq_${tag}_$stamp").getAbsolutePath
-        val cols = Seq("event_id", "user_id", "value", "event_type")
-        def base = graft.Tables(s, dir, "events").select(cols.map(col): _*)
+          s"graft_vmergeq_$tag/lake").getAbsolutePath
+        val base = graft.Tables(s, dir, "events").select(MergeCols.map(col): _*)
+        val batch = cdcPayload(base).head
         LakeQueries.synchronized {
-          if (!new File(s"$lakeDir/_BASE_DONE").exists()) {
-            MergeData.writeMerged(s, base, lakeDir, keys = Seq("event_type"))
-            new File(s"$lakeDir/_BASE_DONE").createNewFile()
-          }
+          seedVersioned(s, lakeDir, base)
+          (1 to 2).foreach(_ => Versioned.mergeInto(s, lakeDir, batch,
+            partitionKeys = Seq("event_type"), rowKey = Seq("event_id")))
         }
-        val touched = base.filter(col("event_type").isin("click", "view"))
-        val batch =
-          touched.filter(col("event_id") % 10 === 0)
-            .withColumn("value", col("value") * 2)
-            .withColumn("__delete", lit(false))
-          .unionByName(
-            touched.filter(col("event_id") % 10 === 1)
-              .withColumn("__delete", lit(true)))
-          .unionByName(
-            touched.filter(col("event_id") % 100 === 2)
-              .withColumn("event_id", col("event_id") + lit(10000000L))
-              .withColumn("value", col("value") + 1)
-              .withColumn("__delete", lit(false)))
-        MergeData.mergeInto(s, lakeDir, batch,
-          partitionKeys = Seq("event_type"), rowKey = Seq("event_id"))
-        s.read.parquet(lakeDir)
+        Versioned.snapshot(s, lakeDir)
           .groupBy("event_type")
           .agg(count(lit(1)).as("row_count"),
             round(sum("value"), 4).as("sum_value"),
@@ -1103,23 +1098,18 @@ object LakeQueries {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val replica = new File(
           new File(sys.props("user.dir"), "target"),
-          s"graft_cdcrepl_$tag/replica").getAbsolutePath
+          s"graft_cdcvrep_$tag/replica").getAbsolutePath
         val base = graft.Tables(s, dir, "events").select(MergeCols.map(col): _*)
         val pk = Seq("event_type")
         LakeQueries.synchronized {
-          // fresh replica every run: replication must be a pure
-          // function of (snapshot, log), not of a previous run
-          val fs = new org.apache.hadoop.fs.Path(replica)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(replica), true)
-          MergeData.writeMerged(s, base, replica, keys = pk)
+          seedVersioned(s, replica, base)
           // catch-up to the watermark as of "before batch 2"...
           val hw = Versioned.applyTableChanges(s, lake, replica, pk,
             sinceV = 1L, untilV = 3L)
           // ...then apply ONLY batch 2 from the high-water mark
           Versioned.applyTableChanges(s, lake, replica, pk, sinceV = hw)
         }
-        s.read.parquet(replica)
+        Versioned.snapshot(s, replica)
           .groupBy("event_type")
           .agg(count(lit(1)).as("row_count"),
             round(sum("value"), 4).as("sum_value"),
@@ -1154,47 +1144,24 @@ object LakeQueries {
     // Schema evolution under MERGE INTO (Delta mergeSchema semantics):
     // the batch carries a NEW column `src` absent from the base lake —
     // updated/inserted rows get its value, surviving rows and untouched
-    // partitions null-fill it on the mergeSchema read. Base is
-    // mtime-memoized and the evolved batch REPLAYS every run (the
-    // second replay merges an evolved batch into an already-evolved
-    // lake — both legs of the evolution path), so a green row also
-    // proves evolution replay idempotence. The oracle recomputes the
-    // evolved table from events with the new column as a CASE.
+    // partitions null-fill it in the evolved snapshot. The versioned
+    // lake is seeded fresh per run. The oracle recomputes the evolved
+    // table from events with the new column as a CASE.
     // ---------------------------------------------------------------
     Q("q122_merge_schema_evolution",
       (s, dir) => {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val stamp = new File(dir, "events.parquet").lastModified()
         val lakeDir = new File(
           new File(sys.props("user.dir"), "target"),
-          s"graft_mergevo_${tag}_$stamp").getAbsolutePath
-        val cols = Seq("event_id", "user_id", "value", "event_type")
-        def base = graft.Tables(s, dir, "events").select(cols.map(col): _*)
+          s"graft_vmergevo_$tag/lake").getAbsolutePath
+        val base = graft.Tables(s, dir, "events").select(MergeCols.map(col): _*)
+        val batch = cdcPayload(base).head.withColumn("src", lit("cdc"))
         LakeQueries.synchronized {
-          if (!new File(s"$lakeDir/_BASE_DONE").exists()) {
-            MergeData.writeMerged(s, base, lakeDir, keys = Seq("event_type"))
-            new File(s"$lakeDir/_BASE_DONE").createNewFile()
-          }
+          seedVersioned(s, lakeDir, base)
+          Versioned.mergeInto(s, lakeDir, batch,
+            partitionKeys = Seq("event_type"), rowKey = Seq("event_id"))
         }
-        val touched = base.filter(col("event_type").isin("click", "view"))
-        val batch =
-          touched.filter(col("event_id") % 10 === 0)
-            .withColumn("value", col("value") * 2)
-            .withColumn("src", lit("cdc"))
-            .withColumn("__delete", lit(false))
-          .unionByName(
-            touched.filter(col("event_id") % 10 === 1)
-              .withColumn("src", lit("cdc"))
-              .withColumn("__delete", lit(true)))
-          .unionByName(
-            touched.filter(col("event_id") % 100 === 2)
-              .withColumn("event_id", col("event_id") + lit(10000000L))
-              .withColumn("value", col("value") + 1)
-              .withColumn("src", lit("cdc"))
-              .withColumn("__delete", lit(false)))
-        MergeData.mergeInto(s, lakeDir, batch,
-          partitionKeys = Seq("event_type"), rowKey = Seq("event_id"))
-        s.read.option("mergeSchema", "true").parquet(lakeDir)
+        Versioned.snapshot(s, lakeDir)
           .groupBy("event_type")
           .agg(count(lit(1)).as("row_count"),
             round(sum("value"), 4).as("sum_value"),
@@ -1238,27 +1205,10 @@ object LakeQueries {
         val lakeDir = new File(
           new File(sys.props("user.dir"), "target"),
           s"graft_ttq_${tag}_$stamp/lake").getAbsolutePath
-        val cols = Seq("event_id", "user_id", "value", "event_type")
-        def base = graft.Tables(s, dir, "events").select(cols.map(col): _*)
-        val touched = base.filter(col("event_type").isin("click", "view"))
-        val batch =
-          touched.filter(col("event_id") % 10 === 0)
-            .withColumn("value", col("value") * 2)
-            .withColumn("__delete", lit(false))
-          .unionByName(
-            touched.filter(col("event_id") % 10 === 1)
-              .withColumn("__delete", lit(true)))
-          .unionByName(
-            touched.filter(col("event_id") % 100 === 2)
-              .withColumn("event_id", col("event_id") + lit(10000000L))
-              .withColumn("value", col("value") + 1)
-              .withColumn("__delete", lit(false)))
+        val base = graft.Tables(s, dir, "events").select(MergeCols.map(col): _*)
+        val batch = cdcPayload(base).head
         LakeQueries.synchronized {
-          val fs = new org.apache.hadoop.fs.Path(lakeDir)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(lakeDir), true)
-          MergeData.writeMerged(s, base, lakeDir, keys = Seq("event_type"))
-          Versioned.init(s, lakeDir)
+          seedVersioned(s, lakeDir, base)
           Versioned.mergeInto(s, lakeDir, batch,
             partitionKeys = Seq("event_type"), rowKey = Seq("event_id"))
         }
@@ -1295,53 +1245,37 @@ object LakeQueries {
 
     // ---------------------------------------------------------------
     // Skip-index maintenance across a COW merge: the index is built
-    // (and pinned as a local relation — a lazy plan could never go
-    // stale), the q115 merge batch rewrites two partitions, then
-    // refresh() rebuilds ONLY those partitions' entries. The pruned
-    // read over the refreshed index must equal the full post-merge
-    // scan + filter, which the oracle recomputes. Every run replays
-    // the merge against the previous run's post-merge lake, so every
-    // run exercises genuine staleness (old files swapped out) and the
-    // prunedRead staleness guard validates the refreshed index against
-    // the live listing before trusting it.
+    // over v0 of a versioned lake seeded fresh per run (and pinned as
+    // a local relation — a lazy plan could never go stale), the q115
+    // merge batch rewrites two partitions in v1, then refreshForFiles
+    // rebuilds ONLY those partitions' entries from v1's live files.
+    // The pruned read over the refreshed index must equal the full
+    // post-merge scan + filter, which the oracle recomputes; the
+    // pruned read validates the index against v1's manifest before
+    // trusting it.
     // ---------------------------------------------------------------
     Q("q125_skip_index_merge_refresh",
       (s, dir) => {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val stamp = new File(dir, "events.parquet").lastModified()
         val lakeDir = new File(
           new File(sys.props("user.dir"), "target"),
-          s"graft_skipm_${tag}_$stamp").getAbsolutePath
-        val cols = Seq("event_id", "user_id", "value", "event_type")
-        def base = graft.Tables(s, dir, "events").select(cols.map(col): _*)
-        val touched = base.filter(col("event_type").isin("click", "view"))
-        val batch =
-          touched.filter(col("event_id") % 10 === 0)
-            .withColumn("value", col("value") * 2)
-            .withColumn("__delete", lit(false))
-          .unionByName(
-            touched.filter(col("event_id") % 10 === 1)
-              .withColumn("__delete", lit(true)))
-          .unionByName(
-            touched.filter(col("event_id") % 100 === 2)
-              .withColumn("event_id", col("event_id") + lit(10000000L))
-              .withColumn("value", col("value") + 1)
-              .withColumn("__delete", lit(false)))
-        val refreshed = LakeQueries.synchronized {
-          if (!new File(s"$lakeDir/_BASE_DONE").exists()) {
-            MergeData.writeMerged(s, base, lakeDir, keys = Seq("event_type"))
-            new File(s"$lakeDir/_BASE_DONE").createNewFile()
-          }
-          val built = SkipIndex.build(s.read.parquet(lakeDir), Seq("user_id"))
+          s"graft_vskipm_$tag/lake").getAbsolutePath
+        val base = graft.Tables(s, dir, "events").select(MergeCols.map(col): _*)
+        val batch = cdcPayload(base).head
+        val (refreshed, v) = LakeQueries.synchronized {
+          seedVersioned(s, lakeDir, base)
+          val built = SkipIndex.build(Versioned.snapshot(s, lakeDir, 0L),
+            Seq("user_id"))
           val idx0 = s.createDataFrame(
             java.util.Arrays.asList(built.collect(): _*), built.schema)
-          MergeData.mergeInto(s, lakeDir, batch,
+          val v = Versioned.mergeInto(s, lakeDir, batch,
             partitionKeys = Seq("event_type"), rowKey = Seq("event_id"))
-          SkipIndex.refresh(s, lakeDir, idx0, Seq("user_id"),
-            Seq("event_type=click", "event_type=view"))
+          (SkipIndex.refreshForFiles(s, lakeDir, idx0, Seq("user_id"),
+            Seq("event_type=click", "event_type=view"),
+            Versioned.filesAt(s, lakeDir, v).map(f => s"$lakeDir/$f")), v)
         }
-        SkipIndex.prunedReadMulti(s, lakeDir, refreshed,
-            Seq(("user_id", 100, 220)))
+        Versioned.prunedRead(s, lakeDir, refreshed,
+            Seq(("user_id", 100, 220)), version = v)
           .groupBy("event_type")
           .agg(count(lit(1)).as("row_count"),
             round(sum("value"), 4).as("sum_value"),
@@ -1599,15 +1533,11 @@ object LakeQueries {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val replica = new File(
           new File(sys.props("user.dir"), "target"),
-          s"graft_vcdcrepl_$tag/replica").getAbsolutePath
+          s"graft_vcdcvrep_$tag/replica").getAbsolutePath
         val cv = col("event_type").isin("click", "view")
         val pk = Seq("event_type")
         LakeQueries.synchronized {
-          val fs = new org.apache.hadoop.fs.Path(replica)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(replica), true)
-          MergeData.writeMerged(s, Versioned.snapshot(s, lake, 1L).filter(cv),
-            replica, keys = pk)
+          seedVersioned(s, replica, Versioned.snapshot(s, lake, 1L).filter(cv))
           val hw = Versioned.applyTableChanges(s, lake, replica, pk,
             sinceV = 1L, untilV = 3L)
           Versioned.applyTableChanges(s, lake, replica, pk, sinceV = hw)
@@ -1621,7 +1551,7 @@ object LakeQueries {
         agg(Versioned.snapshot(s, lake, 2L).filter(cv), "v1")
           .unionByName(agg(Versioned.snapshot(s, lake, 3L).filter(cv), "v2"))
           .unionByName(agg(Versioned.snapshot(s, lake, 4L).filter(cv), "v3"))
-          .unionByName(agg(s.read.parquet(replica), "replica"))
+          .unionByName(agg(Versioned.snapshot(s, replica), "replica"))
           .select("src", "event_type", "row_count", "sum_value", "n_ids")
           .orderBy("src", "event_type")
       },
@@ -1896,11 +1826,11 @@ object LakeQueries {
     // that replays the feed converges even though the primary's
     // delete never rewrote a data file. Primary = CDF-enabled
     // versioned lake with one deleteWhere (memoized; v0 init, v1
-    // enable-cdf, v2 delete); replica = fresh swap lake +
+    // enable-cdf, v2 delete); replica = fresh versioned lake +
     // applyTableChanges per run. Both aggregates must equal the
     // same filter oracle — and the primary leg reads the TOMBSTONED
     // (un-materialized) snapshot, so the anti-join read path and the
-    // feed-replayed COW path are pinned equal through one oracle.
+    // feed-replayed COW merge are pinned equal through one oracle.
     // ---------------------------------------------------------------
     Q("q170_mor_delete_replication",
       (s, dir) => {
@@ -1925,14 +1855,10 @@ object LakeQueries {
             new File(root, "_SUCCESS").createNewFile()
           }
         }
-        val tag2 = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val replica = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_morrepl_rep_$tag2/replica").getAbsolutePath
+          s"graft_morcdf_vrep_$tag/replica").getAbsolutePath
         LakeQueries.synchronized {
-          val fs = new org.apache.hadoop.fs.Path(replica)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(replica), true)
-          MergeData.writeMerged(s, baseCV, replica, keys = Seq("event_type"))
+          seedVersioned(s, replica, baseCV)
           Versioned.applyTableChanges(s, lake, replica, Seq("event_type"),
             sinceV = 1L)
         }
@@ -1943,7 +1869,7 @@ object LakeQueries {
               count_distinct(col("event_id")).as("n_ids"))
             .withColumn("src", lit(src))
         agg(Versioned.snapshot(s, lake), "primary_mor")
-          .unionByName(agg(s.read.parquet(replica), "replica"))
+          .unionByName(agg(Versioned.snapshot(s, replica), "replica"))
           .select("src", "event_type", "row_count", "sum_value", "n_ids")
           .orderBy("src", "event_type")
       },
@@ -1991,8 +1917,7 @@ object LakeQueries {
           val fs = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
-          MergeData.writeMerged(s, baseCV, replica, keys = Seq("event_type"))
-          Versioned.init(s, replica)
+          seedVersioned(s, replica, baseCV)
           s.readStream.format("graft")
             .option("readChanges", "true")
             .option("startingVersion", "1")
@@ -2287,12 +2212,9 @@ object LakeQueries {
         require(Versioned.restore(s, lake, 2L) == 4L)
         // fresh per-run replica: base + all three increments == st1
         val replica = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_restfix_rep_$tag/replica").getAbsolutePath
+          s"graft_restcdf_vrep_$tag/replica").getAbsolutePath
         LakeQueries.synchronized {
-          val fs = new org.apache.hadoop.fs.Path(replica)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(replica), true)
-          MergeData.writeMerged(s, baseCV, replica, keys = Seq("event_type"))
+          seedVersioned(s, replica, baseCV)
           Versioned.applyTableChanges(s, lake, replica, Seq("event_type"),
             sinceV = 1L)
         }
@@ -2304,7 +2226,7 @@ object LakeQueries {
             .withColumn("src", lit(src))
         agg(Versioned.snapshot(s, lake), "restored")
           .unionByName(agg(Versioned.snapshot(s, lake, 3L), "pre_restore"))
-          .unionByName(agg(s.read.parquet(replica), "replica"))
+          .unionByName(agg(Versioned.snapshot(s, replica), "replica"))
           .select("src", "event_type", "row_count", "sum_value", "n_ids")
           .orderBy("src", "event_type")
       },
@@ -2933,13 +2855,9 @@ object LakeQueries {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val replica = new File(
           new File(sys.props("user.dir"), "target"),
-          s"graft_cdfprop_repl_$tag/replica").getAbsolutePath
+          s"graft_cdfprop_vrep_$tag/replica").getAbsolutePath
         LakeQueries.synchronized {
-          val fs = new org.apache.hadoop.fs.Path(replica)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(replica), true)
-          MergeData.writeMerged(s, Versioned.snapshot(s, lake, 1L),
-            replica, keys = Seq("event_type"))
+          seedVersioned(s, replica, Versioned.snapshot(s, lake, 1L))
           Versioned.applyTableChanges(s, lake, replica,
             Seq("event_type"), sinceV = 1L)
         }
@@ -2953,7 +2871,7 @@ object LakeQueries {
           .unionByName(agg(Versioned.snapshot(s, lake, 3L), "v3_append"))
           .unionByName(agg(Versioned.snapshot(s, lake, 4L), "v4_delete"))
           .unionByName(agg(Versioned.snapshot(s, lake), "v5_restored"))
-          .unionByName(agg(s.read.parquet(replica), "replica"))
+          .unionByName(agg(Versioned.snapshot(s, replica), "replica"))
           .select("src", "event_type", "row_count", "sum_value", "n_ids")
           .orderBy("src", "event_type")
       },
@@ -3178,7 +3096,7 @@ object LakeQueries {
     // strictly stronger): a replica seeded BEFORE a rename converges
     // THROUGH it — changesBetween re-spells pre-rename increments to
     // the range-end schema along the stable physical rail, and
-    // applyTableChanges re-spells the replica's own columns once.
+    // applyTableChanges mirrors the rename onto the replica.
     // History: merge (old name) -> RENAME -> merge (new name) -> MOR
     // delete; replica == source == recompute, under the NEW name.
     // ---------------------------------------------------------------
@@ -3187,14 +3105,10 @@ object LakeQueries {
         val src = cdfRenameFixture(s, dir) // memoized source (v0-v5)
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val root = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_cdfrenq_$tag")
+          s"graft_cdfrenvq_$tag")
         val replica = new File(root, "replica").getAbsolutePath
         LakeQueries.synchronized {
-          val fs = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
-          MergeData.writeMerged(s, Versioned.snapshot(s, src, 1L),
-            replica, keys = Seq("event_type"))
+          seedVersioned(s, replica, Versioned.snapshot(s, src, 1L))
           // the batch read serves ONE schema — the range end's
           val ch = Versioned.changesBetween(s, src, 1L, 5L)
           require(ch.columns.contains("reading") &&
@@ -3210,7 +3124,7 @@ object LakeQueries {
               round(sum("reading"), 4).as("sum_reading"),
               count_distinct(col("event_id")).as("n_ids"))
             .withColumn("src", lit(tag))
-        agg(s.read.parquet(replica), "replica")
+        agg(Versioned.snapshot(s, replica), "replica")
           .unionByName(agg(Versioned.snapshot(s, src), "source"))
           .select("src", "event_type", "row_count", "sum_reading", "n_ids")
           .orderBy("src", "event_type")
@@ -3238,7 +3152,7 @@ object LakeQueries {
                  round(sum(reading::DOUBLE), 4), count(DISTINCT event_id)
           FROM fin GROUP BY 2)
         ORDER BY 1, 2"""),
-      "replica converges THROUGH a rename: changesBetween re-spells increments to range-end schema, applyTableChanges re-spells the replica once; replica == source == recompute under the new name"),
+      "replica converges THROUGH a rename: changesBetween re-spells increments to range-end schema, applyTableChanges mirrors the rename onto the replica; replica == source == recompute under the new name"),
 
     // ---------------------------------------------------------------
     // PARTITION SPEC AS A TABLE PROPERTY (#pkeys, reader protocol 3):
@@ -3339,12 +3253,12 @@ object LakeQueries {
       "partition re-spec: metadata-only declare + stale-writer refusal + new-layout dirs require()d; pre/post versions and the new key's grouping == recompute"),
 
     // ---------------------------------------------------------------
-    // VERSIONED REPLICA ACROSS A RENAME (the metadata payoff q189's
-    // plain-parquet replica cannot claim): the replica is ITSELF a
-    // versioned table, so the source's RENAME commit mirrors onto it
-    // as one renameColumn — ZERO files moved on either side
-    // (require()d on the replica's own manifest) — while increments
-    // before and after apply under their own version's names.
+    // VERSIONED REPLICA ACROSS A RENAME (the metadata payoff): the
+    // replica is ITSELF a versioned table, so the source's RENAME
+    // commit mirrors onto it as one renameColumn — ZERO files moved on
+    // either side (require()d on the replica's own manifest) — while
+    // increments before and after apply under their own version's
+    // names.
     // ---------------------------------------------------------------
     Q("q191_versioned_replica_rename",
       (s, dir) => {
@@ -3357,10 +3271,9 @@ object LakeQueries {
           val fs = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
-          MergeData.writeMerged(s, Versioned.snapshot(s, src, 1L),
-            replica, keys = Seq("event_type"))
-          Versioned.init(s, replica, commitTs = 1500L)                  // r0
-          val cur = Versioned.applyTableChangesVersioned(s, src, replica,
+          seedVersioned(s, replica, Versioned.snapshot(s, src, 1L),
+            commitTs = 1500L)                                           // r0
+          val cur = Versioned.applyTableChanges(s, src, replica,
             Seq("event_type"), sinceV = 1L)
           require(cur == 5L, s"replica must reach v5, got $cur")
           // replica history: r1 merge, r2 mirrored rename, r3 merge,
@@ -3588,8 +3501,9 @@ object LakeQueries {
     // UNIFIED TABLE STREAM ACROSS REWRITE RANGES (Delta's streaming
     // CDF read): readStream.format("graft") with readChanges, seeded
     // at the enable version, streams the WHOLE mixed history — every
-    // commit's #cdfinc increment — into a merge-applying replica,
-    // which must equal the primary. maxVersionsPerTrigger=1 keeps
+    // commit's #cdfinc increment — into a versioned replica that
+    // merges each batch, which must equal the primary. The replica is
+    // seeded fresh per run. maxVersionsPerTrigger=1 keeps
     // every batch to one commit, so no batch holds two actions for
     // one key. The non-empty batch count is pinned as a constant leg:
     // (1,2] merge, (2,3] append, (3,4] delete, (4,5] restore = 4,
@@ -3600,15 +3514,14 @@ object LakeQueries {
         val lake = cdfPropFixture(s, dir)
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val froot = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_cdfprop_follow_$tag")
+          s"graft_cdfprop_vfollow_$tag")
         val replica = new File(froot, "replica").getAbsolutePath
         val ckpt = new File(froot, "ckpt").getAbsolutePath
         val nBatches = LakeQueries.synchronized {
           val fs = new org.apache.hadoop.fs.Path(froot.getAbsolutePath)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(froot.getAbsolutePath), true)
-          MergeData.writeMerged(s, Versioned.snapshot(s, lake, 1L),
-            replica, keys = Seq("event_type"))
+          seedVersioned(s, replica, Versioned.snapshot(s, lake, 1L))
           var applied = 0
           s.readStream.format("graft")
             .option("readChanges", "true")
@@ -3623,7 +3536,7 @@ object LakeQueries {
                 .withColumn("__delete", col("_action") === "delete")
                 .drop("_action", "_commit_version")
               if (!b.isEmpty) {
-                MergeData.mergeInto(s, replica, b,
+                Versioned.mergeInto(s, replica, b,
                   Seq("event_type"), Seq("event_id"))
                 applied += 1
               }
@@ -3639,7 +3552,7 @@ object LakeQueries {
               count_distinct(col("event_id")).as("n_ids"))
             .withColumn("src", lit(tag))
         agg(Versioned.snapshot(s, lake), "primary")
-          .unionByName(agg(s.read.parquet(replica), "followed"))
+          .unionByName(agg(Versioned.snapshot(s, replica), "followed"))
           .unionByName(s.range(1).select(
             lit(s"n=$nBatches").as("event_type"),
             lit(null).cast("long").as("row_count"),
@@ -6044,7 +5957,7 @@ object LakeQueries {
                |ON t.event_type = m.event_type AND t.event_id = m.event_id
                |WHEN MATCHED THEN UPDATE SET *
                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-          val cur = Versioned.applyTableChangesVersioned(s, lake, rep,
+          val cur = Versioned.applyTableChanges(s, lake, rep,
             Seq("event_type"), seedV)
           require(cur == Versioned.currentVersion(s, lake))
           // both require()s from ONE pass (guide §2.4 — was 4 actions:

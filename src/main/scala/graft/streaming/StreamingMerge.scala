@@ -3,19 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.MergeData
-
 /** Streaming row-level MERGE INTO — the CDC-apply loop: a stream of
-  * upsert/delete rows continuously maintained into a copy-on-write
-  * partitioned parquet lake via [[MergeData.mergeInto]] per micro-batch.
+  * upsert/delete rows continuously maintained into a versioned lake
+  * ([[graft.lake.Versioned]]), one [[graft.lake.Versioned.mergeInto]]
+  * commit per micro-batch.
   *
   * Exactly-once story: foreachBatch gives at-least-once delivery — a
   * batch whose merge landed but whose streaming commit didn't record is
-  * REPLAYED after restart. mergeInto is idempotent for a fixed batch
-  * (MergeIntoSpec pins it: update/delete/insert against the already-
-  * merged state reproduces the same state), so replay converges instead
-  * of double-applying — same contract as [[IncrementalPartials]], with
-  * the batch_id-overwrite trick replaced by set-semantics idempotence.
+  * REPLAYED after restart. Each commit carries a `(txnId, batchId)`
+  * manifest marker (Delta's `txn` action), so the replay finds its
+  * marker and commits nothing: the version advances once per batch.
   * The one rule CDC feeds must keep: a batch must not contain two rows
   * for the same key (classic CDC compaction — keep the LAST change per
   * key per batch; do it upstream or pass a pre-compacted stream).
@@ -24,26 +21,6 @@ import graft.ops.MergeData
   * partitions; lake size never enters the per-batch cost.
   */
 object StreamingMerge {
-
-  /** @param afterBatch runs after the merge lands but BEFORE the
-    *   streaming commit records the batch — the crash window replay
-    *   idempotence exists for (tests throw here). */
-  def start(updates: DataFrame, baseDir: String,
-      partitionKeys: Seq[String], rowKey: Seq[String], checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      afterBatch: Long => Unit = _ => ()): StreamingQuery =
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          MergeData.mergeInto(batch.sparkSession, baseDir, batch,
-            partitionKeys, rowKey)
-        }
-        afterBatch(id)
-      }
-      .start()
 
   /** The default txn id of a checkpointed stream: a SHA-256 prefix
     * (64 bits) of the checkpoint path — stable across JVMs/restarts for
@@ -57,17 +34,16 @@ object StreamingMerge {
     "ckpt-" + d.take(8).map(b => f"$b%02x").mkString
   }
 
-  /** [[start]] committing through the manifest protocol
-    * ([[graft.lake.Versioned]]): every micro-batch merge is an atomic
+  /** Merge every micro-batch of `updates` into `baseDir` as one atomic
     * versioned commit, so the CDC stream accumulates full snapshot
     * history (time travel over the stream's life) and concurrent
-    * readers are isolated from in-flight batches. EXACTLY-ONCE at the
-    * version level, not just the data level: each commit is stamped
-    * with a `(txnId, batchId)` manifest marker (Delta's `txn` action),
-    * so a batch replayed after a crash between the versioned commit
-    * and the streaming log record is SKIPPED — the version advances
-    * once per batch, ever (StreamingMergeSpec pins it).
+    * readers are isolated from in-flight batches. A batch replayed
+    * after a crash between the versioned commit and the streaming log
+    * record is SKIPPED (StreamingMergeSpec pins it).
     *
+    * @param afterBatch runs after the merge lands but BEFORE the
+    *   streaming commit records the batch — the crash window the txn
+    *   marker exists for (tests throw here).
     * @param txnId identifies this stream in the manifest's txn
     *   markers; defaults to a stable hash of the checkpoint path (the
     *   same stream restarts with the same checkpoint, hence the same
@@ -75,7 +51,7 @@ object StreamingMerge {
     *   naming scheme. On a table with the change feed enabled, each
     *   commit also publishes its increment, so snapshot history and
     *   the change feed ride one write path. */
-  def startVersioned(updates: DataFrame, baseDir: String,
+  def start(updates: DataFrame, baseDir: String,
       partitionKeys: Seq[String], rowKey: Seq[String], checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       afterBatch: Long => Unit = _ => (),
@@ -100,7 +76,7 @@ object StreamingMerge {
     * APPEND commit (a delta manifest of `+file` lines, no resolution,
     * no rewrite, no read of existing data — per-batch cost never sees
     * the lake's size), stamped with the same `(txnId, batchId)` marker
-    * as [[startVersioned]] for version-level exactly-once across crash
+    * as [[start]] for version-level exactly-once across crash
     * replays. Commit-time stats ride along once the lake tracks them
     * (or pass `statsCols` to establish the discipline from the first
     * batch). Downstream consumers chain off the manifest:

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Registry
@@ -40,5 +44,31 @@ class RegistrySpec extends AnyFunSuite {
       s"oracles without any ORDER BY: ${unordered -- singleRow}")
     assert((singleRow -- unordered).isEmpty,
       s"stale single-row exemptions (oracle gained an ORDER BY): ${singleRow -- unordered}")
+  }
+
+  test("no oracle SQL changed: every oracle's SHA-256 matches golden/oracle_sql.sha256") {
+    // The DuckDB oracles are the fixed side of the parity gate: a change
+    // to the engine must never edit one to pass. Lines are
+    // "<sha256 of SparkEntry.oracleSql(name) as UTF-8>  <name>", sorted
+    // by name, with the checkout's absolute path (q55 reads a golden
+    // file under it) spelled "<repo>" so the digest holds in any copy.
+    // A change that means to add or edit an oracle regenerates the file,
+    // from the repo root, out of graft.Verify's oracle_sql.json:
+    //   python3 -c 'import hashlib,json,os,sys; d=json.load(open(sys.argv[1])); print("\n".join(hashlib.sha256(d[k].replace(os.getcwd(), "<repo>").encode()).hexdigest() + "  " + k for k in sorted(d)))' <verifyOut>/oracle_sql.json > golden/oracle_sql.sha256
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.replace(sys.props("user.dir"), "<repo>").getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString
+    val golden = Files.readAllLines(Paths.get("golden/oracle_sql.sha256"))
+      .asScala.filter(_.nonEmpty).map { line =>
+        val Array(hash, name) = line.split("  ", 2)
+        name -> hash
+      }.toMap
+    val now = SparkEntry.oracleSql.map { case (name, sql) => name -> sha256(sql) }
+    val changed = (golden.keySet intersect now.keySet).filter(n => golden(n) != now(n))
+    assert(changed.isEmpty && golden.keySet == now.keySet,
+      s"oracle SQL changed: ${changed.toSeq.sorted}; added: " +
+        s"${(now.keySet -- golden.keySet).toSeq.sorted}; removed: " +
+        s"${(golden.keySet -- now.keySet).toSeq.sorted}")
   }
 }

@@ -125,7 +125,7 @@ class RowTrackingSpec extends SparkSpec {
     Versioned.append(spark, dir,
       df(Seq(("d", 40L, 40.0)), "site", "id", "v"), Seq("site"))
     Versioned.deleteWhereVectors(spark, dir, col("id") === 7L)
-    val cur = Versioned.applyTableChangesVersioned(spark, dir, rep,
+    val cur = Versioned.applyTableChanges(spark, dir, rep,
       Seq("site"), seedV)
     assert(cur == Versioned.currentVersion(spark, dir))
     assert(state(Versioned.snapshot(spark, rep)) ==

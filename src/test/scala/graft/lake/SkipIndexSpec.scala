@@ -72,31 +72,32 @@ class SkipIndexSpec extends SparkSpec {
     val base = df(Seq(
       ("a", 1L, 1.0), ("a", 2L, 2.0), ("a", 3L, 3.0),
       ("b", 10L, 10.0), ("b", 11L, 11.0)), "site", "id", "v")
-    graft.ops.MergeData.writeMerged(spark, base, dir.getAbsolutePath,
-      keys = Seq("site"))
+    val lake = dir.getAbsolutePath
+    graft.ops.MergeData.writeMerged(spark, base, lake, keys = Seq("site"))
+    Versioned.init(spark, lake)
     // materialize the index as a LOCAL relation: a lazy plan would
     // re-scan the post-merge files and never actually be stale
-    val built = SkipIndex.build(spark.read.parquet(dir.getAbsolutePath), Seq("id"))
+    val built = SkipIndex.build(Versioned.snapshot(spark, lake), Seq("id"))
     val idx0 = spark.createDataFrame(
       java.util.Arrays.asList(built.collect(): _*), built.schema)
 
     // COW merge rewrites partition a (update id=1, insert id=4)
-    graft.ops.MergeData.mergeInto(spark, dir.getAbsolutePath,
+    val v1 = Versioned.mergeInto(spark, lake,
       df(Seq(("a", 1L, 100.0, false), ("a", 4L, 4.0, false)),
         "site", "id", "v", "__delete"),
       Seq("site"), Seq("site", "id"))
 
     // pruning with the stale index must refuse, not silently lose rows
     val e = intercept[IllegalArgumentException] {
-      SkipIndex.prunedRead(spark, dir.getAbsolutePath, idx0, "id", 0, 100)
+      SkipIndex.prunedRead(spark, lake, idx0, "id", 0, 100)
     }
     assert(e.getMessage.contains("stale skip index"))
 
     // refresh rebuilds ONLY partition a's entries; partition b's rows
     // in the index are the original ones (same file, untouched)
-    val idx1 = SkipIndex.refresh(spark, dir.getAbsolutePath, idx0,
-      Seq("id"), Seq("site=a"))
-    val pruned = SkipIndex.prunedRead(spark, dir.getAbsolutePath, idx1, "id", 0, 5)
+    val idx1 = SkipIndex.refreshForFiles(spark, lake, idx0, Seq("id"),
+      Seq("site=a"), Versioned.filesAt(spark, lake, v1).map(f => s"$lake/$f"))
+    val pruned = Versioned.prunedRead(spark, lake, idx1, Seq(("id", 0, 5)))
     val expect = Set((1L, 100.0), (2L, 2.0), (3L, 3.0), (4L, 4.0))
     assert(pruned.select("id", "v").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet == expect)
@@ -106,6 +107,40 @@ class SkipIndexSpec extends SparkSpec {
     val bFiles1 = idx1.filter(col("file").contains("/site=b/"))
       .select("file", "lo", "hi").collect().toSet
     assert(bFiles0 == bFiles1 && bFiles0.nonEmpty)
+  }
+
+  test("refreshForFiles on an UNPARTITIONED versioned lake: the root is the touched dir; skip and bloom pruned reads stay exact") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_skipidx_u").toFile
+    dir.deleteOnExit()
+    val lake = dir.getAbsolutePath
+    graft.ops.MergeData.writeMerged(spark,
+      df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0)), "site", "id", "v"),
+      lake, keys = Nil)
+    Versioned.init(spark, lake)
+    def live(v: Long) = Versioned.filesAt(spark, lake, v).map(f => s"$lake/$f")
+    val built = SkipIndex.build(Versioned.snapshot(spark, lake), Seq("id"))
+    val skip0 = spark.createDataFrame(
+      java.util.Arrays.asList(built.collect(): _*), built.schema)
+    val bloomBuilt = BloomIndex.buildForFiles(spark, lake, live(0L), Seq("id"),
+      expectedPerFile = 100L, fpp = 0.01)
+    val bloom0 = spark.createDataFrame(
+      java.util.Arrays.asList(bloomBuilt.collect(): _*), bloomBuilt.schema)
+    val v1 = Versioned.mergeInto(spark, lake,
+      df(Seq(("a", 1L, 100.0, false), ("a", 2L, 0.0, true), ("c", 7L, 7.0, false)),
+        "site", "id", "v", "__delete"),
+      Nil, Seq("id"))
+    // the unpartitioned merge's one touched "partition" is the root: ""
+    val skip1 = SkipIndex.refreshForFiles(spark, lake, skip0, Seq("id"),
+      Seq(""), live(v1))
+    val bloom1 = BloomIndex.refreshForFiles(spark, lake, bloom0, Seq("id"),
+      100L, 0.01, Seq(""), live(v1))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.select("site", "id", "v")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(rows(Versioned.prunedRead(spark, lake, skip1, Seq(("id", 0, 50)))) ==
+      Set(("a", 1L, 100.0), ("b", 10L, 10.0), ("c", 7L, 7.0)))
+    assert(rows(Versioned.prunedReadIn(spark, lake, bloom1, "id",
+        Seq(lit(1L), lit(2L), lit(7L)))) ==
+      Set(("a", 1L, 100.0), ("c", 7L, 7.0)))
   }
 
   test("disjoint predicate yields an empty frame with the data schema") {

@@ -340,15 +340,16 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.deleteWhere(spark, dir, col("v") < 5.0,
       Seq("site", "id")) == vDel)
     assert(inc() == Set(("delete", "a", 1L, 1.0), ("delete", "a", 2L, 2.0)))
-    // a swap-path replica replays merge + delete increments and converges
+    // a replica replays merge + delete increments and converges
     val replica = dir + "_replica2"
     MergeData.writeMerged(spark,
       df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0)),
         "site", "id", "v"), replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
     Versioned.applyTableChanges(spark, dir, replica, Seq("site"), sinceV = 1L)
-    assert(state(spark.read.parquet(replica)) ==
+    assert(state(Versioned.snapshot(spark, replica)) ==
       state(Versioned.snapshot(spark, dir)))
-    assert(state(spark.read.parquet(replica)) ==
+    assert(state(Versioned.snapshot(spark, replica)) ==
       Set(("b", 10L, 10.0), ("c", 7L, 7.0)))
   }
 
@@ -1021,6 +1022,7 @@ class VersionedSpec extends SparkSpec {
     val replica = new java.io.File(root, "replica").getAbsolutePath
     MergeData.writeMerged(spark, Versioned.snapshot(spark, dir, 1L),
       replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
     // NONE of these writers passes a changeFeed argument — the
     // property makes emission a commit-path invariant
     Versioned.mergeInto(spark, dir,
@@ -1036,7 +1038,7 @@ class VersionedSpec extends SparkSpec {
     val cur = Versioned.applyTableChanges(spark, dir, replica,
       Seq("site"), sinceV = 1L)
     assert(cur == 6L)
-    assert(state(spark.read.parquet(replica)) ==
+    assert(state(Versioned.snapshot(spark, replica)) ==
       state(Versioned.snapshot(spark, dir)),
       "replica must converge with zero per-call feed arguments")
     // the batch read serves every increment, tagged by version
@@ -1237,8 +1239,9 @@ class VersionedSpec extends SparkSpec {
       .createTempDirectory("graft_restore_replica").toFile.getAbsolutePath
     MergeData.writeMerged(spark, Versioned.snapshot(spark, dir, v2),
       replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
     Versioned.applyTableChanges(spark, dir, replica, Seq("site"), sinceV = v2)
-    assert(state(spark.read.parquet(replica)) == s1)
+    assert(state(Versioned.snapshot(spark, replica)) == s1)
 
     // replaying the same restore is a version-level no-op
     assert(Versioned.restore(spark, dir, v1) == 4L)
@@ -1698,6 +1701,7 @@ class VersionedSpec extends SparkSpec {
     val replica = new java.io.File(root, "replica").getAbsolutePath
     MergeData.writeMerged(spark, Versioned.snapshot(spark, dir, 1L),
       replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
     // a merge BEFORE the rename (its increment carries 'v' on disk)
     Versioned.mergeInto(spark, dir,
       df(Seq(("a", 1L, 100.0, false)), "site", "id", "v", "__delete"),
@@ -1717,12 +1721,12 @@ class VersionedSpec extends SparkSpec {
         col("_action") === "update_postimage")
       .select("reading").collect().map(_.getDouble(0)).toSeq == Seq(100.0),
       "the v2 increment's physical 'v' values surface under 'reading'")
-    // replica seeded pre-rename converges THROUGH the rename: its
-    // existing columns are re-spelled once, then increments apply
+    // replica seeded pre-rename converges THROUGH the rename: the
+    // rename mirrors onto it, increments apply under their own names
     val cur = Versioned.applyTableChanges(spark, dir, replica,
       Seq("site"), sinceV = 1L)
     assert(cur == 5L)
-    val rep = spark.read.parquet(replica)
+    val rep = Versioned.snapshot(spark, replica)
     assert(rep.columns.sorted.toSeq ==
       Versioned.snapshot(spark, dir).columns.sorted.toSeq)
     assert(rep.select("site", "id", "reading").collect()
@@ -1761,7 +1765,7 @@ class VersionedSpec extends SparkSpec {
       Seq("site"), Seq("site", "id"))                               // v4
     Versioned.deleteWhere(spark, dir, col("id") === 2L,
       keyCols = Seq("site", "id"))                                  // v5
-    val cur = Versioned.applyTableChangesVersioned(spark, dir, replica,
+    val cur = Versioned.applyTableChanges(spark, dir, replica,
       Seq("site"), sinceV = 1L)
     assert(cur == 5L)
     // converged, under the new name
@@ -1771,8 +1775,7 @@ class VersionedSpec extends SparkSpec {
       state(Versioned.snapshot(spark, dir)
         .withColumnRenamed("val", "v")))
     // the mirrored rename is replica v2 (after one merge commit) and
-    // moved ZERO files — the metadata-only payoff over the plain-
-    // parquet replica's rewrite
+    // moved ZERO files — renames are metadata on both sides
     assert(Versioned.filesAt(spark, replica, 2L) ==
       Versioned.filesAt(spark, replica, 1L),
       "mirrored rename must be metadata-only on the replica")
@@ -1781,7 +1784,7 @@ class VersionedSpec extends SparkSpec {
     Versioned.mergeInto(spark, dir,
       df(Seq(("d", 9L, false)), "site", "id", "__delete"),
       Seq("site"), Seq("site", "id"))                               // v7
-    Versioned.applyTableChangesVersioned(spark, dir, replica,
+    Versioned.applyTableChanges(spark, dir, replica,
       Seq("site"), sinceV = 5L)
     assert(!Versioned.snapshot(spark, replica).columns.contains("val"))
     assert(Versioned.snapshot(spark, replica)
@@ -2617,6 +2620,7 @@ class VersionedSpec extends SparkSpec {
       .createTempDirectory("graft_ovwrep").toFile.getAbsolutePath
     MergeData.writeMerged(spark, Versioned.snapshot(spark, dir, 1L),
       replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
     // regenerate: (a,1) changed, (a,2) unchanged, (b,10) gone, (c,7) new
     val v2 = Versioned.overwrite(spark, dir,
       df(Seq(("a", 1L, 100.0), ("a", 2L, 2.0), ("c", 7L, 7.0)),
@@ -2634,7 +2638,7 @@ class VersionedSpec extends SparkSpec {
       "update_postimage" -> 1L, "delete" -> 1L, "insert" -> 1L),
       s"the increment is the DIFF, not the table: $byAction")
     Versioned.applyTableChanges(spark, dir, replica, Seq("site"), sinceV = 1L)
-    assert(state(spark.read.parquet(replica)) ==
+    assert(state(Versioned.snapshot(spark, replica)) ==
       state(Versioned.snapshot(spark, dir)))
     // idempotent replay via txn marker
     val vAgain = Versioned.overwrite(spark, dir,
@@ -2654,6 +2658,7 @@ class VersionedSpec extends SparkSpec {
       .createTempDirectory("graft_morrep").toFile.getAbsolutePath
     MergeData.writeMerged(spark, Versioned.snapshot(spark, dir, 1L),
       replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
     val v2 = Versioned.mergeIntoMor(spark, dir,
       df(Seq(("a", 1L, 100.0, false), ("a", 2L, 0.0, true),
         ("c", 7L, 7.0, false)), "site", "id", "v", "__delete"),
@@ -2664,7 +2669,7 @@ class VersionedSpec extends SparkSpec {
       .map(_.getString(0)).toSet ==
       Set("update_preimage", "update_postimage", "insert", "delete"))
     Versioned.applyTableChanges(spark, dir, replica, Seq("site"), sinceV = 1L)
-    assert(state(spark.read.parquet(replica)) ==
+    assert(state(Versioned.snapshot(spark, replica)) ==
       state(Versioned.snapshot(spark, dir)),
       "a feed replica must converge across a MOR merge")
   }
@@ -2720,6 +2725,7 @@ class VersionedSpec extends SparkSpec {
     // variant: the column does not exist yet)
     graft.ops.MergeData.writeMerged(spark, Versioned.snapshot(spark, dir, 1L),
       replica, keys = Seq("site"))
+    Versioned.init(spark, replica)
     val v2 = Versioned.addGeneratedColumn(spark, dir, "v2x", "v * 2")
     assert(v2 == 2L)
     val inc = Versioned.changeIncrementAt(spark, dir, v2)
@@ -2728,7 +2734,7 @@ class VersionedSpec extends SparkSpec {
       .map(_.getString(0)).toSet ==
       Set("update_preimage", "update_postimage"))
     Versioned.applyTableChanges(spark, dir, replica, Seq("site"), sinceV = 1L)
-    val rep = spark.read.parquet(replica)
+    val rep = Versioned.snapshot(spark, replica)
     assert(rep.columns.contains("v2x"), "replica must gain the column")
     assert(rep.filter(!(col("v2x") <=> col("v") * 2)).isEmpty,
       "replica rows must carry the computed values, not nulls")
@@ -2741,37 +2747,6 @@ class VersionedSpec extends SparkSpec {
     val v5 = Versioned.addGeneratedColumn(spark, dir, "v3x0", "v * 0")
     assert(Versioned.changeIncrementAt(spark, dir, v5).isEmpty,
       "re-declaring over agreeing data is metadata-only (row-neutral)")
-  }
-
-  test("replica remap crash windows: ONE of the two dirs always exists; resume promotes the staged remap") {
-    val spark0 = spark
-    import spark0.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_remap").toFile
-    val replica = new java.io.File(root, "rep").getAbsolutePath
-    Seq(("a", 1L, 1.0)).toDF("site", "id", "v")
-      .write.parquet(replica)
-    val fs = new org.apache.hadoop.fs.Path(replica)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // shape 1: crash BETWEEN rename-aside and promote — no replica
-    // dir, complete staging + aside present. Resume must promote the
-    // staging (the remapped data), not the stale aside.
-    val staging = new org.apache.hadoop.fs.Path(replica + "_remap_abc")
-    Seq(("a", 1L, 2.0)).toDF("site", "id", "v_new")
-      .write.parquet(staging.toString)
-    require(fs.rename(new org.apache.hadoop.fs.Path(replica),
-      new org.apache.hadoop.fs.Path(replica + "_old_xyz")))
-    Versioned.resumeCrashedRemap(spark, replica)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(replica)))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(replica + "_old_xyz")))
-    assert(spark.read.parquet(replica).columns.contains("v_new"),
-      "resume must promote the REMAPPED staging, not the pre-remap aside")
-    // shape 2: replica present + leftover staging/aside — both are
-    // superseded work and must be reaped, replica untouched
-    val stale = new org.apache.hadoop.fs.Path(replica + "_remap_stale")
-    Seq(("x", 9L)).toDF("site", "id").write.parquet(stale.toString)
-    Versioned.resumeCrashedRemap(spark, replica)
-    assert(!fs.exists(stale) &&
-      spark.read.parquet(replica).columns.contains("v_new"))
   }
 
   test("OPTIMIZE on an UNPARTITIONED table: the root group compacts like any partition (binpack route), data identical") {

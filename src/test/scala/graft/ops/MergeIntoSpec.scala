@@ -8,35 +8,34 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.lake.Versioned
 
-/** Row-level MERGE INTO (copy-on-write): update/delete/insert semantics
-  * AND the physical guarantee that only touched partitions rewrite —
-  * untouched partition files must remain byte- and mtime-identical,
-  * because at lake scale "merge a day's upserts" must never become
-  * "rewrite the table".
+/** Row-level MERGE INTO (copy-on-write, [[Versioned.mergeInto]]):
+  * update/delete/insert semantics AND the physical guarantee that only
+  * touched partitions rewrite — an untouched partition's files must
+  * stay live in the new version, because at lake scale "merge a day's
+  * upserts" must never become "rewrite the table".
   */
 class MergeIntoSpec extends SparkSpec {
 
-  private def readLake(dir: String) =
-    spark.read.parquet(dir).select("site", "id", "v")
+  /** A versioned lake (v0) over `rows`, partitioned by site. */
+  private def lakeOf(name: String, rows: Seq[(String, Long, Double)]): String = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toFile
+    dir.deleteOnExit()
+    MergeData.writeMerged(spark, df(rows, "site", "id", "v"),
+      dir.getAbsolutePath, keys = Seq("site"))
+    Versioned.init(spark, dir.getAbsolutePath)
+    dir.getAbsolutePath
+  }
 
   private def state(dir: String): Set[(String, Long, Double)] =
-    readLake(dir).collect()
+    Versioned.snapshot(spark, dir).select("site", "id", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("mergeInto applies update/delete/insert and leaves other partitions' files untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge").toFile
-    dir.deleteOnExit()
-    val base = df(Seq(
+    val dir = lakeOf("graft_merge", Seq(
       ("a", 1L, 1.0), ("a", 2L, 2.0), ("a", 3L, 3.0),
-      ("b", 10L, 10.0), ("b", 11L, 11.0)), "site", "id", "v")
-    MergeData.writeMerged(spark, base, dir.getAbsolutePath, keys = Seq("site"))
-
-    def files(p: String): Map[String, Long] = {
-      val d = new java.io.File(dir, p)
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val bBefore = files("site=b")
+      ("b", 10L, 10.0), ("b", 11L, 11.0)))
+    def files(v: Long, p: String): Set[String] =
+      Versioned.filesAt(spark, dir, v).filter(_.startsWith(s"$p/")).toSet
 
     // batch: UPDATE a/1, DELETE a/2, INSERT a/4 and a whole new
     // partition c/100 — partition b is not in the batch
@@ -44,30 +43,17 @@ class MergeIntoSpec extends SparkSpec {
       ("a", 1L, 100.0, false), ("a", 2L, 0.0, true),
       ("a", 4L, 4.0, false), ("c", 100L, 9.0, false)),
       "site", "id", "v", "__delete")
-    MergeData.mergeInto(spark, dir.getAbsolutePath, updates,
+    val v1 = Versioned.mergeInto(spark, dir, updates,
       partitionKeys = Seq("site"), rowKey = Seq("site", "id"))
 
-    assert(state(dir.getAbsolutePath) == Set(
+    assert(state(dir) == Set(
       ("a", 1L, 100.0), ("a", 3L, 3.0), ("a", 4L, 4.0),
       ("b", 10L, 10.0), ("b", 11L, 11.0), ("c", 100L, 9.0)))
-    assert(files("site=b") == bBefore,
+    assert(files(v1, "site=b") == files(0L, "site=b") &&
+      files(0L, "site=b").nonEmpty,
       "untouched partition must keep the exact same files (COW scope)")
-  }
-
-  test("mergeInto is idempotent: replaying the same batch changes nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_idem").toFile
-    dir.deleteOnExit()
-    MergeData.writeMerged(spark,
-      df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0)), "site", "id", "v"),
-      dir.getAbsolutePath, keys = Seq("site"))
-    val updates = df(Seq(("a", 1L, 5.0, false), ("a", 2L, 0.0, true)),
-      "site", "id", "v", "__delete")
-    MergeData.mergeInto(spark, dir.getAbsolutePath, updates,
-      Seq("site"), Seq("site", "id"))
-    val once = state(dir.getAbsolutePath)
-    MergeData.mergeInto(spark, dir.getAbsolutePath, updates,
-      Seq("site"), Seq("site", "id"))
-    assert(state(dir.getAbsolutePath) == once && once == Set(("a", 1L, 5.0)))
+    assert((files(v1, "site=a") intersect files(0L, "site=a")).isEmpty,
+      "the touched partition is rewritten")
   }
 
   /** A versioned lake over `rows` with the change feed enabled on
@@ -142,9 +128,7 @@ class MergeIntoSpec extends SparkSpec {
   test("replica converges to primary by replaying the change feed") {
     val base = Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0))
     val primary = cdfLake("graft_merge_repl", base)
-    val replica = primary + "_replica"
-    MergeData.writeMerged(spark, df(base, "site", "id", "v"), replica,
-      keys = Seq("site"))
+    val replica = lakeOf("graft_merge_repl_replica", base)
 
     // two primary merge batches, each publishing its increment
     val v0 = Versioned.mergeInto(spark, primary,
@@ -175,52 +159,40 @@ class MergeIntoSpec extends SparkSpec {
   }
 
   test("a null __delete marker is an upsert, never a silent delete") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_nulldel").toFile
-    dir.deleteOnExit()
-    MergeData.writeMerged(spark,
-      df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0)), "site", "id", "v"),
-      dir.getAbsolutePath, keys = Seq("site"))
+    val dir = lakeOf("graft_merge_nulldel", Seq(("a", 1L, 1.0), ("a", 2L, 2.0)))
     // __delete arrives null (CSV empty field / outer-join product):
     // the key must be REPLACED, not dropped with no replacement
     val updates = df(Seq(
       ("a", 1L, 5.0, None: Option[Boolean]),
       ("a", 2L, 0.0, Some(true))),
       "site", "id", "v", "__delete")
-    MergeData.mergeInto(spark, dir.getAbsolutePath, updates,
-      Seq("site"), Seq("site", "id"))
-    assert(state(dir.getAbsolutePath) == Set(("a", 1L, 5.0)))
+    Versioned.mergeInto(spark, dir, updates, Seq("site"), Seq("site", "id"))
+    assert(state(dir) == Set(("a", 1L, 5.0)))
   }
 
   test("null partition values merge (null-safe match + Hive default dir)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_nullpart").toFile
-    dir.deleteOnExit()
-    MergeData.writeMerged(spark,
-      df(Seq((null.asInstanceOf[String], 1L, 1.0), ("a", 2L, 2.0)),
-        "site", "id", "v"),
-      dir.getAbsolutePath, keys = Seq("site"))
+    val dir = lakeOf("graft_merge_nullpart",
+      Seq((null.asInstanceOf[String], 1L, 1.0), ("a", 2L, 2.0)))
     // update the row in the null partition — must match the base row
-    // (col === null never would) and swap __HIVE_DEFAULT_PARTITION__
-    MergeData.mergeInto(spark, dir.getAbsolutePath,
+    // (col === null never would) and rewrite __HIVE_DEFAULT_PARTITION__
+    val v1 = Versioned.mergeInto(spark, dir,
       df(Seq((null.asInstanceOf[String], 1L, 9.0, false)),
         "site", "id", "v", "__delete"),
       Seq("site"), Seq("id"))
-    assert(state(dir.getAbsolutePath) == Set((null, 1L, 9.0), ("a", 2L, 2.0)))
+    assert(state(dir) == Set((null, 1L, 9.0), ("a", 2L, 2.0)))
+    assert(Versioned.filesAt(spark, dir, v1)
+      .exists(_.startsWith("site=__HIVE_DEFAULT_PARTITION__/")))
   }
 
   test("schema evolution: a batch adding a column null-fills old rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_evo").toFile
-    dir.deleteOnExit()
-    MergeData.writeMerged(spark,
-      df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0)),
-        "site", "id", "v"),
-      dir.getAbsolutePath, keys = Seq("site"))
+    val dir = lakeOf("graft_merge_evo",
+      Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0)))
     // the batch carries a NEW column `src`
-    MergeData.mergeInto(spark, dir.getAbsolutePath,
+    Versioned.mergeInto(spark, dir,
       df(Seq(("a", 1L, 100.0, "cdc", false), ("a", 3L, 3.0, "cdc", false)),
         "site", "id", "v", "src", "__delete"),
       Seq("site"), Seq("site", "id"))
-    val got = spark.read.option("mergeSchema", "true")
-      .parquet(dir.getAbsolutePath)
+    val got = Versioned.snapshot(spark, dir)
       .select("site", "id", "v", "src").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         Option(r.getString(3)))).toSet
@@ -230,60 +202,64 @@ class MergeIntoSpec extends SparkSpec {
       ("a", 3L, 3.0, Some("cdc")),   // insert carries it
       ("b", 10L, 10.0, None)))       // untouched partition: old schema, null on read
     // a second evolved batch against the evolved lake still works
-    MergeData.mergeInto(spark, dir.getAbsolutePath,
+    Versioned.mergeInto(spark, dir,
       df(Seq(("a", 2L, 20.0, "fix", false)),
         "site", "id", "v", "src", "__delete"),
       Seq("site"), Seq("site", "id"))
-    val v2 = spark.read.option("mergeSchema", "true")
-      .parquet(dir.getAbsolutePath)
+    val v2 = Versioned.snapshot(spark, dir)
       .filter(col("id") === 2L).select("v", "src").collect()
     assert(v2.length == 1 && v2(0).getDouble(0) == 20.0 && v2(0).getString(1) == "fix")
   }
 
   test("a batch missing a base data column is rejected, not null-merged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_drop").toFile
-    dir.deleteOnExit()
-    MergeData.writeMerged(spark,
-      df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0)), "site", "id", "v"),
-      dir.getAbsolutePath, keys = Seq("site"))
+    val dir = lakeOf("graft_merge_drop", Seq(("a", 1L, 1.0), ("a", 2L, 2.0)))
     val e = intercept[IllegalArgumentException] {
-      MergeData.mergeInto(spark, dir.getAbsolutePath,
+      Versioned.mergeInto(spark, dir,
         df(Seq(("a", 1L, false)), "site", "id", "__delete"), // no `v`
         Seq("site"), Seq("site", "id"))
     }
     assert(e.getMessage.contains("missing base columns"))
-    // and the lake is untouched
-    assert(state(dir.getAbsolutePath) == Set(("a", 1L, 1.0), ("a", 2L, 2.0)))
+    // and the lake is untouched: no version committed
+    assert(Versioned.currentVersion(spark, dir) == 0L)
+    assert(state(dir) == Set(("a", 1L, 1.0), ("a", 2L, 2.0)))
   }
 
   test("a delete-everything batch empties the partition but not the lake") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_del").toFile
-    dir.deleteOnExit()
-    MergeData.writeMerged(spark,
-      df(Seq(("a", 1L, 1.0), ("b", 2L, 2.0)), "site", "id", "v"),
-      dir.getAbsolutePath, keys = Seq("site"))
-    MergeData.mergeInto(spark, dir.getAbsolutePath,
+    val dir = lakeOf("graft_merge_del", Seq(("a", 1L, 1.0), ("b", 2L, 2.0)))
+    val v1 = Versioned.mergeInto(spark, dir,
       df(Seq(("a", 1L, 0.0, true)), "site", "id", "v", "__delete"),
       Seq("site"), Seq("site", "id"))
-    assert(state(dir.getAbsolutePath) == Set(("b", 2L, 2.0)))
+    assert(state(dir) == Set(("b", 2L, 2.0)))
+    assert(Versioned.filesAt(spark, dir, v1).forall(_.startsWith("site=b/")),
+      "the emptied partition keeps no live file")
   }
 
   test("no file under src/main/scala names the batch_id=N directory change feed") {
     // the table-property feed (Versioned.enableChangeFeed, `#cdfinc`)
     // is the engine's one change feed; its argument-passed directory
-    // twin and that twin's streaming follower were deleted
+    // twin and that twin's streaming follower were deleted. Likewise
+    // every row-level merge and every feed replica commits through the
+    // manifest (Versioned.mergeInto / applyTableChanges): the
+    // directory-swap merge (a sibling `<table>_staging_*` dir renamed
+    // over the partitions) and the plain-parquet replica's remap were
+    // deleted
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root, not ${sys.props("user.dir")}")
     val banned = Seq("applyChangeFeed", "StreamingReplica",
-      "stageFeedIncrement", "vacuumFeed", "changeDir")
-    val param = "changeFeed\\s*(:|=(?!=))".r
+      "stageFeedIncrement", "vacuumFeed", "changeDir",
+      "MergeData.mergeInto", "mergeIntoImpl", "resumeCrashedRemap",
+      "applyTableChangesVersioned", "startVersioned", "SkipIndex.refresh(",
+      "\"_remap_\"")
+    val patterns = Seq("changeFeed\\s*(:|=(?!=))".r,
+      "\\+\\s*\"_staging_\"".r)
     val offenders = Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
       .flatMap { p =>
         val src = Files.readString(p)
         (banned.filter(src.contains) ++
-          param.findFirstIn(src).toSeq).map(hit => s"$p: $hit")
+          patterns.flatMap(_.findFirstIn(src))).map(hit => s"$p: $hit")
       }.toSeq
-    assert(offenders.isEmpty, s"serve change data through the table-property feed: $offenders")
+    assert(offenders.isEmpty, "serve change data through the table-property " +
+      s"feed and commit merges through the manifest: $offenders")
   }
 }

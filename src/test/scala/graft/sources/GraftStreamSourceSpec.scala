@@ -475,8 +475,9 @@ class GraftStreamSourceSpec extends SparkSpec {
     val twin = new java.io.File(root, "twin").getAbsolutePath
     MergeData.writeMerged(spark, Versioned.snapshot(spark, src, 1L),
       twin, keys = Seq("site"))
+    Versioned.init(spark, twin)
     Versioned.applyTableChanges(spark, src, twin, Seq("site"), sinceV = 1L)
-    assert(state(spark.read.parquet(twin)) ==
+    assert(state(Versioned.snapshot(spark, twin)) ==
       state(Versioned.snapshot(spark, replica)))
     // further waves stream incrementally
     Versioned.append(spark, src,

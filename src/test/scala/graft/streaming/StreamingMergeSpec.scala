@@ -13,9 +13,9 @@ import graft.lake.Versioned
 import graft.ops.MergeData
 
 /** Streamed CDC-apply must equal the same batches applied with batch
-  * mergeInto — including across an incremental second run (new files
-  * only) and a crash injected between the merge landing and the
-  * streaming commit (replay must converge, not double-apply). */
+  * Versioned.mergeInto — including across an incremental second run
+  * (new files only) and a crash injected between the merge landing and
+  * the streaming commit (replay must converge, not double-apply). */
 class StreamingMergeSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -30,11 +30,14 @@ class StreamingMergeSpec extends SparkSpec {
       new File(root, "ckpt").getAbsolutePath)
   }
 
-  private def seedBase(lake: String): Unit =
+  /** The base rows as v0 of a versioned lake at `lake`. */
+  private def seedBase(lake: String): Unit = {
     MergeData.writeMerged(spark,
       df(Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 10L, 10.0)),
         "site", "id", "v"),
       lake, keys = Seq("site"))
+    Versioned.init(spark, lake)
+  }
 
   private def writeBatch(in: String, name: String,
       rows: Seq[(String, Long, Double, Boolean)]): Unit = {
@@ -49,15 +52,14 @@ class StreamingMergeSpec extends SparkSpec {
 
   private def runOnce(lake: String, in: String, ckpt: String,
       afterBatch: Long => Unit = _ => ()): Unit = {
-    val stream = spark.readStream.schema(schema).csv(in)
-    val q = StreamingMerge.start(stream, lake, Seq("site"), Seq("site", "id"),
-      ckpt, afterBatch = afterBatch)
+    val q = StreamingMerge.start(spark.readStream.schema(schema).csv(in),
+      lake, Seq("site"), Seq("site", "id"), ckpt, afterBatch = afterBatch)
     try q.awaitTermination()
     finally if (q.isActive) q.stop()
   }
 
-  private def state(lake: String): Set[(String, Long, Double)] =
-    spark.read.parquet(lake).select("site", "id", "v").collect()
+  private def state(lake: String, v: Long = -1L): Set[(String, Long, Double)] =
+    Versioned.snapshot(spark, lake, v).select("site", "id", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("streamed merges across two incremental runs equal the batch result") {
@@ -77,38 +79,24 @@ class StreamingMergeSpec extends SparkSpec {
       ("a", 1L, 200.0), ("b", 11L, 11.0), ("c", 7L, 7.0)))
   }
 
-  private def streamVersioned(lake: String, in: String, ckpt: String,
-      afterBatch: Long => Unit = _ => ()): Unit = {
-    val q = StreamingMerge.startVersioned(spark.readStream.schema(schema).csv(in),
-      lake, Seq("site"), Seq("site", "id"), ckpt, afterBatch = afterBatch)
-    try q.awaitTermination()
-    finally if (q.isActive) q.stop()
-  }
-
-  private def versionedState(lake: String, v: Long = -1L): Set[(String, Long, Double)] =
-    graft.lake.Versioned.snapshot(spark, lake, v)
-      .select("site", "id", "v").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-
   test("streamed change feed replicates the lake batch-for-batch") {
     val (lake, in, ckpt) = mkDirs()
     val replica = new File(new File(lake).getParentFile, "replica").getAbsolutePath
     seedBase(lake)
     seedBase(replica)
-    graft.lake.Versioned.init(spark, lake)
     graft.lake.Versioned.enableChangeFeed(spark, lake, Seq("site", "id")) // v1
     writeBatch(in, "b1.csv", Seq(
       ("a", 1L, 100.0, false), ("a", 2L, 0.0, true), ("c", 7L, 7.0, false)))
-    streamVersioned(lake, in, ckpt)
+    runOnce(lake, in, ckpt)
     // the second micro-batch crashes after its commit; the replay finds
     // its txn marker and publishes no second increment
     writeBatch(in, "b2.csv", Seq(
       ("c", 7L, 70.0, false), ("b", 10L, 0.0, true)))
     intercept[Exception] {
-      streamVersioned(lake, in, ckpt,
+      runOnce(lake, in, ckpt,
         afterBatch = _ => throw new RuntimeException("injected crash"))
     }
-    streamVersioned(lake, in, ckpt)
+    runOnce(lake, in, ckpt)
     // two micro-batches → two increments, each carrying the Delta row
     // classes; replaying them converges the replica
     val cur = graft.lake.Versioned.currentVersion(spark, lake)
@@ -118,17 +106,16 @@ class StreamingMergeSpec extends SparkSpec {
     assert(versions == Set(2L, 3L))
     graft.lake.Versioned.applyTableChanges(spark, lake, replica, Seq("site"),
       sinceV = 1L)
-    assert(state(replica) == versionedState(lake))
+    assert(state(replica) == state(lake))
     assert(state(replica) == Set(("a", 1L, 100.0), ("c", 7L, 70.0)))
   }
 
   test("versioned streaming: manifest history accumulates; crash-replay does NOT advance the version") {
     val (lake, in, ckpt) = mkDirs()
     seedBase(lake)
-    graft.lake.Versioned.init(spark, lake)
     def runVersioned(afterBatch: Long => Unit = _ => ()): Unit =
-      streamVersioned(lake, in, ckpt, afterBatch)
-    def snapState(v: Long): Set[(String, Long, Double)] = versionedState(lake, v)
+      runOnce(lake, in, ckpt, afterBatch)
+    def snapState(v: Long): Set[(String, Long, Double)] = state(lake, v)
 
     writeBatch(in, "b1.csv", Seq(
       ("a", 1L, 100.0, false), ("a", 2L, 0.0, true), ("c", 7L, 7.0, false)))
@@ -159,7 +146,6 @@ class StreamingMergeSpec extends SparkSpec {
     // Versioned.mergeInto on a twin lake
     val twin = new File(new File(lake).getParentFile, "twin").getAbsolutePath
     seedBase(twin)
-    graft.lake.Versioned.init(spark, twin)
     graft.lake.Versioned.mergeInto(spark, twin,
       df(Seq(("a", 1L, 100.0, false), ("a", 2L, 0.0, true), ("c", 7L, 7.0, false)),
         "site", "id", "v", "__delete"), Seq("site"), Seq("site", "id"))
@@ -188,15 +174,15 @@ class StreamingMergeSpec extends SparkSpec {
     val afterCrash = state(lake)
     assert(afterCrash == Set(("a", 1L, 100.0), ("b", 10L, 10.0), ("c", 7L, 7.0)),
       "merge itself landed before the crash")
-    // restart replays the same batch; idempotence must hold the state
+    // restart replays the same batch; its txn marker holds the state
     runOnce(lake, in, ckpt)
     assert(state(lake) == afterCrash)
+    assert(Versioned.currentVersion(spark, lake) == 1L)
   }
 
   test("streamed APPEND ingest: one versioned append commit per batch; crash-replay skipped; appendsBetween sees exactly the streamed rows") {
     val (lake, in, ckpt) = mkDirs()
     seedBase(lake)
-    graft.lake.Versioned.init(spark, lake)
     val appendSchema = StructType(Seq(
       StructField("site", StringType), StructField("id", LongType),
       StructField("v", DoubleType)))
@@ -260,7 +246,7 @@ class StreamingMergeSpec extends SparkSpec {
     // commit per micro-batch; downstream: the primary's change stream
     // (one commit per batch) merges into the replica, txn-marked
     def runChain(): Unit = {
-      streamVersioned(primary, in, ckpt)
+      runOnce(primary, in, ckpt)
       val q = spark.readStream.format("graft")
         .option("readChanges", "true")
         .option("startingVersion", "1")
@@ -285,15 +271,15 @@ class StreamingMergeSpec extends SparkSpec {
 
     writeBatch(in, "w0.csv", Seq(("a", 1L, 100.0, false), ("c", 7L, 7.0, false)))
     runChain()
-    assert(versionedState(replica) == versionedState(primary))
-    assert(versionedState(replica) ==
+    assert(state(replica) == state(primary))
+    assert(state(replica) ==
       Set(("a", 1L, 100.0), ("b", 10L, 10.0), ("c", 7L, 7.0)))
 
     // second wave, incremental end to end — including a delete
     writeBatch(in, "w1.csv", Seq(("b", 10L, 0.0, true), ("c", 7L, 77.0, false)))
     runChain()
-    assert(versionedState(replica) == versionedState(primary))
-    assert(versionedState(replica) == Set(("a", 1L, 100.0), ("c", 7L, 77.0)))
+    assert(state(replica) == state(primary))
+    assert(state(replica) == Set(("a", 1L, 100.0), ("c", 7L, 77.0)))
 
     // a MERGE-ON-READ delete on the primary streams as an ordinary
     // delete batch: the tombstoned primary and the rewritten replica
@@ -302,8 +288,8 @@ class StreamingMergeSpec extends SparkSpec {
     runChain()
     assert(Versioned.deleteFilesAt(spark, primary).nonEmpty,
       "primary stays merge-on-read")
-    assert(versionedState(replica) == versionedState(primary))
-    assert(versionedState(replica) == Set(("c", 7L, 77.0)))
+    assert(state(replica) == state(primary))
+    assert(state(replica) == Set(("c", 7L, 77.0)))
     // one replica version per primary commit after the enable
     assert(Versioned.currentVersion(spark, primary) == 4L)
     assert(Versioned.currentVersion(spark, replica) == 3L)
