@@ -741,12 +741,6 @@ object Versioned {
   private def hasDvAt(spark: SparkSession, dir: String, version: Long): Boolean =
     metaAt(spark, dir, version).dels.exists(e => isDvRef(delParse(e)._1))
 
-  /** The `.parquet` part files a staging write left directly under
-    * `dir/rel`, as `rel/name`, in listing order. */
-  private def stagedParts(fs: FileSystem, dir: String, rel: String): Seq[String] =
-    PathModel.walk(fs, new Path(dir, rel), recursive = false)
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).map(f => s"$rel/$f")
-
   /** Recursive data-file listing (relative, with byte length — the
     * listing's own statuses carry it, zero extra RPCs), excluding
     * metadata (`_manifest`, `_SUCCESS`, dotfiles). Driver-side,
@@ -770,37 +764,27 @@ object Versioned {
     listDataFilesWithLen(fs, root, sub).map(_._1)
 
   // ---- manifest-recorded file sizes (`#bytes` trailing lines) ------
-  // Writers KNOW each staged file's size at commit time (the staging
-  // listing's statuses carry it — zero extra RPCs), so every commit
-  // records `#bytes <b64 ref> <len>` for the files it adds, AFTER the
-  // file lines (meta readers stop at the first file line, so the meta
-  // path stays O(meta); file-list readers skip `#`-lines anywhere, so
-  // old builds and old manifests are unaffected — the rail is advisory
-  // and needs no protocol bump). DESCRIBE DETAIL and OPTIMIZE's
-  // binpack sizing then resolve sizes from the manifests they already
-  // read instead of issuing one driver getFileStatus per live file —
-  // at millions of files that is minutes of sequential RPC wall-clock
-  // become a handful of text reads.
+  // Writers KNOW each staged file's size at commit time: [[stage]]
+  // returns it in its [[Staged]] value, read off the staging listing's
+  // own statuses (zero extra RPCs), and the commit hands that map to
+  // [[writeCommit]] as an argument — a CAS retry re-emits it by
+  // passing the same value again; [[init]] passes its adoption
+  // listing's sizes and [[cloneAt]] the source manifests' records.
+  // Every commit records `#bytes <b64 ref> <len>` for the files it
+  // adds, AFTER the file lines (meta readers stop at the first file
+  // line, so the meta path stays O(meta); file-list readers skip
+  // `#`-lines anywhere, so old builds and old manifests are
+  // unaffected — the rail is advisory and needs no protocol bump).
+  // DESCRIBE DETAIL and OPTIMIZE's binpack sizing then resolve sizes
+  // from the manifests they already read instead of issuing one
+  // driver getFileStatus per live file — at millions of files that is
+  // minutes of sequential RPC wall-clock become a handful of text reads.
 
-  /** Sizes captured by the most recent staged write(s) on this thread,
-    * drained into `#bytes` lines by the next successful [[writeCommit]]
-    * (same-thread by construction: every commit path stages then
-    * commits synchronously). Cleared only on commit success so CAS
-    * retries re-emit; a permanently failed commit's entries can never
-    * leak into another commit's lines (the emission intersects with
-    * the committing file list, and part names never recur). */
-  private val stagedSizes =
-    new ThreadLocal[scala.collection.mutable.Map[String, Long]] {
-      override def initialValue() = scala.collection.mutable.Map.empty[String, Long]
-    }
-
-  private def noteStagedSizes(m: Iterable[(String, Long)]): Unit =
-    stagedSizes.get() ++= m
-
-  /** Per-file byte-size fallback probes issued by [[fileSizesAt]]
-    * since last reset — the seam the zero-FS-calls spec pins (mirrors
-    * [[optimizeFileStatProbes]]). */
-  @volatile private[graft] var sizeStatProbes: Long = 0L
+  /** Diagnostic counter: per-file byte-size fallback probes issued by
+    * [[fileSizesAt]] — the seam the zero-FS-calls spec pins (mirrors
+    * [[optimizeFileStatProbes]]). Thread-safe; readers take deltas of
+    * `sum()`. */
+  private[graft] val sizeStatProbes = new java.util.concurrent.atomic.LongAdder
 
   /** The per-file sizes the manifests THEMSELVES record for version
     * `version`'s live files — newest-first walk over the retained
@@ -876,7 +860,7 @@ object Versioned {
     val fs = fsOf(spark, dir)
     filesAt(spark, dir, v).map { r =>
       r -> known.getOrElse(r, {
-        sizeStatProbes += 1
+        sizeStatProbes.increment()
         fs.getFileStatus(new Path(refPath(dir, r))).getLen
       })
     }.toMap
@@ -889,43 +873,93 @@ object Versioned {
     * keep this writer's file identification immune to them. */
   private[lake] var afterDataWriteHook: () => Unit = () => ()
 
-  /** Write `prepared` (already repartitioned/clustered by the caller)
-    * Hive-partitioned into `dir` via a WRITER-PRIVATE staging
-    * directory, then move each part file into its partition directory;
-    * returns exactly the relative paths THIS writer created.
+  /** What one [[stage]] call added to the table: the files (relative
+    * refs, listing order), each file's byte length (for the committing
+    * manifest's `#bytes` lines — pass `sizes` to [[writeCommit]]), and
+    * whether the write held ZERO rows. */
+  private final case class Staged(files: Seq[String],
+      sizes: Map[String, Long], empty: Boolean) {
+    /** Delete the staged files (a refused or dropped leg). */
+    def discard(fs: FileSystem, dir: String): Unit =
+      files.foreach(r => fs.delete(new Path(dir, r), false))
+  }
+
+  /** THE staged write: every file a commit adds goes through here, and
+    * here alone decides what an empty staged write means.
     *
-    * This is how a commit identifies its own files. The obvious
-    * alternative — diffing a before/after listing of the touched
-    * partition directories — is wrong under concurrency: with two
-    * writers on the same partition, A's diff captures B's data files
-    * written after B's Spark job but before B's manifest CAS, so A's
-    * manifest would publish B's possibly-uncommitted data (duplicates
-    * on B's replay, or stale rows if B aborts). Listing the private
-    * staging dir instead makes the identification exact by
-    * construction; the per-file rename is a metadata op on HDFS-like
-    * stores, and Spark's task-UUID part names make collisions with
-    * concurrent writers' files impossible. The staging dir is
-    * `_`-prefixed, so readers and [[listDataFiles]] never see it. */
-  private def writeStagedFiles(spark: SparkSession, fs: FileSystem,
-      dir: String, prepared: DataFrame, partitionKeys: Seq[String],
-      maxRecordsPerFile: Option[Long] = None): Seq[String] = {
-    val staging = new Path(dir,
-      "_staging_" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      val w0 = prepared.write.mode("append").partitionBy(partitionKeys: _*)
-      maxRecordsPerFile.fold(w0)(n => w0.option("maxRecordsPerFile", n))
-        .parquet(staging.toString)
-      val staged = listDataFilesWithLen(fs, staging, staging)
-      afterDataWriteHook()
-      noteStagedSizes(staged) // the committing manifest records them
-      staged.map { case (rel, _) =>
-        val src = new Path(staging, rel)
-        val dst = new Path(dir, rel)
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(src, dst), s"staged-file move failed: $src -> $dst")
-        rel
-      }
-    } finally fs.delete(staging, true)
+    * DATA mode (no `sidecar`): write `df` (already repartitioned /
+    * clustered by the caller) Hive-partitioned into a WRITER-PRIVATE
+    * `_staging_<nonce>` directory, then move each part file into its
+    * partition directory. This is how a commit identifies its own
+    * files. The obvious alternative — diffing a before/after listing
+    * of the touched partition directories — is wrong under
+    * concurrency: with two writers on the same partition, A's diff
+    * captures B's data files written after B's Spark job but before
+    * B's manifest CAS, so A's manifest would publish B's
+    * possibly-uncommitted data (duplicates on B's replay, or stale
+    * rows if B aborts). Listing the private staging dir makes the
+    * identification exact by construction; the per-file rename is a
+    * metadata op on HDFS-like stores, and Spark's task-UUID part names
+    * cannot collide with concurrent writers' files. The staging dir is
+    * `_`-prefixed, so readers and [[listDataFiles]] never see it.
+    *
+    * Emptiness, data mode: a PARTITIONED write creates files only for
+    * rows that exist, so zero files ⇔ zero rows and no footer is read.
+    * An UNPARTITIONED write's first task creates a part file even when
+    * its partition is empty, so each staged file's footer row count is
+    * read on the driver (zero jobs): zero-row files stay in the staging
+    * dir and die with it — never committed beside real files. When
+    * every file is empty, exactly one is kept as the schema carrier a
+    * zero-row version reads its schema from, and `empty` is set:
+    * callers that must not commit it [[Staged.discard]] it.
+    *
+    * SIDECAR mode (`sidecar = Some(prefix)`): a tombstone or deletion
+    * vector written under a fresh `prefix<nonce>` directory (callers
+    * `coalesce(1)` a key list). A write that leaves no parquet file is
+    * an FS/committer fault, never a no-match (an empty write stages a
+    * schema-only file) — refused loudly. Zero TOTAL footer rows means
+    * nothing matched: the directory is deleted and `empty` is set. */
+  private def stage(spark: SparkSession, dir: String, df: DataFrame,
+      partitionKeys: Seq[String] = Nil, maxRecordsPerFile: Option[Long] = None,
+      sidecar: Option[String] = None): Staged = {
+    val fs = fsOf(spark, dir)
+    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    sidecar match {
+      case Some(prefix) =>
+        val rel = prefix + nonce
+        df.write.mode("errorifexists").parquet(s"$dir/$rel")
+        val parts = PathModel.walk(fs, new Path(dir, rel), recursive = false)
+          .filter(_.getPath.getName.endsWith(".parquet"))
+          .map(st => s"$rel/${st.getPath.getName}" -> st.getLen)
+        require(parts.nonEmpty,
+          s"staging write produced no parquet files under $rel")
+        if (countFooterRows(spark, parts.map(p => s"$dir/${p._1}")) == 0L) {
+          fs.delete(new Path(dir, rel), true)
+          Staged(Nil, Map.empty, empty = true)
+        } else Staged(parts.map(_._1), parts.toMap, empty = false)
+      case None =>
+        val staging = new Path(dir, "_staging_" + nonce)
+        try {
+          val w0 = df.write.mode("append").partitionBy(partitionKeys: _*)
+          maxRecordsPerFile.fold(w0)(n => w0.option("maxRecordsPerFile", n))
+            .parquet(staging.toString)
+          val listed = listDataFilesWithLen(fs, staging, staging)
+          afterDataWriteHook()
+          val withRows =
+            if (partitionKeys.nonEmpty) listed
+            else listed.filter { case (rel, _) =>
+              countFooterRows(spark, Seq(new Path(staging, rel).toString)) > 0L
+            }
+          val kept = if (withRows.nonEmpty) withRows else listed.take(1)
+          kept.foreach { case (rel, _) =>
+            val src = new Path(staging, rel)
+            val dst = new Path(dir, rel)
+            fs.mkdirs(dst.getParent)
+            require(fs.rename(src, dst), s"staged-file move failed: $src -> $dst")
+          }
+          Staged(kept.map(_._1), kept.toMap, empty = withRows.isEmpty)
+        } finally fs.delete(staging, true)
+    }
   }
 
   private def writeManifestFile(fs: FileSystem, dst: Path,
@@ -1060,20 +1094,20 @@ object Versioned {
     * optimistic-concurrency guard (Delta's CAS-on-log-entry): a
     * racing writer that committed the same version first wins, and
     * this commit aborts with its data files unreferenced
-    * (vacuum-able) rather than clobbering the winner's manifest. */
+    * (vacuum-able) rather than clobbering the winner's manifest.
+    * `sizes` are the byte lengths of the files this commit adds
+    * ([[Staged.sizes]]), recorded as `#bytes` lines. */
   private def writeCommit(fs: FileSystem, dir: String, v: Long,
       files: Seq[String], prevFiles: Seq[String], meta: CommitMeta,
+      sizes: Map[String, Long] = Map.empty,
       forceCheckpoint: Boolean = false): Unit = {
     val baseCkpt = listManifests(fs, dir)
       .collect { case (mv, false) if mv < v => mv }.foldLeft(-1L)(math.max)
     val isCkpt = forceCheckpoint || v == 0L || baseCkpt < 0 ||
       (v - baseCkpt) >= CheckpointInterval
-    // trailing `#bytes` lines for the files THIS commit adds whose
-    // sizes the staged write captured (see the sizes-rail note): after
-    // the file lines, so meta stays O(meta); skipped by every file-list
-    // reader (`#` lines); cleared only on success so a CAS retry
-    // re-emits
-    val sizes = stagedSizes.get()
+    // trailing `#bytes` lines for the files THIS commit adds (see the
+    // sizes-rail note): after the file lines, so meta stays O(meta);
+    // skipped by every file-list reader (`#` lines)
     // CHECKPOINTS additionally ROLL UP the rail: every live file's
     // size the retained manifests record bakes into the checkpoint
     // (plus a `#bytesall` completeness marker), so [[fileSizesKnown]]'s
@@ -1084,10 +1118,8 @@ object Versioned {
     val rolled = scala.collection.mutable.Map.empty[String, Long]
     if (isCkpt && v > 0L) {
       val liveSet = files.toSet
-      // count ONLY staged entries that are live here: stagedSizes can
-      // hold stale keys from an earlier FAILED commit on this thread
-      // (cleared only on success) — overcounting coverage would stop
-      // the walk early and stamp #bytesall over a hole
+      // count ONLY entries that are live here — overcounting coverage
+      // would stop the walk early and stamp #bytesall over a hole
       val stagedLive = sizes.keysIterator.count(liveSet.contains)
       val it = listManifests(fs, dir).filter(_._1 < v)
         .sortBy(-_._1).iterator
@@ -1142,7 +1174,6 @@ object Versioned {
       if (isCkpt) (ckptPath(dir, v), deltaPath(dir, v))
       else (deltaPath(dir, v), ckptPath(dir, v))
     commitOwner.writeVersion(fs, dir, v, dst, alt, body)
-    stagedSizes.get().clear()
   }
 
   /** The raw CAS commit, exposed for the concurrency spec: commits
@@ -1191,11 +1222,11 @@ object Versioned {
       // replicas do exactly this) — drop them
       cacheDrop(dir)
       val fs = fsOf(spark, dir)
+      // adoption's own listing already has the sizes
       val adopted = listDataFilesWithLen(fs, new Path(dir), new Path(dir))
-      noteStagedSizes(adopted) // adoption's own listing already has them
       writeCommit(fs, dir, 0L, adopted.map(_._1),
         Nil, CommitMeta(Some(commitTs), Map.empty, Nil, Map.empty,
-          Some("init"), anchorRef = anchorRef))
+          Some("init"), anchorRef = anchorRef), adopted.toMap)
       0L
     }
   }
@@ -1791,12 +1822,12 @@ object Versioned {
     // full rewrite under the new layout: MOR tombstones fold away
     // (snapshotAll: the hidden row-tracking id must survive the rewrite)
     val rows = snapshotAll(spark, dir, v)
-    val newFiles = writeStagedFiles(spark, fs, dir,
+    val staged = stage(spark, dir,
       toPhysical(meta0, rows).repartition(newKeys.map(col): _*), newKeys)
-    writeCommit(fs, dir, v + 1, newFiles, live,
+    writeCommit(fs, dir, v + 1, staged.files, live,
       carryMeta(spark, dir, v, commitTs, None, Nil,
-        "change-partition-spec").copy(pkeys = Some(newKeys)))
-    maybeWriteIncStats(spark, dir, v, newFiles, Nil)
+        "change-partition-spec").copy(pkeys = Some(newKeys)), staged.sizes)
+    maybeWriteIncStats(spark, dir, v, staged.files, Nil)
     v + 1
   }
 
@@ -2104,7 +2135,7 @@ object Versioned {
       val keys = layoutKeys(meta, live)
       require(keys.nonEmpty, s"cannot infer the partition layout of $dir")
       val rows = snap.withColumn(name, expr(exprSql))
-      val newFiles = writeStagedFiles(spark, fs, dir,
+      val staged = stage(spark, dir,
         toPhysical(meta, rows).repartition(keys.map(col): _*), keys)
       // the REWRITE variant is NOT row-neutral: every existing row
       // gains the computed value. With a change feed attached, publish
@@ -2120,10 +2151,11 @@ object Versioned {
             rows.withColumn("_action", lit("update_postimage")),
             allowMissingColumns = true))
       }
-      writeCommit(fs, dir, v + 1, newFiles, live,
+      writeCommit(fs, dir, v + 1, staged.files, live,
         carryMeta(spark, dir, v, commitTs, None, Nil, "add-generated")
-          .copy(gens = meta.gens + (name -> exprSql), cdfInc = autoInc))
-      maybeWriteIncStats(spark, dir, v, newFiles, Nil)
+          .copy(gens = meta.gens + (name -> exprSql), cdfInc = autoInc),
+        staged.sizes)
+      maybeWriteIncStats(spark, dir, v, staged.files, Nil)
     }
     v + 1
   }
@@ -3153,19 +3185,18 @@ object Versioned {
         toPhysical(writeMeta, batch), partitionKeys, "overwrite batch")
       val (shapedOw, rowCapOw) =
         shapeForWrite(spark, dir, physBatch, partitionKeys)
-      val newFiles = writeStagedFiles(spark, fs, dir,
-        shapedOw, partitionKeys, maxRecordsPerFile = rowCapOw)
+      val staged = stage(spark, dir, shapedOw, partitionKeys, rowCapOw)
       val autoInc = meta0.cdf.map { key =>
         writeChangeInc(spark, dir, rowDiff(snapshotAll(spark, dir, v),
           batch, key))
       }
       val live = filesAt(spark, dir, v)
       val cm = carryMeta(spark, dir, v, commitTs, txn, Nil, "overwrite")
-      writeCommit(fs, dir, v + 1, newFiles, live,
+      writeCommit(fs, dir, v + 1, staged.files, live,
         cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
           pinnedSchema = pinOut.orElse(cm.pinnedSchema),
-          idents = advIdents))
-      maybeWriteIncStats(spark, dir, v, newFiles, statsCols)
+          idents = advIdents), staged.sizes)
+      maybeWriteIncStats(spark, dir, v, staged.files, statsCols)
       v + 1
     } finally batch0.unpersist()
   }
@@ -3228,12 +3259,11 @@ object Versioned {
       // stage the new contents: a failed query/write aborts with the
       // original table untouched (the staged files are unreferenced
       // debris, reaped by vacuum)
-      val newFiles = rows.map { r =>
+      val staged = rows.map { r =>
         val aligned = r.select(schema.fields.toSeq.map(f =>
           col(f.name).cast(f.dataType).as(f.name)): _*)
-        writeStagedFiles(spark, fs, dir,
-          clusterByKeys(aligned, partitionKeys), partitionKeys)
-      }.getOrElse(Nil)
+        stage(spark, dir, clusterByKeys(aligned, partitionKeys), partitionKeys)
+      }.getOrElse(Staged(Nil, Map.empty, empty = true))
       val newMeta = CommitMeta(
         Some(math.max(commitTs, meta0.ts.getOrElse(Long.MinValue))),
         meta0.txns, Nil, Map.empty, Some("replace"),
@@ -3243,7 +3273,7 @@ object Versioned {
         gens = Map.empty, addCols = Nil,
         cluster = if (clusterCols.nonEmpty) Some(clusterCols) else None,
         anchorRef = Some(aRef))
-      writeCommit(fs, dir, v + 1, newFiles, live, newMeta)
+      writeCommit(fs, dir, v + 1, staged.files, live, newMeta, staged.sizes)
     } catch { case e: Throwable =>
       // a failed replace — staging OR a lost commit CAS — deletes its
       // own staged anchor: the path is attempt-unique, so this can
@@ -3329,22 +3359,16 @@ object Versioned {
         toPhysical(writeMeta, batch), partitionKeys, "append batch")
       val (shapedAp, rowCapAp) =
         shapeForWrite(spark, dir, physBatch, partitionKeys)
-      val newFiles = writeStagedFiles(spark, fs, dir,
-        shapedAp, partitionKeys, maxRecordsPerFile = rowCapAp)
-      // EMPTINESS is read off the staged write instead of a separate
-      // `batch.isEmpty` job (executeTake escalates through every empty
-      // partition of a small batch — one full extra pass per append;
-      // guide §2.4). A nonempty batch always stages ≥1 file; the one
-      // case a staged file can be empty — an UNPARTITIONED write
-      // stages one schema-only file for partition 0 — confirms via a
-      // single driver-side footer read (zero jobs). The refused
-      // batch's staged files are unreferenced by any manifest; they
-      // are deleted here rather than left for vacuum.
-      val emptyBatch = newFiles.isEmpty ||
-        (partitionKeys.isEmpty && newFiles.size == 1 &&
-          countFooterRows(spark, newFiles.map(r => s"$dir/$r")) == 0L)
-      if (emptyBatch) {
-        newFiles.foreach(r => fs.delete(new Path(dir, r), false))
+      val staged = stage(spark, dir, shapedAp, partitionKeys, rowCapAp)
+      val newFiles = staged.files
+      // EMPTINESS is read off the staged write ([[stage]]) instead of a
+      // separate `batch.isEmpty` job (executeTake escalates through
+      // every empty partition of a small batch — one full extra pass
+      // per append; guide §2.4). The refused batch's staged files are
+      // unreferenced by any manifest; they are deleted here rather
+      // than left for vacuum.
+      if (staged.empty) {
+        staged.discard(fs, dir)
         require(requirement = false, "append got an empty batch")
       }
       // table-property CDF: a blind append's increment is its own rows
@@ -3372,7 +3396,7 @@ object Versioned {
             filesAt(spark, dir, curV),
             cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
               pinnedSchema = pinOut.orElse(cm.pinnedSchema),
-              idents = advIdents))
+              idents = advIdents), staged.sizes)
           committed = curV + 1
         } catch {
           case e: IllegalArgumentException
@@ -3527,20 +3551,19 @@ object Versioned {
         "enable-row-tracking backfill")
       val (phys, pinOut) = conformToPinned(meta0,
         toPhysical(meta0, withIds), keys, "row-tracking backfill")
-      val newFiles = writeStagedFiles(spark, fs, dir,
-        clusterByKeys(phys, keys), keys)
-      writeCommit(fs, dir, v + 1, newFiles, live,
+      val staged = stage(spark, dir, clusterByKeys(phys, keys), keys)
+      writeCommit(fs, dir, v + 1, staged.files, live,
         carryMeta(spark, dir, v, commitTs, None, Nil,
           "enable-row-tracking").copy(
             idents = meta0.idents ++ adv,
-            pinnedSchema = pinOut.orElse(meta0.pinnedSchema)))
+            pinnedSchema = pinOut.orElse(meta0.pinnedSchema)), staged.sizes)
       // the backfill REPLACES every live file: without extending the
       // stats/bloom sidecars to the new files, established coverage
       // breaks at this version forever (statsPrunedRead throws,
       // metadataAggregate and optimizeWrite calibration silently bail
       // until a manual re-backfill) — the same discipline every other
       // full-rewrite commit path follows
-      maybeWriteIncStats(spark, dir, v, newFiles, Nil)
+      maybeWriteIncStats(spark, dir, v, staged.files, Nil)
       v + 1
     } finally snap.unpersist()
   }
@@ -4944,9 +4967,8 @@ object Versioned {
     // under the clone's foreign-ref spelling) — no FS calls, and the
     // clone's DESCRIBE DETAIL stays metadata-only; unrecorded source
     // files just fall back lazily on the clone like anywhere else
-    val srcSizes = fileSizesKnown(spark, srcDir, v)
-    noteStagedSizes(srcSizes.map { case (r, b) =>
-      (if (refIsForeign(r)) r else s"@$srcDir\t$r") -> b })
+    val srcSizes = fileSizesKnown(spark, srcDir, v).map { case (r, b) =>
+      (if (refIsForeign(r)) r else s"@$srcDir\t$r") -> b }
     // copy-based carry (the rail registry): every table property —
     // including declared clustering and any rail added tomorrow —
     // travels to the clone by construction; only per-commit state and
@@ -4959,7 +4981,7 @@ object Versioned {
     val cloneMeta = CommitMeta.cloneAll(srcMeta, commitTs, "clone")
     writeCommit(fsOf(spark, dstDir), dstDir, 0L, refs, Nil,
       cloneMeta.copy(anchorRef = cloneMeta.anchorRef.map(r =>
-        if (refIsForeign(r)) r else s"@$srcDir\t$r")))
+        if (refIsForeign(r)) r else s"@$srcDir\t$r")), srcSizes)
     0L
   }
 
@@ -5005,42 +5027,28 @@ object Versioned {
     // can't be re-tombstoned, and the pred sees what a reader sees
     val deletedRows = snapshotAll(spark, dir, v).filter(pred)
     val keys = deletedRows.select(keyCols.map(col): _*).distinct()
-    val fs = fsOf(spark, dir)
     // UNIQUE staging path per attempt (never overwrite): a racing
     // writer that loses the manifest CAS must not have first deleted
     // the winner's already-committed tombstone files — same
-    // never-colliding append discipline as the data-file path
-    val delRel = f"_deletes/v${v + 1}%06d_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    // one file per tombstone commit: erasure-style key lists are small
+    // never-colliding append discipline as the data-file path.
+    // One file per tombstone commit: erasure-style key lists are small
     // by use-case (the read side anti-joins them, usually broadcast).
     // A delete wide enough to make this file large is a rewrite-class
     // operation — use the COW mergeInto with __delete instead.
     // Staged FIRST so its footer row count answers the "did anything
     // match" question on the driver — no separate `keys.isEmpty` job
     // (guide §2.4; the append/merge staged-write discipline).
-    toPhysical(meta0, keys).coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$delRel")
-    val delFiles = stagedParts(fs, dir, delRel)
-    // zero files from a "successful" staging write is an FS/committer
-    // fault, never a no-match (coalesce(1) guarantees one file on a
-    // healthy write) — fail LOUDLY rather than silently skip a delete;
-    // the footer count alone distinguishes matched vs no-match
-    require(delFiles.nonEmpty,
-      s"deleteWhere staging write produced no parquet files under $delRel")
-    if (countFooterRows(spark, delFiles.map(r => s"$dir/$r").toSeq) == 0L) {
-      // nothing matched: drop the schema-only staging file
-      fs.delete(new Path(dir, delRel), true)
-      return v
-    }
+    val tomb = stage(spark, dir, toPhysical(meta0, keys).coalesce(1),
+      sidecar = Some(f"_deletes/v${v + 1}%06d_"))
+    if (tomb.empty) return v // nothing matched: no commit
     // change feed: crash-atomic increment published by the CAS
     val autoInc = metaAt(spark, dir, v).cdf.map { _ =>
       writeChangeInc(spark, dir,
         deletedRows.withColumn("_action", lit("delete")))
     }
     val live = filesAt(spark, dir, v)
-    writeCommit(fs, dir, v + 1, live, live,
-      carryMeta(spark, dir, v, commitTs, None, carried ++ delFiles, "delete")
+    writeCommit(fsOf(spark, dir), dir, v + 1, live, live,
+      carryMeta(spark, dir, v, commitTs, None, carried ++ tomb.files, "delete")
         .copy(cdfInc = autoInc))
     v + 1
   }
@@ -5308,16 +5316,15 @@ object Versioned {
               .unionByName(imaged(affected, lit(true))
                 .withColumn("_action", lit("update_postimage"))))
         }
-        val fs = fsOf(spark, dir)
         val live = filesAt(spark, dir, v)
-        val newFiles = writeStagedFiles(spark, fs, dir,
+        val staged = stage(spark, dir,
           clusterByKeys(toPhysical(meta0, merged), partitionKeys),
           partitionKeys)
-        writeCommit(fs, dir, v + 1,
-          live.filterNot(underTouched) ++ newFiles, live,
+        writeCommit(fsOf(spark, dir), dir, v + 1,
+          live.filterNot(underTouched) ++ staged.files, live,
           carryMeta(spark, dir, v, commitTs, None, dels, "update")
-            .copy(cdfInc = autoInc))
-        maybeWriteIncStats(spark, dir, v, newFiles, Nil)
+            .copy(cdfInc = autoInc), staged.sizes)
+        maybeWriteIncStats(spark, dir, v, staged.files, Nil)
         v + 1
     }
   }
@@ -5392,7 +5399,6 @@ object Versioned {
       "updateWhereVectors cannot assign a column that pending UNSCOPED " +
         "equality deletes key on (an updated value could collide with a " +
         "tombstoned key and vanish on read) — materializeDeletes() first")
-    val fs = fsOf(spark, dir)
     // row identity for the vector: source file + ordinal, attached at
     // the scan (the deleteWhereVectors discipline)
     val fileCol = "__graft_dv_src"
@@ -5408,21 +5414,10 @@ object Versioned {
       // driver instead of a separate `hits.isEmpty` job (guide §2.4);
       // the write also materializes the persist() the post-image pass
       // rides
-      val dvRel = f"_deletes/dv_v${v + 1}%06d_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      hits.select(col(fileCol).as(DvFileCol),
-          col(DvSrcPos).cast("long").as(DvPosCol))
-        .write.mode("errorifexists").parquet(s"$dir/$dvRel")
-      val dvFiles = stagedParts(fs, dir, dvRel)
-      // zero files from a "successful" staging write is an
-      // FS/committer fault, never a no-match (an empty unpartitioned
-      // write stages one schema-only file) — fail loudly
-      require(dvFiles.nonEmpty,
-        s"updateWhereVectors staging write produced no parquet files under $dvRel")
-      if (countFooterRows(spark, dvFiles.map(r => s"$dir/$r").toSeq) == 0L) {
-        fs.delete(new Path(dir, dvRel), true)
-        return v // no row matched: no-op, no commit
-      }
+      val dv = stage(spark, dir, hits.select(col(fileCol).as(DvFileCol),
+          col(DvSrcPos).cast("long").as(DvPosCol)),
+        sidecar = Some(f"_deletes/dv_v${v + 1}%06d_"))
+      if (dv.empty) return v // no row matched: no-op, no commit
       // the post-images, appended as ordinary fresh files; generated
       // columns keep stored values and re-validate (an assignment that
       // broke a generated invariant fails loudly before any commit)
@@ -5434,7 +5429,7 @@ object Versioned {
       enforceConstraints(spark, dir, v, post, "update post-image")
       val (physPost, pinOut) = conformToPinned(meta0,
         toPhysical(meta0, post), partitionKeys, "update post-image")
-      val newFiles = writeStagedFiles(spark, fs, dir,
+      val staged = stage(spark, dir,
         clusterByKeys(physPost, partitionKeys), partitionKeys)
       val autoInc = meta0.cdf.map { _ =>
         writeChangeInc(spark, dir,
@@ -5442,12 +5437,12 @@ object Versioned {
             .unionByName(post.withColumn("_action",
               lit("update_postimage"))))
       }
-      writeCommit(fs, dir, v + 1, live ++ newFiles, live,
-        carryMeta(spark, dir, v, commitTs, None, carried ++ dvFiles,
+      writeCommit(fsOf(spark, dir), dir, v + 1, live ++ staged.files, live,
+        carryMeta(spark, dir, v, commitTs, None, carried ++ dv.files,
             "update")
           .copy(cdfInc = autoInc,
-            pinnedSchema = pinOut.orElse(meta0.pinnedSchema)))
-      maybeWriteIncStats(spark, dir, v, newFiles, Nil)
+            pinnedSchema = pinOut.orElse(meta0.pinnedSchema)), staged.sizes)
+      maybeWriteIncStats(spark, dir, v, staged.files, Nil)
       v + 1
     } finally hits.unpersist()
   }
@@ -5479,19 +5474,18 @@ object Versioned {
           writeChangeInc(spark, dir,
             snap.filter(hit).withColumn("_action", lit("delete")))
         }
-        val fs = fsOf(spark, dir)
         val live = filesAt(spark, dir, v)
         val dels = deleteFilesAt(spark, dir, v)
-        val newFiles = writeStagedFiles(spark, fs, dir,
+        val staged = stage(spark, dir,
           clusterByKeys(toPhysical(meta0, merged), partitionKeys),
           partitionKeys)
         val cm = carryMeta(spark, dir, v, commitTs, None, dels, "delete")
-        writeCommit(fs, dir, v + 1,
-          live.filterNot(underTouched) ++ newFiles, live,
+        writeCommit(fsOf(spark, dir), dir, v + 1,
+          live.filterNot(underTouched) ++ staged.files, live,
           cm.copy(cdfInc = autoInc,
             // a TRUNCATE hands the zero-file definition's anchor in
-            anchorRef = anchorRef.orElse(cm.anchorRef)))
-        maybeWriteIncStats(spark, dir, v, newFiles, Nil)
+            anchorRef = anchorRef.orElse(cm.anchorRef)), staged.sizes)
+        maybeWriteIncStats(spark, dir, v, staged.files, Nil)
         v + 1
     }
   }
@@ -5530,7 +5524,6 @@ object Versioned {
     val meta0 = metaAt(spark, dir, v)
     val live = filesAt(spark, dir, v)
     if (live.isEmpty) return v // empty table: nothing to delete
-    val fs = fsOf(spark, dir)
     // the source-file column attaches BEFORE any join so it projects
     // at the scan (input_file_name is task-local; after a shuffle it
     // would read empty) — the same discipline tombstoneFilter uses
@@ -5546,21 +5539,10 @@ object Versioned {
       // match" on the driver — no separate `hits.isEmpty` job (guide
       // §2.4), and the write materializes the persist() the feed legs
       // ride
-      val dvRel = f"_deletes/dv_v${v + 1}%06d_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      hits.select(col(fileCol).as(DvFileCol),
-          col(DvSrcPos).cast("long").as(DvPosCol))
-        .write.mode("errorifexists").parquet(s"$dir/$dvRel")
-      val dvFiles = stagedParts(fs, dir, dvRel)
-      // zero files from a "successful" staging write is an
-      // FS/committer fault, never a no-match (an empty unpartitioned
-      // write stages one schema-only file) — fail loudly
-      require(dvFiles.nonEmpty,
-        s"deleteWhereVectors staging write produced no parquet files under $dvRel")
-      if (countFooterRows(spark, dvFiles.map(r => s"$dir/$r").toSeq) == 0L) {
-        fs.delete(new Path(dir, dvRel), true)
-        return v // no row matched: no-op, no commit
-      }
+      val dv = stage(spark, dir, hits.select(col(fileCol).as(DvFileCol),
+          col(DvSrcPos).cast("long").as(DvPosCol)),
+        sidecar = Some(f"_deletes/dv_v${v + 1}%06d_"))
+      if (dv.empty) return v // no row matched: no-op, no commit
       val deletedRows = hits.drop(DvSrcPos).drop(fileCol)
       // change feed: crash-atomic increment published by the CAS
       val autoInc = meta0.cdf.map { _ =>
@@ -5568,9 +5550,9 @@ object Versioned {
           deletedRows.withColumn("_action", lit("delete")))
       }
       val carried = deleteFilesAt(spark, dir, v)
-      writeCommit(fs, dir, v + 1, live, live,
+      writeCommit(fsOf(spark, dir), dir, v + 1, live, live,
         carryMeta(spark, dir, v, commitTs, None,
-          carried ++ dvFiles, "delete")
+          carried ++ dv.files, "delete")
           .copy(cdfInc = autoInc))
       v + 1
     } finally hits.unpersist()
@@ -5648,12 +5630,13 @@ object Versioned {
       case Some(s) => s
     }
     val clean = snapshotAll(spark, dir, v).filter(affectedPred)
-    val newFiles = writeStagedFiles(spark, fs, dir,
+    val staged = stage(spark, dir,
       clusterByKeys(toPhysical(metaAt(spark, dir, v), clean), partitionKeys),
       partitionKeys)
-    writeCommit(fs, dir, v + 1, live.filterNot(underAffected) ++ newFiles,
-      live, carryMeta(spark, dir, v, commitTs, None, Nil, "materialize"))
-    maybeWriteIncStats(spark, dir, v, newFiles, Nil)
+    writeCommit(fs, dir, v + 1, live.filterNot(underAffected) ++ staged.files,
+      live, carryMeta(spark, dir, v, commitTs, None, Nil, "materialize"),
+      staged.sizes)
+    maybeWriteIncStats(spark, dir, v, staged.files, Nil)
     v + 1
   }
 
@@ -5763,16 +5746,9 @@ object Versioned {
       // staged FIRST so its footer row count answers the batch
       // emptiness question on the driver (an empty batch stages a
       // schema-only file, is refused, and leaves nothing behind)
-      val delRel = f"_deletes/v${v + 1}%06d_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      toPhysical(meta0, keys).coalesce(1)
-        .write.mode("errorifexists").parquet(s"$dir/$delRel")
-      val delFiles = stagedParts(fs, dir, delRel)
-      if (delFiles.isEmpty ||
-          countFooterRows(spark, delFiles.map(r => s"$dir/$r").toSeq) == 0L) {
-        fs.delete(new Path(dir, delRel), true)
-        require(requirement = false, "mergeIntoMor got an empty batch")
-      }
+      val tomb = stage(spark, dir, toPhysical(meta0, keys).coalesce(1),
+        sidecar = Some(f"_deletes/v${v + 1}%06d_"))
+      require(!tomb.empty, "mergeIntoMor got an empty batch")
       // resolved CDF actions — the one base scan, feed-enabled only
       def resolveActions(): DataFrame = {
         val snap = snapshotAll(spark, dir, v)
@@ -5814,38 +5790,24 @@ object Versioned {
       // the batch's surviving rows: ordinary appended files (exempt
       // from the tombstone above by their add-version). Emptiness of
       // the insert leg is read off ITS staged write too (an
-      // all-deletes batch stages either nothing or one schema-only
-      // file, deleted here) — no `inserts.isEmpty` job (guide §2.4)
+      // all-deletes batch stages nothing, or one schema-only file
+      // dropped here) — no `inserts.isEmpty` job (guide §2.4)
       val autoRen = autoRenames(meta0, inserts.columns.toSeq, v + 1)
       val writeMeta = meta0.copy(renames = meta0.renames ++ autoRen)
       val (physInserts, pinOut) = conformToPinned(writeMeta,
         toPhysical(writeMeta, inserts), partitionKeys, "merge-mor batch")
-      val stagedIns = {
-        val (shapedIns, rowCapIns) =
-          shapeForWrite(spark, dir, physInserts, partitionKeys)
-        writeStagedFiles(spark, fs, dir, shapedIns, partitionKeys,
-          maxRecordsPerFile = rowCapIns)
-      }
-      val newFiles =
-        if (stagedIns.isEmpty) Nil
-        else if (partitionKeys.isEmpty &&
-            stagedIns.size <= footerLocalMaxFiles(spark) &&
-            countFooterRows(spark, stagedIns.map(r => s"$dir/$r")) == 0L) {
-          // however many empty part files the committer emitted for an
-          // all-deletes batch (not assuming exactly one), zero TOTAL
-          // rows means none is live data — reap them all instead of
-          // committing 0-row files as junk manifest entries
-          stagedIns.foreach(r => fs.delete(new Path(dir, r), false))
-          Nil
-        } else stagedIns
-      val scoped = delFiles.map(p => s"$p @${v + 1}")
+      val (shapedIns, rowCapIns) =
+        shapeForWrite(spark, dir, physInserts, partitionKeys)
+      val ins = stage(spark, dir, shapedIns, partitionKeys, rowCapIns)
+      val newFiles = if (!ins.empty) ins.files else { ins.discard(fs, dir); Nil }
+      val scoped = tomb.files.map(p => s"$p @${v + 1}")
       beforeCommitHook()
       val cm = carryMeta(spark, dir, v, commitTs, txn,
         rawDels ++ scoped, "merge-mor")
       writeCommit(fs, dir, v + 1, live ++ newFiles, live,
         cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
           pinnedSchema = pinOut.orElse(cm.pinnedSchema),
-          idents = advIdents))
+          idents = advIdents), ins.sizes)
       maybeWriteIncStats(spark, dir, v, newFiles, statsCols)
       v + 1
     } finally batch0.unpersist()
@@ -5970,16 +5932,13 @@ object Versioned {
             else {
               conflicts ::= conflict
               confKeyCols = keyCols
+              // the surviving keys re-stage; an empty remainder stages
+              // nothing (its footer says so — no `isEmpty` probe job)
               val remaining = tomb.join(batchKeys,
-                nsCond(tomb, batchKeys), "left_anti")
-              if (!remaining.isEmpty) {
-                val delRel = f"_deletes/v${v + 1}%06d_" +
-                  java.util.UUID.randomUUID().toString.take(8)
-                toPhysical(meta0, remaining.distinct()).coalesce(1)
-                  .write.mode("errorifexists").parquet(s"$dir/$delRel")
-                stagedParts(fs, dir, delRel).foreach { f =>
-                  keptDels += bound.fold(f)(b => s"$f @$b") }
-              }
+                nsCond(tomb, batchKeys), "left_anti").distinct()
+              stage(spark, dir, toPhysical(meta0, remaining).coalesce(1),
+                  sidecar = Some(f"_deletes/v${v + 1}%06d_"))
+                .files.foreach(f => keptDels += bound.fold(f)(b => s"$f @$b"))
             }
           }
           val conflictRows =
@@ -6065,7 +6024,7 @@ object Versioned {
 
       // write new files through the writer-private staging dir — the
       // identification is exact under concurrent writers on the same
-      // partitions (see [[writeStagedFiles]]). The batch is logical;
+      // partitions (see [[stage]]). The batch is logical;
       // files are written PHYSICAL (re-added dropped names get a fresh
       // physical, committed in this manifest's renames)
       val autoRen = autoRenames(meta0, toWrite.columns.toSeq, v + 1)
@@ -6074,8 +6033,8 @@ object Versioned {
         toPhysical(writeMeta, toWrite), partitionKeys, "merge batch")
       val (shapedMg, rowCapMg) =
         shapeForWrite(spark, dir, physWrite, partitionKeys)
-      val newFiles = writeStagedFiles(spark, fs, dir,
-        shapedMg, partitionKeys, maxRecordsPerFile = rowCapMg)
+      val staged = stage(spark, dir, shapedMg, partitionKeys, rowCapMg)
+      val newFiles = staged.files
 
       // COMMIT, with a COMMIT-ONLY retry when a concurrent writer wins
       // the CAS on DISJOINT partitions (append's discipline, extended
@@ -6101,7 +6060,7 @@ object Versioned {
             curLive.filterNot(underTouched) ++ newFiles, curLive,
             cm.copy(cdfInc = autoInc, renames = cm.renames ++ autoRen,
               pinnedSchema = pinOut.orElse(cm.pinnedSchema),
-              idents = advIdents))
+              idents = advIdents), staged.sizes)
           committed = curV + 1
         } catch {
           case e: IllegalArgumentException
@@ -6254,10 +6213,12 @@ object Versioned {
     *   The key is layout only: it is computed, range-partitioned on,
     *   sorted by, and dropped before the write.
     * Returns the committed version (unchanged if nothing to do). */
-  /** Test seam: per-file getFileStatus calls the LAST [[optimize]]
-    * byte-sizing pass made — zero when the stats sidecars' `bytes`
-    * column covered every live file (the metadata-only path). */
-  private[lake] var optimizeFileStatProbes: Int = 0
+  /** Diagnostic counter: per-file getFileStatus calls [[optimize]]'s
+    * byte-sizing pass made — none when the manifests or the stats
+    * sidecars' `bytes` column covered every live file (the
+    * metadata-only path). Thread-safe; readers take deltas of `sum()`. */
+  private[lake] val optimizeFileStatProbes =
+    new java.util.concurrent.atomic.LongAdder
 
   def optimize(spark: SparkSession, dir: String,
       partitionKeys: Seq[String], targetFilesPerPartition: Int = 1,
@@ -6301,7 +6262,6 @@ object Versioned {
     // carry; only files predating both disciplines pay the per-file
     // getFileStatus fallback ([[optimizeFileStatProbes]] counts them;
     // the spec pins zero under coverage).
-    optimizeFileStatProbes = 0
     val manifestBytes: Map[String, Long] =
       if (targetFileSizeBytes.isEmpty) Map.empty
       else fileSizesKnown(spark, dir, v)
@@ -6316,7 +6276,7 @@ object Versioned {
     def fileLen(ref: String): Long =
       manifestBytes.getOrElse(ref,
         statsBytes.getOrElse(SkipIndex.normalizePath(refPath(dir, ref)), {
-          optimizeFileStatProbes += 1
+          optimizeFileStatProbes.increment()
           fs.getFileStatus(new Path(refPath(dir, ref))).getLen
         }))
     val sizesByDir: Map[String, Long] =
@@ -6444,8 +6404,9 @@ object Versioned {
         rows.repartition(nOut)
       case None => clusterByKeys(rows, partitionKeys)
     }
-    val newFiles = writeStagedFiles(spark, fs, dir,
+    val staged = stage(spark, dir,
       toPhysical(meta0opt, clustered), partitionKeys, maxRecs)
+    val newFiles = staged.files
     val replaced = targets.values.flatten.toSet
     // COMMIT-ONLY CAS rebase (the disjoint-merge/append discipline,
     // applied to compaction): losing the manifest race to a writer
@@ -6469,7 +6430,7 @@ object Versioned {
         writeCommit(fs, dir, curV + 1, curLive.filterNot(replaced) ++ newFiles,
           curLive,
           if (stampClusterAt) cmOpt.copy(clusterAt = Some(curV + 1))
-          else cmOpt)
+          else cmOpt, staged.sizes)
         committed = curV + 1
       } catch {
         case e: IllegalArgumentException
@@ -6570,10 +6531,10 @@ object Versioned {
   }
 
   /** One distributed footer read per file, summed — shared by
-    * [[fastRowCount]] and the binpack sizing pass. Ships the SESSION's
-    * Hadoop conf to the tasks (fs.* keys, object-store credentials):
-    * a fresh Configuration() would read local disk fine but fail to
-    * authenticate anywhere real. */
+    * [[fastRowCount]], the binpack sizing pass and [[stage]]. Ships
+    * the SESSION's Hadoop conf to the tasks (fs.* keys, object-store
+    * credentials): a fresh Configuration() would read local disk fine
+    * but fail to authenticate anywhere real. */
   private def countFooterRows(spark: SparkSession, files: Seq[String]): Long = {
     if (files.size <= footerLocalMaxFiles(spark))
       // commit-sized file sets: sequential driver-side footer reads

@@ -358,9 +358,9 @@ object LakeQueries {
   }
 
   /** Memoized CDF-enabled lake whose history crosses a RENAME — the
-    * shared SOURCE for q189 (plain replica) and q191 (versioned
-    * replica): one build, two consumers, so the two queries' oracles
-    * cannot drift. The replicas themselves are per-run. Versions:
+    * shared SOURCE for q189 and q191 ([[renameReplicaAgg]]): one
+    * build, two consumers, so the two queries' oracles cannot drift.
+    * The replicas themselves are per-run. Versions:
     *   v0 init = click/view base                      (ts 1000)
     *   v1 enableChangeFeed(event_id)                  (ts 2000)
     *   v2 merge: id%10==0 -> value*2                  (ts 3000)
@@ -406,6 +406,37 @@ object LakeQueries {
       }
     }
     lake
+  }
+
+  /** The flow q189 and q191 share: a per-run versioned replica under
+    * `target/<memo>_<tag>/replica`, seeded from [[cdfRenameFixture]]'s
+    * v1 and driven across the rename to v5 by `applyTableChanges`;
+    * `checks(source, replica)` runs the query's own `require`s inside
+    * the lock. Returns replica and source aggregated per event type. */
+  private def renameReplicaAgg(s: SparkSession, dir: String, memo: String)(
+      checks: (String, String) => Unit): DataFrame = {
+    val src = cdfRenameFixture(s, dir) // memoized source (v0-v5)
+    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val replica = new File(new File(new File(sys.props("user.dir"), "target"),
+      s"${memo}_$tag"), "replica").getAbsolutePath
+    LakeQueries.synchronized {
+      seedVersioned(s, replica, Versioned.snapshot(s, src, 1L),
+        commitTs = 1500L)                                             // r0
+      val cur = Versioned.applyTableChanges(s, src, replica,
+        Seq("event_type"), sinceV = 1L)
+      require(cur == 5L, s"replica must reach v5, got $cur")
+      checks(src, replica)
+    }
+    def agg(d: DataFrame, tag: String) =
+      d.groupBy("event_type").agg(
+          count(lit(1)).as("row_count"),
+          round(sum("reading"), 4).as("sum_reading"),
+          count_distinct(col("event_id")).as("n_ids"))
+        .withColumn("src", lit(tag))
+    agg(Versioned.snapshot(s, replica), "replica")
+      .unionByName(agg(Versioned.snapshot(s, src), "source"))
+      .select("src", "event_type", "row_count", "sum_reading", "n_ids")
+      .orderBy("src", "event_type")
   }
 
   /** Memoized SOURCE for q188: a table whose properties (mapping,
@@ -3101,33 +3132,12 @@ object LakeQueries {
     // delete; replica == source == recompute, under the NEW name.
     // ---------------------------------------------------------------
     Q("q189_cdf_replica_across_rename",
-      (s, dir) => {
-        val src = cdfRenameFixture(s, dir) // memoized source (v0-v5)
-        val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val root = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_cdfrenvq_$tag")
-        val replica = new File(root, "replica").getAbsolutePath
-        LakeQueries.synchronized {
-          seedVersioned(s, replica, Versioned.snapshot(s, src, 1L))
-          // the batch read serves ONE schema — the range end's
-          val ch = Versioned.changesBetween(s, src, 1L, 5L)
-          require(ch.columns.contains("reading") &&
-            !ch.columns.contains("value"),
-            "pre-rename increments must re-spell to the range-end schema")
-          val cur = Versioned.applyTableChanges(s, src, replica,
-            Seq("event_type"), sinceV = 1L)
-          require(cur == 5L, s"replica must reach v5, got $cur")
-        }
-        def agg(d: DataFrame, tag: String) =
-          d.groupBy("event_type").agg(
-              count(lit(1)).as("row_count"),
-              round(sum("reading"), 4).as("sum_reading"),
-              count_distinct(col("event_id")).as("n_ids"))
-            .withColumn("src", lit(tag))
-        agg(Versioned.snapshot(s, replica), "replica")
-          .unionByName(agg(Versioned.snapshot(s, src), "source"))
-          .select("src", "event_type", "row_count", "sum_reading", "n_ids")
-          .orderBy("src", "event_type")
+      (s, dir) => renameReplicaAgg(s, dir, "graft_cdfrenvq") { (src, _) =>
+        // the batch read serves ONE schema — the range end's
+        val ch = Versioned.changesBetween(s, src, 1L, 5L)
+        require(ch.columns.contains("reading") &&
+          !ch.columns.contains("value"),
+          "pre-rename increments must re-spell to the range-end schema")
       },
       Some("""
         WITH t AS (SELECT event_type, event_id, value FROM events
@@ -3261,39 +3271,14 @@ object LakeQueries {
     // names.
     // ---------------------------------------------------------------
     Q("q191_versioned_replica_rename",
-      (s, dir) => {
-        val src = cdfRenameFixture(s, dir) // the SAME source as q189
-        val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val root = new File(new File(sys.props("user.dir"), "target"),
-          s"graft_vreplq_$tag")
-        val replica = new File(root, "replica").getAbsolutePath
-        LakeQueries.synchronized {
-          val fs = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
-          seedVersioned(s, replica, Versioned.snapshot(s, src, 1L),
-            commitTs = 1500L)                                           // r0
-          val cur = Versioned.applyTableChanges(s, src, replica,
-            Seq("event_type"), sinceV = 1L)
-          require(cur == 5L, s"replica must reach v5, got $cur")
-          // replica history: r1 merge, r2 mirrored rename, r3 merge,
-          // r4 delete-merge — the rename moved ZERO files
-          require(Versioned.filesAt(s, replica, 2L) ==
-            Versioned.filesAt(s, replica, 1L),
-            "the mirrored rename must be metadata-only on the replica")
-          require(Versioned.snapshot(s, replica).columns.contains("reading"),
-            "the replica must speak the new name")
-        }
-        def agg(d: DataFrame, tag: String) =
-          d.groupBy("event_type").agg(
-              count(lit(1)).as("row_count"),
-              round(sum("reading"), 4).as("sum_reading"),
-              count_distinct(col("event_id")).as("n_ids"))
-            .withColumn("src", lit(tag))
-        agg(Versioned.snapshot(s, replica), "replica")
-          .unionByName(agg(Versioned.snapshot(s, src), "source"))
-          .select("src", "event_type", "row_count", "sum_reading", "n_ids")
-          .orderBy("src", "event_type")
+      (s, dir) => renameReplicaAgg(s, dir, "graft_vreplq") { (_, replica) =>
+        // replica history: r1 merge, r2 mirrored rename, r3 merge,
+        // r4 delete-merge — the rename moved ZERO files
+        require(Versioned.filesAt(s, replica, 2L) ==
+          Versioned.filesAt(s, replica, 1L),
+          "the mirrored rename must be metadata-only on the replica")
+        require(Versioned.snapshot(s, replica).columns.contains("reading"),
+          "the replica must speak the new name")
       },
       Some("""
         WITH t AS (SELECT event_type, event_id, value FROM events
@@ -5250,10 +5235,10 @@ object LakeQueries {
           require(fast == slow,
             s"fastRowCount must stay exact under stacked DVs ($fast != $slow)")
           // DESCRIBE DETAIL: bytes from the manifests alone
-          Versioned.sizeStatProbes = 0L
+          val probes0 = Versioned.sizeStatProbes.sum()
           val d = sqlMaint(s, s"DESCRIBE DETAIL gsql.`$lake`")
             .collect().head
-          require(Versioned.sizeStatProbes == 0L,
+          require(Versioned.sizeStatProbes.sum() == probes0,
             "DESCRIBE DETAIL must resolve sizes without per-file FS probes")
           require(d.getLong(4) > 0L, "size_bytes must be positive")
         }

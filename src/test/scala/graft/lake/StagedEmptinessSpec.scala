@@ -6,11 +6,15 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ops.MergeData
 
-/** OPTIMIZATION_r17 §7 pinned: row-level paths read their emptiness /
-  * no-match answer off the STAGED tombstone/DV write's footer instead
-  * of a separate Spark probe job. These tests pin the refusal/no-op
-  * contracts AND that the staging discipline leaves nothing behind —
-  * the new failure mode a staged-first write could introduce. */
+/** Every file a commit adds goes through `Versioned.stage`, which alone
+  * decides what an empty staged write means: row-level paths read their
+  * emptiness / no-match answer off the STAGED data, tombstone or DV
+  * write (a footer row count) instead of a separate Spark probe job,
+  * and a zero-row data file is never committed beside real ones. These
+  * tests pin the refusal/no-op contracts, that the staging discipline
+  * leaves nothing behind, that no commit kind on an UNPARTITIONED lake
+  * publishes a zero-row live file, and (a source guard) that the
+  * staging, emptiness and size plumbing stays in that one place. */
 class StagedEmptinessSpec extends SparkSpec {
 
   private def state(d: DataFrame): Set[(String, Long, Double)] =
@@ -103,6 +107,92 @@ class StagedEmptinessSpec extends SparkSpec {
     assert(v1 == v0 + 1)
     assert(state(Versioned.snapshot(spark, dir)) ==
       Set(("a", 1L, 1.0), ("a", 2L, 2.0)))
+  }
+
+  /** Footer row count of every file live at the current version. */
+  private def liveFileRows(dir: String): Seq[(String, Long)] =
+    Versioned.filesAt(spark, dir).map { r =>
+      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(Versioned.refPath(dir, r)),
+          spark.sparkContext.hadoopConfiguration))
+      try r -> f.getRecordCount finally f.close()
+    }
+
+  test("UNPARTITIONED lake: no commit kind leaves a zero-row live file beside real ones; a delete-everything COW still snapshots with its schema") {
+    // one row per partition, and the FIRST partition's row filtered
+    // away — the shape in which an unpartitioned Spark write's first
+    // task still creates a schema-only part file
+    def batch(rows: Seq[(String, Long, Double, Boolean)]) = {
+      import spark.implicits._
+      val all = ("z", -1L, 0.0, false) +: rows
+      spark.sparkContext.parallelize(all, all.size)
+        .toDF("site", "id", "v", "__delete").filter(col("id") =!= -1L)
+    }
+    val cases: Seq[(String, String => Long)] = Seq(
+      "append" -> (d => Versioned.append(spark, d,
+        batch(Seq(("c", 20L, 2.0, false), ("c", 21L, 3.0, false)))
+          .drop("__delete"), Nil)),
+      "mergeInto" -> (d => Versioned.mergeInto(spark, d,
+        batch(Seq(("a", 1L, 100.0, false), ("a", 2L, 0.0, true),
+          ("c", 7L, 7.0, false))), Nil, Seq("id"))),
+      "updateWhere" -> (d => Versioned.updateWhere(spark, d,
+        col("id") === 1L, Map("v" -> lit(5.0)), Nil)),
+      "mergeIntoMor insert leg" -> (d => Versioned.mergeIntoMor(spark, d,
+        batch(Seq(("a", 2L, 0.0, true), ("c", 7L, 7.0, false))),
+        Nil, Seq("id"))),
+      "overwrite" -> (d => Versioned.overwrite(spark, d,
+        batch(Seq(("c", 20L, 2.0, false), ("c", 21L, 3.0, false)))
+          .drop("__delete"), Nil)))
+    for ((name, commit) <- cases) {
+      val dir = freshLake(Nil)
+      val v = commit(dir)
+      assert(v == 1L, s"$name must commit v1")
+      val empties = liveFileRows(dir).filter(_._2 == 0L)
+      assert(empties.isEmpty, s"$name committed zero-row live files: $empties")
+      noStagingLeft(dir)
+    }
+    val dir = freshLake(Nil)
+    assert(Versioned.deleteWhereCow(spark, dir, lit(true), Nil) == 1L)
+    val snap = Versioned.snapshot(spark, dir)
+    assert(snap.columns.toSet == Set("site", "id", "v") && snap.isEmpty,
+      "a delete-everything commit must still serve the table's schema")
+  }
+
+  test("one staging step: no ThreadLocal or retired staging helper in lake/; errorifexists and countFooterRows only where the staging rule allows") {
+    import scala.jdk.CollectionConverters._
+    val lake = java.nio.file.Paths.get("src/main/scala/graft/lake")
+    assert(java.nio.file.Files.isDirectory(lake),
+      s"run from the repo root, not ${sys.props("user.dir")}")
+    val retired = Seq("ThreadLocal", "stagedParts", "noteStagedSizes",
+      "writeStagedFiles")
+    val offenders = java.nio.file.Files.walk(lake).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { p =>
+        val src = java.nio.file.Files.readString(p)
+        retired.filter(src.contains).map(n => s"$p: $n")
+      }.toSeq
+    assert(offenders.isEmpty, s"commit state travels in Staged values: $offenders")
+    val lines = java.nio.file.Files.readAllLines(
+      lake.resolve("Versioned.scala")).asScala.toSeq
+    // the enclosing top-level member of each line (two-space indent)
+    val defRe =
+      """  (?:private(?:\[\w+\])? )?(?:final )?(?:case )?(?:def|val|var|class|object|trait) (\w+).*""".r
+    val owners = lines.scanLeft("") {
+      case (_, defRe(n)) => n
+      case (cur, _) => cur
+    }.tail
+    def callers(needle: String): Set[String] =
+      lines.zip(owners).collect {
+        case (l, o) if l.contains(needle) && !l.trim.startsWith("*") &&
+          !l.trim.startsWith("//") => o
+      }.toSet
+    val errIfExists = callers("errorifexists")
+    assert(errIfExists.nonEmpty &&
+      errIfExists.subsetOf(Set("stage", "writeSchemaAnchorRaw", "writeChangeInc")),
+      s"errorifexists written outside the staging step: $errIfExists")
+    val footer = callers("countFooterRows(") - "countFooterRows"
+    assert(footer == Set("stage", "fastRowCount", "optimize"),
+      s"countFooterRows called outside stage/fastRowCount/optimize: $footer")
   }
 
   test("uniform footer schema serves the un-evolved read; an evolved lake still merges (null-fills the late column)") {

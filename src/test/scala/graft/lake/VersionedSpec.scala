@@ -42,6 +42,14 @@ class VersionedSpec extends SparkSpec {
       }
   }
 
+  /** How far the diagnostic counter `c` moved while `body` ran. */
+  private def probed[T](c: java.util.concurrent.atomic.LongAdder)(body: => T)
+      : (T, Long) = {
+    val c0 = c.sum()
+    val r = body
+    (r, c.sum() - c0)
+  }
+
   test("versioned merge applies update/delete/insert and commits a new version") {
     val dir = freshLake()
     assert(Versioned.init(spark, dir) == 0L)
@@ -2134,9 +2142,10 @@ class VersionedSpec extends SparkSpec {
           s"sidecar bytes must equal the file's size: ${r.getString(0)}")
       }
     val pre = state(Versioned.snapshot(spark, dir))
-    Versioned.optimize(spark, dir, Seq("site"),
-      targetFileSizeBytes = Some(8L * 1024 * 1024))
-    assert(Versioned.optimizeFileStatProbes == 0,
+    val (_, dirProbes) = probed(Versioned.optimizeFileStatProbes)(
+      Versioned.optimize(spark, dir, Seq("site"),
+        targetFileSizeBytes = Some(8L * 1024 * 1024)))
+    assert(dirProbes == 0,
       "byte sizing must be metadata-only when the sidecars cover the files")
     assert(state(Versioned.snapshot(spark, dir)) == pre)
     // a lake WITHOUT the stats discipline is STILL metadata-only: the
@@ -2147,9 +2156,10 @@ class VersionedSpec extends SparkSpec {
       Versioned.append(spark, dir2,
         df(Seq(("a", 100L + i, i.toDouble)), "site", "id", "v"), Seq("site"))
     }
-    Versioned.optimize(spark, dir2, Seq("site"),
-      targetFileSizeBytes = Some(8L * 1024 * 1024))
-    assert(Versioned.optimizeFileStatProbes == 0,
+    val (_, dir2Probes) = probed(Versioned.optimizeFileStatProbes)(
+      Versioned.optimize(spark, dir2, Seq("site"),
+        targetFileSizeBytes = Some(8L * 1024 * 1024)))
+    assert(dir2Probes == 0,
       "no sidecars, but the manifest #bytes rail must carry the sizing")
     // PRE-RAIL manifests (no #bytes lines) without sidecars: the
     // per-file getFileStatus fallback carries the sizing
@@ -2160,9 +2170,10 @@ class VersionedSpec extends SparkSpec {
         df(Seq(("a", 100L + i, i.toDouble)), "site", "id", "v"), Seq("site"))
     }
     stripManifestSizes(dir2b)
-    Versioned.optimize(spark, dir2b, Seq("site"),
-      targetFileSizeBytes = Some(8L * 1024 * 1024))
-    assert(Versioned.optimizeFileStatProbes > 0,
+    val (_, dir2bProbes) = probed(Versioned.optimizeFileStatProbes)(
+      Versioned.optimize(spark, dir2b, Seq("site"),
+        targetFileSizeBytes = Some(8L * 1024 * 1024)))
+    assert(dir2bProbes > 0,
       "pre-rail manifests and no sidecars -> the getFileStatus " +
         "fallback must carry the sizing")
     // OLD sidecars (written before the bytes column) keep working:
@@ -2182,9 +2193,10 @@ class VersionedSpec extends SparkSpec {
       .filter(col("bytes") =!= -1L).isEmpty,
       "a pre-bytes sidecar reads as unknown, not as an error")
     stripManifestSizes(dir3) // pre-rail manifests too
-    Versioned.optimize(spark, dir3, Seq("site"),
-      targetFileSizeBytes = Some(8L * 1024 * 1024))
-    assert(Versioned.optimizeFileStatProbes > 0,
+    val (_, dir3Probes) = probed(Versioned.optimizeFileStatProbes)(
+      Versioned.optimize(spark, dir3, Seq("site"),
+        targetFileSizeBytes = Some(8L * 1024 * 1024)))
+    assert(dir3Probes > 0,
       "unknown bytes -> fallback, never a wrong plan")
   }
 
@@ -2434,17 +2446,17 @@ class VersionedSpec extends SparkSpec {
       Versioned.filesAt(spark, dir).map(r => r -> fs.getFileStatus(
         new org.apache.hadoop.fs.Path(Versioned.refPath(dir, r))).getLen)
         .toMap
-    Versioned.sizeStatProbes = 0L
-    val sizes = Versioned.fileSizesAt(spark, dir)
-    assert(Versioned.sizeStatProbes == 0L,
+    val (sizes, sizesProbes) =
+      probed(Versioned.sizeStatProbes)(Versioned.fileSizesAt(spark, dir))
+    assert(sizesProbes == 0L,
       "rail-era commits must resolve sizes from the manifests alone")
     assert(sizes == fsTruth(), "manifest-recorded sizes must equal FS truth")
     // vacuum rewrites the oldest retained delta as a checkpoint — the
     // sizes of reaped commits must bake into it, staying metadata-only
     Versioned.vacuum(spark, dir, keepVersions = 2)
-    Versioned.sizeStatProbes = 0L
-    val afterVac = Versioned.fileSizesAt(spark, dir)
-    assert(Versioned.sizeStatProbes == 0L,
+    val (afterVac, afterVacProbes) =
+      probed(Versioned.sizeStatProbes)(Versioned.fileSizesAt(spark, dir))
+    assert(afterVacProbes == 0L,
       "vacuum must bake reaped manifests' sizes into the rewritten checkpoint")
     assert(afterVac == fsTruth())
     // a shallow clone inherits the source's recorded sizes (keyed by
@@ -2453,17 +2465,17 @@ class VersionedSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_sizeclone").toFile,
       "clone").getAbsolutePath
     Versioned.cloneAt(spark, dir, cloneDir)
-    Versioned.sizeStatProbes = 0L
-    val cloneSizes = Versioned.fileSizesAt(spark, cloneDir)
-    assert(Versioned.sizeStatProbes == 0L,
+    val (cloneSizes, cloneSizesProbes) =
+      probed(Versioned.sizeStatProbes)(Versioned.fileSizesAt(spark, cloneDir))
+    assert(cloneSizesProbes == 0L,
       "clone sizes must travel from the source's manifests")
     assert(cloneSizes.values.sum == afterVac.values.sum)
     // PRE-RAIL manifests (stripped #bytes): same totals via the lazy
     // per-file fallback — old lakes still read, the counter says so
     stripManifestSizes(dir)
-    Versioned.sizeStatProbes = 0L
-    val legacy = Versioned.fileSizesAt(spark, dir)
-    assert(Versioned.sizeStatProbes > 0L,
+    val (legacy, legacyProbes) =
+      probed(Versioned.sizeStatProbes)(Versioned.fileSizesAt(spark, dir))
+    assert(legacyProbes > 0L,
       "stripped manifests must fall back per file")
     assert(legacy == fsTruth(), "fallback sizes must equal FS truth")
   }
@@ -2482,12 +2494,12 @@ class VersionedSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val truth = Versioned.filesAt(spark, dir).map(r => r -> fs.getFileStatus(
       new org.apache.hadoop.fs.Path(Versioned.refPath(dir, r))).getLen).toMap
-    Versioned.sizeStatProbes = 0L
+    val probes0 = Versioned.sizeStatProbes.sum()
     val walk0 = Versioned.manifestSizeWalkReads.sum()
     val sizes = Versioned.fileSizesAt(spark, dir)
     val walked = Versioned.manifestSizeWalkReads.sum() - walk0
     assert(sizes == truth, "rolled-up sizes must equal FS truth")
-    assert(Versioned.sizeStatProbes == 0L,
+    assert(Versioned.sizeStatProbes.sum() == probes0,
       "the roll-up must keep DESCRIBE/binpack metadata-only")
     assert(walked <= Versioned.CheckpointInterval + 1,
       s"the size walk must stop at the newest roll-up checkpoint " +
@@ -2517,9 +2529,10 @@ class VersionedSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val truth = Versioned.filesAt(spark, dir).map(r => r -> fs.getFileStatus(
       new org.apache.hadoop.fs.Path(Versioned.refPath(dir, r))).getLen).toMap
-    Versioned.sizeStatProbes = 0L
-    assert(Versioned.fileSizesAt(spark, dir) == truth)
-    assert(Versioned.sizeStatProbes == 0L,
+    val (sizes, probes) =
+      probed(Versioned.sizeStatProbes)(Versioned.fileSizesAt(spark, dir))
+    assert(sizes == truth)
+    assert(probes == 0L,
       "post-restore checkpoints must re-collect resurrected files' " +
         "sizes — the write-side walk may not stop at a stale marker")
   }

@@ -320,9 +320,9 @@ class GraftSqlParserSpec extends SparkSpec {
     // detail BEFORE any maintenance — METADATA-ONLY on a rail-era
     // table: zero getFileStatus fallbacks (the seam counter), and the
     // byte total still equals FS truth
-    Versioned.sizeStatProbes = 0L
+    val probes0 = Versioned.sizeStatProbes.sum()
     val d0 = sqlM(s"DESCRIBE DETAIL ${tbl(dir)}").collect().head
-    assert(Versioned.sizeStatProbes == 0L,
+    assert(Versioned.sizeStatProbes.sum() == probes0,
       "DESCRIBE DETAIL must resolve sizes from the manifests alone")
     assert(d0.getString(0) == "graft" && d0.getString(1) == dir)
     assert(d0.getLong(2) == 3L) // current version
