@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.lake.Versioned
+import graft.lake.{PruneNotNull, PruneRange, Versioned}
 import graft.ops.MergeData
 
 /** Dev scaling harness for the versioned-lake tier (not part of the
@@ -138,7 +138,8 @@ object LakeScaleBench {
     metrics("stats_candidates") = graft.lake.SkipIndex.candidateFilesMulti(
       Versioned.statsAt(spark, lake), preds).size
     metrics("stats_pruned_rows") = time("stats_pruned_read") {
-      Versioned.statsPrunedRead(spark, lake, preds).count()
+      Versioned.prunedScan(spark, lake,
+        preds.map { case (c, lo, hi) => PruneRange(c, lo, hi) }).count()
     }
     metrics("full_filter_rows") = time("full_filter_read") {
       Versioned.snapshot(spark, lake)
@@ -154,8 +155,7 @@ object LakeScaleBench {
     // one front door routing a range + a null test together
     metrics("pruned_scan_rows") = time("pruned_scan") {
       Versioned.prunedScan(spark, lake, Seq(
-        graft.lake.PruneRange("user_id", 2.0, 95.0),
-        graft.lake.PruneNotNull("value"))).count()
+        PruneRange("user_id", 2.0, 95.0), PruneNotNull("value"))).count()
     }
     // BINPACK: 6 small-file append waves onto one partition, then the
     // size-targeted compaction — cost tracks the compacted partition's
@@ -472,8 +472,8 @@ object LakeScaleBench {
     // failure mode rank cells exist to fix
     metrics("z3_cand_event_dense") = cands("event_id", 1.0e6, 1.2e6)
     metrics("z3_pruned_rows") = time("z3_pruned_read") {
-      Versioned.statsPrunedRead(spark, lake,
-        Seq(("user_id", 100.0, 200.0))).count()
+      Versioned.prunedScan(spark, lake,
+        Seq(PruneRange("user_id", 100.0, 200.0))).count()
     }
 
     // ---- round-15: QUANTILE (rank) grid vs the LINEAR grid above ---
@@ -515,8 +515,8 @@ object LakeScaleBench {
     metrics("z3q_cand_event") = qcands("event_id", 6.9e9, 7.2e9)
     metrics("z3q_cand_event_dense") = qcands("event_id", 1.0e6, 1.2e6)
     metrics("z3q_pruned_rows") = time("z3q_pruned_read") {
-      Versioned.statsPrunedRead(spark, lake,
-        Seq(("user_id", 100.0, 200.0))).count()
+      Versioned.prunedScan(spark, lake,
+        Seq(PruneRange("user_id", 100.0, 200.0))).count()
     }
 
     // ---- round-16: the SQL VERB's explicit ZORDER BY ---------------
@@ -546,8 +546,8 @@ object LakeScaleBench {
     metrics("z3sql_cand_event") = scands("event_id", 6.9e9, 7.2e9)
     metrics("z3sql_cand_event_dense") = scands("event_id", 1.0e6, 1.2e6)
     metrics("z3sql_pruned_rows") = time("z3sql_pruned_read") {
-      Versioned.statsPrunedRead(spark, lake,
-        Seq(("user_id", 100.0, 200.0))).count()
+      Versioned.prunedScan(spark, lake,
+        Seq(PruneRange("user_id", 100.0, 200.0))).count()
     }
 
     // ---- round-15: INCREMENTAL liquid clustering -------------------

@@ -129,8 +129,9 @@ object Curation {
     * standard pretraining packing; a straddling doc overflows its pack
     * rather than splitting). Packing is inherently sequential, so the
     * bucket is the parallel unit: ONE shuffle on the bucket, then
-    * independent in-partition windows — no global sort at 100 TB. */
-  /** Output adds (or replaces) `bucket` and `pack_no`; working columns
+    * independent in-partition windows — no global sort at 100 TB.
+    *
+    * Output adds (or replaces) `bucket` and `pack_no`; working columns
     * are `__`-prefixed so caller columns can't collide. */
   def packSequences(df: DataFrame, idCol: String, tokensCol: String,
       maxTokens: Long, nBuckets: Int): DataFrame = {

@@ -30,9 +30,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * surviving file NAMES reach the driver — the same file-count-bounded
   * driver hop as the lake listing itself, independent of bloom size.
   *
-  * Exactness contract (same as [[SkipIndex.prunedRead]]): the pruned
-  * read applies the original predicate as a residual filter, so false
-  * positives cost an extra file open, never a wrong row.
+  * Reads go through [[Versioned.prunedScan]] (this frame as its
+  * `source`), which applies the original predicate as a residual
+  * filter, so false positives cost an extra file open, never a wrong
+  * row.
   */
 object BloomIndex {
 
@@ -139,59 +140,5 @@ object BloomIndex {
             hashes.exists(bf.mightContainLong)
           } => f })
       .collect().toSeq.sorted
-  }
-
-  /** Equality/IN-list pruned read: open only files whose blooms might
-    * hold a probed key, then re-apply `c IN (probes)` as the residual
-    * filter — byte-identical to the full scan + filter. `validate`
-    * guards against a stale index exactly like
-    * [[SkipIndex.prunedReadMulti]]: pruning from an index missing a
-    * rewritten file would silently lose rows, so any drift between the
-    * index's file set and the live listing fails loudly. */
-  def prunedReadIn(spark: SparkSession, dataDir: String, idx: DataFrame,
-      c: String, probes: Seq[Column], validate: Boolean = true): DataFrame = {
-    if (validate) {
-      val indexed = idx.select("file").distinct()
-        .collect().map(r => SkipIndex.normalizePath(r.getString(0))).toSet
-      val current = SkipIndex.dataFilesUnder(spark, dataDir)
-      val missing = current -- indexed
-      val gone = indexed -- current
-      require(missing.isEmpty && gone.isEmpty,
-        s"stale bloom index for $dataDir (" +
-          s"${missing.size} unindexed file(s), ${gone.size} vanished file(s)): " +
-          "rebuild it after rewrites")
-    }
-    val files = candidateFilesIn(spark, idx, c, probes)
-    val residual = col(c).isin(probes: _*)
-    if (files.isEmpty) spark.read.parquet(dataDir).filter(lit(false))
-    else spark.read.option("basePath", dataDir)
-      .parquet(files: _*).filter(residual)
-  }
-
-  /** [[prunedReadIn]] for a lake whose live-file set is EXPLICIT (a
-    * [[Versioned]] manifest): validation compares the index against the
-    * given set instead of the directory listing — which, on a versioned
-    * lake, still holds superseded files kept for time travel. Works for
-    * ANY version's (files, index) pair, so point lookups time-travel. */
-  def prunedReadInFiles(spark: SparkSession, dataDir: String, idx: DataFrame,
-      c: String, probes: Seq[Column], liveFiles: Seq[String],
-      pinned: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    // pinned schema (type widening): see SkipIndex.prunedReadMultiFiles
-    def reader = pinned.fold(spark.read)(s0 => spark.read.schema(s0))
-    val indexed = idx.select("file").distinct()
-      .collect().map(r => SkipIndex.normalizePath(r.getString(0))).toSet
-    val live = liveFiles.map(SkipIndex.normalizePath).toSet
-    require(SkipIndex.describes(spark, indexed, live),
-      s"bloom index does not describe this file set (" +
-        s"${(live -- indexed).size} unindexed, ${(indexed -- live).size} extra): " +
-        "build/refresh the index against this version's manifest")
-    val files = candidateFilesIn(spark, idx, c, probes)
-    val residual = col(c).isin(probes: _*)
-    if (files.isEmpty)
-      reader.option("basePath", dataDir)
-        .parquet(liveFiles: _*).filter(lit(false))
-    else reader.option("basePath", dataDir)
-      .parquet(files: _*).filter(residual)
   }
 }

@@ -231,16 +231,6 @@ object CopyInto {
     (base ++ tail).toSet
   }
 
-  /** Fold committed tail entries into a new checkpoint once the tail
-    * outgrows [[CompactAfter]]. Crash-safe at every step: the new
-    * checkpoint is written CREATE-EXCLUSIVE under its own name (a
-    * concurrent folder loses the create and simply skips), old
-    * checkpoints are deleted only after the new one is complete
-    * (newest-complete-wins makes the overlap harmless), and folded
-    * entries are deleted last (an entry surviving next to the
-    * checkpoint that absorbed it is a no-op union). Only entries at or
-    * below the txn high-water fold — an uncommitted intent stays in
-    * place for the recovery scan. */
   /** [[maybeCompact]] as the POST-COMMIT caller must see it: best
     * effort. By the time compaction runs the batch's append has
     * COMMITTED — a checkpoint race or a transient IO error in ledger
@@ -256,6 +246,16 @@ object CopyInto {
         s"COPY INTO ledger compaction of $dir skipped: ${e.getMessage}")
     }
 
+  /** Fold committed tail entries into a new checkpoint once the tail
+    * outgrows [[CompactAfter]]. Crash-safe at every step: the new
+    * checkpoint is written CREATE-EXCLUSIVE under its own name (a
+    * concurrent folder loses the create and simply skips), old
+    * checkpoints are deleted only after the new one is complete
+    * (newest-complete-wins makes the overlap harmless), and folded
+    * entries are deleted last (an entry surviving next to the
+    * checkpoint that absorbed it is a no-op union). Only entries at or
+    * below the txn high-water fold — an uncommitted intent stays in
+    * place for the recovery scan. */
   private def maybeCompact(spark: SparkSession, fs: FileSystem,
       dir: String): Unit = {
     val hw = Versioned.lastTxn(spark, dir, txnId(dir))

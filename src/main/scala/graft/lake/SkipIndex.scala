@@ -3,6 +3,15 @@ package graft.lake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** One footer-derived index row. Top-level (not nested in the object):
+  * Catalyst's reflective encoder generates Janino code that cannot
+  * compile accessor calls on object-nested case classes
+  * (`SkipIndex$FooterEntry.file()` → codegen compile error +
+  * interpreted fallback on every build). */
+private[lake] case class FooterEntry(
+    file: String, col: String, lo: Double, hi: Double, rows: Long,
+    nulls: Long, bytes: Long)
+
 /** File-level min/max data-skipping index — the "zone map over files"
   * that Delta/Iceberg keep in their metadata layer, as a plain table.
   *
@@ -17,17 +26,10 @@ import org.apache.spark.sql.functions._
   * per-file [lo, hi] boxes tight enough that a point/range predicate
   * skips most files; the index is what makes that skipping cheap. The
   * index is one aggregate over the data (build-time, not query-time)
-  * and stays valid until the next rewrite of a file it covers.
+  * and stays valid until the next rewrite of a file it covers. Reads
+  * go through [[Versioned.prunedScan]] with the index as its `source`
+  * (a plain directory or a versioned table's manifest files alike).
   */
-/** One footer-derived index row. Top-level (not nested in the object):
-  * Catalyst's reflective encoder generates Janino code that cannot
-  * compile accessor calls on object-nested case classes
-  * (`SkipIndex$FooterEntry.file()` → codegen compile error +
-  * interpreted fallback on every build). */
-private[lake] case class FooterEntry(
-    file: String, col: String, lo: Double, hi: Double, rows: Long,
-    nulls: Long, bytes: Long)
-
 object SkipIndex {
 
   /** One row per (file, indexed column): lo, hi, rows. Built with a
@@ -106,7 +108,7 @@ object SkipIndex {
   def buildFromFooterFiles(spark: SparkSession, files0: Seq[String],
       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "buildFromFooters needs at least one column")
-    val files = files0.map(normalize)
+    val files = files0.map(normalizePath)
     require(files.nonEmpty, "buildFromFooterFiles got no files")
     val colsB = cols
     // session Hadoop conf shipped to the footer tasks (fs.* keys,
@@ -249,102 +251,32 @@ object SkipIndex {
       .select("file").collect().map(_.getString(0)).toSeq.sorted
   }
 
-  /** Range-predicate read that only opens surviving files. The residual
-    * filter stays on top (index pruning is file-granular, not exact),
-    * so the result is identical to a full scan + filter — just without
-    * opening the skipped files. An empty candidate list yields an empty
-    * frame with the right schema via an always-false filter on one file
-    * (cheaper than special-casing schema inference).
-    */
-  def prunedRead(spark: SparkSession, dataDir: String, idx: DataFrame,
-      c: String, qLo: Double, qHi: Double): DataFrame =
-    prunedReadMulti(spark, dataDir, idx, Seq((c, qLo, qHi)))
-
-  /** [[prunedRead]] for a conjunction of range predicates.
-    *
-    * `validate` (default on) guards the pruning contract against a
-    * STALE index: pruning reads only the index's surviving files, so an
-    * index built before a rewrite would silently lose the rewrite's
-    * rows. The guard compares the index's file set against the lake's
-    * current listing and fails loudly on any drift — the listing is
-    * driver-side and file-count-bounded, the same work any unversioned
-    * read performs anyway. A lake that is rewritten is a
-    * [[Versioned]] one: refresh its index with [[refreshForFiles]] and
-    * read through [[Versioned.prunedRead]]. */
-  def prunedReadMulti(spark: SparkSession, dataDir: String, idx: DataFrame,
-      preds: Seq[(String, Double, Double)], validate: Boolean = true): DataFrame = {
-    if (validate) {
-      val indexed = idx.select("file").distinct()
-        .collect().map(r => normalize(r.getString(0))).toSet
-      val current = dataFiles(spark, dataDir)
-      val missing = current -- indexed
-      val gone = indexed -- current
-      require(missing.isEmpty && gone.isEmpty,
-        s"stale skip index for $dataDir (" +
-          s"${missing.size} unindexed file(s), ${gone.size} vanished file(s)): " +
-          "rebuild it after rewrites")
-    }
-    val files = candidateFilesMulti(idx, preds)
-    if (files.isEmpty)
-      spark.read.parquet(dataDir).filter(lit(false))
-    else {
-      // basePath recovers Hive partition columns from the surviving
-      // files' directory names (no-op for unpartitioned layouts)
-      val df = spark.read.option("basePath", dataDir).parquet(files: _*)
-      df.filter(residualFor(df, preds))
-    }
-  }
-
-  /** The exact residual predicate for a pruned read. For an INTEGRAL
-    * column the double range is tightened to the equivalent integer
-    * range (x >= 2.5 ⟺ x >= 3 on integers) instead of comparing
-    * through a cast-to-double — semantically identical, but the
-    * cast-free comparison reaches the parquet reader as a pushed
-    * filter, so row-group stats prune INSIDE the surviving files too
-    * (the file-level index already pruned across files). */
-  private def residualFor(df: DataFrame,
-      preds: Seq[(String, Double, Double)]): Column = {
+  /** The exact residual predicate of a pruned read
+    * ([[Versioned.prunedScan]]), over `df`'s columns named by `phys`.
+    * For an INTEGRAL column a range's double bounds are tightened to
+    * the equivalent integer range (x >= 2.5 ⟺ x >= 3 on integers)
+    * instead of comparing through a cast-to-double — semantically
+    * identical, but the cast-free comparison reaches the parquet
+    * reader as a pushed filter, so row-group stats prune INSIDE the
+    * surviving files too (the file-level index already pruned across
+    * files). */
+  private[lake] def residualFor(df: DataFrame, preds: Seq[PrunePred],
+      phys: String => String): Column = {
     import org.apache.spark.sql.types._
-    preds.map { case (c, lo, hi) =>
-      df.schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType
-            if lo > Long.MinValue.toDouble && hi < Long.MaxValue.toDouble =>
-          col(c) >= math.ceil(lo).toLong && col(c) <= math.floor(hi).toLong
-        case _ => col(c) >= lo && col(c) <= hi
+    preds.map { p =>
+      val c = phys(p.column)
+      p match {
+        case PruneRange(_, lo, hi) => df.schema(c).dataType match {
+          case ByteType | ShortType | IntegerType | LongType
+              if lo > Long.MinValue.toDouble && hi < Long.MaxValue.toDouble =>
+            col(c) >= math.ceil(lo).toLong && col(c) <= math.floor(hi).toLong
+          case _ => col(c) >= lo && col(c) <= hi
+        }
+        case PruneIn(_, values) => col(c).isin(values: _*)
+        case _: PruneIsNull => col(c).isNull
+        case _: PruneNotNull => col(c).isNotNull
       }
     }.reduce(_ && _)
-  }
-
-  /** [[prunedReadMulti]] for a lake whose live-file set is EXPLICIT (a
-    * [[Versioned]] manifest): the on-disk listing of such a lake
-    * includes superseded files kept for time travel, so validation
-    * compares the index against the given set instead. Works for ANY
-    * version's (files, index) pair — pruned reads time-travel with the
-    * index that described that version. */
-  def prunedReadMultiFiles(spark: SparkSession, dataDir: String,
-      idx: DataFrame, preds: Seq[(String, Double, Double)],
-      liveFiles: Seq[String],
-      pinned: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    // a PINNED schema (type widening in force) replaces footer
-    // inference: survivor sets can mix pre/post-widen widths, which
-    // plain inference would read under whichever footer it sampled
-    def reader = pinned.fold(spark.read)(s0 => spark.read.schema(s0))
-    val indexed = idx.select("file").distinct()
-      .collect().map(r => normalize(r.getString(0))).toSet
-    val live = liveFiles.map(normalize).toSet
-    require(describes(spark, indexed, live),
-      s"skip index does not describe this file set (" +
-        s"${(live -- indexed).size} unindexed, ${(indexed -- live).size} extra): " +
-        "build/refresh the index against this version's manifest")
-    val files = candidateFilesMulti(idx, preds)
-    if (files.isEmpty)
-      reader.option("basePath", dataDir)
-        .parquet(liveFiles: _*).filter(lit(false))
-    else {
-      val df = reader.option("basePath", dataDir).parquet(files: _*)
-      df.filter(residualFor(df, preds))
-    }
   }
 
   /** Incremental index maintenance after a versioned merge: entries
@@ -392,24 +324,22 @@ object SkipIndex {
     touchedDirs.map(d => if (d.isEmpty) lit(true) else f.contains(s"/$d/"))
       .reduce(_ || _)
 
-  private def normalize(p: String): String = p.replaceFirst("^file:/+", "/")
-
-  /** Shared with [[BloomIndex]] so its staleness guard matches this
-    * file's normalization and listing semantics exactly. */
-  private[graft] def normalizePath(p: String): String = normalize(p)
-  private[lake] def dataFilesUnder(spark: SparkSession, dataDir: String): Set[String] =
-    dataFiles(spark, dataDir)
+  /** The one path spelling every pruning file set compares in (index
+    * `file` columns, manifest paths, listings): no `file:` scheme. */
+  private[graft] def normalizePath(p: String): String =
+    p.replaceFirst("^file:/+", "/")
 
   /** Driver-side recursive listing of the lake's parquet data files
-    * (metadata dirs and marker files excluded), normalized paths. */
-  private def dataFiles(spark: SparkSession, dataDir: String): Set[String] = {
+    * (metadata dirs and marker files excluded), normalized paths — the
+    * live set of a plain directory. */
+  private[lake] def dataFiles(spark: SparkSession, dataDir: String): Set[String] = {
     val root = new org.apache.hadoop.fs.Path(dataDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Set.empty
     PathModel.walk(fs, root).map(_.getPath).collect {
       case f if f.getName.endsWith(".parquet") &&
           !f.toUri.getPath.split('/').exists(s => s.startsWith("_") || s.startsWith(".")) =>
-        normalize(f.toUri.getPath)
+        normalizePath(f.toUri.getPath)
     }.toSet
   }
 }

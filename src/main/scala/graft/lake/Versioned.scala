@@ -1,13 +1,13 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Predicate forms the [[Versioned.prunedScan]] front door routes to
-  * the right commit-time metadata structure: ranges and null tests to
-  * the stats boxes, point/IN probes to the blooms. Column names are
-  * LOGICAL (the mapping layer translates). */
+/** Predicate forms the one pruned read ([[Versioned.prunedScan]] over
+  * [[Versioned.prunedScanCandidates]]) routes to per-file metadata:
+  * ranges and null tests to the stats boxes, point/IN probes to the
+  * blooms. Column names are LOGICAL (the mapping layer translates). */
 sealed trait PrunePred { def column: String }
 /** `column BETWEEN lo AND hi` — routed to min/max stats boxes. */
 final case class PruneRange(column: String, lo: Double, hi: Double)
@@ -19,6 +19,15 @@ final case class PruneIn(column: String, values: Seq[Any]) extends PrunePred
 final case class PruneIsNull(column: String) extends PrunePred
 /** `column IS NOT NULL` — all-null files skip. */
 final case class PruneNotNull(column: String) extends PrunePred
+
+/** The routing core's answer ([[Versioned.prunedScanCandidates]]):
+  * the live files (abs-normalized, sorted) that survive every SERVED
+  * predicate — all of them when `served` is empty — and each predicate
+  * the source cannot serve, with the repair that would let it. A
+  * [[PruneIn]] on a table with no bloom discipline is in neither list:
+  * it prunes nothing and is left to the residual filter. */
+final case class PruneCandidates(files: Seq[String],
+    served: Seq[PrunePred], unserved: Seq[(PrunePred, String)])
 
 /** Versioned (snapshot-isolated) lake: a minimal Delta/Iceberg-style
   * manifest layer over a Hive-partitioned parquet directory.
@@ -206,7 +215,6 @@ object Versioned {
   private[lake] def isDvRef(relPath: String): Boolean =
     relPath.startsWith("_deletes/dv_")
 
-  /** Column names of a deletion-vector parquet. */
   /** ROW TRACKING's engine-owned id column (Delta's row tracking on
     * this protocol): a hidden BIGINT every row of an enabled table
     * carries, assigned by the `#ident` machinery at write time and
@@ -215,6 +223,7 @@ object Versioned {
     * the change feed by it — keyless CDF. */
   private[graft] val RowIdCol = "__graft_rid"
 
+  /** Column names of a deletion-vector parquet. */
   private[lake] val DvFileCol = "file"
   private[lake] val DvPosCol = "pos"
 
@@ -903,27 +912,30 @@ object Versioned {
     * cannot collide with concurrent writers' files. The staging dir is
     * `_`-prefixed, so readers and [[listDataFiles]] never see it.
     *
-    * Emptiness, data mode: a PARTITIONED write creates files only for
-    * rows that exist, so zero files ⇔ zero rows and no footer is read.
-    * An UNPARTITIONED write's first task creates a part file even when
-    * its partition is empty, so each staged file's footer row count is
-    * read on the driver (zero jobs): zero-row files stay in the staging
-    * dir and die with it — never committed beside real files. When
-    * every file is empty, exactly one is kept as the schema carrier a
-    * zero-row version reads its schema from, and `empty` is set:
-    * callers that must not commit it [[Staged.discard]] it.
-    *
     * SIDECAR mode (`sidecar = Some(prefix)`): a tombstone or deletion
-    * vector written under a fresh `prefix<nonce>` directory (callers
-    * `coalesce(1)` a key list). A write that leaves no parquet file is
-    * an FS/committer fault, never a no-match (an empty write stages a
-    * schema-only file) — refused loudly. Zero TOTAL footer rows means
-    * nothing matched: the directory is deleted and `empty` is set. */
+    * vector written under a fresh `prefix<nonce>` directory (a key
+    * list is `coalesce(1)`d; a deletion vector keeps its scan's
+    * partitions, one file each). A write that leaves no parquet file
+    * is an FS/committer fault, never a no-match (an empty write stages
+    * a schema-only file) — refused loudly.
+    *
+    * ONE zero-row rule for both modes: a file is kept only when it
+    * holds rows. A PARTITIONED data write creates files only for rows
+    * that exist, so no footer is read; every other write (an
+    * unpartitioned write's first task creates a part file even when
+    * its partition is empty, and so does every empty task of a
+    * sidecar) reads each staged file's footer row count on the driver
+    * (zero jobs). Zero-row files are deleted, never committed beside
+    * real ones. When no file holds rows, `empty` is set: a sidecar
+    * leaves nothing behind, and a data write keeps exactly one file as
+    * the schema carrier a zero-row version reads its schema from —
+    * callers that must not commit it [[Staged.discard]] it. */
   private def stage(spark: SparkSession, dir: String, df: DataFrame,
       partitionKeys: Seq[String] = Nil, maxRecordsPerFile: Option[Long] = None,
       sidecar: Option[String] = None): Staged = {
     val fs = fsOf(spark, dir)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
+    def holdsRows(p: Path) = countFooterRows(spark, Seq(p.toString)) > 0L
     sidecar match {
       case Some(prefix) =>
         val rel = prefix + nonce
@@ -933,10 +945,10 @@ object Versioned {
           .map(st => s"$rel/${st.getPath.getName}" -> st.getLen)
         require(parts.nonEmpty,
           s"staging write produced no parquet files under $rel")
-        if (countFooterRows(spark, parts.map(p => s"$dir/${p._1}")) == 0L) {
-          fs.delete(new Path(dir, rel), true)
-          Staged(Nil, Map.empty, empty = true)
-        } else Staged(parts.map(_._1), parts.toMap, empty = false)
+        val (kept, zero) = parts.partition(p => holdsRows(new Path(dir, p._1)))
+        if (kept.isEmpty) fs.delete(new Path(dir, rel), true)
+        else zero.foreach(p => fs.delete(new Path(dir, p._1), false))
+        Staged(kept.map(_._1), kept.toMap, empty = kept.isEmpty)
       case None =>
         val staging = new Path(dir, "_staging_" + nonce)
         try {
@@ -947,9 +959,7 @@ object Versioned {
           afterDataWriteHook()
           val withRows =
             if (partitionKeys.nonEmpty) listed
-            else listed.filter { case (rel, _) =>
-              countFooterRows(spark, Seq(new Path(staging, rel).toString)) > 0L
-            }
+            else listed.filter(p => holdsRows(new Path(staging, p._1)))
           val kept = if (withRows.nonEmpty) withRows else listed.take(1)
           kept.foreach { case (rel, _) =>
             val src = new Path(staging, rel)
@@ -2338,10 +2348,6 @@ object Versioned {
     rel
   }
 
-  /** The anchor in force at `metaV`: the `#anchor` rail (foreign-ref
-    * aware — a clone's anchor lives under its source), else the
-    * legacy newest `anchor_v*` at or below `metaV`, else the
-    * un-versioned `anchor`. */
   /** Read a schema anchor. An anchor is an EMPTY parquet file that
     * exists only for its schema, so the fast path reads the Spark
     * schema JSON out of the footer key-value metadata on the DRIVER
@@ -2466,6 +2472,10 @@ object Versioned {
       Some(parseFooterSchema(json))
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** The anchor in force at `metaV`: the `#anchor` rail (foreign-ref
+    * aware — a clone's anchor lives under its source), else the
+    * legacy newest `anchor_v*` at or below `metaV`, else the
+    * un-versioned `anchor`. */
   private def anchorDf(spark: SparkSession, dir: String,
       metaV: Long): Option[DataFrame] = {
     metaAt(spark, dir, metaV).anchorRef.foreach { ref =>
@@ -3127,21 +3137,6 @@ object Versioned {
     metaAt(spark, dir, v).chks.toSeq.sortBy(_._1).toDF("name", "expr")
   }
 
-  /** Blind APPEND commit — the event-ingest write at 100 TB: rows land
-    * as NEW files in their partitions (no resolution, no rewrite, no
-    * read of existing data), and the commit is a delta manifest of
-    * `+file` lines bounded by the batch. Schema may evolve additively
-    * (new columns null-fill on read via mergeSchema, as in merge
-    * evolution). Supports the same `txn` idempotence marker as
-    * [[mergeInto]] (a replaying streaming sink appends exactly once
-    * per batch) and the commit-time stats discipline (explicit
-    * `statsCols` or inherited).
-    *
-    * Refused when the batch's keys collide with PENDING equality
-    * deletes — without Iceberg sequence numbers the tombstone's
-    * anti-join would silently hide the fresh rows; use [[mergeInto]]
-    * (which materializes the conflict) instead. Returns the committed
-    * version. */
   /** INSERT OVERWRITE: ONE commit whose live set is exactly `rows` —
     * the full-replace write (reference `merge-data.py`'s regenerate
     * mode, Delta's `mode("overwrite")`), on the protocol: old files
@@ -3175,9 +3170,6 @@ object Versioned {
       val (batch, advIdents) = applyIdentity(spark, meta0,
         applyGenerated(spark, meta0,
           applyDefaults(meta0, batch0), "overwrite batch"), "overwrite batch")
-      require(!batch.isEmpty,
-        "overwrite got an empty batch — an empty live set would strand " +
-          "readers; express deletions with deleteWhere/mergeInto")
       enforceConstraints(spark, dir, v, batch, "overwrite batch")
       val autoRen = autoRenames(meta0, batch.columns.toSeq, v + 1)
       val writeMeta = meta0.copy(renames = meta0.renames ++ autoRen)
@@ -3186,6 +3178,13 @@ object Versioned {
       val (shapedOw, rowCapOw) =
         shapeForWrite(spark, dir, physBatch, partitionKeys)
       val staged = stage(spark, dir, shapedOw, partitionKeys, rowCapOw)
+      // emptiness is read off the staged write, as in [[append]]
+      if (staged.empty) {
+        staged.discard(fs, dir)
+        require(requirement = false,
+          "overwrite got an empty batch — an empty live set would strand " +
+            "readers; express deletions with deleteWhere/mergeInto")
+      }
       val autoInc = meta0.cdf.map { key =>
         writeChangeInc(spark, dir, rowDiff(snapshotAll(spark, dir, v),
           batch, key))
@@ -3295,6 +3294,21 @@ object Versioned {
     layoutKeys(metaAt(spark, dir, v), filesAt(spark, dir, v))
   }
 
+  /** Blind APPEND commit — the event-ingest write at 100 TB: rows land
+    * as NEW files in their partitions (no resolution, no rewrite, no
+    * read of existing data), and the commit is a delta manifest of
+    * `+file` lines bounded by the batch. Schema may evolve additively
+    * (new columns null-fill on read via mergeSchema, as in merge
+    * evolution). Supports the same `txn` idempotence marker as
+    * [[mergeInto]] (a replaying streaming sink appends exactly once
+    * per batch) and the commit-time stats discipline (explicit
+    * `statsCols` or inherited).
+    *
+    * Refused when the batch's keys collide with PENDING equality
+    * deletes — without Iceberg sequence numbers the tombstone's
+    * anti-join would silently hide the fresh rows; use [[mergeInto]]
+    * (which materializes the conflict) instead. Returns the committed
+    * version. */
   def append(spark: SparkSession, dir: String, rows: DataFrame,
       partitionKeys: Seq[String],
       txn: Option[(String, Long)] = None,
@@ -3559,7 +3573,7 @@ object Versioned {
             pinnedSchema = pinOut.orElse(meta0.pinnedSchema)), staged.sizes)
       // the backfill REPLACES every live file: without extending the
       // stats/bloom sidecars to the new files, established coverage
-      // breaks at this version forever (statsPrunedRead throws,
+      // breaks at this version forever (prunedScan refuses,
       // metadataAggregate and optimizeWrite calibration silently bail
       // until a manual re-backfill) — the same discipline every other
       // full-rewrite commit path follows
@@ -3852,8 +3866,8 @@ object Versioned {
   // extends coverage for free (Iceberg's "stats are part of the
   // commit", minus any separate index build or refresh discipline).
   // [[statsAt]] resolves newest-full + incremental tail — the same
-  // checkpoint+delta shape as the manifest — and [[statsPrunedRead]]
-  // feeds it straight to the skip-index pruning machinery. Data files
+  // checkpoint+delta shape as the manifest — and [[prunedScan]]
+  // routes range and null predicates straight to it. Data files
   // are immutable, so a file's stats never change and any sidecar
   // holding them is authoritative.
 
@@ -3881,12 +3895,6 @@ object Versioned {
     }.sorted
   }
 
-  /** The ref-keyed sidecar rows covering exactly version `v`'s live
-    * files (newest full at or below `v` + incremental tail, deduped —
-    * a file's sidecar rows are immutable facts about an immutable
-    * file). None when the lake has no `kind` sidecar at or below `v`;
-    * refuses on broken coverage (a live file missing, or per-file
-    * column sets diverging). */
   /** Byte budget under which sidecar / deletion-vector METADATA
     * parquet is read on the DRIVER (zero Spark jobs; [[LocalParquet]])
     * instead of through `spark.read` — the Delta discipline: the log
@@ -3993,6 +4001,12 @@ object Versioned {
     spark.createDataFrame(rws, schema)
   }
 
+  /** The ref-keyed sidecar rows covering exactly version `v`'s live
+    * files (newest full at or below `v` + incremental tail, deduped —
+    * a file's sidecar rows are immutable facts about an immutable
+    * file). None when the lake has no `kind` sidecar at or below `v`;
+    * refuses on broken coverage (a live file missing, or per-file
+    * column sets diverging). */
   private def resolveSidecarRefs(spark: SparkSession, dir: String,
       kind: String, v: Long): Option[DataFrame] = {
     resolveSidecarRowsLocal(spark, dir, kind, v) match {
@@ -4109,9 +4123,6 @@ object Versioned {
           .collect().map(_.getString(0)).toSeq.sorted)
         .getOrElse(Nil))
 
-  /** One distributed footer pass over `refs`, written as a sidecar
-    * keyed by manifest REF (relative path — the lake can move; foreign
-    * clone refs read at their own root). */
   /** File count at or under which a commit's footer pass runs on the
     * DRIVER (sequential footer reads + one [[LocalParquet]] parquet
     * write — zero Spark jobs) instead of as a distributed job. A
@@ -4122,6 +4133,9 @@ object Versioned {
     try spark.conf.get("spark.graft.footer.localMaxFiles", "64").toInt
     catch { case _: NumberFormatException => 0 }
 
+  /** One distributed footer pass over `refs`, written as a sidecar
+    * keyed by manifest REF (relative path — the lake can move; foreign
+    * clone refs read at their own root). */
   private def writeStatsSidecar(spark: SparkSession, dir: String,
       dst: Path, refs: Seq[String], cols: Seq[String]): Unit = {
     if (refs.size <= footerLocalMaxFiles(spark)) {
@@ -4219,46 +4233,34 @@ object Versioned {
     v
   }
 
+  /** The `kind` sidecar rows live at `v`, keyed by full path (`file` =
+    * the abs-normalized path of [[filesAt]]'s entries) — None when the
+    * lake has no `kind` discipline at or below `v`; refuses on broken
+    * coverage. */
+  private def sidecarAt(spark: SparkSession, dir: String, kind: String,
+      v: Long): Option[DataFrame] =
+    resolveSidecarRefs(spark, dir, kind, v).map { raw =>
+      val mapDf = refAbsMap(spark, dir, filesAt(spark, dir, v))
+      val cols =
+        if (kind == "stats") Seq("col", "lo", "hi", "rows", "nulls", "bytes")
+        else Seq("col", "bloom", "rows")
+      raw.join(mapDf, raw("file") === mapDf("__ref"))
+        .select(mapDf("__abs").as("file") +: cols.map(c => raw(c).as(c)): _*)
+    }
+
   /** The stats index live at `version` — (file = full path, col, lo,
-    * hi, rows) for exactly [[filesAt]]'s files, resolved from the
-    * newest full sidecar at or below the version plus its incremental
-    * tail. Metadata-only (sidecar parquet reads; zero data files or
-    * footers touched). Time-travels: version N's stats keep serving N
-    * after later commits. Refuses unless every live file is covered on
-    * a uniform column set — [[backfillStats]] establishes or repairs. */
+    * hi, rows, nulls, bytes) for exactly [[filesAt]]'s files, resolved
+    * from the newest full sidecar at or below the version plus its
+    * incremental tail. Metadata-only (sidecar parquet reads; zero data
+    * files or footers touched). Time-travels: version N's stats keep
+    * serving N after later commits. Refuses unless every live file is
+    * covered on a uniform column set — [[backfillStats]] establishes
+    * or repairs. */
   def statsAt(spark: SparkSession, dir: String, version: Long = -1L): DataFrame = {
     val v = if (version >= 0) version else currentVersion(spark, dir)
-    val raw = resolveSidecarRefs(spark, dir, "stats", v).getOrElse(
+    sidecarAt(spark, dir, "stats", v).getOrElse(
       throw new IllegalArgumentException(
         s"no stats sidecar at or below version $v of $dir: backfillStats() first"))
-    val mapDf = refAbsMap(spark, dir, filesAt(spark, dir, v))
-    raw.join(mapDf, raw("file") === mapDf("__ref"))
-      .select(mapDf("__abs").as("file"), raw("col").as("col"),
-        raw("lo").as("lo"), raw("hi").as("hi"), raw("rows").as("rows"),
-        raw("nulls").as("nulls"), raw("bytes").as("bytes"))
-  }
-
-  /** Multi-predicate pruned read served ENTIRELY from commit-time
-    * stats — no index build, no refresh, no extra pass ever ran: the
-    * boxes were written by the commits that created the files. Same
-    * exactness contract as [[prunedRead]] (pruning only skips files;
-    * the residual filter and MOR tombstones apply on the survivors). */
-  def statsPrunedRead(spark: SparkSession, dir: String,
-      preds: Seq[(String, Double, Double)],
-      version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-    val files = filesAt(spark, dir, v)
-    require(!files.exists(refIsForeign),
-      "pruned reads need a single basePath: OPTIMIZE the clone first " +
-        "to localize its foreign file references")
-    // predicates arrive in LOGICAL names; pruning and the residual
-    // filter run physical, the mapping applies on the survivors
-    val m = metaAt(spark, dir, v)
-    val predsP = preds.map { case (c, lo, hi) =>
-      (m.renames.getOrElse(c, c), lo, hi) }
-    applyColumnMapping(m, applyTombstones(spark, dir, v,
-      SkipIndex.prunedReadMultiFiles(spark, dir, statsAt(spark, dir, v),
-        predsP, files.map(f => s"$dir/$f"), pinned = m.pinned)))
   }
 
   /** Build + write a bloom sidecar for `refs` (one scan of exactly
@@ -4288,7 +4290,7 @@ object Versioned {
     * scan builds a per-file bloom over `cols` for every file live at
     * `version`, stored as that version's FULL bloom sidecar; every
     * later commit extends coverage for its own new files with the
-    * same parameters, so [[bloomPrunedReadIn]] serves IN/point
+    * same parameters, so [[prunedScan]] serves IN/point
     * lookups with NO index build or refresh step ever again. */
   def backfillBlooms(spark: SparkSession, dir: String, cols: Seq[String],
       expectedPerFile: Long = 100000L, fpp: Double = 0.01,
@@ -4308,35 +4310,9 @@ object Versioned {
     * incremental tail. Time-travels; refuses on broken coverage. */
   def bloomsAt(spark: SparkSession, dir: String, version: Long = -1L): DataFrame = {
     val v = if (version >= 0) version else currentVersion(spark, dir)
-    val raw = resolveSidecarRefs(spark, dir, "bloom", v).getOrElse(
+    sidecarAt(spark, dir, "bloom", v).getOrElse(
       throw new IllegalArgumentException(
         s"no bloom sidecar at or below version $v of $dir: backfillBlooms() first"))
-    val mapDf = refAbsMap(spark, dir, filesAt(spark, dir, v))
-    raw.join(mapDf, raw("file") === mapDf("__ref"))
-      .select(mapDf("__abs").as("file"), raw("col").as("col"),
-        raw("bloom").as("bloom"), raw("rows").as("rows"))
-  }
-
-  /** Equality/IN-list pruned read served ENTIRELY from commit-time
-    * blooms — the [[statsPrunedRead]] twin for point lookups on
-    * unclustered high-cardinality keys (where min/max boxes prune
-    * nothing): no build, no refresh, the filters were written by the
-    * commits that created the files. Residual IN filter + MOR
-    * tombstones apply on the survivors — false positives cost a file
-    * open, never a wrong row. */
-  def bloomPrunedReadIn(spark: SparkSession, dir: String, c: String,
-      probes: Seq[org.apache.spark.sql.Column],
-      version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-    val files = filesAt(spark, dir, v)
-    require(!files.exists(refIsForeign),
-      "pruned reads need a single basePath: OPTIMIZE the clone first " +
-        "to localize its foreign file references")
-    val m = metaAt(spark, dir, v)
-    applyColumnMapping(m, applyTombstones(spark, dir, v,
-      BloomIndex.prunedReadInFiles(spark, dir, bloomsAt(spark, dir, v),
-        m.renames.getOrElse(c, c), probes, files.map(f => s"$dir/$f"),
-        pinned = m.pinned)))
   }
 
   /** Metadata-only MIN/MAX of a tracked column at a version, served
@@ -4780,138 +4756,183 @@ object Versioned {
     } catch { case _: IllegalArgumentException => None } // coverage bail
   }
 
-  /** ONE pruning front door — routes each predicate to the metadata
-    * structure that can answer it, intersects the per-predicate
-    * survivor file sets, reads only the survivors, and re-applies
-    * every predicate exactly as a residual filter (pruning only SKIPS
-    * files — false survivors cost a file open, never a wrong row).
-    * Routing:
-    *   - [[PruneRange]]     → commit-time stats boxes ([[statsAt]])
-    *   - [[PruneIsNull]]    → stats null counts (files with zero
-    *     nulls are skipped; unknown counts survive)
-    *   - [[PruneNotNull]]   → stats null counts (all-null files skip)
-    *   - [[PruneIn]]        → commit-time blooms ([[bloomsAt]]) when
-    *     the column carries them; otherwise unpruned (residual only)
-    * Stats-routed predicates refuse on untracked columns (a missing
-    * column would otherwise silently prune everything); columns
-    * translate through the column mapping; MOR tombstones apply on
-    * the survivors; the result reads under logical names. */
-  def prunedScan(spark: SparkSession, dir: String, preds: Seq[PrunePred],
-      version: Long = -1L): DataFrame = {
-    require(preds.nonEmpty, "prunedScan needs at least one predicate")
+  // ---- the one pruned read ----------------------------------------
+  // Every file-skipping read goes through ONE routing core
+  // ([[prunedScanCandidates]]) and ONE reader on top of it
+  // ([[prunedScan]]), whatever serves the per-file metadata: the
+  // commit-time stats/bloom sidecars, or a caller-built SkipIndex /
+  // BloomIndex frame (the only option on a plain parquet directory).
+  // The planner hooks (the `graft` source's file index, SQL DELETE's
+  // routing estimate) call the core and drop what it cannot serve;
+  // library reads refuse on it.
+
+  /** What a pruned read prunes against: the version (-1 for a plain
+    * directory), its meta, its manifest refs and its live files as
+    * abs-normalized paths (the directory listing on a plain dir). */
+  private final case class PruneTarget(v: Long, meta: CommitMeta,
+      refs: Seq[String], live: Seq[String])
+
+  private def pruneTarget(spark: SparkSession, dir: String,
+      source: Option[DataFrame], version: Long): PruneTarget = {
     val v = if (version >= 0) version else currentVersion(spark, dir)
-    val files = filesAt(spark, dir, v)
-    require(!files.exists(refIsForeign),
+    if (v >= 0) {
+      val refs = filesAt(spark, dir, v)
+      PruneTarget(v, metaAt(spark, dir, v), refs,
+        refs.map(r => SkipIndex.normalizePath(refPath(dir, r))))
+    } else {
+      require(source.nonEmpty, s"no manifest in $dir: a plain directory " +
+        "prunes through a caller-built SkipIndex or BloomIndex")
+      PruneTarget(-1L, CommitMeta.empty, Nil,
+        SkipIndex.dataFiles(spark, dir).toSeq.sorted)
+    }
+  }
+
+  /** THE routing core: the live files at `version` that can hold rows
+    * matching every predicate, answered from per-file metadata
+    * without opening a data file.
+    *
+    * `source` is None for the commit-time sidecars ([[statsAt]],
+    * [[bloomsAt]]; each resolved at most once per call, and only when
+    * a predicate needs it) or a caller-built index frame, recognised
+    * by its columns: a `bloom` column makes it a [[BloomIndex]],
+    * otherwise it is a [[SkipIndex]]. Routing:
+    *   - [[PruneRange]]   → the stats boxes
+    *   - [[PruneIsNull]]  → stats null counts (zero-null files skip;
+    *     unknown counts survive)
+    *   - [[PruneNotNull]] → stats null counts (all-null files skip)
+    *   - [[PruneIn]]      → the blooms; on sidecars with no bloom
+    *     discipline at all it is left to the residual filter.
+    * A predicate the source cannot serve — an untracked column, a
+    * missing or broken sidecar, the wrong index kind — is returned
+    * UNSERVED with the repair named, never pruned on (an untracked
+    * column would match no file and silently empty the read).
+    * Columns are LOGICAL and translate through the column mapping:
+    * sidecars and footer-built indexes key by physical name. A `dir`
+    * without a manifest is a plain parquet directory: its live set is
+    * the listing, and `source` must be an index. */
+  def prunedScanCandidates(spark: SparkSession, dir: String,
+      preds: Seq[PrunePred], source: Option[DataFrame] = None,
+      version: Long = -1L): PruneCandidates =
+    routePreds(spark, dir, preds, source,
+      pruneTarget(spark, dir, source, version))
+
+  private def routePreds(spark: SparkSession, dir: String,
+      preds: Seq[PrunePred], source: Option[DataFrame],
+      t: PruneTarget): PruneCandidates = {
+    def phys(c: String) = t.meta.renames.getOrElse(c, c)
+    val bloomIdx = source.exists(_.columns.contains("bloom"))
+    def why(e: IllegalArgumentException) =
+      e.getMessage.stripPrefix("requirement failed: ")
+    def sidecar(kind: String): Either[String, Option[DataFrame]] =
+      try Right(sidecarAt(spark, dir, kind, t.v))
+      catch { case e: IllegalArgumentException => Left(why(e)) }
+    // Left = why the source cannot serve; Right(None) = no blooms at all
+    lazy val blooms: Either[String, Option[DataFrame]] = source match {
+      case None => sidecar("bloom")
+      case Some(idx) if bloomIdx => Right(Some(idx))
+      case Some(_) => Left("a skip index serves no IN predicate: probe " +
+        "a BloomIndex")
+    }
+    // (file, lo, hi, rows, nulls) per predicated column, collected ONCE
+    lazy val boxes: Either[String, Map[String, Seq[Row]]] = (source match {
+      case None => sidecar("stats").flatMap(_.toRight(
+        s"no stats sidecar at or below version ${t.v} of $dir: " +
+          "backfillStats() first"))
+      case Some(_) if bloomIdx => Left("a bloom index serves only IN " +
+        "predicates: prune ranges and null tests with a SkipIndex")
+      case Some(idx) => Right(idx)
+    }).map { s =>
+      val cols = preds.filterNot(_.isInstanceOf[PruneIn])
+        .map(p => phys(p.column)).distinct
+      val nulls = if (s.columns.contains("nulls")) col("nulls") else lit(-1L)
+      s.filter(col("col").isin(cols: _*))
+        .select(col("col"), col("file"), col("lo"), col("hi"),
+          col("rows"), coalesce(nulls, lit(-1L)))
+        .collect().toSeq.groupBy(_.getString(0))
+    }
+    val untracked =
+      if (source.isEmpty) s"$dir's stats: backfillStats() with it"
+      else "this skip index: rebuild it with the column"
+    // Spark's double ordering: NaN sorts last, -0.0 equals 0.0
+    def cmp(a: Double, b: Double) =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+    def keeps(p: PrunePred, r: Row): Boolean = p match {
+      // a null box (an all-null column in a scan-built index) holds
+      // no value in any range
+      case PruneRange(_, lo, hi) => !r.isNullAt(2) && !r.isNullAt(3) &&
+        cmp(r.getDouble(3), lo) >= 0 && cmp(r.getDouble(2), hi) <= 0
+      case _: PruneIsNull => r.getLong(5) != 0L
+      case _: PruneNotNull => r.getLong(5) < r.getLong(4) || r.getLong(5) < 0L
+      case _: PruneIn => true // routed to the blooms, never here
+    }
+    val answers: Seq[(PrunePred, Either[String, Option[Set[String]]])] =
+      preds.map { p => p -> (p match {
+        case PruneIn(c, values) => blooms.flatMap {
+          case None => Right(None)
+          case Some(b) =>
+            try Right(Some(BloomIndex.candidateFilesIn(spark, b, phys(c),
+                values.map(lit(_))).map(SkipIndex.normalizePath).toSet))
+            catch { case e: IllegalArgumentException => Left(why(e)) }
+        }
+        case _ => boxes.flatMap(_.get(phys(p.column)) match {
+          case None => Left(s"column ${p.column} is not tracked by $untracked")
+          case Some(rows) => Right(Some(rows.filter(keeps(p, _))
+            .map(r => SkipIndex.normalizePath(r.getString(1))).toSet))
+        })
+      })}
+    val served = answers.collect { case (p, Right(Some(s))) => (p, s) }
+    PruneCandidates(
+      t.live.filter(f => served.forall(_._2.contains(f))).sorted,
+      served.map(_._1),
+      answers.collect { case (p, Left(why)) => (p, why) })
+  }
+
+  /** THE pruned read: opens only the files [[prunedScanCandidates]]
+    * keeps and re-applies every predicate as the exact residual filter
+    * ([[SkipIndex.residualFor]] — pruning only SKIPS files; a false
+    * survivor costs a file open, never a wrong row). Refuses when any
+    * predicate is unserved (naming the repair), when a versioned
+    * table still holds foreign clone refs (one basePath), and when a
+    * caller-built index does not describe the live set — a stale
+    * index would silently lose the rows of files it never saw.
+    * Validation is against the MANIFEST on a versioned table (the
+    * directory still holds superseded files), so version N read with
+    * N's index time-travels; there the survivors read under the
+    * pinned schema, pending MOR tombstones and deletion vectors apply
+    * on top, and the result reads under logical names. */
+  def prunedScan(spark: SparkSession, dir: String, preds: Seq[PrunePred],
+      source: Option[DataFrame] = None, version: Long = -1L): DataFrame = {
+    require(preds.nonEmpty, "prunedScan needs at least one predicate")
+    val t = pruneTarget(spark, dir, source, version)
+    require(!t.refs.exists(refIsForeign),
       "pruned reads need a single basePath: OPTIMIZE the clone first " +
         "to localize its foreign file references")
-    val m = metaAt(spark, dir, v)
-    def phys(c: String) = m.renames.getOrElse(c, c)
-    val surviving = prunedScanCandidates(spark, dir, preds, v)
-    val residual = preds.map {
-      case PruneRange(c, lo, hi) =>
-        col(phys(c)) >= lo && col(phys(c)) <= hi
-      case PruneIsNull(c) => col(phys(c)).isNull
-      case PruneNotNull(c) => col(phys(c)).isNotNull
-      case PruneIn(c, values) => col(phys(c)).isin(values: _*)
-    }.reduce(_ && _)
-    // pinned schema (type widening): the survivor set can mix widths
-    val rd = m.pinned.fold(spark.read)(s0 => spark.read.schema(s0))
-    val base =
-      if (surviving.isEmpty)
-        rd.option("basePath", dir)
-          .parquet(files.map(f => s"$dir/$f"): _*).filter(lit(false))
-      else rd.option("basePath", dir)
-        .parquet(surviving: _*).filter(residual)
-    applyColumnMapping(m, applyTombstones(spark, dir, v, base))
-  }
-
-  /** The surviving file set [[prunedScan]] would read (the routing
-    * core, shared) — also introspection for pruning assertions and
-    * EXPLAIN-style tooling. */
-  def prunedScanCandidates(spark: SparkSession, dir: String,
-      preds: Seq[PrunePred], version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-    val m = metaAt(spark, dir, v)
-    def phys(c: String) = m.renames.getOrElse(c, c)
-    val all = filesAt(spark, dir, v)
-      .map(f => SkipIndex.normalizePath(refPath(dir, f))).toSet
-    lazy val stats = {
-      val s = statsAt(spark, dir, v)
-      // an untracked column would yield an EMPTY candidate set and
-      // silently prune everything — refuse with the repair named
-      val tracked = s.select("col").distinct()
-        .collect().map(_.getString(0)).toSet
-      preds.foreach {
-        case _: PruneIn => ()
-        case p => require(tracked.contains(phys(p.column)),
-          s"column ${p.column} is not tracked by $dir's stats: " +
-            "backfillStats() with it")
-      }
-      s
+    source.foreach { idx =>
+      val kind = if (idx.columns.contains("bloom")) "bloom" else "skip"
+      val indexed = idx.select("file").distinct().collect()
+        .map(r => SkipIndex.normalizePath(r.getString(0))).toSet
+      val live = t.live.toSet
+      require(SkipIndex.describes(spark, indexed, live),
+        s"stale $kind index for $dir: it does not describe the live file " +
+          s"set (${(live -- indexed).size} unindexed, " +
+          s"${(indexed -- live).size} extra): build or refresh it against " +
+          (if (t.v >= 0) s"version ${t.v}'s manifest" else "the directory"))
     }
-    lazy val blooms: Option[DataFrame] =
-      if (listSidecars(fsOf(spark, dir), dir, "bloom").exists(_._1 <= v))
-        Some(bloomsAt(spark, dir, v))
-      else None
-    def fileSet(d: DataFrame): Set[String] =
-      d.select("file").collect().map(_.getString(0)).toSet
-    preds.foldLeft(all) { (acc, p) =>
-      val cand: Set[String] = p match {
-        case PruneRange(c, lo, hi) =>
-          fileSet(stats.filter(col("col") === phys(c) &&
-            col("hi") >= lo && col("lo") <= hi))
-        case PruneIsNull(c) =>
-          // survive when the file HAS nulls — or the count is unknown
-          fileSet(stats.filter(col("col") === phys(c) &&
-            (col("nulls") > 0L || col("nulls") < 0L)))
-        case PruneNotNull(c) =>
-          fileSet(stats.filter(col("col") === phys(c) &&
-            (col("nulls") < col("rows") || col("nulls") < 0L)))
-        case PruneIn(c, values) => blooms match {
-          case Some(b) if !b.filter(col("col") === phys(c)).isEmpty =>
-            BloomIndex.candidateFilesIn(spark, b, phys(c),
-              values.map(lit(_))).toSet
-          case _ => all // no bloom discipline on this column
-        }
-      }
-      acc.intersect(cand)
-    }.toSeq.sorted
-  }
-
-  /** [[prunedScanCandidates]] for PLANNER-driven pruning — the
-    * `graft` data source ([[graft.sources.GraftLakeSource]]) routes
-    * the Catalyst data filters of every `spark.read.format("graft")`
-    * scan here. Differs from the strict front door in exactly the way
-    * a planner hook must: it NEVER refuses. Predicates on columns the
-    * sidecars do not track are dropped (the scan still applies them
-    * exactly as residual filters — skipping is only ever an
-    * optimization), and absent or broken sidecar coverage yields
-    * `None` (read everything) instead of an error. Returns the
-    * surviving abs-normalized file paths, or None when nothing could
-    * prune. */
-  def prunedScanCandidatesLenient(spark: SparkSession, dir: String,
-      preds: Seq[PrunePred], version: Long = -1L): Option[Seq[String]] =
-    try {
-      if (preds.isEmpty) None
+    val c = routePreds(spark, dir, preds, source, t)
+    require(c.unserved.isEmpty, c.unserved.map(_._2).distinct.mkString("; "))
+    // pinned schema (type widening): the survivor set can mix widths
+    val rd = t.meta.pinned.fold(spark.read)(s0 => spark.read.schema(s0))
+      .option("basePath", dir)
+    val base =
+      if (c.files.isEmpty) rd.parquet(t.live: _*).filter(lit(false))
       else {
-        val v = if (version >= 0) version else currentVersion(spark, dir)
-        val fs = fsOf(spark, dir)
-        val m = metaAt(spark, dir, v)
-        def phys(c: String) = m.renames.getOrElse(c, c)
-        val hasBlooms = listSidecars(fs, dir, "bloom").exists(_._1 <= v)
-        val tracked: Set[String] =
-          if (listSidecars(fs, dir, "stats").exists(_._1 <= v))
-            statsAt(spark, dir, v).select("col").distinct()
-              .collect().map(_.getString(0)).toSet
-          else Set.empty
-        val keep = preds.filter {
-          case _: PruneIn => hasBlooms
-          case p => tracked.contains(phys(p.column))
-        }
-        if (keep.isEmpty) None
-        else Some(prunedScanCandidates(spark, dir, keep, v))
+        val df = rd.parquet(c.files: _*)
+        df.filter(SkipIndex.residualFor(df, preds,
+          c0 => t.meta.renames.getOrElse(c0, c0)))
       }
-    } catch { case _: IllegalArgumentException => None }
+    if (t.v < 0) base
+    else applyColumnMapping(t.meta, applyTombstones(spark, dir, t.v, base))
+  }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE ... SHALLOW CLONE src`):
     * `dstDir` becomes an independent versioned table whose v0 manifest
@@ -6143,52 +6164,12 @@ object Versioned {
     -1L // unreachable
   }
 
-  /** Skip-index pruned read of a snapshot: the index must describe
-    * exactly this version's manifest (build it from [[snapshot]], or
-    * advance it with [[SkipIndex.refreshForFiles]] after a merge).
-    * Because validation is against the manifest — not the dir listing,
-    * which still holds superseded files — pruned reads time-travel:
-    * version N's index keeps serving version N after later commits. */
-  def prunedRead(spark: SparkSession, dir: String,
-      idx: org.apache.spark.sql.DataFrame,
-      preds: Seq[(String, Double, Double)],
-      version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-    val files = filesAt(spark, dir, v)
-    require(!files.exists(refIsForeign),
-      "pruned reads need a single basePath: OPTIMIZE the clone first " +
-        "to localize its foreign file references")
-    // pending MOR tombstones ride on top of the pruned scan as the
-    // same anti-join the snapshot applies — pruning only SKIPS files,
-    // so filtering the surviving rows preserves exactness
-    applyTombstones(spark, dir, v,
-      SkipIndex.prunedReadMultiFiles(spark, dir, idx, preds,
-        files.map(f => s"$dir/$f"),
-        pinned = metaAt(spark, dir, v).pinned))
-  }
-
-  /** Bloom-index pruned point/IN lookup of a snapshot — the
-    * [[prunedRead]] analogue for [[BloomIndex]]: the index must
-    * describe exactly this version's manifest (build it from the
-    * version's files, or advance it with [[BloomIndex.refreshForFiles]]
-    * after a merge). Validation is against the manifest, so lookups
-    * time-travel: version N's index keeps serving version N after
-    * later commits, even though the directory holds newer files. */
-  def prunedReadIn(spark: SparkSession, dir: String,
-      idx: org.apache.spark.sql.DataFrame, c: String,
-      probes: Seq[org.apache.spark.sql.Column],
-      version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-    val files = filesAt(spark, dir, v)
-    require(!files.exists(refIsForeign),
-      "pruned reads need a single basePath: OPTIMIZE the clone first " +
-        "to localize its foreign file references")
-    // MOR tombstones apply on top, as in [[prunedRead]]
-    applyTombstones(spark, dir, v,
-      BloomIndex.prunedReadInFiles(spark, dir, idx, c, probes,
-        files.map(f => s"$dir/$f"),
-        pinned = metaAt(spark, dir, v).pinned))
-  }
+  /** Diagnostic counter: per-file getFileStatus calls [[optimize]]'s
+    * byte-sizing pass made — none when the manifests or the stats
+    * sidecars' `bytes` column covered every live file (the
+    * metadata-only path). Thread-safe; readers take deltas of `sum()`. */
+  private[lake] val optimizeFileStatProbes =
+    new java.util.concurrent.atomic.LongAdder
 
   /** OPTIMIZE within the manifest protocol: partitions holding more
     * than `targetFilesPerPartition` live files are rewritten compacted
@@ -6213,13 +6194,6 @@ object Versioned {
     *   The key is layout only: it is computed, range-partitioned on,
     *   sorted by, and dropped before the write.
     * Returns the committed version (unchanged if nothing to do). */
-  /** Diagnostic counter: per-file getFileStatus calls [[optimize]]'s
-    * byte-sizing pass made — none when the manifests or the stats
-    * sidecars' `bytes` column covered every live file (the
-    * metadata-only path). Thread-safe; readers take deltas of `sum()`. */
-  private[lake] val optimizeFileStatProbes =
-    new java.util.concurrent.atomic.LongAdder
-
   def optimize(spark: SparkSession, dir: String,
       partitionKeys: Seq[String], targetFilesPerPartition: Int = 1,
       zorder: Option[org.apache.spark.sql.Column] = None,
@@ -6559,19 +6533,6 @@ object Versioned {
       }.sum().toLong
   }
 
-  /** Delete data files unreferenced by the newest `keepVersions`
-    * manifests, the older manifests themselves, and any equality-delete
-    * tombstone files no retained manifest references. After vacuum,
-    * time travel reaches back exactly `keepVersions` versions.
-    *
-    * Streaming exactly-once survives any retention: every manifest
-    * re-publishes the full `#txn` high-water map, so reaping the
-    * manifest that originally recorded a marker loses nothing.
-    * If the oldest retained version's manifest is a delta, it is first
-    * rewritten as an equivalent checkpoint (same resolved listing and
-    * meta) so the retained tail resolves without the reaped manifests;
-    * readers prefer the checkpoint when the crash window leaves both
-    * forms. */
   /** Time-based retention (Delta's `VACUUM ... RETAIN n HOURS`): keeps
     * every version committed within `retainMillis` of `nowMillis` —
     * and always the current one — then reaps exactly like [[vacuum]].
@@ -6665,6 +6626,19 @@ object Versioned {
     * or lost CAS, not an in-flight write. */
   val ChangeIncRetainMillis: Long = 60L * 60 * 1000
 
+  /** Delete data files unreferenced by the newest `keepVersions`
+    * manifests, the older manifests themselves, and any equality-delete
+    * tombstone files no retained manifest references. After vacuum,
+    * time travel reaches back exactly `keepVersions` versions.
+    *
+    * Streaming exactly-once survives any retention: every manifest
+    * re-publishes the full `#txn` high-water map, so reaping the
+    * manifest that originally recorded a marker loses nothing.
+    * If the oldest retained version's manifest is a delta, it is first
+    * rewritten as an equivalent checkpoint (same resolved listing and
+    * meta) so the retained tail resolves without the reaped manifests;
+    * readers prefer the checkpoint when the crash window leaves both
+    * forms. */
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int): Unit =
     vacuum(spark, dir, keepVersions, System.currentTimeMillis())
 

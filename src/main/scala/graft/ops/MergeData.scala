@@ -51,8 +51,9 @@ object MergeData {
     * partition count: left to AQE, byte-based coalescing packs a small
     * write into one task that then creates every group's file one
     * after another, and a partitioned write pays per file created, not
-    * per byte. */
-  /** `format`: "parquet" (default) or "csv.gz" — the reference's two
+    * per byte.
+    *
+    * `format`: "parquet" (default) or "csv.gz" — the reference's two
     * output formats (merge-data.py:93-96 writes gzipped csv by default
     * with `--parquet` opting into parquet; we default the other way,
     * parquet being the only sane lake format at scale). Parity with the

@@ -957,7 +957,8 @@ object LakeQueries {
       (s, dir) => {
         val layout = zCompactedEvents(s, dir)
         val idx = SkipIndex.build(s.read.parquet(layout), Seq("user_id"))
-        SkipIndex.prunedRead(s, layout, idx, "user_id", 100, 220)
+        Versioned.prunedScan(s, layout, Seq(PruneRange("user_id", 100, 220)),
+            Some(idx))
           .groupBy("event_type")
           .agg(count(lit(1)).as("row_count"),
             round(sum("value"), 4).as("sum_value"),
@@ -985,8 +986,9 @@ object LakeQueries {
       (s, dir) => {
         val layout = zCompactedEvents(s, dir)
         val idx = SkipIndex.buildFromFooters(s, layout, Seq("user_id", "value"))
-        SkipIndex.prunedReadMulti(s, layout, idx,
-            Seq(("user_id", 2, 95), ("value", 0.0, 80.0)))
+        Versioned.prunedScan(s, layout,
+            Seq(PruneRange("user_id", 2, 95), PruneRange("value", 0.0, 80.0)),
+            Some(idx))
           .groupBy("event_type")
           .agg(count(lit(1)).as("row_count"),
             round(sum("value"), 4).as("sum_value"),
@@ -1017,8 +1019,8 @@ object LakeQueries {
         val layout = zCompactedEvents(s, dir)
         val idx = BloomIndex.build(s, layout, Seq("event_id"),
           expectedPerFile = 100000L, fpp = 0.01)
-        BloomIndex.prunedReadIn(s, layout, idx, "event_id",
-            Seq(lit(7L), lit(250L), lit(861L)))
+        Versioned.prunedScan(s, layout,
+            Seq(PruneIn("event_id", Seq(7L, 250L, 861L))), Some(idx))
           .select(col("event_id"), col("event_type"), col("user_id"),
             round(col("value"), 4).as("value_r"))
           .orderBy("event_id")
@@ -1305,8 +1307,8 @@ object LakeQueries {
             Seq("event_type=click", "event_type=view"),
             Versioned.filesAt(s, lakeDir, v).map(f => s"$lakeDir/$f")), v)
         }
-        Versioned.prunedRead(s, lakeDir, refreshed,
-            Seq(("user_id", 100, 220)), version = v)
+        Versioned.prunedScan(s, lakeDir, Seq(PruneRange("user_id", 100, 220)),
+            Some(refreshed), v)
           .groupBy("event_type")
           .agg(count(lit(1)).as("row_count"),
             round(sum("value"), 4).as("sum_value"),
@@ -1657,8 +1659,9 @@ object LakeQueries {
               round(sum("value"), 4).as("sum_value"),
               count_distinct(col("user_id")).as("n_users"))
             .withColumn("src", lit(tag))
-        val pruned = agg(Versioned.prunedRead(s, lake, idx,
-          Seq(("user_id", 2.0, 95.0), ("value", 0.0, 80.0))), "pruned_v2")
+        val pruned = agg(Versioned.prunedScan(s, lake,
+          Seq(PruneRange("user_id", 2.0, 95.0), PruneRange("value", 0.0, 80.0)),
+          Some(idx)), "pruned_v2")
         val travel = agg(Versioned.snapshot(s, lake, 1L)
           .filter(col("user_id").between(2, 95) &&
             col("value").between(0.0, 80.0)), "travel_v1")
@@ -1711,18 +1714,18 @@ object LakeQueries {
         // stable across testdata scales): 59/86/117 survive, 40 is a
         // b0-updated key (value*2), 861 is deleted (%10=1) — a
         // must-be-absent negative probe
-        val r1 = Versioned.prunedReadIn(s, lake, idx1, "event_id",
-          Seq(lit(59L), lit(86L), lit(117L), lit(40L), lit(861L)),
-          version = 1L)
+        val r1 = Versioned.prunedScan(s, lake,
+          Seq(PruneIn("event_id", Seq(59L, 86L, 117L, 40L, 861L))),
+          Some(idx1), 1L)
         val idx2 = BloomIndex.refreshForFiles(s, lake, idx1, Seq("event_id"),
           expectedPerFile = 100000L, fpp = 0.01,
           touchedDirs = Seq("event_type=click", "event_type=view"),
           liveFiles = live(2L))
         // 139/182 survive, 330 is updated; the 1000040x trio are
         // b0-inserted keys — at least one exists at each sf
-        val r2 = Versioned.prunedReadIn(s, lake, idx2, "event_id",
-          Seq(lit(139L), lit(182L), lit(330L),
-            lit(10000402L), lit(10000002L), lit(10000302L)))
+        val r2 = Versioned.prunedScan(s, lake,
+          Seq(PruneIn("event_id", Seq(139L, 182L, 330L,
+            10000402L, 10000002L, 10000302L))), Some(idx2))
         def sel(d: DataFrame, tag: String) = d.select(
           lit(tag).as("src"), col("event_id"), col("event_type"),
           col("user_id"), round(col("value"), 4).as("value_r"))
@@ -2126,9 +2129,9 @@ object LakeQueries {
               round(sum("value"), 4).as("sum_value"),
               count_distinct(col("user_id")).as("n_users"))
             .withColumn("src", lit(src))
-        val pruned = agg(Versioned.prunedRead(s, lake, idx,
-          Seq(("user_id", 2.0, 95.0), ("value", 0.0, 80.0)), version = 2L),
-          "pruned_v2")
+        val pruned = agg(Versioned.prunedScan(s, lake,
+          Seq(PruneRange("user_id", 2.0, 95.0), PruneRange("value", 0.0, 80.0)),
+          Some(idx), 2L), "pruned_v2")
         val morV1 = agg(Versioned.snapshot(s, lake, 1L)
           .filter(col("user_id").between(2, 95) &&
             col("value").between(0.0, 80.0)), "mor_v1")
@@ -2407,7 +2410,7 @@ object LakeQueries {
     // the b0 merge (v1) and the ZORDER optimize (v2) then extend
     // coverage AUTOMATICALLY — no SkipIndex build or refresh is called
     // anywhere in this query; every box was written by the commit that
-    // created its file. Legs: statsPrunedRead under a 2-predicate box
+    // created its file. Legs: prunedScan under a 2-predicate box
     // at v0 == base filter, at v1 == st1 filter, at v2 (re-clustered,
     // all-new files) == the same st1 filter — pruned exactness across
     // three generations of stats. require()s pin that v1's incremental
@@ -2431,17 +2434,18 @@ object LakeQueries {
             Seq(("user_id", 2.0, 95.0), ("value", 0.0, 80.0))).size <
           Versioned.filesAt(s, lake, 2L).size,
           "commit-time stats must prune the z-clustered layout")
-        val preds = Seq(("user_id", 2.0, 95.0), ("value", 0.0, 80.0))
+        val preds = Seq(PruneRange("user_id", 2.0, 95.0),
+          PruneRange("value", 0.0, 80.0))
         def agg(d: DataFrame, src: String) =
           d.groupBy("event_type").agg(
               count(lit(1)).as("row_count"),
               round(sum("value"), 4).as("sum_value"),
               count_distinct(col("user_id")).as("n_users"))
             .withColumn("src", lit(src))
-        agg(Versioned.statsPrunedRead(s, lake, preds, 0L), "pruned_v0")
-          .unionByName(agg(Versioned.statsPrunedRead(s, lake, preds, 1L),
+        agg(Versioned.prunedScan(s, lake, preds, version = 0L), "pruned_v0")
+          .unionByName(agg(Versioned.prunedScan(s, lake, preds, version = 1L),
             "pruned_v1"))
-          .unionByName(agg(Versioned.statsPrunedRead(s, lake, preds, 2L),
+          .unionByName(agg(Versioned.prunedScan(s, lake, preds, version = 2L),
             "pruned_v2"))
           .select("src", "event_type", "row_count", "sum_value", "n_users")
           .orderBy("src", "event_type")
@@ -2831,8 +2835,7 @@ object LakeQueries {
     Q("q182_commit_time_blooms",
       (s, dir) => {
         val lake = statsLakeFixture(s, dir)
-        val probes = Seq(lit(40L), lit(100L), lit(59L), lit(86L),
-          lit(10000302L))
+        val probes = PruneIn("event_id", Seq(40L, 100L, 59L, 86L, 10000302L))
         // the shifted insert's probe must actually skip base files:
         // only the merge commit's own files can hold it
         require(BloomIndex.candidateFilesIn(s,
@@ -2841,7 +2844,7 @@ object LakeQueries {
           Versioned.filesAt(s, lake, 1L).size,
           "commit-time blooms must prune the unclustered key lookup")
         def leg(v: Long, src: String) =
-          Versioned.bloomPrunedReadIn(s, lake, "event_id", probes, v)
+          Versioned.prunedScan(s, lake, Seq(probes), version = v)
             .select(lit(src).as("src"), col("event_id"), col("event_type"),
               col("user_id"), round(col("value"), 4).as("value_r"))
         leg(1L, "v1").unionByName(leg(2L, "v2"))
@@ -3658,12 +3661,12 @@ object LakeQueries {
         val lake = nullStatsFixture(s, dir)
         val total = Versioned.filesAt(s, lake).size
         val isnullC = Versioned.prunedScanCandidates(s, lake,
-          Seq(PruneIsNull("value2")))
+          Seq(PruneIsNull("value2"))).files
         require(isnullC.nonEmpty && isnullC.size < total &&
           isnullC.forall(_.contains("event_type=click")),
           "IS NULL must skip the view files")
         val nnC = Versioned.prunedScanCandidates(s, lake,
-          Seq(PruneNotNull("value2")))
+          Seq(PruneNotNull("value2"))).files
         require(nnC.nonEmpty && nnC.size < total &&
           nnC.forall(_.contains("event_type=view")),
           "IS NOT NULL must skip the all-null click files")
@@ -4732,13 +4735,13 @@ object LakeQueries {
               !(col("hi") < 2.0e8 || col("lo") > 9.0e18)).count()
           require(cands < total,
             s"range pruning must skip files ($cands of $total candidates)")
-          val range = Versioned.statsPrunedRead(s, lake,
-            Seq(("event_id", 2.0e8, 9.0e18)))
+          val range = Versioned.prunedScan(s, lake,
+            Seq(PruneRange("event_id", 2.0e8, 9.0e18)))
           // point leg: one known id from the SECOND commit's region
           val probe = base.filter(col("event_type") === "click")
             .agg(min("event_id")).collect().head.getLong(0) + 100000000L
-          val point = Versioned.bloomPrunedReadIn(s, lake, "event_id",
-            Seq(lit(probe)))
+          val point = Versioned.prunedScan(s, lake,
+            Seq(PruneIn("event_id", Seq(probe))))
           (range.agg(count(lit(1)).as("row_count"),
               round(sum("value"), 4).as("sum_value"))
               .withColumn("leg", lit("range")),
@@ -5440,8 +5443,8 @@ object LakeQueries {
               "raw-interleave layout left every box domain-wide)")
           // the readback RIDES the pruned read (index skip + residual
           // filter): exactness of the skip is part of the oracle hash
-          Versioned.prunedRead(s, lake, idx,
-              Seq(("event_id", lo.toDouble, hi.toDouble)))
+          Versioned.prunedScan(s, lake,
+              Seq(PruneRange("event_id", lo.toDouble, hi.toDouble)), Some(idx))
             .filter(col("event_id").between(lo, hi))
             .groupBy("event_type")
             .agg(count(lit(1)).as("n"),

@@ -29,6 +29,14 @@ import graft.ops.SummaryOps.{FeatureSpec, HistogramSpec, QuestionnaireSpec, Slid
   */
 object SummaryQueries {
 
+  /** The one `events` projection every fixture below derives from —
+    * q29 persists THIS so its five consumers (feature long ×2 specs,
+    * questionnaire filter, slider, histogram ×2 specs) cost ONE scan of
+    * the parquet, not three (the r3 verdict's q29 tuning item). */
+  private def eventsBase(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events")
+      .select("event_id", "user_id", "ts", "event_type", "value")
+
   /** Flattened-answers fixture (the shape of a questionnaire CSV):
     *  - pair 0: questionId `slider_<event_type>`, value = the numeric
     *    reading as a string, with deterministic junk every 7th event
@@ -39,14 +47,6 @@ object SummaryQueries {
     *    [[SummaryOps.answersUnpivot]] must skip it at plan time,
     *    matching the reference's `value_col in row` check.
     */
-  /** The one `events` projection every fixture below derives from —
-    * q29 persists THIS so its five consumers (feature long ×2 specs,
-    * questionnaire filter, slider, histogram ×2 specs) cost ONE scan of
-    * the parquet, not three (the r3 verdict's q29 tuning item). */
-  private def eventsBase(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "events")
-      .select("event_id", "user_id", "ts", "event_type", "value")
-
   private def answersFixture(s: SparkSession, dir: String): DataFrame =
     answersFixtureFrom(eventsBase(s, dir))
 

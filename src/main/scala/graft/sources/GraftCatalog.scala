@@ -128,15 +128,6 @@ class GraftCatalog extends TableCatalog
       Versioned.versionAsOf(spark, dir, timestamp / 1000L))
   }
 
-  /** SQL `CREATE TABLE graft.`dir`` (c1 T, ...) PARTITIONED BY (k)`:
-    * initializes a versioned lake at the directory — v0 is the EMPTY
-    * table (a zero-row `_schema` anchor carries the declared schema
-    * until the first write), and identity partition columns become the
-    * lake's DECLARED spec, so every later writer (SQL INSERT, the
-    * format, the library) is spec-checked from day one. Only identity
-    * transforms: bucket/days/etc. are expressed as GENERATED columns
-    * plus `changePartitionSpec` (hidden partitioning), the library's
-    * explicit surface. */
   /** The v2-Column overload is where GENERATED ALWAYS AS arrives
     * (`Column.generationExpression()` — the StructType conversion
     * below drops it): extract the rules, then run the common flow. */
@@ -208,6 +199,15 @@ class GraftCatalog extends TableCatalog
     }
   }
 
+  /** SQL `CREATE TABLE graft.`dir`` (c1 T, ...) PARTITIONED BY (k)`:
+    * initializes a versioned lake at the directory — v0 is the EMPTY
+    * table (a zero-row `_schema` anchor carries the declared schema
+    * until the first write), and identity partition columns become the
+    * lake's DECLARED spec, so every later writer (SQL INSERT, the
+    * format, the library) is spec-checked from day one. Only identity
+    * transforms: bucket/days/etc. are expressed as GENERATED columns
+    * plus `changePartitionSpec` (hidden partitioning), the library's
+    * explicit surface. */
   private def createImpl(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       gensIn: Seq[(String, String)],

@@ -21,11 +21,11 @@ import graft.lake.{PruneIn, PruneIsNull, PruneNotNull, PrunePred, PruneRange, Ve
   * first-class Spark data source, so CATALYST drives the reads: the
   * planner's column pruning reaches the parquet scan, its partition
   * filters prune the manifest's Hive directories, and its data
-  * filters route to the commit-time stats/bloom sidecars
-  * ([[Versioned.prunedScanCandidatesLenient]]) for file skipping —
-  * the same machinery `Versioned.prunedScan` exposes as a library
-  * call, now reachable from a plain DataFrame (or SQL view) without
-  * the caller knowing it exists.
+  * filters route to the commit-time stats/bloom sidecars through the
+  * one pruning core ([[Versioned.prunedScanCandidates]]) for file
+  * skipping — the core `Versioned.prunedScan` reads through as a
+  * library call, now reachable from a plain DataFrame (or SQL view)
+  * without the caller knowing it exists.
   *
   * Options: `versionAsOf` (manifest version) / `timestampAsOf`
   * (epoch millis, or `yyyy-MM-dd HH:mm:ss`) — Delta's time-travel
@@ -305,10 +305,13 @@ final class GraftFileIndex(
         predicate.initialize(0)
         parts.filter { case (values, _) => predicate.eval(values) }
       }
-    // sidecar file skipping, driven by the PLANNER's data filters
-    val surviving = Versioned.prunedScanCandidatesLenient(spark, dir,
-      dataFilters.flatMap(GraftFileIndex.toPrunePreds), version)
-      .map(_.toSet)
+    // sidecar file skipping, driven by the PLANNER's data filters: what
+    // the sidecars cannot serve is dropped (the scan still applies every
+    // filter exactly — skipping is only ever an optimization)
+    val surviving = Some(dataFilters.flatMap(GraftFileIndex.toPrunePreds))
+      .filter(_.nonEmpty)
+      .map(Versioned.prunedScanCandidates(spark, dir, _, version = version))
+      .filter(_.served.nonEmpty).map(_.files.toSet)
     val listed = pruned.map { case (values, files) =>
       val kept = surviving match {
         case None => files

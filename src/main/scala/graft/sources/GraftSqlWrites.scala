@@ -444,11 +444,11 @@ object GraftDeleteCommand {
     val preds = GraftFileIndex.toPrunePreds(condition)
     val total = Versioned.filesAt(spark, dir).size
     if (preds.isEmpty || total == 0) return Cow
-    Versioned.prunedScanCandidatesLenient(spark, dir, preds) match {
-      case Some(cand) if cand.size.toDouble / total > maxFrac => Vectors
-      case Some(_) => Cow // narrow footprint: bounded rewrite, no debt
-      case None => Cow // no stats discipline: no estimate, no surprise
-    }
+    // unserved predicates drop out of the estimate
+    val cand = Versioned.prunedScanCandidates(spark, dir, preds)
+    if (cand.served.isEmpty) Cow // no stats discipline: no estimate, no surprise
+    else if (cand.files.size.toDouble / total > maxFrac) Vectors
+    else Cow // narrow footprint: bounded rewrite, no debt
   }
 }
 

@@ -15,15 +15,6 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Forwarder for `SparkSession.internalCreateDataFrame`
-    * (`private[sql]`): wrap an already-planned `InternalRow` RDD as a
-    * DataFrame WITHOUT the per-row Catalyst→Scala→Catalyst round-trip
-    * `createDataFrame(RDD[Row], schema)` pays. The streaming sink uses
-    * it to detach a micro-batch from its incremental execution (the
-    * file-sink discipline) while keeping the columnar representation;
-    * the streaming SOURCE uses the `isStreaming = true` form, which is
-    * how Spark's own V1 sources (FileStreamSource) mark their batch
-    * plans as streaming. */
   /** Forwarder for `Dataset.ofRows` (`private[sql]`): wrap an
     * already-ANALYZED logical plan as a DataFrame. The SQL row-level
     * commands hold the analyzer's resolved target/source plans and
@@ -36,6 +27,15 @@ object GraftColumnBridge {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Forwarder for `SparkSession.internalCreateDataFrame`
+    * (`private[sql]`): wrap an already-planned `InternalRow` RDD as a
+    * DataFrame WITHOUT the per-row Catalyst→Scala→Catalyst round-trip
+    * `createDataFrame(RDD[Row], schema)` pays. The streaming sink uses
+    * it to detach a micro-batch from its incremental execution (the
+    * file-sink discipline) while keeping the columnar representation;
+    * the streaming SOURCE uses the `isStreaming = true` form, which is
+    * how Spark's own V1 sources (FileStreamSource) mark their batch
+    * plans as streaming. */
   def internalDataFrame(spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType,

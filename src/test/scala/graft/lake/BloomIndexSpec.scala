@@ -42,8 +42,8 @@ class BloomIndexSpec extends SparkSpec {
     assert(cand.size < total && cand.nonEmpty,
       s"disjoint-range layout must let a point probe skip files (${cand.size}/$total)")
 
-    val pruned = BloomIndex.prunedReadIn(spark, out, idx, "key",
-      Seq(lit(3007L), lit(42L), lit(7999L)))
+    val pruned = Versioned.prunedScan(spark, out,
+      Seq(PruneIn("key", Seq(3007L, 42L, 7999L))), Some(idx))
     val naive = src.filter(col("key").isin(3007L, 42L, 7999L))
     assert(pruned.count() == naive.count() &&
       pruned.exceptAll(naive).isEmpty && naive.exceptAll(pruned).isEmpty)
@@ -52,8 +52,8 @@ class BloomIndexSpec extends SparkSpec {
   test("absent key returns no rows; pruned read equals the empty filter") {
     val (out, src) = lake
     val idx = BloomIndex.build(spark, out, Seq("key"), 1000L, 0.0001)
-    val pruned = BloomIndex.prunedReadIn(spark, out, idx, "key",
-      Seq(lit(999999L)))
+    val pruned = Versioned.prunedScan(spark, out,
+      Seq(PruneIn("key", Seq(999999L))), Some(idx))
     assert(pruned.count() == 0)
     assert(src.filter(col("key") === 999999L).count() == 0)
   }
@@ -81,13 +81,14 @@ class BloomIndexSpec extends SparkSpec {
       Seq("site"), Seq("site", "id"))
     // the v0 index does NOT describe v1...
     val e = intercept[IllegalArgumentException] {
-      Versioned.prunedReadIn(spark, lakeDir, idx0, "id", Seq(lit(1L)))
+      Versioned.prunedScan(spark, lakeDir, Seq(PruneIn("id", Seq(1L))),
+        Some(idx0))
     }
     assert(e.getMessage.contains("does not describe"))
     // ...but still serves v0 exactly (point-lookup time travel), even
     // though the directory now also holds v1's files
-    val tt = Versioned.prunedReadIn(spark, lakeDir, idx0, "id",
-      Seq(lit(1L), lit(10L)), version = 0L)
+    val tt = Versioned.prunedScan(spark, lakeDir,
+      Seq(PruneIn("id", Seq(1L, 10L))), Some(idx0), 0L)
     assert(tt.select("id", "v").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet ==
       Set((1L, 1.0), (10L, 10.0)))
@@ -95,8 +96,8 @@ class BloomIndexSpec extends SparkSpec {
     // index becomes exact for the latest snapshot
     val idx1 = BloomIndex.refreshForFiles(spark, lakeDir, idx0, Seq("id"),
       100L, 0.001, Seq("site=a"), liveFiles())
-    val now = Versioned.prunedReadIn(spark, lakeDir, idx1, "id",
-      Seq(lit(1L), lit(4L), lit(10L)))
+    val now = Versioned.prunedScan(spark, lakeDir,
+      Seq(PruneIn("id", Seq(1L, 4L, 10L))), Some(idx1))
     assert(now.select("id", "v").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet ==
       Set((1L, 100.0), (4L, 4.0), (10L, 10.0)))
@@ -115,7 +116,8 @@ class BloomIndexSpec extends SparkSpec {
     val someFile = idx.select("file").head.getString(0)
     val partial = idx.filter(col("file") =!= someFile)
     val e = intercept[IllegalArgumentException] {
-      BloomIndex.prunedReadIn(spark, out, partial, "key", Seq(lit(42L)))
+      Versioned.prunedScan(spark, out, Seq(PruneIn("key", Seq(42L))),
+        Some(partial))
     }
     assert(e.getMessage.contains("stale bloom index"))
   }

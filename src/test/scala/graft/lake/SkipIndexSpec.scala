@@ -39,7 +39,7 @@ class SkipIndexSpec extends SparkSpec {
     assert(cand.nonEmpty && cand.size < total,
       s"z-clustered layout must let a tight range skip files (${cand.size}/$total)")
 
-    val pruned = SkipIndex.prunedRead(spark, out, idx, "a", 0, 7)
+    val pruned = Versioned.prunedScan(spark, out, Seq(PruneRange("a", 0, 7)), Some(idx))
     val naive = src.filter(col("a").between(0, 7))
     assert(pruned.count() == naive.count() &&
       pruned.exceptAll(naive).isEmpty && naive.exceptAll(pruned).isEmpty)
@@ -59,8 +59,8 @@ class SkipIndexSpec extends SparkSpec {
     // touch them all
     val total = spark.read.parquet(out).select(input_file_name()).distinct().count()
     assert(both.size < total)
-    val pruned = SkipIndex.prunedReadMulti(spark, out, idx,
-      Seq(("a", 0, 15), ("b", 0, 15)))
+    val pruned = Versioned.prunedScan(spark, out,
+      Seq(PruneRange("a", 0, 15), PruneRange("b", 0, 15)), Some(idx))
     val naive = src.filter(col("a").between(0, 15) && col("b").between(0, 15))
     assert(pruned.count() == naive.count() &&
       pruned.exceptAll(naive).isEmpty && naive.exceptAll(pruned).isEmpty)
@@ -89,7 +89,7 @@ class SkipIndexSpec extends SparkSpec {
 
     // pruning with the stale index must refuse, not silently lose rows
     val e = intercept[IllegalArgumentException] {
-      SkipIndex.prunedRead(spark, lake, idx0, "id", 0, 100)
+      Versioned.prunedScan(spark, lake, Seq(PruneRange("id", 0, 100)), Some(idx0))
     }
     assert(e.getMessage.contains("stale skip index"))
 
@@ -97,7 +97,7 @@ class SkipIndexSpec extends SparkSpec {
     // in the index are the original ones (same file, untouched)
     val idx1 = SkipIndex.refreshForFiles(spark, lake, idx0, Seq("id"),
       Seq("site=a"), Versioned.filesAt(spark, lake, v1).map(f => s"$lake/$f"))
-    val pruned = Versioned.prunedRead(spark, lake, idx1, Seq(("id", 0, 5)))
+    val pruned = Versioned.prunedScan(spark, lake, Seq(PruneRange("id", 0, 5)), Some(idx1))
     val expect = Set((1L, 100.0), (2L, 2.0), (3L, 3.0), (4L, 4.0))
     assert(pruned.select("id", "v").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet == expect)
@@ -136,17 +136,19 @@ class SkipIndexSpec extends SparkSpec {
       100L, 0.01, Seq(""), live(v1))
     def rows(d: org.apache.spark.sql.DataFrame) = d.select("site", "id", "v")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(Versioned.prunedRead(spark, lake, skip1, Seq(("id", 0, 50)))) ==
+    assert(rows(Versioned.prunedScan(spark, lake, Seq(PruneRange("id", 0, 50)),
+        Some(skip1))) ==
       Set(("a", 1L, 100.0), ("b", 10L, 10.0), ("c", 7L, 7.0)))
-    assert(rows(Versioned.prunedReadIn(spark, lake, bloom1, "id",
-        Seq(lit(1L), lit(2L), lit(7L)))) ==
+    assert(rows(Versioned.prunedScan(spark, lake,
+        Seq(PruneIn("id", Seq(1L, 2L, 7L))), Some(bloom1))) ==
       Set(("a", 1L, 100.0), ("c", 7L, 7.0)))
   }
 
   test("disjoint predicate yields an empty frame with the data schema") {
     val (out, _) = lake
     val idx = SkipIndex.build(spark.read.parquet(out), Seq("a"))
-    val d = SkipIndex.prunedRead(spark, out, idx, "a", 1000, 2000)
+    val d = Versioned.prunedScan(spark, out, Seq(PruneRange("a", 1000, 2000)),
+      Some(idx))
     assert(d.columns.toSeq.sorted == Seq("a", "b", "payload") && d.count() == 0)
   }
 
@@ -170,8 +172,8 @@ class SkipIndexSpec extends SparkSpec {
     val expected = src.filter(col("a") >= 3 && col("a") <= 9 &&
         col("b") >= 10 && col("b") <= 20)
       .orderBy("payload").collect().map(_.toSeq)
-    val got = SkipIndex.prunedReadMulti(spark, out, idx,
-        Seq(("a", 3, 9), ("b", 10, 20)))
+    val got = Versioned.prunedScan(spark, out,
+        Seq(PruneRange("a", 3, 9), PruneRange("b", 10, 20)), Some(idx))
       .orderBy("payload").collect().map(_.toSeq)
     assert(got === expected)
     // and it actually skips: the candidate set is a strict subset
@@ -194,5 +196,31 @@ class SkipIndexSpec extends SparkSpec {
       r.getDouble(2).isNegInfinity && r.getDouble(3).isPosInfinity))
     val cand = SkipIndex.candidateFiles(idx, "s", 5, 6)
     assert(cand.size === sBoxes.length) // nothing skipped on s
+  }
+
+  test("one pruned read: no retired pruned-read door, one foreign-ref refusal, no doc comment stacked on another under src/main/scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"run from the repo root, not ${sys.props("user.dir")}")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> java.nio.file.Files.readAllLines(p).asScala.toSeq).toSeq
+    val retired = ("""\bdef (prunedRead|prunedReadIn|statsPrunedRead|""" +
+      """bloomPrunedReadIn|prunedReadMulti\w*|prunedReadInFiles|""" +
+      """prunedScanCandidatesLenient)\b""").r
+    val doors = for ((p, ls) <- sources; l <- ls
+      if retired.findFirstIn(l).nonEmpty) yield s"$p: ${l.trim}"
+    assert(doors.isEmpty,
+      s"pruned reads go through Versioned.prunedScan/prunedScanCandidates: $doors")
+    val refusal = "pruned reads need a single basePath"
+    val refusals = sources.map(_._2.count(_.contains(refusal))).sum
+    assert(refusals == 1, s"the foreign-ref refusal is written $refusals times")
+    val stacked = for ((p, ls) <- sources;
+      (a, i) <- ls.zipWithIndex.init
+      if a.trim.endsWith("*/") && ls(i + 1).trim.startsWith("/**"))
+      yield s"$p:${i + 2}"
+    assert(stacked.isEmpty,
+      s"a doc comment directly followed by another documents nothing: $stacked")
   }
 }

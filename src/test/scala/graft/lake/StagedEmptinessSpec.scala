@@ -41,6 +41,14 @@ class StagedEmptinessSpec extends SparkSpec {
     walk(root).map(_.getName).toSet
   }
 
+  private def footerRows(path: String): Long = {
+    val f = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path),
+        spark.sparkContext.hadoopConfiguration))
+    try f.getRecordCount finally f.close()
+  }
+
   private def noStagingLeft(dir: String): Unit =
     assert(!new java.io.File(dir).listFiles()
       .exists(_.getName.startsWith("_staging_")),
@@ -107,17 +115,47 @@ class StagedEmptinessSpec extends SparkSpec {
     assert(v1 == v0 + 1)
     assert(state(Versioned.snapshot(spark, dir)) ==
       Set(("a", 1L, 1.0), ("a", 2L, 2.0)))
+    // a match in ONE partition of the multi-partition scan: the vector
+    // keeps one file per scan partition, and the empty partitions'
+    // schema-only files must not be committed as #del entries
+    val ops: Seq[(String, (String, Long) => Long)] = Seq(
+      "deleteWhereVectors" -> ((d, id) =>
+        Versioned.deleteWhereVectors(spark, d, col("id") === id)),
+      "updateWhereVectors" -> ((d, id) =>
+        Versioned.updateWhereVectors(spark, d, col("id") === id,
+          Map("v" -> lit(5.0)), Seq("site"))))
+    for ((name, op) <- ops; id <- Seq(1L, 10L)) {
+      val d = freshLake(Seq("site"))
+      assert(op(d, id) == 1L, s"$name on id $id must commit v1")
+      val dvs = Versioned.deleteFilesAt(spark, d)
+      assert(dvs.nonEmpty)
+      val empties = dvs.map(e => e -> footerRows(s"$d/$e")).filter(_._2 == 0L)
+      assert(empties.isEmpty,
+        s"$name on id $id committed zero-row DV files: $empties")
+    }
+  }
+
+  test("overwrite: empty batch refused off the staged write — no commit, no staged file left under the table dir (partitioned and unpartitioned)") {
+    for (keys <- Seq(Seq("site"), Seq.empty[String])) {
+      val dir = freshLake(keys)
+      val v0 = Versioned.currentVersion(spark, dir)
+      val before = filesUnder(dir, "")
+      val e = intercept[IllegalArgumentException] {
+        Versioned.overwrite(spark, dir,
+          df(Seq(("a", 1L, 1.0)), "site", "id", "v").limit(0), keys)
+      }
+      assert(e.getMessage.contains("overwrite got an empty batch"))
+      assert(Versioned.currentVersion(spark, dir) == v0, "no version minted")
+      assert(filesUnder(dir, "") == before,
+        "the refused overwrite's staged files must be deleted")
+      noStagingLeft(dir)
+    }
   }
 
   /** Footer row count of every file live at the current version. */
   private def liveFileRows(dir: String): Seq[(String, Long)] =
-    Versioned.filesAt(spark, dir).map { r =>
-      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(Versioned.refPath(dir, r)),
-          spark.sparkContext.hadoopConfiguration))
-      try r -> f.getRecordCount finally f.close()
-    }
+    Versioned.filesAt(spark, dir).map(r =>
+      r -> footerRows(Versioned.refPath(dir, r)))
 
   test("UNPARTITIONED lake: no commit kind leaves a zero-row live file beside real ones; a delete-everything COW still snapshots with its schema") {
     // one row per partition, and the FIRST partition's row filtered

@@ -168,12 +168,13 @@ class VersionedSpec extends SparkSpec {
       Seq("site"), Seq("site", "id"))
     // the v0 index does NOT describe v1...
     val e = intercept[IllegalArgumentException] {
-      Versioned.prunedRead(spark, dir, idx0, Seq(("id", 0, 100)))
+      Versioned.prunedScan(spark, dir, Seq(PruneRange("id", 0, 100)), Some(idx0))
     }
     assert(e.getMessage.contains("does not describe"))
     // ...but still serves v0 exactly (pruned time travel) — even though
     // the directory now also holds v1's files
-    val tt = Versioned.prunedRead(spark, dir, idx0, Seq(("id", 0, 100)), version = 0L)
+    val tt = Versioned.prunedScan(spark, dir, Seq(PruneRange("id", 0, 100)),
+      Some(idx0), 0L)
     assert(tt.select("id", "v").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet ==
       Set((1L, 1.0), (2L, 2.0), (10L, 10.0)))
@@ -181,7 +182,7 @@ class VersionedSpec extends SparkSpec {
     // index becomes exact for the latest snapshot
     val idx1 = SkipIndex.refreshForFiles(spark, dir, idx0, Seq("id"),
       Seq("site=a"), Versioned.filesAt(spark, dir).map(f => s"$dir/$f"))
-    val now = Versioned.prunedRead(spark, dir, idx1, Seq(("id", 0, 100)))
+    val now = Versioned.prunedScan(spark, dir, Seq(PruneRange("id", 0, 100)), Some(idx1))
     assert(now.select("id", "v").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet ==
       Set((1L, 100.0), (2L, 2.0), (4L, 4.0), (10L, 10.0)))
@@ -242,7 +243,8 @@ class VersionedSpec extends SparkSpec {
     val cand = SkipIndex.candidateFilesMulti(idx, preds)
     assert(cand.size < live.size,
       s"tight 2-D boxes must prune some files (${cand.size}/${live.size})")
-    val pruned = Versioned.prunedRead(spark, dir.getAbsolutePath, idx, preds)
+    val pruned = Versioned.prunedScan(spark, dir.getAbsolutePath,
+        preds.map { case (c, lo, hi) => PruneRange(c, lo, hi) }, Some(idx))
       .select("site", "id", "x", "y").collect().map(_.toSeq).toSet
     val naive = before.filter(r =>
       r(2).asInstanceOf[Long] <= 240 && r(3).asInstanceOf[Double] <= 240.0)
@@ -282,7 +284,7 @@ class VersionedSpec extends SparkSpec {
     val idx = SkipIndex.build(
       spark.read.option("basePath", dir)
         .parquet(v0Files.map(f => s"$dir/$f"): _*), Seq("id"))
-    assert(Versioned.prunedRead(spark, dir, idx, Seq(("id", 0, 100)))
+    assert(Versioned.prunedScan(spark, dir, Seq(PruneRange("id", 0, 100)), Some(idx))
       .select("id").collect().map(_.getLong(0)).toSet == Set(2L, 10L),
       "pruned read must hide tombstoned rows")
 
@@ -902,7 +904,7 @@ class VersionedSpec extends SparkSpec {
     // all-null files, ranges use the boxes, IN falls through (no
     // blooms) — all intersected in ONE call
     def cands(ps: Seq[PrunePred]) =
-      Versioned.prunedScanCandidates(spark, dir, ps)
+      Versioned.prunedScanCandidates(spark, dir, ps).files
     assert(cands(Seq(PruneIsNull("v"))).nonEmpty &&
       cands(Seq(PruneIsNull("v"))).forall(f =>
         f.contains("site=a") || f.contains("site=b")),
@@ -1320,10 +1322,9 @@ class VersionedSpec extends SparkSpec {
 
     // pruned reads refuse while foreign refs remain
     val eP = intercept[IllegalArgumentException] {
-      Versioned.prunedRead(spark, dst,
-        SkipIndex.buildFromFooterFiles(spark,
-          refs.map(r => Versioned.refPath(dst, r)), Seq("id")),
-        Seq(("id", 0.0, 5.0)))
+      Versioned.prunedScan(spark, dst, Seq(PruneRange("id", 0.0, 5.0)),
+        Some(SkipIndex.buildFromFooterFiles(spark,
+          refs.map(r => Versioned.refPath(dst, r)), Seq("id"))))
     }
     assert(eP.getMessage.contains("OPTIMIZE"))
 
@@ -1381,7 +1382,8 @@ class VersionedSpec extends SparkSpec {
       "inc sidecar must cover exactly the commit's own files, not the lake")
 
     def prunedIds(v: Long, lo: Double, hi: Double): Set[Long] =
-      Versioned.statsPrunedRead(spark, root, Seq(("id", lo, hi)), v)
+      Versioned.prunedScan(spark, root, Seq(PruneRange("id", lo, hi)),
+        version = v)
         .filter(col("id").between(lo, hi))
         .select("id").collect().map(_.getLong(0)).toSet
     // latest: stats-pruned == snapshot filter
@@ -1552,8 +1554,8 @@ class VersionedSpec extends SparkSpec {
       "bloom inc sidecar must cover exactly the commit's own files")
 
     def lookup(v: Long, ids: Long*): Map[Long, Double] =
-      Versioned.bloomPrunedReadIn(spark, root, "id",
-          ids.map(lit(_)), v)
+      Versioned.prunedScan(spark, root, Seq(PruneIn("id", ids)),
+          version = v)
         .select("id", "v").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(lookup(1L, 2L, 50L, 777L) == Map(2L -> 100.0, 50L -> 50.0))
@@ -2257,11 +2259,11 @@ class VersionedSpec extends SparkSpec {
     // the PRUNED read paths read mixed-width survivors under the pin
     // too (plain inference would sample whichever footer came first)
     Versioned.backfillStats(spark, dir, Seq("id"))
-    val pruned = Versioned.statsPrunedRead(spark, dir,
-      Seq(("id", 4.0e9, 6.0e9)))
+    val pruned = Versioned.prunedScan(spark, dir,
+      Seq(PruneRange("id", 4.0e9, 6.0e9)))
     assert(pruned.select("id").collect().map(_.getLong(0)).toSeq ==
       Seq(5000000000L),
-      "statsPrunedRead must serve widened tables exactly")
+      "prunedScan must serve widened tables exactly")
     // clones inherit the pin (their foreign files include narrow ones)
     val cloneDir = new java.io.File(root, "clone").getAbsolutePath
     Versioned.cloneAt(spark, dir, cloneDir)
@@ -2331,8 +2333,8 @@ class VersionedSpec extends SparkSpec {
     Versioned.backfillBlooms(spark, dir, Seq("uid", "v"),
       expectedPerFile = 100L)
     // pre-widen, the bloom prunes uid probes
-    assert(state2(Versioned.bloomPrunedReadIn(spark, dir, "uid",
-      Seq(lit(7)))) == Set(("a", 7L, 1.0)))
+    assert(state2(Versioned.prunedScan(spark, dir,
+      Seq(PruneIn("uid", Seq(7))))) == Set(("a", 7L, 1.0)))
     Versioned.widenColumn(spark, dir, "uid", LongType)
     // the family re-based WITHOUT uid: remaining coverage intact,
     // uid probes stop pruning (correct, never a false negative)
@@ -2345,10 +2347,10 @@ class VersionedSpec extends SparkSpec {
       df(Seq(("a", 6000000000L, 3.0)), "site", "uid", "v"), Seq("site"))
     Versioned.backfillBlooms(spark, dir, Seq("uid"),
       expectedPerFile = 100L)
-    assert(state2(Versioned.bloomPrunedReadIn(spark, dir, "uid",
-      Seq(lit(6000000000L)))) == Set(("a", 6000000000L, 3.0)))
-    assert(state2(Versioned.bloomPrunedReadIn(spark, dir, "uid",
-      Seq(lit(7L)))) == Set(("a", 7L, 1.0)),
+    assert(state2(Versioned.prunedScan(spark, dir,
+      Seq(PruneIn("uid", Seq(6000000000L))))) == Set(("a", 6000000000L, 3.0)))
+    assert(state2(Versioned.prunedScan(spark, dir,
+      Seq(PruneIn("uid", Seq(7L))))) == Set(("a", 7L, 1.0)),
       "pre-widen values must still be found under the rebuilt blooms")
   }
 
@@ -2368,8 +2370,8 @@ class VersionedSpec extends SparkSpec {
     Versioned.init(spark, dir, commitTs = 1000L)
     val vB = Versioned.backfillBlooms(spark, dir, Seq("uid"),
       expectedPerFile = 100L)
-    assert(state2(Versioned.bloomPrunedReadIn(spark, dir, "uid",
-      Seq(lit(7)))) == Set(("a", 7L, 1.0)))
+    assert(state2(Versioned.prunedScan(spark, dir,
+      Seq(PruneIn("uid", Seq(7))))) == Set(("a", 7L, 1.0)))
     Versioned.widenColumn(spark, dir, "uid", LongType)
     // post-widen: the family is DROPPED (type-bound hashes would
     // false-negative) — reads refuse with the repair named
@@ -2391,10 +2393,10 @@ class VersionedSpec extends SparkSpec {
     // re-ANALYZE over the WIDE type re-establishes from scratch
     Versioned.backfillBlooms(spark, dir, Seq("uid"),
       expectedPerFile = 100L)
-    assert(state2(Versioned.bloomPrunedReadIn(spark, dir, "uid",
-      Seq(lit(7L)))) == Set(("a", 7L, 1.0)))
-    assert(state2(Versioned.bloomPrunedReadIn(spark, dir, "uid",
-      Seq(lit(6000000000L)))) == Set(("a", 6000000000L, 3.0)))
+    assert(state2(Versioned.prunedScan(spark, dir,
+      Seq(PruneIn("uid", Seq(7L))))) == Set(("a", 7L, 1.0)))
+    assert(state2(Versioned.prunedScan(spark, dir,
+      Seq(PruneIn("uid", Seq(6000000000L))))) == Set(("a", 6000000000L, 3.0)))
   }
 
   test("a FAILED replace deletes its staged anchor: the version counter holds, and the next successful definition's zero-file reads serve ITS schema — never the failed replace's") {
@@ -2805,17 +2807,17 @@ class VersionedSpec extends SparkSpec {
     assert(cols == Set("id", "v"),
       s"post-backfill commits must inherit the re-columned set (got $cols)")
     // a predicate on v serves from the boxes
-    assert(Versioned.statsPrunedRead(spark, dir, Seq(("v", 15.0, 25.0)))
+    assert(Versioned.prunedScan(spark, dir, Seq(PruneRange("v", 15.0, 25.0)))
       .select("id").collect().map(_.getLong(0)).toSet == Set(20L))
     // an UNTRACKED column refuses loudly — never an empty result
     val e = intercept[IllegalArgumentException] {
-      Versioned.statsPrunedRead(spark, dir, Seq(("site", 0.0, 1.0))).count()
+      Versioned.prunedScan(spark, dir, Seq(PruneRange("site", 0.0, 1.0))).count()
     }
     assert(e.getMessage.contains("not tracked"), e.getMessage)
     // bloom twin: probes on an un-bloomed column refuse too
     Versioned.backfillBlooms(spark, dir, Seq("id"), 100L, 0.01)
     val e2 = intercept[IllegalArgumentException] {
-      Versioned.bloomPrunedReadIn(spark, dir, "v", Seq(lit(10.0))).count()
+      Versioned.prunedScan(spark, dir, Seq(PruneIn("v", Seq(10.0)))).count()
     }
     assert(e2.getMessage.contains("no bloom filters"), e2.getMessage)
   }

@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.lake.{PruneIn, PruneRange, Versioned}
+import graft.lake.{BloomIndex, PruneIn, PrunePred, PruneRange, SkipIndex,
+  Versioned}
 import graft.ops.MergeData
 
 /** The `graft` data source: planner-driven reads of the versioned
@@ -96,25 +97,44 @@ class GraftLakeSourceSpec extends SparkSpec {
       df(Seq(("a", 300L, 3.0), ("b", 301L, 3.0)), "site", "id", "v"),
       Seq("site"))
     val read = spark.read.format("graft").load(dir)
-    val expect = Versioned.prunedScanCandidates(spark, dir,
-      Seq(PruneRange("id", 150.0, 250.0))).toSet
-    val got = read.filter(col("id") >= 150L && col("id") <= 250L)
-    assert(got.select("id").collect().map(_.getLong(0)).toSet ==
+    def live = Versioned.filesAt(spark, dir).map(f => s"$dir/$f")
+    // the planner's file set for a filter, and the library's for the
+    // same predicates from one source: the core's candidates, which
+    // must also be exactly the files the one reader opens
+    def plannerFiles(f: Column): Set[String] = {
+      read.filter(f).collect()
+      GraftFileIndex.lastListedFiles.map(SkipIndex.normalizePath).toSet
+    }
+    def libraryFiles(ps: Seq[PrunePred], source: Option[DataFrame]): Set[String] = {
+      val c = Versioned.prunedScanCandidates(spark, dir, ps, source).files.toSet
+      assert(Versioned.prunedScan(spark, dir, ps, source).inputFiles
+        .map(SkipIndex.normalizePath).toSet == c,
+        "prunedScan must open exactly the core's candidates")
+      c
+    }
+    val range = col("id") >= 150L && col("id") <= 250L
+    val rangePreds = Seq(PruneRange("id", 150.0, 250.0))
+    val expect = plannerFiles(range)
+    assert(read.filter(range).select("id").collect().map(_.getLong(0)).toSet ==
       Set(200L, 201L))
-    assert(GraftFileIndex.lastListedFiles
-      .map(graft.lake.SkipIndex.normalizePath).toSet == expect,
+    assert(libraryFiles(rangePreds, None) == expect,
       "the planner's range filter must skip exactly what the stats skip")
     assert(expect.size < Versioned.filesAt(spark, dir).size,
       "the fixture must actually prune something")
+    assert(libraryFiles(rangePreds, Some(SkipIndex.buildFromFooterFiles(
+      spark, live, Seq("id")))) == expect,
+      "a caller-built skip index must skip what the stats sidecars skip")
     // IN-list routes to blooms once they exist
     Versioned.backfillBlooms(spark, dir, Seq("id"), expectedPerFile = 100L)
-    val expectIn = Versioned.prunedScanCandidates(spark, dir,
-      Seq(PruneIn("id", Seq(300L, 301L)))).toSet
-    val gotIn = read.filter(col("id").isin(300L, 301L))
-    assert(gotIn.count() == 2L)
-    assert(GraftFileIndex.lastListedFiles
-      .map(graft.lake.SkipIndex.normalizePath).toSet == expectIn,
+    val in = col("id").isin(300L, 301L)
+    val inPreds = Seq(PruneIn("id", Seq(300L, 301L)))
+    val expectIn = plannerFiles(in)
+    assert(read.filter(in).count() == 2L)
+    assert(libraryFiles(inPreds, None) == expectIn,
       "the planner's IN filter must skip exactly what the blooms skip")
+    assert(libraryFiles(inPreds, Some(BloomIndex.buildForFiles(spark, dir,
+      live, Seq("id"), 100L, 0.01))) == expectIn,
+      "a caller-built bloom index must skip what the bloom sidecars skip")
     // a predicate on an UNTRACKED column must not skip (lenient):
     // every file survives, the residual filter answers exactly
     val vAll = read.filter(col("v") >= 2.9)

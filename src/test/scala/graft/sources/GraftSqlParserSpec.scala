@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.functions._
 
 import graft.{GraftExtensions, SparkSpec}
-import graft.lake.Versioned
+import graft.lake.{PruneIn, PruneRange, Versioned}
 import graft.ops.MergeData
 
 /** The SQL maintenance verbs ([[GraftSqlParser]]): OPTIMIZE [ZORDER
@@ -204,8 +204,8 @@ class GraftSqlParserSpec extends SparkSpec {
     // inheritance: the NEXT commit extends coverage with no re-analyze
     Versioned.append(spark, dir,
       df(Seq(("b", 500L, 42.0)), "site", "id", "v"), Seq("site"))
-    val pruned = Versioned.statsPrunedRead(spark, dir,
-      Seq(("id", 400.0, 600.0)))
+    val pruned = Versioned.prunedScan(spark, dir,
+      Seq(PruneRange("id", 400.0, 600.0)))
     assert(state(pruned) == Set(("b", 500L, 42.0)))
     // unparenthesized column list parses too
     sqlM(s"ANALYZE TABLE ${tbl(dir)} COMPUTE STATISTICS FOR COLUMNS v")
@@ -225,7 +225,7 @@ class GraftSqlParserSpec extends SparkSpec {
     // a later commit inherits the SAME sizing parameters
     Versioned.append(spark, dir,
       df(Seq(("b", 777L, 7.0)), "site", "id", "v"), Seq("site"))
-    val hit = Versioned.bloomPrunedReadIn(spark, dir, "id", Seq(lit(777L)))
+    val hit = Versioned.prunedScan(spark, dir, Seq(PruneIn("id", Seq(777L))))
     assert(state(hit) == Set(("b", 777L, 7.0)))
     // Spark's own ANALYZE statements are NOT claimed
     assert(GraftSqlParser.parseMaintenance(spark,
